@@ -3,7 +3,7 @@
 All column expressions — JVM-side, codegen-friendly, no Python UDFs.
 Scale discipline: dedup ops state their blocking keys; the n² shingle
 join is only ever run inside blocks (lang × length bucket here; at
-100 TB add MinHash-LSH banding via :func:`minhash_pairs`).
+100 TB add MinHash-LSH banding via :func:`minhash_band_pairs`).
 """
 
 from __future__ import annotations
@@ -918,42 +918,6 @@ def near_dup_pairs(
     )
 
 
-def minhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    jaccard_threshold: float = 0.5,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash-LSH candidate pairs at scale (pyspark.ml, seeded).
-
-    Pipeline: shingles → HashingTF sparse vectors → MinHashLSH
-    approxSimilarityJoin at distance (1 - threshold). Each stage is a
-    narrow map except the final bucket join, which shuffles on LSH band
-    hashes — the linear-ish scale path that replaces the n² self-join.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    sh = df.select(F.col(key_col), word_shingles(text_col, n).alias("shingles"))
-    tf = HashingTF(inputCol="shingles", outputCol="features", numFeatures=1 << 18)
-    vecs = tf.transform(sh)
-    # MinHashLSH requires at least one non-zero entry per vector
-    vecs = vecs.filter(F.size("shingles") > 0)
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hashes, seed=seed)
-    model = lsh.fit(vecs)
-    pairs = model.approxSimilarityJoin(vecs, vecs, 1.0 - jaccard_threshold, distCol="dist")
-    return (
-        pairs.filter(F.col(f"datasetA.{key_col}") < F.col(f"datasetB.{key_col}"))
-        .select(
-            F.col(f"datasetA.{key_col}").alias("id_a"),
-            F.col(f"datasetB.{key_col}").alias("id_b"),
-            (1.0 - F.col("dist")).alias("est_jaccard"),
-        )
-    )
-
-
 #: Universal-hash modulus for MinHash permutations: 2³¹−1 (Mersenne).
 #: Small enough that a·x + b stays < 2⁶² — exact in int64 on EVERY
 #: engine (DuckDB raises on BIGINT overflow, so the arithmetic must be
@@ -994,10 +958,9 @@ def minhash_signatures(
     :func:`minhash_coeffs` literals. Returns
     ``(key_col, minhash array<bigint>)``.
 
-    Unlike the pyspark.ml MinHashLSH path (seeded JVM hashes — not
-    reproducible outside Spark), every piece here is engine-portable
-    exact-int math, so signatures — and everything derived from them —
-    are bit-identical in DuckDB and declarable with an exact oracle.
+    Every piece here is engine-portable exact-int math (no seeded RNG
+    state), so signatures — and everything derived from them — are
+    bit-identical in DuckDB and declarable with an exact oracle.
 
     Shape: explode shingles ONCE, project the md5 base hash ONCE per
     shingle row, then num_hashes ``min(bigint)`` aggregates — partial
@@ -1281,9 +1244,7 @@ def simhash_portable(
     across shingles; sign → bit. Returns ``(key_col, simhash)``.
 
     Same scale shape as :func:`minhash_signatures`: explode once, one
-    sum-aggregate per bit with map-side combine, tiny shuffle on key.
-    The xxhash64 column-expression variant (:func:`simhash64`) stays
-    the Spark-native fast path; this one is oracle-certifiable."""
+    sum-aggregate per bit with map-side combine, tiny shuffle on key."""
     h = F.conv(F.substring(F.md5(F.col("__s")), 1, 15), 16, 10).cast("long")
     tok = df.select(key_col, F.explode(word_shingles(text_col, n)).alias("__s"))
     votes = [
@@ -1297,32 +1258,6 @@ def simhash_portable(
     for b in range(bits):
         sim = sim + F.when(F.col(f"__v{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
     return agg.select(key_col, sim.cast("long").alias("simhash"))
-
-
-def simhash64(text: Column | str, n: int = 3) -> Column:
-    """64-bit SimHash over word shingles using xxhash64 bit votes.
-
-    Pure column expressions: for each bit position, sum ±1 votes across
-    shingle hashes, take the sign. Deterministic; Spark-side only (no
-    portable SQL oracle — xxhash64 is Spark-specific)."""
-    sh = word_shingles(text, n)
-    hashes = F.transform(sh, lambda s: F.xxhash64(s))
-    bits = [
-        F.when(
-            F.aggregate(
-                hashes,
-                F.lit(0),
-                lambda acc, h: acc + F.when(h.bitwiseAND(F.lit(1 << i)) != 0, 1).otherwise(-1),
-            )
-            > 0,
-            F.lit(1 << i),
-        ).otherwise(F.lit(0))
-        for i in range(63)
-    ]
-    out = F.lit(0)
-    for b in bits:
-        out = out.bitwiseOR(b)
-    return out
 
 
 #: Rolling-hash / winnowing parameters (MOSS-style document

@@ -24,11 +24,20 @@ from pyspark.sql import functions as F
 from pipetree_spark.ops.relational import topk_per_group
 
 
+def sql_ident(name: str) -> str:
+    """Backtick-quote a column name for interpolation into parsed SQL,
+    doubling embedded backticks — a hyphenated (``my-vec``) or reserved
+    (``select``) name then parses as one identifier, not arithmetic or
+    a keyword. Quoting leaves the parsed attribute unchanged."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 #: Shared SQL fragments for the portable-quantizer hot paths (r16,
 #: guide §1.2 step 2): one parsed string replaces a lambda-built HOF
 #: tree of ~30-150 py4j round trips. Each parses to the IDENTICAL
 #: expression tree the Column formulation built (typing notes at the
 #: use sites); every consumer family is parity- and pytest-pinned.
+#: Column names are interpolated through :func:`sql_ident`.
 #: exact-integer squared distance between the quantized vector and a
 #: lambda-bound centroid struct ``c`` (fields cv, cid)
 _SQDIST_SQL = (
@@ -166,93 +175,6 @@ def lsh_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
     return bucket
 
 
-def ivf_assign(
-    corpus: DataFrame, n_clusters: int = 16, vec_col: str = "embedding", seed: int = 42
-):
-    """IVF coarse quantizer: seeded k-means over the corpus; returns the
-    corpus with a ``__cluster`` column plus the (small) center matrix.
-
-    At 10⁹ vectors the fit runs on a sample and centers stay a
-    driver-side array of n_clusters × dim floats — only the assignment
-    pass scans the full corpus (one narrow ml transform)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    vec = corpus.withColumn("__v", array_to_vector(F.col(vec_col)))
-    model = KMeans(k=n_clusters, seed=seed, featuresCol="__v", predictionCol="__cluster").fit(vec)
-    assigned = model.transform(vec).drop("__v")
-    return assigned, [list(map(float, c)) for c in model.clusterCenters()]
-
-
-def _probe_clusters(vec_col: Column, centers: list[list[float]], n_probe: int) -> Column:
-    """Array of the n_probe nearest cluster ids (squared-L2 to each
-    center, computed as column exprs — centers ship as plan literals)."""
-    scored = F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        vec_col,
-                        F.array(*[F.lit(x) for x in center]),
-                        lambda a, b: (_d(a) - b) * (_d(a) - b),
-                    ),
-                    F.lit(0.0),
-                    lambda s, v: s + v,
-                ).alias("dist"),
-                F.lit(i).alias("cid"),
-            )
-            for i, center in enumerate(centers)
-        ]
-    )
-    return F.transform(F.slice(F.array_sort(scored), 1, n_probe), lambda s: s["cid"])
-
-
-def ivf_ann(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_clusters: int = 8,
-    n_probe: int = 3,
-    query_key: str = "query_id",
-    corpus_key: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """IVF approximate NN: probe the n_probe nearest coarse clusters per
-    query, exact cosine re-rank inside them.
-
-    Scale shape: candidates per query ≈ corpus × n_probe / n_clusters;
-    the candidate join is an equi shuffle join on ``__cluster`` (no
-    broadcast of the corpus, no n² pairs). Recall/cost via n_probe."""
-    assigned, centers = ivf_assign(corpus, n_clusters, vec_col, seed)
-    q = queries.select(
-        F.col(query_key),
-        F.col(vec_col).alias("__qv"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-        F.explode(_probe_clusters(F.col(vec_col), centers, n_probe)).alias("__cluster"),
-    )
-    c = assigned.select(
-        F.col(corpus_key),
-        F.col(vec_col).alias("__cv"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
-        "__cluster",
-    )
-    pairs = c.join(q, on="__cluster").filter(F.col(query_key) != F.col(corpus_key))
-    scored = pairs.select(
-        query_key,
-        corpus_key,
-        pin_zero(F.round(
-            safe_div(dot(F.col("__qv"), F.col("__cv")), F.col("__qn") * F.col("__cn")), 4
-        )).alias("cos_sim"),
-    )  # pairs are already unique: each corpus vector lives in exactly one cluster
-    return topk_per_group(
-        scored,
-        partition_by=[query_key],
-        order_by=[F.col("cos_sim").desc(), F.col(corpus_key).asc()],
-        k=k,
-    )
-
-
 def lsh_bucket_ann(
     queries: DataFrame,
     corpus: DataFrame,
@@ -279,8 +201,8 @@ def lsh_bucket_ann(
     angular signal — per-plane agreement is 1-θ/π. Near-dup candidate
     generation (cos ≥ 0.9, θ ≤ 26°) gets high recall from few probes;
     uniform kNN on weakly-clustered data (neighbor cos ≈ 0.35) does
-    not, and belongs to :func:`ivf_ann`, whose coarse quantizer learns
-    the cluster structure sign planes can't see.
+    not, and belongs to :func:`ivf_ann_portable`, whose coarse
+    quantizer learns the cluster structure sign planes can't see.
     """
     import itertools as _it
 
@@ -472,9 +394,9 @@ def kmeans_portable_fit(
     # parity + the injection-reproducibility pytest pin it.
     q = df.select(
         key_col,
-        F.expr(_QUANTIZE_SQL.format(col=vec_col, scale=scale)).alias("__qv"),
+        F.expr(_QUANTIZE_SQL.format(col=sql_ident(vec_col), scale=scale)).alias("__qv"),
     )
-    sqd = _SQDIST_SQL.format(vec="__qv")
+    sqd = _SQDIST_SQL.format(vec=sql_ident("__qv"))
 
     def assign(centroid_row: DataFrame) -> DataFrame:
         enc = F.expr(
@@ -644,8 +566,8 @@ def _multiprobe_assign_arrow(
                     dtype=np.int64)
     k = len(cids)
     out_schema = ", ".join(
-        [f"{key_col} {tgt.schema[key_col].dataType.simpleString()}"]
-        + [f"{c} {tgt.schema[c].dataType.simpleString()}" for c in carry_cols]
+        [f"{sql_ident(key_col)} {tgt.schema[key_col].dataType.simpleString()}"]
+        + [f"{sql_ident(c)} {tgt.schema[c].dataType.simpleString()}" for c in carry_cols]
         + ["cluster long"]
     )
 
@@ -740,7 +662,7 @@ def ivf_multiprobe_assign(
     q = renamed.select(
         key_col,
         *carry_cols,
-        F.expr(_QUANTIZE_SQL.format(col=vec_col, scale=scale)).alias("__qv"),
+        F.expr(_QUANTIZE_SQL.format(col=sql_ident(vec_col), scale=scale)).alias("__qv"),
     )
     return _probe_cells(q, centroids, n_probe, key_col, tuple(carry_cols))
 
@@ -1208,7 +1130,7 @@ def _probe_cells(
     pattern — was ~70 RPCs of lambda-built Column tree); named_struct
     builds the same struct<d,cid> the F.struct formulation did, so the
     (d, cid) array_sort tie-break is unchanged."""
-    sqd = _SQDIST_SQL.format(vec="__qv")
+    sqd = _SQDIST_SQL.format(vec=sql_ident("__qv"))
     return qq.crossJoin(F.broadcast(cents)).select(
         query_key,
         *carry,
@@ -1278,8 +1200,7 @@ def ivf_ann_portable(
     vec_col: str = "embedding",
     scale: int = 1 << 20,
 ) -> DataFrame:
-    """IVF ANN whose every stage is deterministic and engine-portable —
-    the oracle-certifiable variant of :func:`ivf_ann`:
+    """IVF ANN whose every stage is deterministic and engine-portable:
 
     - coarse quantizer: :func:`kmeans_portable_fit` (exact-integer
       Lloyd, seed-free init) — corpus partitioning is bit-reproducible;
@@ -1293,10 +1214,9 @@ def ivf_ann_portable(
       key tie-break (the q_vec_cosine_knn float policy — ~1e-15 drift
       vs 1e-4 grid).
 
-    Same recall/cost tuning knobs as ``ivf_ann`` (n_probe, n_clusters);
-    what it gives up is the trained quantizer (fixed-step integer Lloyd
-    instead of converged seeded k-means), which costs a little recall,
-    not scalability.
+    Recall/cost tuning knobs: n_probe and n_clusters. The quantizer is
+    fixed-step integer Lloyd rather than converged seeded k-means,
+    which costs a little recall, not scalability.
     """
     assign_df, cents = kmeans_portable_fit(
         corpus, vec_col, corpus_key, k=n_clusters, iters=iters, scale=scale
@@ -1344,8 +1264,8 @@ def pca_power_portable(
     exact-integer loadings in [-rescale, rescale]. With a healthy
     eigengap it converges to the top principal direction; on
     near-isotropic data small ``iters`` only turns toward it — this op
-    certifies DETERMINISM (any engine, bit-identical), convergence
-    tuning stays on the pyspark.ml path.
+    certifies DETERMINISM (any engine, bit-identical), not
+    convergence — raise ``iters`` for that.
 
     Same certification contract as :func:`kmeans_portable`: every value
     that decides the output is either exact integer math or an
@@ -1361,8 +1281,8 @@ def pca_power_portable(
       non-negative (array_position / list_position agree on "first").
 
     The coarse ±2¹⁰ loading grid is the price of exactness — this is
-    the certified DIRECTION statistic; eigenvalue spectra and exact
-    rotations stay on the pyspark.ml PCA path (q_vec_pca, rows-only).
+    the certified DIRECTION statistic, not an eigenvalue spectrum or
+    an exact rotation.
 
     Scale shape per iteration: one narrow pass (zip_with dot against a
     broadcast 1-row iterate — no explode, no join) plus one
@@ -1459,7 +1379,7 @@ def pca_power_portable(
 
 
 def _pq_quantize(vec_col: str, scale: int) -> Column:
-    return F.expr(_QUANTIZE_SQL.format(col=vec_col, scale=scale))
+    return F.expr(_QUANTIZE_SQL.format(col=sql_ident(vec_col), scale=scale))
 
 
 def _pq_subvectors(qv: Column, m: int, dim: int) -> Column:
@@ -1543,7 +1463,7 @@ def pq_fit_portable(
     # kmeans_portable_fit): in the filter lambda the bare ``sub``
     # resolves to the OUTER row's subspace column, exactly the
     # F.col("sub") the Column formulation bound
-    sqd = _SQDIST_SQL.format(vec="__qsv")
+    sqd = _SQDIST_SQL.format(vec=sql_ident("__qsv"))
 
     def assign(cb_row: DataFrame) -> DataFrame:
         enc = F.expr(

@@ -42,152 +42,9 @@ def declare(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
-# The driver's correctness loop walks the registry in iteration order and
-# may stop early (every round so far: exactly the first 50 entries got
-# CORRECTNESS rows). The front of the registry is therefore a scarce
-# certification window, ROTATED each round toward maximal marginal
-# certification.
-#
-# r8 discipline (the r7 verdict's #2 directive): the rotation is now
-# DERIVED FROM THE RECORD at load time instead of hand-pinned — the two
-# rounds of comment/tuple/test drift this caused (r6 overstated the
-# rotation; r7's hardcoded pin self-invalidated when the round
-# succeeded) end here. The rule, applied to CORRECTNESS_r*.json:
-#   effective_round(q) = latest round with a fully green row (oracled)
-#                        or any ran-row (rows-only; they can't go green),
-#                        0 if the driver has never produced a row for q.
-# The window is the stalest-first ordering under that key (ties broken
-# by registration order), with RECONFIRM — the queries whose code or
-# oracle changed THIS round — forced into the tail of the 50 slots.
-# Never-graded queries sort first (round 0), so first-time
-# certifications always outrank re-confirmations, and completing a
-# round automatically produces the next round's rotation.
-
-WINDOW = 50  # observed driver cut, constant across r1–r7
-
-#: Queries whose implementation or oracle changed since their last
-#: driver grade and whose certification is therefore stale regardless
-#: of the record. The ONLY hand-maintained part of the rotation.
-#: r12 note: all 17 r11 pin-touched entries graded green in
-#: CORRECTNESS_r11 (q_vec_ann_ivf rows-only-ran, its strongest grade),
-#: so the list empties per the standing rule. r12's new declarations
-#: (BPE scale path, phash dedup, substring dedup, html extract,
-#: unigram trainer, bm25) are never-graded and lead the window
-#: automatically — they must NOT sit here.
-#: r13 note: both r12 entries (q_text_bpe_train/encode) graded green in
-#: CORRECTNESS_r12, so they drop off per the standing rule. The r13
-#: entries are the queries whose op code or oracle text changed this
-#: round (the r12 ADVICE fixes): the URL family's scheme-dependent
-#: default-port strip + mismatched-port synthesizer case (values
-#: changed on both engines), the WARC body decode's charset handling,
-#: the repeated-header parse, the key_col schema threading through the
-#: fingerprint/EXIF/WARC stages, and unigram_train's max_vocab kwarg
-#: (default None = certified path unchanged; the collapse now calls
-#: the shared ops.text.bpe_word_freqs with max_word_len).
-#: r14 note: all 18 r13 entries graded green in CORRECTNESS_r13, so
-#: they drop off per the standing rule. The r14 entries are the
-#: queries whose op code or oracle changed this round: the line-dedup
-#: join-back re-plan (xxhash64 keys + boilerplate-only filtered LEFT
-#: join — oracle text unchanged, values unchanged, plan changed), the
-#: q_text_nfc synth change (one residue class now omits the
-#: decomposed insert so changed=0 rows sit under the hash — VALUES
-#: changed on both engines), the rrf_score expression normalization
-#: (same arithmetic, rebuilt column tree), and bm25_scores' new
-#: state_sink/warn surface (default path unchanged). All re-passed
-#: sf0.001 + sf0.01 + vanilla parity locally this round.
-#: r15 note: all 7 r14 entries graded green in CORRECTNESS_r14, so
-#: they drop off per the standing rule. The r15 entries are the
-#: queries whose oracle TEXT (not values — the planted corpora are
-#: \x0B-free and Java's ``\s`` IS the explicit class, so both engines'
-#: values are unchanged) changed under the r14-ADVICE whitespace-class
-#: respelling (``\s`` → ``[ \t\n\x0B\f\r]`` in every twinned regex,
-#: closing the Java-vs-RE2 vertical-tab divergence), plus the
-#: queries whose generated oracle changed under the no-space-script
-#: class extension (Lao/Khmer/Myanmar/Tibetan added to
-#: CJK_CLASS_JAVA/_RE2 — same segment_text_sql interpolation). All
-#: re-passed sf0.001 + sf0.01 parity locally this round.
-RECONFIRM: tuple[str, ...] = (
-    "q_text_quality",        # r15: \s + bpe-token class respelled
-    "q_text_clean",          # r15: \s respelled
-    "q_dedup_exact",         # r15: \s respelled
-    "q_dedup_lsh_recall",    # r15: \s respelled
-    "q_dedup_minhash_band",  # r15: \s respelled
-    "q_dedup_near_lsh",      # r15: \s respelled
-    "q_dedup_cluster_lsh",   # r15: \s respelled
-    "q_dedup_incremental",   # r15: \s respelled
-    "q_pipe_crawl_e2e",      # r15: \s + anchor-regex class respelled
-    "q_text_extract_html",   # r15: \s + anchor-regex class respelled
-    "q_dedup_sentences",     # r15: sentence-boundary \s respelled
-    "q_dedup_sentences_rm",  # r15: sentence-boundary \s respelled
-    "q_pipe_curation",       # r15: \s respelled
-    "q_text_script_profile",  # r15: SEA script counts + routing labels
-    "q_text_cjk_segment",    # r15: WS + SEA script-class extension
-    "q_text_minhash_sig_cjk",  # r15: WS + SEA script-class extension
-    "q_text_langid_cjk",     # r15: WS + SEA script-class extension
-    "q_text_bpe_train_cjk",  # r15: WS + SEA script-class extension
-    "q_pipe_cjk_curation",   # r15: WS + SEA ext + spec chunk stage
-    "q_text_chunk",          # r15: n_chunks expr rebuilt for segmenter=
-    "q_text_robots_filter",  # r15: delegates to robots_gate_stage
-    "q_text_domain_cap",     # r15: delegates to domain_cap_stage
-    "q_text_token_budget",   # r15: delegates to token_budget_stage
-)
-
-
-def _effective_rounds() -> dict[str, int]:
-    """Latest useful driver round per query, from CORRECTNESS_r*.json.
-
-    Oracled queries count only fully green rows (an errored grade means
-    the certification is stale); rows-only queries count any row — a
-    ``no_oracle`` row is the strongest evidence they can produce.
-    Queries absent from every file map to 0.
-    """
-    import json
-    from pathlib import Path
-
-    latest: dict[str, int] = {}
-    root = Path(__file__).resolve().parents[2]
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        try:
-            rnd = int(p.stem.split("_r")[1])
-            rows = json.loads(p.read_text())
-        except (ValueError, OSError, json.JSONDecodeError):
-            continue
-        for qname, row in rows.items():
-            green = (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-                and not row.get("err")
-            )
-            ran_rows_only = row.get("err") == "no_oracle" and row.get("spark_rows") is not None
-            if green or ran_rows_only:
-                latest[qname] = max(latest.get(qname, 0), rnd)
-    return latest
-
-
-def priority_order(names: list[str]) -> list[str]:
-    """Stalest-first window ordering over ``names`` (registration order).
-
-    Returns all names reordered: the 50-slot window is the stalest
-    ``WINDOW - len(RECONFIRM)`` names plus RECONFIRM at the window tail;
-    the remainder follow, also stalest-first (a wider driver cut still
-    grades in marginal-value order).
-    """
-    eff = _effective_rounds()
-    pos = {n: i for i, n in enumerate(names)}
-    auto = sorted(
-        (n for n in names if n not in RECONFIRM),
-        key=lambda n: (eff.get(n, 0), pos[n]),
-    )
-    head = auto[: WINDOW - len(RECONFIRM)]
-    tail = [n for n in RECONFIRM if n in pos]
-    rest = auto[WINDOW - len(RECONFIRM):]
-    return head + tail + rest
-
-
 def load_registry() -> dict[str, DeclaredQuery]:
     """Import every query module (side effect: registration) and return
-    the registry ordered stalest-first (see :func:`priority_order`)."""
+    the registry in registration order."""
     from pipetree_spark.queries import (  # noqa: F401
         aggregates,
         functions,
@@ -209,7 +66,4 @@ def load_registry() -> dict[str, DeclaredQuery]:
         windows,
     )
 
-    missing = [n for n in RECONFIRM if n not in REGISTRY]
-    if missing:
-        raise RuntimeError(f"RECONFIRM names not declared: {missing}")
-    return {n: REGISTRY[n] for n in priority_order(list(REGISTRY))}
+    return dict(REGISTRY)

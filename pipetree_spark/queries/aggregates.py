@@ -455,7 +455,8 @@ def q_agg_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``percentile_approx``) next to their exact counterparts — the
     single-pass sketch path used at 100 TB where exact percentiles
     would need a full sort. No cross-engine oracle (sketch internals
-    differ); accuracy asserted against F.percentile in pytest."""
+    differ); pytest bounds both sketches by DuckDB's exact
+    ``quantile_disc`` within the sketch's rank error."""
     l = load_table(spark, sf_dir, "lineitem")
     return l.groupBy("l_returnflag").agg(
         F.percentile_approx("l_extendedprice", 0.5, 10000).alias("approx_median"),

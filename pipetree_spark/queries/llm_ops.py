@@ -403,7 +403,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dedup: shingle-Jaccard pairs within language blocks
     (ops.text.near_dup_pairs). Jaccard is an integer ratio — exact
     double, no rounding. At 100 TB this runs only on MinHash-LSH
-    survivor candidates (q_dedup_minhash is that pre-filter).
+    survivor candidates (q_dedup_minhash_band is that pre-filter).
 
     ``max_bucket=None`` because the declared oracle is the EXACT
     all-pairs formulation — the production default (hub-shingle cap,
@@ -456,7 +456,7 @@ def q_text_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ops.text.minhash_signatures): universal-hash min over the 60-bit
     md5-prefix base hash, deterministic coefficient literals —
     bit-identical across engines, so the signature itself is
-    oracle-certified (vs the seeded pyspark.ml path, rows-only).
+    oracle-certified.
     Emitted comma-joined (driver-hashable)."""
     d = load_table(spark, sf_dir, "documents")
     return TX.minhash_signatures(d, "text", "doc_id", 3, 16).select(
@@ -611,8 +611,7 @@ def q_dedup_minhash_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharing ≥1 band bucket with the exact matching-component fraction
     as the Jaccard estimate. The whole path — signature, band keys,
     pair set, estimate — is engine-portable and oracle-exact, making
-    the LINEAR-SCALE dedup route itself driver-certified (the seeded
-    pyspark.ml variant stays rows-only).
+    the LINEAR-SCALE dedup route itself hash-certified.
 
     Runs with the ``collapse_exact`` flood guard ON (the production
     default: exact-normalized duplicates are pre-collapsed so a
@@ -693,15 +692,6 @@ def q_dedup_near_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TX.near_dup_pairs_lsh(d, threshold=0.5, num_hashes=16, bands=8)
 
 
-@declare("q_dedup_minhash", oracle=None, tags=("dedup", "approx"))
-def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidate pairs (pyspark.ml, seed=42) — the
-    linear-scale near-dup path. Hash-seeded ⇒ rows-only check; exact
-    agreement with shingle Jaccard is asserted in pytest."""
-    d = load_table(spark, sf_dir, "documents")
-    return TX.minhash_pairs(d, jaccard_threshold=0.2).select("id_a", "id_b")
-
-
 _SIMHASH_BITS_SQL = " + ".join(
     f"CASE WHEN list_sum(list_transform(hs, h -> CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END)) > 0 THEN {1 << b} ELSE 0 END"
     for b in range(16)
@@ -729,35 +719,9 @@ def q_dedup_simhash_port(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-portable 16-bit SimHash per document
     (ops.text.simhash_portable): 60-bit md5-derived shingle hashes,
     ±1 bit votes, sign → bit — bit-identical in DuckDB, so the SimHash
-    fingerprint family gets an exact oracle (the xxhash64 variant
-    q_dedup_simhash stays the Spark-native rows-only fast path)."""
+    fingerprint family gets an exact oracle."""
     d = load_table(spark, sf_dir, "documents")
     return TX.simhash_portable(d, "text", "doc_id", 3, 16)
-
-
-@declare("q_dedup_simhash", oracle=None, tags=("dedup", "approx"))
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit SimHash per document (ops.text.simhash64 shape, reduced
-    width) — Spark xxhash64-based, no portable oracle."""
-    d = load_table(spark, sf_dir, "documents")
-    sh = TX.word_shingles("text", 3)
-    hashes = F.transform(sh, lambda s: F.xxhash64(s))
-    bits = [
-        F.when(
-            F.aggregate(
-                hashes,
-                F.lit(0),
-                lambda acc, h: acc + F.when(h.bitwiseAND(F.lit(1 << i)) != 0, 1).otherwise(-1),
-            )
-            > 0,
-            F.lit(1 << i),
-        ).otherwise(F.lit(0))
-        for i in range(16)
-    ]
-    out = F.lit(0)
-    for b in bits:
-        out = out.bitwiseOR(b)
-    return d.select("doc_id", out.alias("simhash16"))
 
 
 @declare(
@@ -959,18 +923,6 @@ def q_vec_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return VX.lsh_bucket_ann(q, e, k=5, n_planes=4, multi_probe=1).select(
         "query_id", "vec_id", "cos_sim", "rnk"
     )
-
-
-@declare("q_vec_ann_ivf", oracle=None, tags=("vector", "approx"))
-def q_vec_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-bucketed ANN (ops.vector.ivf_ann, seeded k-means coarse
-    quantizer): probe nearest clusters, exact re-rank inside. The
-    equi-join-on-cluster shape that replaces broadcast kNN beyond ~10⁷
-    vectors. Seeded-iterative fit ⇒ rows-only; recall vs exact kNN is
-    asserted in pytest."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    return VX.ivf_ann(q, e, k=5).select("query_id", "vec_id", "cos_sim", "rnk")
 
 
 @declare(
@@ -1528,8 +1480,7 @@ def q_vec_pca_port(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ops.vector.pca_power_portable: integer-quantized, 3 steps,
     deterministic sign). Certifies the PCA family's direction statistic
     with an exact oracle — defined-algorithm determinism, not claimed
-    convergence; eigen-spectra / converged components stay on the
-    seeded pyspark.ml path (q_vec_pca, rows-only)."""
+    convergence."""
     e = load_table(spark, sf_dir, "embeddings")
     return VX.pca_power_portable(e, "embedding", "vec_id", iters=3)
 
@@ -1586,9 +1537,7 @@ def q_vec_ann_ivf_port(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable-Lloyd coarse quantizer + integer probe selection +
     cluster-id equi-join + rounded-cosine re-rank. The whole ANN path —
     partitioning, probing, candidate join, ranking — is deterministic
-    and driver-certifiable; the trained-quantizer variant
-    (q_vec_ann_ivf, seeded pyspark.ml k-means) stays the rows-only
-    production tuning path."""
+    and hash-certifiable."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
     return VX.ivf_ann_portable(q, e, k=5, n_probe=2, n_clusters=8).select(
@@ -1946,62 +1895,12 @@ def q_vec_kmeans_port(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-size histogram + smallest member key. Exact-integer
     assignment math makes the whole iterative algorithm oracle-
     certifiable — the r2 portable-SimHash pattern applied to the one
-    ML-loop op that was still rows-only. The seeded pyspark.ml twin
-    (q_vec_kmeans) remains the production path."""
+    ML-loop op that was still rows-only."""
     e = load_table(spark, sf_dir, "embeddings")
     a = VX.kmeans_portable(e, "embedding", "vec_id", k=8, iters=2)
     return a.groupBy("cluster").agg(
         F.count("*").alias("n_vecs"), F.min("vec_id").alias("rep_vec")
     )
-
-
-@declare("q_vec_kmeans", oracle=None, tags=("vector", "approx"))
-def q_vec_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seeded k-means over the embedding table (pyspark.ml, k=10,
-    seed=42) — the clustering step of an embedding-curation pipeline
-    (and the trainable cousin of q_vec_ann_ivf's coarse quantizer).
-    Centroid init + Arrow batch order make assignments seed-stable but
-    not oracle-expressible → rows-only; cluster-quality asserted in
-    pytest (labels in testdata give a sanity signal)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    e = load_table(spark, sf_dir, "embeddings")
-    vecs = e.select("vec_id", "label", array_to_vector("embedding").alias("features"))
-    model = KMeans(k=10, seed=42, maxIter=10).fit(vecs)
-    pred = model.transform(vecs)
-    return (
-        pred.groupBy("prediction")
-        .agg(
-            F.count("*").alias("n_vecs"),
-            F.count_distinct("label").alias("n_labels"),
-        )
-        .orderBy("prediction")
-    )
-
-
-@declare("q_vec_pca", oracle=None, tags=("vector", "approx"))
-def q_vec_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PCA to 8 components over 64-dim embeddings (pyspark.ml) — the
-    dimensionality-reduction stage before cheap ANN / visualization.
-    Eigenvector signs are implementation-defined → rows-only; the
-    explained-variance CURVE (decreasing, sums ≤ 1) is asserted in
-    pytest, which is the implementation-independent invariant."""
-    from pyspark.ml.feature import PCA
-    from pyspark.ml.functions import array_to_vector
-
-    e = load_table(spark, sf_dir, "embeddings")
-    vecs = e.select(array_to_vector("embedding").alias("features"))
-    model = PCA(k=8, inputCol="features", outputCol="pca").fit(vecs)
-    ev = [float(x) for x in model.explainedVariance]
-    return spark.range(1).select(
-        F.explode(
-            F.arrays_zip(
-                F.sequence(F.lit(0), F.lit(len(ev) - 1)).alias("component"),
-                F.array(*[F.lit(round(v, 6)) for v in ev]).alias("explained_var"),
-            )
-        ).alias("z")
-    ).select(F.col("z.component").alias("component"), F.col("z.explained_var").alias("explained_var"))
 
 
 @declare(

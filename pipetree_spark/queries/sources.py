@@ -22,8 +22,6 @@ from pipetree_spark.catalog import TABLES, load_table
 from pipetree_spark.exact import dsum, dsum_sql
 from pipetree_spark.queries import declare
 
-_SCRATCH = tempfile.gettempdir()
-
 
 @declare(
     "q_src_scan",
@@ -86,7 +84,7 @@ def q_src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     an explicit schema, re-aggregate; must equal the oracle over the
     original parquet."""
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    path = f"{_SCRATCH}/pipetree_spark_csv_roundtrip"
+    path = f"{tempfile.gettempdir()}/pipetree_spark_csv_roundtrip"
     o.write.mode("overwrite").option("header", True).csv(path)
     schema = T.StructType(
         [
@@ -115,7 +113,7 @@ GROUP BY c_mktsegment
 def q_src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines sink → source fidelity (same protocol as CSV)."""
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment", "c_acctbal")
-    path = f"{_SCRATCH}/pipetree_spark_json_roundtrip"
+    path = f"{tempfile.gettempdir()}/pipetree_spark_json_roundtrip"
     c.write.mode("overwrite").json(path)
     schema = T.StructType(
         [
@@ -146,7 +144,7 @@ def q_src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet; same vectorized reader path). Doubles survive exactly —
     ORC stores IEEE754 bits verbatim."""
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_retailprice")
-    path = f"{_SCRATCH}/pipetree_spark_orc_roundtrip"
+    path = f"{tempfile.gettempdir()}/pipetree_spark_orc_roundtrip"
     p.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("p_brand").agg(
@@ -179,7 +177,7 @@ def q_src_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_returnflag", "l_linestatus"
     )
-    path = f"{_SCRATCH}/pipetree_spark_partitioned_sink"
+    path = f"{tempfile.gettempdir()}/pipetree_spark_partitioned_sink"
     l.write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
     back = spark.read.parquet(path).filter(F.col("l_returnflag") == "R")
     return back.groupBy("l_returnflag", "l_linestatus").agg(
@@ -212,7 +210,7 @@ def q_src_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame must equal the oracle over the original table, and ``n_named``
     (non-null c_name) must count exactly the batch-2 rows."""
     c = load_table(spark, sf_dir, "customer")
-    path = f"{_SCRATCH}/pipetree_spark_evolution"
+    path = f"{tempfile.gettempdir()}/pipetree_spark_evolution"
     old = c.filter(F.col("c_custkey") % 2 == 1).select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )

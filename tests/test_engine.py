@@ -3,7 +3,6 @@ inspection, and the runtime-conf contract on a vanilla session."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from pipetree_spark.engine import Engine
@@ -58,7 +57,6 @@ def test_parse_byte_conf_unit_suffixes():
     assert _parse_byte_conf("nonsense") == -1
 
 
-@pytest.mark.slow
 def test_load_table_events_us_and_ntz_encodings(spark, tmp_path):
     """catalog.load_table's events branch must yield identical
     ts/ts_ns/ts_sec for all three generator encodings: int64-ns (what

@@ -20,7 +20,6 @@ from pathlib import Path
 
 import duckdb
 import pandas as pd
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -160,7 +159,6 @@ def _replay(spark, sf_dir: str, names: list[str], view_tables: dict[str, str]) -
 
 @settings(**FUZZ_SETTINGS)
 @given(events_rows)
-@pytest.mark.slow
 def test_event_queries_survive_random_streams(spark, tmp_path_factory, rows):
     base = dt.datetime(2024, 1, 2, 12, 0, 0)  # inside the gapfill spine window
     data = [
@@ -183,7 +181,6 @@ def test_event_queries_survive_random_streams(spark, tmp_path_factory, rows):
 
 @settings(**FUZZ_SETTINGS)
 @given(doc_rows)
-@pytest.mark.slow
 def test_doc_queries_survive_random_corpora(spark, tmp_path_factory, rows):
     data = [
         (i, text, lang, source, len(text))
@@ -198,7 +195,6 @@ def test_doc_queries_survive_random_corpora(spark, tmp_path_factory, rows):
 
 @settings(**FUZZ_SETTINGS)
 @given(vec_rows)
-@pytest.mark.slow
 def test_vec_queries_survive_random_embeddings(spark, tmp_path_factory, rows):
     data = [(i, [float(x) for x in vec], lab) for i, (lab, vec) in enumerate(rows)]
     sf = str(tmp_path_factory.mktemp("fuzz_vecs"))

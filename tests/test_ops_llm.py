@@ -1,7 +1,6 @@
 """Unit tests for the LLM-data ops (SURVEY §2.12): dedup family
 agreement, lang-id accuracy on synthetic text, LSH ANN recall, and the
-multimodal binary plumbing. These are the pytest halves promised by the
-rows-only declared queries."""
+multimodal binary plumbing."""
 
 from __future__ import annotations
 
@@ -85,27 +84,13 @@ def test_near_dup_cap_is_noop_on_normal_corpus(spark, docs):
     assert exact == capped
 
 
-def test_minhash_agrees_with_exact_jaccard(spark, docs):
-    """MinHash-LSH at a LOWER threshold must cover every exact-Jaccard
-    pair at the target threshold (the scale pattern: LSH pre-filter,
-    exact-Jaccard verify on survivors) with a similar estimate."""
-    exact = {(r.id_a, r.id_b): r.jaccard for r in TX.near_dup_pairs(docs, threshold=0.5).collect()}
-    approx = {
-        (r.id_a, r.id_b): r.est_jaccard
-        for r in TX.minhash_pairs(docs, jaccard_threshold=0.3).collect()
-    }
-    assert set(exact) <= set(approx)
-    for pair, j in exact.items():
-        assert abs(approx[pair] - j) < 0.35  # 32 hashes → coarse estimate
-
-
 def test_portable_minhash_banding_finds_planted_pairs(spark, docs):
     """The deterministic (md5-seeded) MinHash banding must surface the
     planted near-dup pairs as candidates at a banding threshold below
     their Jaccard, estimate Jaccard within 16-permutation resolution,
-    and be reproducible run-to-run (no RNG state — the property the
-    pyspark.ml path can't offer). 8 bands × 2 rows targets J ≈
-    (1/8)^(1/2) ≈ 0.35; the planted pairs sit at J 0.64-0.78.
+    and be reproducible run-to-run (no RNG state). 8 bands × 2 rows
+    targets J ≈ (1/8)^(1/2) ≈ 0.35; the planted pairs sit at J
+    0.64-0.78.
 
     Contract split (the r4 ``collapse_exact`` flood guard): by default
     exact-normalized duplicates are pre-collapsed, so the exact-dup
@@ -148,18 +133,6 @@ def test_portable_minhash_banding_finds_planted_pairs(spark, docs):
     # whitespace variant pair is a high-but-not-1.0 estimate — it is
     # exact_dedup's normalized hash, not the signature, that equates them
     assert raw[(1, 2)] >= 0.5
-
-
-def test_simhash_close_for_near_dups(spark, docs):
-    out = {r.doc_id: r.sh for r in docs.select("doc_id", TX.simhash64("text").alias("sh")).collect()}
-
-    def hamming(a, b):
-        return bin(a ^ b).count("1")
-
-    # near-dups land far closer in hamming space than unrelated docs
-    assert hamming(out[1], out[2]) < hamming(out[1], out[5])
-    assert hamming(out[3], out[4]) < hamming(out[3], out[5])
-    assert hamming(out[6], out[7]) < hamming(out[6], out[5])
 
 
 def test_simhash_portable_close_for_near_dups(spark, docs):
@@ -228,7 +201,7 @@ def test_lsh_ann_finds_near_dup_sources(spark, sf_small):
     """The regime sign-LSH exists for: a perturbed copy (cos ≈ 0.98)
     must retrieve its source as top-1 — the q_dedup_embcos candidate
     workload. Uniform-kNN recall on weakly-clustered data belongs to
-    ivf_ann (regime boundary documented in ops/vector.py)."""
+    ivf_ann_portable (regime boundary documented in ops/vector.py)."""
     e = load_table(spark, sf_small, "embeddings")
     rng = np.random.RandomState(7)
     pert = [
@@ -283,18 +256,6 @@ def test_mm_frame_sample(spark):
     assert out.sampled_frames == [bytes([0]), bytes([10]), bytes([20])]
 
 
-def test_ivf_ann_recall_vs_exact(spark, sf_small):
-    e = load_table(spark, sf_small, "embeddings")
-    q = e.filter(F.col("vec_id") < 10).select(F.col("vec_id").alias("query_id"), "embedding")
-    exact = {(r.query_id, r.vec_id) for r in VX.knn_bruteforce(q, e, k=5).collect()}
-    approx = {(r.query_id, r.vec_id) for r in VX.ivf_ann(q, e, k=5, n_clusters=4, n_probe=3).collect()}
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.5  # 3 of 4 clusters probed
-    # probing ALL clusters must recover the exact result
-    full = {(r.query_id, r.vec_id) for r in VX.ivf_ann(q, e, k=5, n_clusters=4, n_probe=4).collect()}
-    assert full == exact
-
-
 def test_ivf_portable_recall_vs_exact(spark, sf_small):
     """The oracle-certifiable IVF (portable-Lloyd quantizer) must keep
     useful recall vs exact kNN, and probing ALL clusters must recover
@@ -312,6 +273,33 @@ def test_ivf_portable_recall_vs_exact(spark, sf_small):
         for r in VX.ivf_ann_portable(q, e, k=5, n_clusters=4, n_probe=4).collect()
     }
     assert full == exact
+
+
+@pytest.mark.parametrize("vec, key", [("my-vec", "my-id"), ("select", "from")])
+def test_vector_sql_fragments_quote_column_names(spark, vec, key):
+    """Column names reach the parsed-SQL quantizer fragments through
+    ``sql_ident``: a hyphenated name must not parse as subtraction, nor
+    a reserved word as a keyword. The IVF-PQ composition (quantize,
+    probe, PQ fit) and both multi-probe twins must return exactly the
+    plain-name result."""
+    rng = np.random.RandomState(5)
+    rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(60)]
+
+    def run(v, k):
+        df = spark.createDataFrame(
+            rows, f"{VX.sql_ident(k)} long, {VX.sql_ident(v)} array<double>"
+        )
+        q = df.filter(F.col(k) < 5).select(F.col(k).alias("query_id"), F.col(v))
+        ann = VX.pq_ivf_ann_portable(
+            q, df, k=3, n_clusters=4, m=4, n_codes=8, dim=8, corpus_key=k, vec_col=v
+        )
+        probes = [
+            VX.ivf_multiprobe_assign(df, v, k, n_probe=2, n_clusters=4, via=via)
+            for via in ("expr", "arrow")
+        ]
+        return [sorted(tuple(r) for r in out.collect()) for out in (ann, *probes)]
+
+    assert run(vec, key) == run("embedding", "vec_id")
 
 
 def test_pq_codes_shape_and_diversity(spark, sf_small):
@@ -631,24 +619,6 @@ def test_connected_components_raises_on_non_convergence(spark):
         connected_components(chain, max_iter=2).collect()
 
 
-def test_pca_explained_variance_curve(spark, sf_small):
-    from pipetree_spark.queries import load_registry
-
-    rows = load_registry()["q_vec_pca"].fn(spark, sf_small).collect()
-    evs = [r["explained_var"] for r in sorted(rows, key=lambda r: r["component"])]
-    assert len(evs) == 8
-    assert all(evs[i] >= evs[i + 1] - 1e-9 for i in range(7))  # decreasing
-    assert 0 < sum(evs) <= 1.0 + 1e-6
-
-
-def test_kmeans_clusters_cover_data(spark, sf_small):
-    from pipetree_spark.queries import load_registry
-
-    rows = load_registry()["q_vec_kmeans"].fn(spark, sf_small).collect()
-    assert sum(r["n_vecs"] for r in rows) == 500  # every vector assigned
-    assert len(rows) == 10
-
-
 def test_kmeans_portable_assignment_properties(spark, sf_small):
     """Portable Lloyd k-means: every vector assigned, k clusters, and
     the assignment is locally optimal for the final centroids is
@@ -700,8 +670,8 @@ def test_pca_portable_matches_numpy_simulation(spark, sf_small):
     independent numpy re-derivation bit-for-bit. (It deliberately does
     NOT claim to equal PC1: this corpus is near-isotropic — top
     centered eigenvalues 14.4 vs 13.5 — so 3 power steps only start
-    turning toward PC1; convergence tuning is the pyspark.ml path's
-    job, certifiable determinism is this op's.)"""
+    turning toward PC1; this op certifies determinism, not
+    convergence.)"""
     import pyarrow.parquet as pq
 
     from pipetree_spark.catalog import table_path
@@ -762,10 +732,9 @@ def test_mm_resize_stage_shapes_and_determinism(spark, sf_small):
     assert again == {k: bytes(r.content) for k, r in rows.items()}
 
 
-@pytest.mark.slow
 def test_pca_ml_twin_agrees_with_portable_direction(spark, sf_small):
-    """Cross-twin property (r4 VERDICT item 6): the seeded pyspark.ml
-    PCA (rows-only in the driver) must agree with the oracle-certified
+    """Cross-twin property (r4 VERDICT item 6): MLlib PCA, used here
+    only as a reference, must agree with the oracle-certified
     portable power iteration on the DIRECTION it converges to. At 32
     iterations the portable direction reaches |cos| ≈ 0.96 vs the true
     top eigenvector of the quantized covariance (numpy-calibrated;
@@ -785,54 +754,6 @@ def test_pca_ml_twin_agrees_with_portable_direction(spark, sf_small):
     pc1 = np.array(model.pc.toArray()[:, 0], dtype=float)
     cos = abs(v @ pc1) / (np.linalg.norm(v) * np.linalg.norm(pc1))
     assert cos >= 0.9, cos
-
-
-def test_kmeans_ml_twin_purity_not_worse_than_portable(spark, sf_small):
-    """Cross-twin property: seeded pyspark.ml k-means (more Lloyd
-    iterations, smarter init) must cluster the label-structured corpus
-    at least as coherently as the 2-iteration portable twin — if the
-    production path ever scores materially below the certified
-    baseline, its seed/init/convergence is broken."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    e = load_table(spark, sf_small, "embeddings")
-
-    def purity(assign):  # assign: (vec_id, cluster)
-        per = (
-            assign.join(e.select("vec_id", "label"), "vec_id")
-            .groupBy("cluster", "label").count()
-            .groupBy("cluster")
-            .agg((F.max("count") / F.sum("count")).alias("p"), F.sum("count").alias("n"))
-        ).collect()
-        return sum(r.p * r.n for r in per) / sum(r.n for r in per)
-
-    p_port = purity(VX.kmeans_portable(e, "embedding", "vec_id", k=8, iters=2))
-
-    vecs = e.select("vec_id", array_to_vector("embedding").alias("features"))
-    model = KMeans(k=8, seed=42, maxIter=10).fit(vecs)
-    ml = model.transform(vecs).select("vec_id", F.col("prediction").alias("cluster"))
-    p_ml = purity(ml)
-    assert p_ml >= p_port - 0.05, (p_ml, p_port)
-
-
-def test_ivf_ml_twin_recall_not_worse_than_portable(spark, sf_small):
-    """Cross-twin property: the seeded pyspark.ml IVF quantizer
-    (production tuning path, rows-only) must not lose recall vs the
-    portable-Lloyd IVF on the same workload — same clusters, probes,
-    k, and query set as the portable recall gate above."""
-    e = load_table(spark, sf_small, "embeddings")
-    q = e.filter(F.col("vec_id") < 10).select(F.col("vec_id").alias("query_id"), "embedding")
-    exact = {(r.query_id, r.vec_id) for r in VX.knn_bruteforce(q, e, k=5).collect()}
-
-    def recall(df):
-        got = {(r.query_id, r.vec_id) for r in df.collect()}
-        return len(exact & got) / len(exact)
-
-    r_port = recall(VX.ivf_ann_portable(q, e, k=5, n_clusters=4, n_probe=3))
-    r_ml = recall(VX.ivf_ann(q, e, k=5, n_clusters=4, n_probe=3))
-    assert r_ml >= r_port - 0.2, (r_ml, r_port)
-    assert r_ml >= 0.5
 
 
 def test_repetition_features_planted_boilerplate(spark):
@@ -1095,7 +1016,6 @@ def test_banding_flood_guard_in_gate(spark):
     assert pairs == {(10_001, 10_002)}
 
 
-@pytest.mark.slow
 def test_banding_mutated_flood_guard(spark):
     """The NEAR-identical flood case the exact-dup collapse can't touch
     (r6, VERDICT finding #1): 100k docs sharing a long boilerplate
@@ -2064,7 +1984,6 @@ def test_zero_norm_vectors_dont_crash_cosine_paths(spark):
     assert [v for u in flat for v in u].count(None) == 8  # zero vec -> NULLs
 
 
-@pytest.mark.slow
 def test_semantic_ann_centroid_injection_and_arrow_assign(spark):
     """r7 verdict #4/#5: (a) supplying a pre-trained centroid frame
     (ivf_train) must yield IDENTICAL components to the integrated
@@ -2115,7 +2034,6 @@ def test_semantic_ann_centroid_injection_and_arrow_assign(spark):
     assert all((r.vec_id == r.component) == bool(r.is_kept) for r in got_sample)
 
 
-@pytest.mark.slow
 def test_multiprobe_assign_arrow_bitexact_vs_expr(spark):
     """The Arrow assignment twin must produce the exact probe set of
     the HOF expression fold on random vectors — including the
@@ -2140,7 +2058,6 @@ def test_multiprobe_assign_arrow_bitexact_vs_expr(spark):
     }
 
 
-@pytest.mark.slow
 def test_nonfinite_vectors_are_singletons_in_both_pair_twins(spark):
     """r7-advice regression: NaN-norm vectors used to slip through the
     JVM pair stage's na > 0 filter (Spark: NaN > 0 is TRUE) while the
@@ -2526,7 +2443,6 @@ def test_codec_wild_file_tolerance_r11():
     assert len(got[0] if isinstance(got, tuple) else got) >= 1
 
 
-@pytest.mark.slow
 def test_bpe_train_matches_hand_computed_merges(spark, tmp_path):
     """ops.text.bpe_train on the textbook corpus (low x3, lower x2,
     newest x1): four hand-derived merges including BOTH tie-break
@@ -2633,7 +2549,6 @@ def test_bpe_train_matches_pure_python_reference(spark):
         assert got == expect, f"{docs}: {got} != {expect}"
 
 
-@pytest.mark.slow
 def test_phash_dedup_finds_planted_near_dups_and_nothing_else(spark):
     """r12 perceptual image near-dup: every planted perturbed variant
     (saturating +1 on every 64th byte, id = base + 100) must pair with
@@ -3664,7 +3579,6 @@ def test_warc_extract_body_charset_and_replacement(spark):
     assert "unsupported body charset" in str(ei.value)
 
 
-@pytest.mark.slow
 def test_mm_stages_honor_key_col_in_output(spark):
     """r12 ADVICE: stages that take key_col must emit THAT column, not
     a hardcoded doc_id."""
@@ -3689,7 +3603,6 @@ def test_mm_stages_honor_key_col_in_output(spark):
     assert cls.columns[0] == "img_id" and cls.count() == 2
 
 
-@pytest.mark.slow
 def test_cc_amortized_check_converges_off_cycle(spark):
     """r12: convergence checks run every check_every rounds (plus the
     final round as the fixpoint assertion) — a graph converging

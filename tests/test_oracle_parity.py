@@ -88,71 +88,3 @@ def test_driver_contract_shape():
     assert len(qs) >= 75
     assert all(callable(f) for f in qs.values())
     assert all(isinstance(s, str) and s.strip() for s in osql.values())
-
-
-def test_driver_window_is_stalest_first():
-    """The driver's correctness loop grades the first ~50 registry
-    entries (observed r1–r7: exactly 50). r7 pinned the window as a
-    hardcoded tuple and the pin self-invalidated the moment the round
-    succeeded (r7 verdict #1); the rotation is now DERIVED from the
-    CORRECTNESS record at load time, and this test asserts the
-    derivation's invariants — properties that stay true when a new
-    round's file lands, not a frozen composition.
-
-    Invariants:
-    1. No query outside the window is staler than any auto-slotted
-       query inside it (the window IS the stalest cohort).
-    2. RECONFIRM (code changed this round) occupies the window tail.
-    3. Never-driver-rowed queries sort first — first-time
-       certifications outrank everything.
-    4. Past the window, order remains stalest-first (a wider driver
-       cut still grades in marginal-value order).
-    """
-    from pipetree_spark.queries import (
-        RECONFIRM,
-        WINDOW,
-        _effective_rounds,
-    )
-
-    reg = load_registry()
-    order = list(reg)
-    window = order[:WINDOW]
-    eff = _effective_rounds()
-    rnd = lambda n: eff.get(n, 0)  # noqa: E731
-
-    assert all(n in window for n in RECONFIRM)
-    assert window[-len(RECONFIRM):] == list(RECONFIRM)
-
-    auto_in = [n for n in window if n not in RECONFIRM]
-    outside = [n for n in order[WINDOW:] if n not in RECONFIRM]
-    assert max(rnd(n) for n in auto_in) <= min(rnd(n) for n in outside), (
-        "a staler query sits outside the window"
-    )
-    # stalest-first is monotone across the auto ordering, window and beyond
-    auto_all = auto_in + outside
-    rounds = [rnd(n) for n in auto_all]
-    assert rounds == sorted(rounds), "auto ordering is not stalest-first"
-    # never-rowed queries (round 0) lead the window
-    never = [n for n in reg if rnd(n) == 0]
-    assert window[: len(never)] == never
-
-
-def test_driver_window_maximizes_new_certifications():
-    """Rotation discipline, computed from the actual CORRECTNESS
-    history: every oracle-bearing query the driver has NEVER graded must
-    sit inside the 50-slot window — and front-loaded (within the first
-    31 slots), so even a narrower cut than the observed 50 still lands
-    first-time certifications before re-confirmations."""
-    import json
-
-    graded: set[str] = set()
-    root = Path(__file__).resolve().parent.parent
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        graded |= set(json.loads(p.read_text()))
-    reg = load_registry()
-    never = [n for n, q in reg.items() if q.oracle is not None and n not in graded]
-    order = {n: i for i, n in enumerate(reg)}
-    # bound = 16 one-per-module slots + the never-graded block; far
-    # inside the observed 50-slot driver window
-    late = [n for n in never if order[n] >= 16 + len(never)]
-    assert not late, f"never-graded queries outside the front-loaded window: {late}"

@@ -303,7 +303,7 @@ def test_end_to_end_dedup_pipeline(spark, tmp_path):
         return TX.exact_dedup(i["quality"])
 
     def survivors(_s, i):
-        cands = TX.minhash_pairs(i["exact"], jaccard_threshold=0.3).select("id_a", "id_b")
+        cands = TX.minhash_band_pairs(i["exact"], bands=8).select("id_a", "id_b")
         verified = TX.near_dup_pairs(i["exact"], threshold=0.5).join(
             cands, on=["id_a", "id_b"], how="left_semi"
         )
@@ -1108,7 +1108,6 @@ def test_curation_full_spec_matches_constants():
     ]
 
 
-@pytest.mark.slow
 def test_curation_full_pipeline_example(spark, sf_small, tmp_path):
     """examples/curation_full_pipeline.json: the C4/CCNet/Gopher
     composite through the spec walker — funnel counts are monotone

@@ -13,7 +13,6 @@ import math
 
 import duckdb
 import pandas as pd
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -369,7 +368,6 @@ def test_repetition_features_random_corpora_match_duckdb(spark, texts):
         unique=True,
     )
 )
-@pytest.mark.slow
 def test_sessionize_random_streams_match_python_reference(spark, evs):
     """Gaps-and-islands sessionization vs a sequential python reference
     on random (user, ts) streams — the window rewrite must agree with
@@ -513,7 +511,6 @@ def test_pipeline_random_dags_topo_order_and_stable_keys(spark, n, data):
     ),
     st.integers(min_value=1, max_value=3),
 )
-@pytest.mark.slow
 def test_blocked_cos_pairs_arrow_bitexact_vs_expression(spark, vecs, n_blocks):
     """The Arrow pair stage (ops.vector.blocked_cos_pairs_arrow) claims
     BIT-IDENTICAL pair sets to the JVM-expression fold (_cos_pairs) via
@@ -1277,7 +1274,6 @@ def test_bpe_apply_matches_reference_on_random_corpora(spark, docs):
     ),
     st.integers(min_value=1, max_value=6),
 )
-@pytest.mark.slow
 def test_bpe_scale_path_matches_distributed_on_random_corpora(spark, docs, nm):
     """r12 differential gate for the production-scale BPE path: on
     random dense-tie corpora, the driver-side incremental trainer
@@ -1330,7 +1326,6 @@ def test_bpe_scale_path_matches_distributed_on_random_corpora(spark, docs, nm):
     ),
     st.integers(min_value=1, max_value=3),
 )
-@pytest.mark.slow
 def test_unigram_encode_matches_estep_on_random_corpora(spark, docs, nr):
     """r13 differential gate for the unigram ENCODE stage: on random
     corpora, the broadcast-probs mapInPandas encoder must equal a

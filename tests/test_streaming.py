@@ -54,7 +54,6 @@ def events_stream_dir(spark, sf_small, tmp_path_factory):
     return _write_chunks(spark, events, tmp_path_factory.mktemp("events_chunks"))
 
 
-@pytest.mark.slow
 def test_tumbling_stream_matches_batch(spark, sf_small, events_stream_dir):
     sdf = st.file_stream(spark, events_stream_dir)
     got = st.run_to_memory(st.tumbling_counts(sdf), spark, output_mode="append")
@@ -92,7 +91,6 @@ def _write_row_chunks(spark, tmp_path, chunks):
     return str(tmp_path)
 
 
-@pytest.mark.slow
 def test_watermark_drops_late_rows(spark, tmp_path):
     """A row arriving micro-batches later, with ts far behind the
     watermark, must be excluded from its (already closed) window.
@@ -155,7 +153,6 @@ def test_stream_static_join_matches_batch(spark, sf_small, events_stream_dir):
     assert got.count() == want.count()
 
 
-@pytest.mark.slow
 def test_stream_stream_join_time_bounded(spark, sf_small, events_stream_dir):
     l = st.file_stream(spark, events_stream_dir)
     r = st.file_stream(spark, events_stream_dir)
@@ -304,7 +301,6 @@ def test_incremental_dedup_replay_after_crash_is_duplicate_free(spark, tmp_path)
     assert spark.read.parquet(out).count() == 2
 
 
-@pytest.mark.slow
 def test_incremental_dedup_survives_query_restart(spark, tmp_path):
     """r7 verdict #7: crash-replay idempotence proven ACROSS A QUERY
     RESTART, not just a same-process re-call. Phase 1 runs the stream
@@ -475,7 +471,6 @@ def test_streaming_ohlc_bars_match_batch(spark, sf_small, events_stream_dir):
     assert finals == expected
 
 
-@pytest.mark.slow
 def test_streaming_ohlc_null_ticks_match_batch(spark, tmp_path):
     """running_ohlc on a feed WITH NULL-valued ticks: batch MAX/MIN
     ignore NULLs, open/close pass the tick value through (NULL stays

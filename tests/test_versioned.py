@@ -181,7 +181,6 @@ with open(out_file, "w") as fh:
 """
 
 
-@pytest.mark.slow
 def test_concurrent_writers_exactly_one_winner_per_version(spark, root, tmp_path):
     """r7 verdict #6: optimistic concurrency was only ever exercised
     in-process. Race a REAL second JVM/process against this session on
@@ -247,7 +246,6 @@ def test_concurrent_writers_exactly_one_winner_per_version(spark, root, tmp_path
     assert [f for f in os.listdir(log_dir) if ".tmp-" in f] == []
 
 
-@pytest.mark.slow
 def test_pq_index_persists_and_queries_identically(spark, tmp_path):
     """The build-once / query-many ANN workflow: fit the PQ model on
     the corpus, persist codes + codebook as versioned tables, reload

@@ -77,13 +77,13 @@ def main() -> None:
     import importlib
 
     live = {m: importlib.import_module(m) for m in PATCH}
-    new_fns = {m: {n: getattr(live[m], n) for n in ns} for m, ns in PATCH.items()}
+    new_fns = {m: {n: getattr(live[m], n) for n in names} for m, names in PATCH.items()}
     old_mods = load_old(ref)
-    old_fns = {m: {n: getattr(old_mods[m], n) for n in ns} for m, ns in PATCH.items()}
+    old_fns = {m: {n: getattr(old_mods[m], n) for n in names} for m, names in PATCH.items()}
 
     def apply(fns):
-        for m, ns in PATCH.items():
-            for n in ns:
+        for m, names in PATCH.items():
+            for n in names:
                 setattr(live[m], n, fns[m][n])
 
     registry = load_registry()

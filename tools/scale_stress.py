@@ -184,8 +184,8 @@ def ann_recall(spark, sf_dir: str) -> dict[str, tuple[float, float]]:
     """Recall-vs-exact for both ANN variants at one scale.
 
     - ``ivf``: uniform kNN workload (20 corpus vectors as queries),
-      recall@10 against brute force — exercises the learned coarse
-      quantizer on weakly-clustered geometry.
+      recall@10 against brute force — exercises the portable-Lloyd
+      coarse quantizer on weakly-clustered geometry.
     - ``lsh``: near-dup candidate workload (20 perturbed corpus vectors,
       cos ≈ 0.98 to their source), scored on source-retrieval@top1 —
       the regime sign-LSH exists for (q_dedup_embcos candidates).
@@ -208,7 +208,7 @@ def ann_recall(spark, sf_dir: str) -> dict[str, tuple[float, float]]:
     uq = emb.filter(F.col("vec_id") < 20).select(F.col("vec_id").alias("query_id"), "embedding")
     exact = topmap(VX.knn_bruteforce(uq, emb, k=K))
     t0 = time.perf_counter()
-    ivf = topmap(VX.ivf_ann(uq, emb, k=K, n_clusters=8, n_probe=5))
+    ivf = topmap(VX.ivf_ann_portable(uq, emb, k=K, n_clusters=8, n_probe=5))
     t_ivf = time.perf_counter() - t0
     r_ivf = sum(len(ivf.get(q, set()) & s) / len(s) for q, s in exact.items()) / len(exact)
 

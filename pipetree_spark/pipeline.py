@@ -88,8 +88,8 @@ class Pipeline:
                 # The JSON-able spec alone can't see the callable's body;
                 # without a code fingerprint a changed fn would content-key
                 # match and serve a stale cached artifact.
-                spec_payload["__code_sha"] = _code_fingerprint(fn)
-                if _has_unstable_captures(fn):
+                spec_payload["__code_sha"], stable = _code_fingerprint(fn)
+                if not stable:
                     spec_payload["__uncacheable"] = True
             stages[name] = Stage(
                 name=name,
@@ -111,8 +111,9 @@ class Pipeline:
         """Direct-API stage registration. The user-supplied callable is
         part of the stage's identity, so its code fingerprint joins the
         content key — editing the fn invalidates cached artifacts."""
-        payload = (spec or {"name": name}) | {"__code_sha": _code_fingerprint(fn)}
-        if _has_unstable_captures(fn):
+        sha, stable = _code_fingerprint(fn)
+        payload = (spec or {"name": name}) | {"__code_sha": sha}
+        if not stable:
             payload["__uncacheable"] = True
         self.stages[name] = Stage(name, fn, list(inputs or []), payload, materialize)
         self._order = self._toposort()
@@ -231,7 +232,7 @@ class Pipeline:
         return out
 
 
-def _code_fingerprint(fn: Callable) -> str:
+def _code_fingerprint(fn: Callable) -> tuple[str, bool]:
     """Stable hash of a callable's implementation: source text (bytecode
     + consts as the REPL fallback) PLUS primitive closure-cell and
     default values — two builds of the same source parameterized by a
@@ -240,16 +241,20 @@ def _code_fingerprint(fn: Callable) -> str:
     sorted ordering (a captured config dict is a common parameterization
     — two builds differing only in it must not collide, r2 ADVICE).
     Remaining non-primitive captures (ndarrays, DataFrames, objects)
-    hash by type name + UNCACHEABLE marker: the cache layer sees the
-    marker in the fingerprint source and skips caching that stage
-    rather than risk serving a stale artifact."""
+    hash by type name only, so two different builds could collide.
+
+    Returns ``(fingerprint, stable)``; ``stable`` is False when such a
+    capture was met, directly or through a captured helper function.
+    Stages built from an unstable callable are never served from cache."""
     try:
         body = inspect.getsource(fn)
     except (OSError, TypeError):
         code = getattr(fn, "__code__", None)
         body = repr((code.co_code, code.co_consts)) if code else repr(fn)
+    stable = True
 
     def prim(v):
+        nonlocal stable
         if isinstance(v, (str, int, float, bool, bytes, type(None))):
             return repr(v)
         if isinstance(v, (tuple, list)):
@@ -260,37 +265,17 @@ def _code_fingerprint(fn: Callable) -> str:
         if isinstance(v, (set, frozenset)):
             return "{" + ",".join(sorted(prim(x) for x in v)) + "}"
         if inspect.ismodule(v):
-            return f"<module:{v.__name__}>"
+            return f"<module:{v.__name__}>"  # module code drift is out of scope
         if inspect.isfunction(v):
-            return f"<fn:{_code_fingerprint(v)}>"  # content-addressed
+            sha, fn_stable = _code_fingerprint(v)  # content-addressed
+            stable = stable and fn_stable
+            return f"<fn:{sha}>"
+        stable = False
         return f"<UNCACHEABLE:{type(v).__name__}>"
     cells = [prim(c.cell_contents) for c in (getattr(fn, "__closure__", None) or ())]
     defaults = [prim(v) for v in (getattr(fn, "__defaults__", None) or ())]
-    return hashlib.sha256("\x00".join([body, *cells, *defaults]).encode()).hexdigest()[:16]
-
-
-def _has_unstable_captures(fn: Callable) -> bool:
-    """True when the callable captures a value _code_fingerprint can't
-    hash by content (ndarray, DataFrame, arbitrary object) — its
-    fingerprint then only sees the type name, so two different builds
-    could collide. Stages flagged this way are never served from cache."""
-
-    def unstable(v) -> bool:
-        if isinstance(v, (str, int, float, bool, bytes, type(None))):
-            return False
-        if isinstance(v, (tuple, list, set, frozenset)):
-            return any(unstable(x) for x in v)
-        if isinstance(v, dict):
-            return any(unstable(x) for x in v.values())
-        if inspect.ismodule(v):
-            return False  # hashed by name; module code drift is out of scope
-        if inspect.isfunction(v):
-            return _has_unstable_captures(v)  # body is content-addressed
-        return True
-
-    vals = [c.cell_contents for c in (getattr(fn, "__closure__", None) or ())]
-    vals += list(getattr(fn, "__defaults__", None) or ())
-    return any(unstable(v) for v in vals)
+    sha = hashlib.sha256("\x00".join([body, *cells, *defaults]).encode()).hexdigest()[:16]
+    return sha, stable
 
 
 # -- stage-fn builders -----------------------------------------------------

@@ -203,29 +203,40 @@ def test_captured_dict_change_invalidates_cache(spark, sf_small, tmp_path):
 def test_unhashable_capture_never_served_from_cache(spark, sf_small, tmp_path):
     """A capture the fingerprint can only see by type name (e.g. an
     ndarray) marks the stage uncacheable: a second build with different
-    contents but the same type must recompute, never hit."""
+    contents but the same type must recompute, never hit. That holds
+    when the ndarray is captured by a helper function the stage calls."""
     import numpy as np
 
-    from pipetree_spark.cache import ArtifactCache
-
-    cache = ArtifactCache(str(tmp_path))
-
-    def build(arr):
+    def direct(arr):
         def fn(s, fr):
             return fr["orders"].select(
                 (F.col("o_totalprice") * float(arr[0])).alias("x")
             )
 
+        return fn
+
+    def via_helper(arr):
+        def factor():
+            return float(arr[0])
+
+        def fn(s, fr):
+            return fr["orders"].select((F.col("o_totalprice") * factor()).alias("x"))
+
+        return fn
+
+    def build(stage_fn):
         p = Pipeline.from_spec(
             {"stages": {"orders": {"type": "source", "table": "orders", "sf_dir": sf_small}}}
         )
-        p.add_stage("scaled", fn, inputs=["orders"], spec={"name": "scaled"}, materialize=True)
+        p.add_stage("scaled", stage_fn, inputs=["orders"], spec={"name": "scaled"}, materialize=True)
         return p
 
-    build(np.array([1.0])).run(spark, cache=cache)
-    p2 = build(np.array([2.0]))  # same type name, different contents
-    p2.run(spark, cache=cache)
-    assert p2.last_run_report["scaled"] != "hit"
+    for make in (direct, via_helper):
+        cache = ArtifactCache(str(tmp_path / make.__name__))
+        build(make(np.array([1.0]))).run(spark, cache=cache)
+        p2 = build(make(np.array([2.0])))  # same type name, different contents
+        p2.run(spark, cache=cache)
+        assert p2.last_run_report["scaled"] != "hit", make.__name__
 
 
 def test_unknown_target_raises_clear_error(spark, sf_small):

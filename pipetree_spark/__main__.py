@@ -30,6 +30,7 @@ import sys
 
 from pipetree_spark.cache import ArtifactCache
 from pipetree_spark.catalog import DEFAULT_SF_DIR
+from pipetree_spark.ops.relational import checkpoint_scope
 from pipetree_spark.pipeline import Pipeline
 from pipetree_spark.session import get_spark
 
@@ -74,14 +75,15 @@ def main(argv: list[str] | None = None) -> int:
     cache = None if args.no_cache else ArtifactCache(args.cache)
     spark = get_spark("pipetree-spark-cli")
 
-    results = pipeline.run(spark, cache=cache, targets=args.targets)
-    for name, status in pipeline.last_run_report.items():
-        print(f"{name}: {status}", file=sys.stderr)
-    for name in args.targets or results:
-        df = results[name]
-        print(f"{name}: {df.count()} rows")
-        if args.show:
-            df.show(args.show, truncate=False)
+    with checkpoint_scope(spark):
+        results = pipeline.run(spark, cache=cache, targets=args.targets)
+        for name, status in pipeline.last_run_report.items():
+            print(f"{name}: {status}", file=sys.stderr)
+        for name in args.targets or results:
+            df = results[name]
+            print(f"{name}: {df.count()} rows")
+            if args.show:
+                df.show(args.show, truncate=False)
     return 0
 
 

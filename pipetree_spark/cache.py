@@ -30,8 +30,9 @@ _process_cache_roots: dict[str, str] = {}
 
 
 def process_cache_root(namespace: str) -> str:
-    """Per-PROCESS private artifact root for the declared cache-walk
-    queries (r15): ``mkdtemp`` once per (process, namespace), removed at
+    """Per-PROCESS private root for the declared queries that write
+    (cache walks, source round-trips, q_pipe_timetravel's snapshot
+    store): ``mkdtemp`` once per (process, namespace), removed at
     interpreter exit.
 
     The previous fixed ``/tmp/pipetree_spark_<ns>_artifacts`` paths let
@@ -41,8 +42,8 @@ def process_cache_root(namespace: str) -> str:
     per-process root keeps the certified skip-if-cached semantics (the
     warm-up rep pays the cold materialization, later reps in the same
     process hit), guarantees every invocation computes from the inputs,
-    and closes the predictable-name /tmp squat the same way
-    q_pipe_timetravel's scratch root does (unpredictable name, 0700).
+    and closes the predictable-name /tmp squat (unpredictable name,
+    0700) that a fixed path leaves open to other processes and users.
     """
     root = _process_cache_roots.get(namespace)
     import os as _os
@@ -101,15 +102,11 @@ class ArtifactCache:
         df: DataFrame,
         stage: str,
         key: str,
-        partition_by: list[str] | None = None,
         bucket_by: tuple[int, list[str]] | None = None,
         sort_by: list[str] | None = None,
     ) -> DataFrame:
         """Write the stage output as the artifact and return a frame that
         READS it (lineage cut — downstream stages never recompute this).
-
-        ``partition_by`` lets hot stages lay out partition-pruned sinks
-        (SURVEY §4.2: partitioned artifacts make DPP fire downstream).
 
         ``bucket_by=(n, cols)`` (optionally with ``sort_by``) writes a
         bucketed table instead: every downstream equi-join or aggregate
@@ -126,10 +123,7 @@ class ArtifactCache:
             spark.sql(f"DROP TABLE IF EXISTS {table}")
             writer.option("path", self.path(stage, key)).format("parquet").saveAsTable(table)
             return spark.table(table)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.path(stage, key))
+        df.write.mode("overwrite").parquet(self.path(stage, key))
         return self.load(spark, stage, key)
 
     @staticmethod

@@ -15,7 +15,8 @@ every decoder path is exercised by our own output.
 
 Honest :class:`FlacFormatError` for malformed streams. Python-speed
 per payload (same fallback contract as the other r10 codecs — a
-throughput deployment swaps in a codec lib at mm.real_decoder).
+throughput deployment swaps a codec lib in behind
+mm.audio_decode_stage).
 """
 
 from __future__ import annotations

@@ -22,8 +22,8 @@ numpy — same bytes in, same bytes out, both directions.
 
 Scale note: like ops/png.py this is a *correct fallback*, Python-speed
 per row inside mapInPandas Arrow batches — a deployment with real
-throughput needs swaps a codec lib into the same ``decoder=``
-extension point (mm.real_decoder).
+throughput needs swaps a codec lib in behind the same stage
+(mm.image_decode_stage).
 """
 
 from __future__ import annotations

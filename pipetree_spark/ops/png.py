@@ -11,8 +11,8 @@ variants a 100-LoC codec should not silently mis-decode (palette,
 
 Scale note: this is a *correct fallback*, not a throughput claim — the
 per-row defilter loop is Python-speed (fine for thumbnails and tests;
-a production deployment swaps in a codec lib through the same
-``decoder=`` extension point, mm.real_decoder). What matters Spark-side
+a production deployment swaps in a codec lib behind the same stage,
+mm.image_decode_stage). What matters Spark-side
 is unchanged from the raw-RGB8 path: payloads decode executor-side in
 Arrow batches, never on the driver.
 """

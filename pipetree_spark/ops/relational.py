@@ -6,9 +6,10 @@ docstring — the 100 TB discipline from SURVEY §2.12's design note.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -353,23 +354,26 @@ def broadcast_if_small(
     return df
 
 
-def release_checkpoint(df: DataFrame) -> bool:
-    """Release the executor-pinned RDD behind a ``localCheckpoint``-ed
-    frame. ``Dataset.unpersist()`` is a SILENT NO-OP for checkpoint
-    state — it only consults the SQL CacheManager, while localCheckpoint
-    persists its RDD directly (probed r14: getPersistentRDDs stays at 1
-    after unpersist(), drops to 0 after this) — so long-lived sessions
-    that loop over checkpointing ops (bench reps, multi-list RRF specs
-    calling bm25_scores per list) need this to bound executor storage.
-    Reaches the pinned RDD through the analyzed ``LogicalRDD``; returns
-    True if one was found and unpersisted. The frame MUST NOT be reused
-    afterwards — its lineage was truncated at checkpoint time and
-    cannot be recomputed."""
+@contextmanager
+def checkpoint_scope(spark: SparkSession) -> Iterator[None]:
+    """Free, on exit, every RDD pinned on the executors since entry —
+    the storage ``localCheckpoint`` pins outside the SQL CacheManager,
+    where ``Dataset.unpersist()`` cannot reach it. Spark lists every
+    pinned RDD in ``getPersistentRDDs()``, so the scope diffs that map's
+    ids instead of registering checkpoints one by one. Open it where one
+    caller owns both a frame's construction and its last action; frames
+    checkpointed inside cannot be recomputed after it closes.
+
+    The scope must not overlap other work on the same SparkContext —
+    another session, a streaming query's foreachBatch thread, any other
+    thread: an RDD pinned there meanwhile would be freed under it."""
+    before = set(spark._jsc.getPersistentRDDs().keys())
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        return True
-    except Exception:
-        return False
+        yield
+    finally:
+        for rdd_id, rdd in spark._jsc.getPersistentRDDs().items():
+            if rdd_id not in before:
+                rdd.unpersist(False)
 
 
 def sized_repartition(
@@ -409,8 +413,8 @@ def sized_repartition(
 
     The result uses round-robin repartition(n) (even sizes, no key
     skew); callers that need pruning or bucketing should use the
-    cache layer's partition_by/bucket_by sinks instead — this op is
-    for the "just give me ~256 MB shards" export."""
+    cache layer's bucketed sink (``ArtifactCache.materialize(bucket_by=)``)
+    instead — this op is for the "just give me ~256 MB shards" export."""
     import math
     import uuid
 

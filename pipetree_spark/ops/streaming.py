@@ -341,10 +341,13 @@ def incremental_dedup_batch(
     # three full evaluations per micro-batch. The write ORDER is
     # unchanged (data first into the batch's own partition, ledger
     # last as the commit point — see the crash analysis above), and
-    # the pinned blocks are released before returning so a long-lived
-    # stream's executor storage stays bounded.
-    from pipetree_spark.ops.relational import release_checkpoint
-
+    # this batch's pinned blocks are freed before returning so a
+    # long-lived stream's executor storage stays bounded. Only THIS
+    # frame's RDD is unpersisted (through its analyzed LogicalRDD;
+    # Dataset.unpersist() does not reach checkpoint state): the body
+    # runs on the stream's own thread, concurrently with the driver and
+    # other streams, so ops.relational.checkpoint_scope — which frees
+    # every RDD pinned on the SparkContext meanwhile — must not wrap it.
     firsts = firsts.localCheckpoint(eager=False)
     try:
         admitted = firsts.count()
@@ -355,7 +358,7 @@ def incremental_dedup_batch(
             F.col("__nh").alias("nh"), F.lit(batch_id).cast("long").alias("batch_id")
         ).write.mode("append").parquet(ledger_dir)
     finally:
-        release_checkpoint(firsts)
+        firsts._jdf.queryExecution().analyzed().rdd().unpersist(False)
     return admitted
 
 

@@ -2624,7 +2624,6 @@ def bm25_scores(
     key_col: str = "doc_id",
     k1: float = 1.2,
     b: float = 0.75,
-    state_sink: list | None = None,
 ) -> DataFrame:
     """Okapi BM25 relevance of each document for each query term — the
     text-retrieval scorer beside TF-IDF (r11 verdict item 8):
@@ -2656,16 +2655,14 @@ def bm25_scores(
     one row per (doc, term) with tf > 0.
 
     Cache contract (r13 ADVICE): each call pins ONE |docs|-row
-    checkpoint RDD on the executors for the session's lifetime —
-    repeated calls (bench reps, multi-list RRF specs) accumulate one
-    per call. A caller that scores many term lists over the SAME
-    corpus should make one call with the union of terms, or pass
-    ``state_sink=[]`` and release after its terminal action with
-    ``ops.relational.release_checkpoint(sink.pop())`` — NOT
-    ``.unpersist()``, which is a silent no-op for checkpoint state
-    (r14 self-review; release_checkpoint docstring has the probe).
-    The degenerate empty-terms frame is also appended (release is a
-    harmless no-op on it) so ``sink.pop()`` never IndexErrors. Plan
+    checkpoint RDD on the executors until the JVM garbage-collects the
+    frame — repeated calls (bench reps, multi-list RRF specs)
+    accumulate one per call. A caller that scores many term lists over
+    the SAME corpus should make one call with the union of terms; a
+    long-lived session frees the state deterministically by running
+    the call and its last action inside
+    ``ops.relational.checkpoint_scope(spark)`` (``.unpersist()`` is a
+    silent no-op for checkpoint state). Plan
     width is one agg column + one union branch per term — fine at
     retrieval-query arity (≤ ~32 terms); beyond that a (doc, word)
     join plan beats column fan-out, and this fn warns."""
@@ -2697,10 +2694,7 @@ def bm25_scores(
                 T.StructField("score", T.DoubleType()),
             ]
         )
-        empty = df.sparkSession.createDataFrame([], schema)
-        if state_sink is not None:
-            state_sink.append(empty)  # keep the pop-and-release contract
-        return empty
+        return df.sparkSession.createDataFrame([], schema)
     toks = df.select(
         F.col(key_col), F.explode(tokens(text_col)).alias("word")
     ).where(F.length("word") > 0)
@@ -2722,8 +2716,6 @@ def bm25_scores(
             for i, t in enumerate(terms)
         ],
     ).localCheckpoint(eager=False)
-    if state_sink is not None:
-        state_sink.append(docstats)
     model = docstats.agg(
         F.count("*").alias("n_docs"),
         F.sum("dl").alias("sum_dl"),

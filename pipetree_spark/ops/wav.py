@@ -2,8 +2,8 @@
 
 WAV is the audio twin of what PNG is to images in this repo: a
 mainstream container fully parseable with the stdlib alone (``struct``
-over RIFF chunks), so it gets a REAL decode path instead of the
-mm.real_decoder stub. Supported: PCM16-LE (format code 1, 16-bit),
+over RIFF chunks), so it gets a REAL decode path
+(mm.audio_decode_stage). Supported: PCM16-LE (format code 1, 16-bit),
 mono or multi-channel, with honest :class:`WavFormatError` for the
 variants a small codec must not silently mis-decode (IEEE-float,
 ADPCM/compressed format codes, 8/24/32-bit widths, truncated data).

@@ -2565,7 +2565,7 @@ def q_dedup_cluster_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized rep map stays small — the same zero-job stored-bytes
     gate as the LSH verify prefilter)."""
     from pipetree_spark.ops.graph import connected_components
-    from pipetree_spark.ops.relational import broadcast_if_small, release_checkpoint
+    from pipetree_spark.ops.relational import broadcast_if_small
 
     d = load_table(spark, sf_dir, "documents")
     # flood discipline (r16 review): the rep selection must stay
@@ -2585,7 +2585,10 @@ def q_dedup_cluster_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_chars", "rep_id")
         .localCheckpoint(eager=True)
     )
-    release_checkpoint(docs)  # m is materialized; the md5 pass is done
+    # m is materialized, so the md5 pass is done: free its pinned blocks
+    # now (through the analyzed LogicalRDD — Dataset.unpersist() does not
+    # reach checkpoint state) rather than at scope exit or a JVM GC
+    docs._jdf.queryExecution().analyzed().rdd().unpersist(False)
     # rep ids are a subset of the slim stored map; beyond the gate the
     # hint would gamble driver memory on a corpus-proportional set —
     # fall through and let AQE pick from runtime sizes

@@ -18,6 +18,17 @@ from pipetree_spark.pipeline import Pipeline
 from pipetree_spark.queries import declare
 
 
+def _shipped_spec(name: str) -> dict:
+    """Load ``pipetree_spark/specs/<name>``. The specs ship as package
+    data (works from a wheel / site-packages install, where the repo's
+    examples/ dir doesn't exist); the examples/ copies are the
+    user-facing twins, pinned identical by tests/test_pipeline.py."""
+    import json
+    from importlib import resources
+
+    return json.loads(resources.files("pipetree_spark").joinpath("specs", name).read_text())
+
+
 @declare(
     "q_pipe_param",
     oracle=f"""
@@ -521,28 +532,9 @@ def q_pipe_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Runs cache-less (pure lazy composition): at production scale each
     materialize=true stage writes through the ArtifactCache instead
     and re-runs skip — exercised by tests/test_pipeline.py."""
-    import json
-    from importlib import resources
-
-    from pipetree_spark.pipeline import Pipeline
-
-    # the spec ships as package data (works from a wheel / site-packages
-    # install, where the repo's examples/ dir doesn't exist); the repo
-    # copy in examples/ is the user-facing twin, pinned identical by
-    # tests/test_pipeline.py
-    spec = json.loads(
-        resources.files("pipetree_spark")
-        .joinpath("specs/curation_pipeline.json")
-        .read_text()
-    )
+    spec = _shipped_spec("curation_pipeline.json")
     p = Pipeline.from_spec(spec, sf_dir=sf_dir)
     return p.run(spark)["report"]
-
-
-#: per-(process, sf_dir) private scratch roots for q_pipe_timetravel —
-#: created by mkdtemp (unpredictable name, 0700), reused across
-#: invocations within one process
-_timetravel_scratch_roots: dict[str, str] = {}
 
 
 @declare(
@@ -564,34 +556,20 @@ def q_pipe_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     append dir-list union, the overwrite, or the O(1) rollback got any
     row wrong, the counts diverge and the hash compare fails.
 
-    The snapshot store is a per-PROCESS private scratch dir (one
-    ``mkdtemp`` per (process, sf_dir), cleared and rebuilt on each
-    invocation) — repeated gradings in one process reuse one location
-    instead of leaking two table copies into /tmp per run, while the
-    unpredictable mkdtemp name + 0700 mode close the fixed-path /tmp
-    squat the r7 advice flagged (a foreign pre-created dir would have
-    survived rmtree(ignore_errors=True) and been silently adopted); at
-    production scale the same log lives next to the table and data
-    dirs are immutable."""
+    The snapshot store lives under the per-process private scratch
+    root (``cache.process_cache_root``), cleared and rebuilt on each
+    invocation — repeated gradings in one process reuse one location,
+    and the unpredictable mkdtemp name + 0700 mode close the fixed-path
+    /tmp squat the r7 advice flagged; at production scale the same log
+    lives next to the table and data dirs are immutable."""
     import shutil
-    import tempfile
     from pathlib import Path
 
+    from pipetree_spark.cache import process_cache_root
     from pipetree_spark.versioned import VersionedTable
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    root = _timetravel_scratch_roots.get(sf_dir)
-    if root is None or not Path(root).is_dir():
-        import atexit
-
-        root = tempfile.mkdtemp(prefix="pipetree_vt_")
-        # one-process-per-grading is the common driver shape, so the
-        # per-process reuse dict alone would still leak one scratch
-        # root (two table copies) per run — remove it at interpreter
-        # exit; the unpredictable-name security property is unchanged
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        _timetravel_scratch_roots[sf_dir] = root
-    scratch = Path(root) / "store"
+    scratch = Path(process_cache_root("timetravel")) / "store"
     shutil.rmtree(scratch, ignore_errors=True)
     scratch.mkdir(parents=True, exist_ok=True)
     t = VersionedTable(str(scratch), "docs")
@@ -663,16 +641,7 @@ def q_pipe_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derives everything relationally, version-blind. Runs cache-less
     and writes nothing.
     """
-    import json
-    from importlib import resources
-
-    from pipetree_spark.pipeline import Pipeline
-
-    spec = json.loads(
-        resources.files("pipetree_spark")
-        .joinpath("specs/validation_pipeline.json")
-        .read_text()
-    )
+    spec = _shipped_spec("validation_pipeline.json")
     p = Pipeline.from_spec(spec, sf_dir=sf_dir)
     return p.run(spark)["report"]
 
@@ -751,16 +720,7 @@ def q_pipe_cjk_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry, the segmenter, or the router breaks the driver's hash.
 
     Runs cache-less (pure lazy composition), like q_pipe_curation."""
-    import json
-    from importlib import resources
-
-    from pipetree_spark.pipeline import Pipeline
-
-    spec = json.loads(
-        resources.files("pipetree_spark")
-        .joinpath("specs/cjk_curation_pipeline.json")
-        .read_text()
-    )
+    spec = _shipped_spec("cjk_curation_pipeline.json")
     p = Pipeline.from_spec(spec, sf_dir=sf_dir)
     return p.run(spark)["report"]
 
@@ -992,16 +952,9 @@ def q_pipe_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.001; cached, seconds). ``sf_dir`` is injected into the source
     stage spec so it enters every content key — different SFs never
     collide in the shared cache."""
-    import json
-    from importlib import resources
-
     from pipetree_spark.cache import ArtifactCache, process_cache_root
 
-    spec = json.loads(
-        resources.files("pipetree_spark")
-        .joinpath("specs/curation_full_pipeline.json")
-        .read_text()
-    )
+    spec = _shipped_spec("curation_full_pipeline.json")
     spec["stages"]["documents"]["sf_dir"] = sf_dir
     cache = ArtifactCache(process_cache_root("curation_full_artifacts"))
     p = Pipeline.from_spec(spec, sf_dir=sf_dir)

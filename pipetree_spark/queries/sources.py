@@ -3,21 +3,22 @@
 The engine's connector surface is path-scheme config over the same code
 paths (file:// locally, s3a:// on a cluster — the reference's S3
 artifact-backend concept, SURVEY §2.10). CSV/JSON round-trips write to a
-scratch dir and read back with explicit schemas — fidelity is proven by
-aggregating the round-tripped frame against the oracle over the
-ORIGINAL table (doubles survive because both writers emit shortest
-round-trip representations).
+per-process scratch dir (``cache.process_cache_root``) and read back
+with explicit schemas — fidelity is proven by aggregating the
+round-tripped frame against the oracle over the ORIGINAL table
+(doubles survive because both writers emit shortest round-trip
+representations).
 """
 
 from __future__ import annotations
 
 import functools
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pipetree_spark.cache import process_cache_root
 from pipetree_spark.catalog import TABLES, load_table
 from pipetree_spark.exact import dsum, dsum_sql
 from pipetree_spark.queries import declare
@@ -84,7 +85,7 @@ def q_src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     an explicit schema, re-aggregate; must equal the oracle over the
     original parquet."""
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    path = f"{tempfile.gettempdir()}/pipetree_spark_csv_roundtrip"
+    path = f"{process_cache_root('sources')}/csv_roundtrip"
     o.write.mode("overwrite").option("header", True).csv(path)
     schema = T.StructType(
         [
@@ -113,7 +114,7 @@ GROUP BY c_mktsegment
 def q_src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines sink → source fidelity (same protocol as CSV)."""
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment", "c_acctbal")
-    path = f"{tempfile.gettempdir()}/pipetree_spark_json_roundtrip"
+    path = f"{process_cache_root('sources')}/json_roundtrip"
     c.write.mode("overwrite").json(path)
     schema = T.StructType(
         [
@@ -144,7 +145,7 @@ def q_src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet; same vectorized reader path). Doubles survive exactly —
     ORC stores IEEE754 bits verbatim."""
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_retailprice")
-    path = f"{tempfile.gettempdir()}/pipetree_spark_orc_roundtrip"
+    path = f"{process_cache_root('sources')}/orc_roundtrip"
     p.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("p_brand").agg(
@@ -177,7 +178,7 @@ def q_src_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_returnflag", "l_linestatus"
     )
-    path = f"{tempfile.gettempdir()}/pipetree_spark_partitioned_sink"
+    path = f"{process_cache_root('sources')}/partitioned_sink"
     l.write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
     back = spark.read.parquet(path).filter(F.col("l_returnflag") == "R")
     return back.groupBy("l_returnflag", "l_linestatus").agg(
@@ -210,7 +211,7 @@ def q_src_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame must equal the oracle over the original table, and ``n_named``
     (non-null c_name) must count exactly the batch-2 rows."""
     c = load_table(spark, sf_dir, "customer")
-    path = f"{tempfile.gettempdir()}/pipetree_spark_evolution"
+    path = f"{process_cache_root('sources')}/evolution"
     old = c.filter(F.col("c_custkey") % 2 == 1).select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )

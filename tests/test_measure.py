@@ -55,6 +55,21 @@ def test_layers_row_carries_every_counter_and_the_plan(spark, sf_small):
     assert "== Physical Plan ==" in row["plan"]
 
 
+def test_measure_once_counts_the_pins_it_then_frees(spark, sf_small):
+    """spark.pinned_rdds is what the rep still pins when its collect
+    returns (what an unscoped bench.py rep leaves behind); the rep's
+    scope frees it, so a checkpointing query reruns from the same start."""
+    def two_checkpoints(spark, sf_dir):
+        a = spark.range(20).localCheckpoint(eager=True)
+        return a.withColumn("b", a["id"] * 2).localCheckpoint(eager=True)
+
+    start = set(spark._jsc.getPersistentRDDs().keys())
+    for _ in range(2):
+        _, counts = measure.measure_once(spark, two_checkpoints, sf_small, "pins")
+        assert counts["spark.pinned_rdds"] == 2
+        assert set(spark._jsc.getPersistentRDDs().keys()) <= start
+
+
 def test_sites_charges_rpcs_to_package_frames(spark, sf_small):
     registry = load_registry()
     before = _patched_surface()

@@ -224,38 +224,6 @@ def test_centroids_match_numpy(spark, sf_small):
         np.testing.assert_allclose(got[label], mat.mean(axis=0), atol=1e-9)
 
 
-def test_mm_payload_roundtrip_and_features(spark, sf_small):
-    d = load_table(spark, sf_small, "documents").limit(50)
-    payloads = MM.with_payload(d)
-    stats = MM.payload_stats(payloads)
-    feats = MM.extract_features(payloads)
-    joined = stats.select("doc_id", "byte_len", "content_sha").join(
-        feats.withColumnsRenamed({"byte_len": "bl2", "content_sha": "sha2"}), "doc_id"
-    )
-    rows = joined.collect()
-    assert len(rows) == 50
-    for r in rows:
-        assert r.byte_len == r.bl2  # JVM length == python len
-        assert r.content_sha == r.sha2  # sha2(256) == hashlib.sha256
-        assert 0.0 <= r.feat_mean <= 255.0 and r.feat_std >= 0.0
-
-
-def test_mm_stub_decoder_deterministic_and_real_decoder_gated():
-    a = MM.stub_decoder(b"hello")
-    b = MM.stub_decoder(b"hello")
-    assert a == b and a["feat_std"] > 0
-    assert MM.stub_decoder(b"") == {"feat_mean": 0.0, "feat_std": 0.0}
-    with pytest.raises(NotImplementedError):
-        MM.real_decoder(b"\x89PNG", None)
-
-
-def test_mm_frame_sample(spark):
-    frames = [(1, [bytes([i]) for i in range(25)])]
-    df = spark.createDataFrame(frames, ["vid_id", "frames"])
-    out = MM.frame_sample(df, every_n=10).collect()[0]
-    assert out.sampled_frames == [bytes([0]), bytes([10]), bytes([20])]
-
-
 def test_ivf_portable_recall_vs_exact(spark, sf_small):
     """The oracle-certifiable IVF (portable-Lloyd quantizer) must keep
     useful recall vs exact kNN, and probing ALL clusters must recover
@@ -578,23 +546,6 @@ def test_residual_pq_wins_in_its_regime(spark):
     assert r_res >= r_plain + 0.3
 
 
-def test_embed_stage_deterministic_unit_vectors(spark, sf_small):
-    import numpy as np
-
-    d = load_table(spark, sf_small, "documents").limit(20)
-    out1 = {r.doc_id: r.embedding for r in MM.embed_stage(d).collect()}
-    out2 = {r.doc_id: r.embedding for r in MM.embed_stage(d).collect()}
-    assert out1 == out2  # deterministic across runs
-    for v in out1.values():
-        assert len(v) == 64
-        assert abs(np.linalg.norm(v) - 1.0) < 1e-5
-    # composes with the ANN ops downstream
-    emb = MM.embed_stage(d).withColumnRenamed("doc_id", "vec_id")
-    q = emb.limit(2).withColumnRenamed("vec_id", "query_id")
-    knn = VX.knn_bruteforce(q, emb, k=3)
-    assert knn.count() == 6
-
-
 def test_connected_components_chain_and_islands(spark):
     from pipetree_spark.ops.graph import connected_components
 
@@ -713,23 +664,6 @@ def test_winnow_guarantee_shared_run_shares_fingerprint(spark):
         by_doc.setdefault(r.doc_id, set()).add(r.fp)
     assert by_doc[1] & by_doc[2], "shared 8-word run must share a fingerprint"
     assert not (by_doc[1] & by_doc[3]) and not (by_doc[2] & by_doc[3])
-
-
-def test_mm_resize_stage_shapes_and_determinism(spark, sf_small):
-    """resize_stage: fixed output schema, exact width*height payload
-    bytes, original-size accounting, and deterministic output (the
-    stub is digest-derived, so two runs agree byte-for-byte)."""
-    d = load_table(spark, sf_small, "documents").limit(10)
-    payloads = MM.with_payload(d)
-    out = MM.resize_stage(payloads, width=8, height=4)
-    rows = {r.doc_id: r for r in out.collect()}
-    assert set(out.columns) == {"doc_id", "content", "width", "height", "orig_bytes"}
-    for r in rows.values():
-        assert len(r.content) == 8 * 4
-        assert (r.width, r.height) == (8, 4)
-        assert r.orig_bytes > 0
-    again = {r.doc_id: bytes(r.content) for r in MM.resize_stage(payloads, width=8, height=4).collect()}
-    assert again == {k: bytes(r.content) for k, r in rows.items()}
 
 
 def test_pca_ml_twin_agrees_with_portable_direction(spark, sf_small):
@@ -4002,29 +3936,54 @@ def test_langid_cjk_accuracy_on_real_sentences(spark):
     assert out == {1: "zh", 2: "ja", 3: "ko", 4: "en"}
 
 
-def test_bm25_state_sink_and_release_checkpoint(spark):
-    """r14 self-review: Dataset.unpersist() is a silent no-op for
-    localCheckpoint state; release_checkpoint must actually drop the
-    pinned RDD, and the empty-terms path must keep the pop contract."""
-    from pipetree_spark.ops.relational import release_checkpoint
+def test_checkpoint_scope_releases_what_it_pinned(spark, sf_small):
+    """checkpoint_scope frees exactly the RDDs pinned inside it:
+    Dataset.unpersist() is a silent no-op for localCheckpoint state, so
+    the scope must really drop bm25's pinned stats frame, leave outer
+    and earlier pins alone, and bring a checkpoint-heavy query back to
+    the start count on every rerun. Pins are compared by id, so a GC
+    that frees an unrelated older frame mid-test cannot fail it."""
+    from pipetree_spark.ops.relational import checkpoint_scope
     from pipetree_spark.ops.text import bm25_scores
+    from pipetree_spark.queries import load_registry
+
+    def pinned_since(ids: set) -> set:
+        return set(spark._jsc.getPersistentRDDs().keys()) - ids
 
     df = spark.createDataFrame(
         [(1, "spark engine"), (2, "spark table")], "doc_id long, text string"
     )
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    sink = []
-    bm25_scores(df, ["spark"], state_sink=sink).collect()
-    assert len(sink) == 1
-    assert jsc.getPersistentRDDs().size() == before + 1
-    assert release_checkpoint(sink.pop())
-    assert jsc.getPersistentRDDs().size() == before
-    # empty-terms degenerate path still appends (pop never IndexErrors)
-    sink2 = []
-    bm25_scores(df, [], state_sink=sink2)
-    assert len(sink2) == 1
-    release_checkpoint(sink2.pop())  # harmless no-op
+    # (a) rows equal to an unscoped call; the pinned stats frame is freed
+    unscoped = sorted(bm25_scores(df, ["spark"]).collect())
+    start = pinned_since(set())
+    with checkpoint_scope(spark):
+        scoped = sorted(bm25_scores(df, ["spark"]).collect())
+        assert len(pinned_since(start)) == 1
+    assert scoped == unscoped
+    assert not pinned_since(start)
+    # (b) nested scopes: the inner one frees only what it pinned
+    with checkpoint_scope(spark):
+        outer = df.localCheckpoint(eager=True)
+        kept = pinned_since(start)
+        with checkpoint_scope(spark):
+            df.localCheckpoint(eager=True)
+            assert len(pinned_since(start)) == 2
+        assert pinned_since(start) == kept
+        assert sorted(outer.collect()) == sorted(df.collect())
+    assert not pinned_since(start)
+    # (c) a frame checkpointed before the scope survives it
+    early = df.localCheckpoint(eager=True)
+    with checkpoint_scope(spark):
+        bm25_scores(df, ["spark"]).collect()
+    assert sorted(early.collect()) == sorted(df.collect())
+    # (d) a checkpoint-heavy query returns to the start count every rep
+    fn = load_registry()["q_graph_pagerank"].fn
+    for _ in range(2):
+        base = pinned_since(set())
+        with checkpoint_scope(spark):
+            assert fn(spark, sf_small).collect()
+            assert pinned_since(base)
+        assert not pinned_since(base)
 
 
 def test_rrf_fuse_rejects_colliding_and_duplicate_names(spark):

@@ -21,6 +21,7 @@ from check_parity import (  # noqa: E402
 )
 
 from pipetree_spark.catalog import TABLES, table_path  # noqa: E402
+from pipetree_spark.ops.relational import checkpoint_scope  # noqa: E402
 from pipetree_spark.queries import load_registry  # noqa: E402
 
 REGISTRY = load_registry()
@@ -39,8 +40,9 @@ def oracle_con(sf_small):
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_matches_oracle(name, spark, sf_small, oracle_con):
     q = REGISTRY[name]
-    sdf = q.fn(spark, sf_small)
-    srows = [tuple(r) for r in sdf.collect()]
+    with checkpoint_scope(spark):
+        sdf = q.fn(spark, sf_small)
+        srows = [tuple(r) for r in sdf.collect()]
     if q.oracle is None:
         assert len(srows) >= 0  # rows-only contract: runs and returns
         return
@@ -70,7 +72,8 @@ def test_output_schema_is_driver_hashable(name, spark, sf_small):
     q = REGISTRY[name]
     if q.oracle is None:
         return
-    sdf = q.fn(spark, sf_small)
+    with checkpoint_scope(spark):  # eager checkpoints pin while building
+        sdf = q.fn(spark, sf_small)
     bad = [
         (f.name, f.dataType.simpleString())
         for f in sdf.schema.fields

@@ -143,6 +143,32 @@ def test_content_key_properties():
     assert k1 != content_key({"q": "SELECT 1"}, ["up"])  # dependency-sensitive
 
 
+def test_source_roundtrips_write_under_the_process_scratch_root(spark, sf_small):
+    """The round-trip queries write under process_cache_root, never a
+    fixed shared /tmp path another process or user could collide with
+    or pre-create (the path may exist from older runs: it must simply
+    be left untouched)."""
+    import os
+    import tempfile
+
+    from pipetree_spark.cache import process_cache_root
+    from pipetree_spark.queries import load_registry
+
+    fixed = os.path.join(tempfile.gettempdir(), "pipetree_spark_csv_roundtrip")
+
+    def snapshot() -> dict:
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, files in os.walk(fixed)
+            for f in files
+        }
+
+    before = snapshot()
+    assert load_registry()["q_src_csv_roundtrip"].fn(spark, sf_small).collect()
+    assert snapshot() == before
+    assert os.listdir(os.path.join(process_cache_root("sources"), "csv_roundtrip"))
+
+
 def test_python_stage_code_change_invalidates_cache(spark, sf_small, tmp_path):
     """A python stage's content key folds in the callable's code
     fingerprint: editing the fn must MISS the cache, not serve the old

@@ -301,6 +301,47 @@ def test_incremental_dedup_replay_after_crash_is_duplicate_free(spark, tmp_path)
     assert spark.read.parquet(out).count() == 2
 
 
+def test_incremental_dedup_frees_only_its_own_checkpoint(spark, tmp_path, monkeypatch):
+    """foreachBatch runs on the stream's thread, alongside the driver and
+    other streams. A frame another thread checkpoints WHILE a micro-batch
+    runs must still collect afterwards (its lineage is truncated, so a
+    freed block cannot be recomputed); the batch frees its own pin."""
+    import threading
+
+    from pyspark.sql import DataFrameWriter
+
+    b = spark.createDataFrame(
+        [(1, "alpha beta", "en"), (2, "gamma delta", "en")],
+        "doc_id long, text string, lang string",
+    )
+    other = spark.range(50).withColumn("sq", F.col("id") * F.col("id"))
+    pinned_elsewhere = []
+    orig_parquet = DataFrameWriter.parquet
+
+    def parquet_after_a_concurrent_checkpoint(self, *a, **kw):
+        if not pinned_elsewhere:  # mid-batch: after the count, before the writes
+            t = threading.Thread(
+                target=lambda: pinned_elsewhere.append(other.localCheckpoint(eager=True))
+            )
+            t.start()
+            t.join()
+        return orig_parquet(self, *a, **kw)
+
+    def pinned() -> set:
+        return set(spark._jsc.getPersistentRDDs().keys())
+
+    start = pinned()
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet_after_a_concurrent_checkpoint)
+    admitted = st.incremental_dedup_batch(
+        b, 0, str(tmp_path / "ledger"), str(tmp_path / "out")
+    )
+    monkeypatch.undo()
+    assert admitted == 2
+    [held] = pinned_elsewhere
+    assert len(pinned() - start) == 1  # the other thread's pin only
+    assert sorted(held.collect()) == sorted(other.collect())
+
+
 def test_incremental_dedup_survives_query_restart(spark, tmp_path):
     """r7 verdict #7: crash-replay idempotence proven ACROSS A QUERY
     RESTART, not just a same-process re-call. Phase 1 runs the stream

@@ -27,6 +27,7 @@ import duckdb
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pipetree_spark.catalog import TABLES, table_path  # noqa: E402
+from pipetree_spark.ops.relational import checkpoint_scope  # noqa: E402
 from pipetree_spark.queries import load_registry  # noqa: E402
 from pipetree_spark.session import get_spark  # noqa: E402
 
@@ -206,8 +207,9 @@ def main():
         q = registry[name]
         t0 = time.perf_counter()
         try:
-            sdf = q.fn(spark, args.sf)
-            srows = sdf.collect()
+            with checkpoint_scope(spark):
+                sdf = q.fn(spark, args.sf)
+                srows = sdf.collect()
             scols = sdf.columns
         except Exception as exc:  # noqa: BLE001
             n_fail += 1

@@ -6,7 +6,11 @@ construction and the ``.collect()`` are timed and their py4j RPCs counted
 apart; the group's jobs, stages, tasks, driver gap, executor time and
 bytes come from the live status store; Catalyst phase times from the
 collected frame. Construction runs inside the group, so jobs that eager
-checkpoints fire while a frame is built are counted too.
+checkpoints fire while a frame is built are counted too. Every rep and
+warm-up runs in a ``checkpoint_scope``, so reps start from the same
+executor storage; ``spark.pinned_rdds`` counts the RDDs a rep still has
+pinned when its collect returns: what the scope then frees, and what an
+unscoped run such as bench.py keeps until a JVM GC.
 
 Names are bench.BENCH_QUERIES metrics or query names (default: every
 bench metric); data is read from $SPARK_GRAFT_SF_DIR (default sf0.1).
@@ -38,6 +42,7 @@ sys.path.insert(0, str(REPO))
 from bench import BENCH_QUERIES, CORE_RUNS, _cpu_totals  # noqa: E402
 from perfbench.layers import Tracer  # noqa: E402
 from pipetree_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
+from pipetree_spark.ops.relational import checkpoint_scope  # noqa: E402
 from pipetree_spark.queries import load_registry  # noqa: E402
 from pipetree_spark.session import default_parallelism, get_spark  # noqa: E402
 from tools.plan_audit import plan_str  # noqa: E402
@@ -59,24 +64,32 @@ def measure_once(spark, fn, sf_dir: str, name: str, sites: dict[str, Counter] | 
     Returns (collected frame, {"wall_s": ..., counter: value}). With
     ``sites``, each RPC is also charged to its innermost pipetree_spark/
     frame under "construction" or "action"."""
+    pinned0 = spark._jsc.getPersistentRDDs().size()
     tracer = Tracer(spark).install()
     if sites is not None:
         _charge_sites(tracer, sites)
     try:
-        with tracer.op(name):
-            t0, r0 = time.perf_counter(), tracer.rpcs
-            with tracer.timed("queries.build"):
-                df = fn(spark, sf_dir)
-            r1 = tracer.rpcs
-            with tracer.timed("spark.action"):
-                df.collect()
-            wall = time.perf_counter() - t0
-            tracer.counts["queries.build_rpcs"] += r1 - r0
-            tracer.counts["spark.action_rpcs"] += tracer.rpcs - r1
+        with checkpoint_scope(spark):
+            with tracer.op(name):
+                t0, r0 = time.perf_counter(), tracer.rpcs
+                with tracer.timed("queries.build"):
+                    df = fn(spark, sf_dir)
+                r1 = tracer.rpcs
+                with tracer.timed("spark.action"):
+                    df.collect()
+                wall = time.perf_counter() - t0
+                tracer.counts["queries.build_rpcs"] += r1 - r0
+                tracer.counts["spark.action_rpcs"] += tracer.rpcs - r1
+            tracer.counts["spark.pinned_rdds"] = spark._jsc.getPersistentRDDs().size() - pinned0
         tracer.phases(df)
     finally:
         tracer.uninstall()
     return df, {"wall_s": wall, **tracer.counts}
+
+
+def warm_up(spark, fn, sf_dir: str) -> None:
+    with checkpoint_scope(spark):
+        fn(spark, sf_dir).collect()
 
 
 def _charge_sites(tracer: Tracer, sites: dict[str, Counter]) -> None:
@@ -118,7 +131,7 @@ def layers(spark, registry, sf_dir: str, names: dict[str, str]) -> list[dict]:
     rows = []
     for metric, qname in names.items():
         fn = registry[qname].fn
-        fn(spark, sf_dir).collect()  # warm-up
+        warm_up(spark, fn, sf_dir)
         reps = [measure_once(spark, fn, sf_dir, metric) for _ in range(CORE_RUNS)]
         rows.append({"metric": metric, "query": qname, **summarize([r for _, r in reps]),
                      "plan": plan_str(reps[-1][0])})
@@ -134,7 +147,7 @@ def call_sites(spark, registry, sf_dir: str, names: dict[str, str]) -> dict[str,
     out = {}
     for metric, qname in names.items():
         fn = registry[qname].fn
-        fn(spark, sf_dir).collect()  # warm-up
+        warm_up(spark, fn, sf_dir)
         out[metric] = {"construction": Counter(), "action": Counter()}
         measure_once(spark, fn, sf_dir, metric, sites=out[metric])
         for phase, charged in out[metric].items():
@@ -197,8 +210,8 @@ def ab(spark, registry, sf_dir: str, names: dict[str, str], ref: str) -> dict[st
     try:
         for metric, qname in names.items():
             fn, reps = registry[qname].fn, {"old": [], "new": []}
-            for side in reps:  # warm-up
-                use(side, fn)(spark, sf_dir).collect()
+            for side in reps:
+                warm_up(spark, use(side, fn), sf_dir)
             for _ in range(AB_CYCLES):
                 for side in reps:
                     reps[side].append(measure_once(spark, use(side, fn), sf_dir, f"{metric}-{side}")[1])

@@ -7,40 +7,32 @@ executors; metadata is columnar and prunable).
 The container has no image/audio *codec* libraries, so the REMAINING
 compressed formats (MP3 and non-MJPEG video codecs — the patent-era
 DSP stacks) have no decode stage until a deployment brings a codec
-lib. Everything else gets a REAL path:
+lib. Everything else gets a REAL path, one decode stage per modality:
 
 - UNCOMPRESSED payloads (r6): raw-RGB8 buffers decode, resize
   (nearest-neighbor), and feature-extract with numpy alone — see
   :func:`rawrgb_decode` / :func:`rgb_resize_stage` /
   :func:`rgb_feature_stage`, verified against numpy references.
-- PNG (r10, r9 verdict #6): deflate + row filters + CRC are all
-  stdlib (zlib/struct), so ``ops/png.py`` is a real pure-Python codec
-  — :func:`png_decode_stage` decodes ``image/png`` payloads into the
-  raw-RGB8 layout, after which the whole raw pipeline chains
-  (decode → resize → features), pytest-verified against the planted
-  pixel arrays across all five PNG row filters.
-- WAV (r10): RIFF chunk parsing is pure ``struct``, so ``ops/wav.py``
-  decodes ``audio/wav`` PCM16 payloads for real —
-  :func:`wav_decode_stage` emits the raw-PCM16 layout and the
-  waveform pipeline (features, downsample) chains unchanged.
-- JPEG (r10): baseline sequential DCT decodes (and, for planting,
-  encodes) through ``ops/jpeg.py`` — numpy DCT, stream-carried
-  quant/Huffman tables, 4:4:4 + 4:2:0 + restart markers;
-  :func:`jpeg_decode_stage` emits the raw-RGB8 layout. Progressive/
-  arithmetic variants fail honestly (JpegFormatError).
+- IMAGES (r10): :func:`image_decode_stage` sniffs each payload's magic
+  bytes and decodes it into the raw-RGB8 layout, after which the whole
+  raw pipeline chains (decode → resize → features):
+  PNG through ``ops/png.py`` (deflate + all five row filters + CRC,
+  pure stdlib); baseline sequential JPEG through ``ops/jpeg.py`` (numpy
+  DCT, stream-carried quant/Huffman tables, 4:4:4 + 4:2:0 + restart
+  markers; progressive/arithmetic variants fail honestly with
+  JpegFormatError); GIF through ``ops/gif.py`` (LZW both ways,
+  interlacing, animation composition, local tables, transparency —
+  palette images round-trip exactly).
+- AUDIO (r10): :func:`audio_decode_stage` sniffs WAV (``ops/wav.py``,
+  RIFF chunk walk, PCM16) or FLAC (``ops/flac.py``: CONSTANT/VERBATIM/
+  FIXED/LPC subframes, both rice methods + escape, all four stereo
+  assignments, CRC-8/16 — the format speech corpora actually ship in)
+  and emits the raw-PCM16 layout, so the waveform pipeline (features,
+  downsample) chains unchanged.
 - VIDEO via MJPEG-AVI (r10): ``ops/avi.py`` walks the RIFF container
   and :func:`video_frame_sample_stage` samples frames BEFORE decoding
   them (per-frame baseline JPEG), one raw-RGB8 row per sampled frame
   — the north-star frame-sample op with real decode.
-- GIF (r10): ``ops/gif.py`` implements GIF's LZW variant both ways —
-  palette images round-trip exactly (interlacing, animation
-  composition, local tables, transparency); dispatched by
-  :func:`image_decode_stage` alongside PNG/JPEG.
-- FLAC (r10): ``ops/flac.py`` decodes the full baseline surface
-  (CONSTANT/VERBATIM/FIXED/LPC subframes, both rice methods + escape,
-  all four stereo assignments, CRC-8/16) — the format speech corpora
-  actually ship in; :func:`flac_decode_stage` /
-  :func:`audio_decode_stage` (WAV|FLAC by magic) emit raw-PCM16.
 
 Everything Spark-side — schema, batching, partition behavior,
 mapInPandas signatures — is real and tested in every path.
@@ -49,8 +41,9 @@ mapInPandas signatures — is real and tested in every path.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window
@@ -66,6 +59,72 @@ def _keyed_schema(schema: T.StructType, key_col: str) -> T.StructType:
     return T.StructType(
         [T.StructField(key_col, schema.fields[0].dataType), *schema.fields[1:]]
     )
+
+
+def _layout_schema(*int_fields: str) -> T.StructType:
+    """The payload layout: (doc_id, content, *int_fields, mime)."""
+    return T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("content", T.BinaryType()),
+            *[T.StructField(f, T.IntegerType()) for f in int_fields],
+            T.StructField("mime", T.StringType()),
+        ]
+    )
+
+
+#: The layouts every image / audio generator and decode stage emits, so
+#: any generator or decoder chains into any raw-RGB8 / raw-PCM16 stage.
+RGB_LAYOUT_SCHEMA = _layout_schema("width", "height")
+PCM_LAYOUT_SCHEMA = _layout_schema("n_samples", "sample_rate")
+
+
+def _det_bytes(seed: str, n: int) -> bytes:
+    """``n`` deterministic bytes: sha256 counter mode over ``seed``
+    (testdata has no real media, so every generator derives its
+    pixels / samples from the row's text this way)."""
+    base = hashlib.sha256(seed.encode()).hexdigest()
+    buf = bytearray()
+    counter = 0
+    while len(buf) < n:
+        buf += hashlib.sha256(f"{base}:{counter}".encode()).digest()
+        counter += 1
+    return bytes(buf[:n])
+
+
+def _det_rgb(seed: str, width: int, height: int) -> np.ndarray:
+    """A deterministic (height, width, 3) uint8 image from :func:`_det_bytes`."""
+    return np.frombuffer(_det_bytes(seed, width * height * 3), np.uint8).reshape(
+        height, width, 3
+    )
+
+
+def _make_payload(
+    df: DataFrame,
+    text_col: str,
+    key_col: str,
+    encode: Callable[[str], bytes],
+    mime: str,
+    **ints: int,
+) -> DataFrame:
+    """The generator scaffold: ``encode(text)`` builds each row's
+    payload executor-side in Arrow batches via mapInPandas — the same
+    plumbing an ingest stage decoding real files would use — emitting
+    ``_layout_schema(*ints)`` with every int and the mime as constant
+    columns."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    key_col: pdf[key_col].astype("int64"),
+                    "content": [encode(str(t)) for t in pdf[text_col]],
+                    **ints,
+                    "mime": mime,
+                }
+            )
+
+    return df.mapInPandas(run, schema=_keyed_schema(_layout_schema(*ints), key_col))
 
 
 #: Raw 8-bit interleaved RGB — an UNCOMPRESSED image payload (the body
@@ -85,50 +144,18 @@ def make_rgb_payload(
 ) -> DataFrame:
     """Synthesize a deterministic raw-RGB8 payload per row (sha256
     counter-mode over the text — testdata has no real images) with the
-    (width, height) metadata a raw buffer needs to be decodable.
-    Generation runs executor-side in Arrow batches via mapInPandas —
-    the same plumbing an ingest stage decoding real files would use."""
+    (width, height) metadata a raw buffer needs to be decodable."""
     need = width * height * 3
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
+    return _make_payload(
+        df, text_col, key_col, lambda t: _det_bytes(t, need), RAW_RGB_MIME,
+        width=width, height=height,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for t in pdf[text_col]:
-                base = hashlib.sha256(str(t).encode()).hexdigest()
-                buf = bytearray()
-                counter = 0
-                while len(buf) < need:
-                    buf += hashlib.sha256(f"{base}:{counter}".encode()).digest()
-                    counter += 1
-                payloads.append(bytes(buf[:need]))
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": payloads,
-                    "width": width,
-                    "height": height,
-                    "mime": RAW_RGB_MIME,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def rawrgb_decode(payload: bytes, width: int, height: int):
     """REAL decode of a raw-RGB8 payload: byte buffer → (h, w, 3) uint8
     pixel array. Raises on size mismatch (a corrupt payload must fail
     loudly, not produce garbage pixels)."""
-    import numpy as np
-
     arr = np.frombuffer(payload, dtype=np.uint8)
     if arr.size != width * height * 3:
         raise ValueError(
@@ -141,8 +168,6 @@ def rawrgb_resize(payload: bytes, width: int, height: int, out_w: int, out_h: in
     """REAL nearest-neighbor resize of a raw-RGB8 payload via numpy
     integer index maps — deterministic (pure index arithmetic, no
     interpolation rounding) and vectorized (no per-pixel Python)."""
-    import numpy as np
-
     img = rawrgb_decode(payload, width, height)
     ys = (np.arange(out_h) * height) // out_h
     xs = (np.arange(out_w) * width) // out_w
@@ -170,7 +195,6 @@ def rgb_feature_stage(
     global pixel std, the classic cheap features for corrupt-image /
     blank-image filtering in a multimodal curation pipeline. Expects
     ``make_rgb_payload``'s layout (content + width/height columns)."""
-    import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -206,15 +230,6 @@ def rgb_resize_stage(
     """REAL raw-RGB8 resize stage (nearest-neighbor, numpy) for
     uncompressed payloads. Output layout matches ``make_rgb_payload`` so stages
     chain (generate → resize → features)."""
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
-    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -232,7 +247,7 @@ def rgb_resize_stage(
                 }
             )
 
-    return df.mapInPandas(run, schema=schema)
+    return df.mapInPandas(run, schema=_keyed_schema(RGB_LAYOUT_SCHEMA, key_col))
 
 
 PNG_MIME = "image/png"
@@ -255,96 +270,11 @@ def make_png_payload(
     an ingest scanner would."""
     from pipetree_spark.ops.png import png_encode
 
-    need = width * height * 3
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
+    return _make_payload(
+        df, text_col, key_col,
+        lambda t: png_encode(_det_rgb(t, width, height), filter_type=filter_type),
+        PNG_MIME, width=width, height=height,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for t in pdf[text_col]:
-                base = hashlib.sha256(str(t).encode()).hexdigest()
-                buf = bytearray()
-                counter = 0
-                while len(buf) < need:
-                    buf += hashlib.sha256(f"{base}:{counter}".encode()).digest()
-                    counter += 1
-                px = np.frombuffer(bytes(buf[:need]), np.uint8).reshape(height, width, 3)
-                payloads.append(png_encode(px, filter_type=filter_type))
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": payloads,
-                    "width": width,
-                    "height": height,
-                    "mime": PNG_MIME,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def png_decode_stage(
-    df: DataFrame, content_col: str = "content", key_col: str = "doc_id"
-) -> DataFrame:
-    """REAL compressed-image decode stage: ``image/png`` payloads →
-    raw-RGB8 layout (content + width/height from the decoded pixels,
-    mime flipped to RAW_RGB_MIME), after which the whole uncompressed
-    pipeline chains unchanged (:func:`rgb_resize_stage`,
-    :func:`rgb_feature_stage`). Greyscale / alpha inputs are expanded
-    to 3 channels (alpha dropped, grey replicated) so downstream
-    stages see ONE layout. Decoding runs executor-side per Arrow
-    batch; a corrupt payload fails the task loudly
-    (ops.png.PngFormatError), never yields garbage pixels."""
-    from pipetree_spark.ops.png import png_decode
-
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            contents, widths, heights = [], [], []
-            for p in pdf[content_col]:
-                img = png_decode(bytes(p))
-                h, w, ch = img.shape
-                if ch == 1:
-                    img = np.repeat(img, 3, axis=2)
-                elif ch == 2:  # grey+alpha → replicate grey, drop alpha
-                    img = np.repeat(img[:, :, :1], 3, axis=2)
-                elif ch == 4:  # RGBA → drop alpha
-                    img = img[:, :, :3]
-                contents.append(img.tobytes())
-                widths.append(w)
-                heights.append(h)
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": contents,
-                    "width": pd.Series(widths, dtype="int32"),
-                    "height": pd.Series(heights, dtype="int32"),
-                    "mime": RAW_RGB_MIME,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
 
 
 RAW_PCM_MIME = "audio/x-raw-pcm16le"
@@ -374,38 +304,10 @@ def make_pcm_payload(
     decodable. Same mapInPandas plumbing as make_rgb_payload — the
     audio twin of the image ingest stage."""
     need = n_samples * 2
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
+    return _make_payload(
+        df, text_col, key_col, lambda t: _det_bytes("pcm:" + t, need), RAW_PCM_MIME,
+        n_samples=n_samples, sample_rate=sample_rate,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for t in pdf[text_col]:
-                base = hashlib.sha256(b"pcm:" + str(t).encode()).hexdigest()
-                buf = bytearray()
-                counter = 0
-                while len(buf) < need:
-                    buf += hashlib.sha256(f"{base}:{counter}".encode()).digest()
-                    counter += 1
-                payloads.append(bytes(buf[:need]))
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": payloads,
-                    "n_samples": n_samples,
-                    "sample_rate": sample_rate,
-                    "mime": RAW_PCM_MIME,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
 
 
 #: Magic-byte prefixes for the stdlib-decodable compression codecs.
@@ -505,139 +407,71 @@ def make_jpeg_payload(
     (unlike the PNG twin)."""
     from pipetree_spark.ops.jpeg import jpeg_encode
 
-    need = width * height * 3
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
+    return _make_payload(
+        df, text_col, key_col,
+        lambda t: jpeg_encode(_det_rgb(t, width, height), quality=quality, subsample=subsample),
+        JPEG_MIME, width=width, height=height,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        for pdf in batches:
-            payloads = []
-            for t in pdf[text_col]:
-                base = hashlib.sha256(str(t).encode()).hexdigest()
-                buf = bytearray()
-                counter = 0
-                while len(buf) < need:
-                    buf += hashlib.sha256(f"{base}:{counter}".encode()).digest()
-                    counter += 1
-                px = np.frombuffer(bytes(buf[:need]), np.uint8).reshape(height, width, 3)
-                payloads.append(jpeg_encode(px, quality=quality, subsample=subsample))
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": payloads,
-                    "width": width,
-                    "height": height,
-                    "mime": JPEG_MIME,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
+#: Image magic-byte prefixes (the codecs ``_decode_rgb8`` dispatches to).
+_IMAGE_MAGIC = (
+    ("png", b"\x89PNG\r\n\x1a\n"),
+    ("jpeg", b"\xff\xd8"),
+    ("gif", b"GIF87a"),
+    ("gif", b"GIF89a"),
+)
 
 
-def jpeg_decode_stage(
-    df: DataFrame, content_col: str = "content", key_col: str = "doc_id"
-) -> DataFrame:
-    """REAL compressed-image decode stage for ``image/jpeg`` payloads →
-    raw-RGB8 layout (greyscale expanded to 3 channels), the JPEG twin
-    of :func:`png_decode_stage`: downstream resize/feature stages chain
-    unchanged. Baseline sequential only — progressive/arithmetic
-    payloads fail the task loudly (ops.jpeg.JpegFormatError)."""
+def _image_format(raw: bytes) -> str | None:
+    """'png' / 'jpeg' / 'gif' by magic bytes, None when nothing matches."""
+    return next((fmt for fmt, magic in _IMAGE_MAGIC if raw.startswith(magic)), None)
+
+
+def _decode_rgb8(raw: bytes) -> np.ndarray:
+    """Decode ONE PNG, baseline-JPEG or GIF (first composed frame)
+    payload, chosen by magic bytes, to an (h, w, 3) uint8 array: grey
+    is replicated and alpha dropped so downstream stages see ONE
+    layout. An unknown magic raises ValueError; a corrupt payload
+    raises its codec's format error (never garbage pixels)."""
+    from pipetree_spark.ops.gif import gif_decode
     from pipetree_spark.ops.jpeg import jpeg_decode
+    from pipetree_spark.ops.png import png_decode
 
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            contents, widths, heights = [], [], []
-            for p in pdf[content_col]:
-                img = jpeg_decode(bytes(p))
-                h, w, ch = img.shape
-                if ch == 1:
-                    img = np.repeat(img, 3, axis=2)
-                contents.append(img.tobytes())
-                widths.append(w)
-                heights.append(h)
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": contents,
-                    "width": pd.Series(widths, dtype="int32"),
-                    "height": pd.Series(heights, dtype="int32"),
-                    "mime": RAW_RGB_MIME,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
+    fmt = _image_format(raw)
+    if fmt == "png":
+        img = png_decode(raw)
+    elif fmt == "jpeg":
+        img = jpeg_decode(raw)
+    elif fmt == "gif":
+        img = gif_decode(raw)[0][0]  # first composed frame
+    else:
+        raise ValueError(f"unknown image magic {raw[:4]!r} (png/jpeg/gif supported)")
+    if img.shape[2] < 3:  # grey, grey+alpha
+        img = np.repeat(img[:, :, :1], 3, axis=2)
+    return img[:, :, :3]
 
 
 def image_decode_stage(
     df: DataFrame, content_col: str = "content", key_col: str = "doc_id"
 ) -> DataFrame:
-    """REAL auto-dispatch image decode: PNG, baseline JPEG, or GIF
-    (first composed frame) per row by magic bytes (the ingest-scanner
-    mode for mixed image shards — same pattern as
-    :func:`decompress_stage`), emitting the raw-RGB8 layout. Unknown
-    magics fail the task loudly."""
-    from pipetree_spark.ops.gif import gif_decode
-    from pipetree_spark.ops.jpeg import jpeg_decode
-    from pipetree_spark.ops.png import png_decode
-
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
-    )
+    """REAL image decode stage: PNG, baseline JPEG, or GIF (first
+    composed frame) per row by magic bytes, so mixed image shards decode
+    in one pass (same pattern as :func:`decompress_stage`), emitting the
+    raw-RGB8 layout (content + width/height from the decoded pixels,
+    mime flipped to RAW_RGB_MIME); the uncompressed pipeline
+    (:func:`rgb_resize_stage`, :func:`rgb_feature_stage`) chains
+    unchanged. Decoding runs executor-side per Arrow batch; an unknown
+    magic or a corrupt payload fails the task loudly."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in batches:
             contents, widths, heights = [], [], []
             for p in pdf[content_col]:
-                raw = bytes(p)
-                if raw[:8] == b"\x89PNG\r\n\x1a\n":
-                    img = png_decode(raw)
-                elif raw[:2] == b"\xff\xd8":
-                    img = jpeg_decode(raw)
-                elif raw[:6] in (b"GIF87a", b"GIF89a"):
-                    img = gif_decode(raw)[0][0]  # first composed frame
-                else:
-                    raise ValueError(
-                        f"unknown image magic {raw[:4]!r} (png/jpeg/gif supported)"
-                    )
-                h, w, ch = img.shape
-                if ch == 1:
-                    img = np.repeat(img, 3, axis=2)
-                elif ch == 2:
-                    img = np.repeat(img[:, :, :1], 3, axis=2)
-                elif ch == 4:
-                    img = img[:, :, :3]
+                img = _decode_rgb8(bytes(p))
                 contents.append(img.tobytes())
-                widths.append(w)
-                heights.append(h)
+                heights.append(img.shape[0])
+                widths.append(img.shape[1])
             yield pd.DataFrame(
                 {
                     key_col: pdf[key_col].astype("int64"),
@@ -648,7 +482,7 @@ def image_decode_stage(
                 }
             )
 
-    return df.mapInPandas(run, schema=schema)
+    return df.mapInPandas(run, schema=_keyed_schema(RGB_LAYOUT_SCHEMA, key_col))
 
 
 RGB_INT_STATS_SCHEMA = T.StructType(
@@ -672,7 +506,6 @@ def rgb_int_stats_stage(
     float-free twin of :func:`rgb_feature_stage`, built for the
     driver's hash gate: means/stds are one exact division away for the
     consumer that wants them)."""
-    import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -716,7 +549,6 @@ def pcm_int_stats_stage(
     float-free twin of :func:`pcm_feature_stage`): sample count, signed
     sample sum, sum of squares, absolute peak — all int64, built for
     the driver's hash gate."""
-    import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -761,49 +593,17 @@ def make_mjpeg_payload(
     from pipetree_spark.ops.avi import avi_mjpeg_encode
     from pipetree_spark.ops.jpeg import jpeg_encode
 
-    need = width * height * 3
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
+    def encode(t: str) -> bytes:
+        frames = [
+            jpeg_encode(_det_rgb(f"frame{fi}:{t}", width, height), quality=quality)
+            for fi in range(n_frames)
         ]
+        return avi_mjpeg_encode(frames, width, height, fps=fps)
+
+    return _make_payload(
+        df, text_col, key_col, encode, MJPEG_MIME,
+        width=width, height=height, n_frames=n_frames,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for t in pdf[text_col]:
-                frames = []
-                for fi in range(n_frames):
-                    base = hashlib.sha256(f"frame{fi}:{t}".encode()).hexdigest()
-                    buf = bytearray()
-                    counter = 0
-                    while len(buf) < need:
-                        buf += hashlib.sha256(f"{base}:{counter}".encode()).digest()
-                        counter += 1
-                    px = np.frombuffer(bytes(buf[:need]), np.uint8).reshape(
-                        height, width, 3
-                    )
-                    frames.append(jpeg_encode(px, quality=quality))
-                payloads.append(avi_mjpeg_encode(frames, width, height, fps=fps))
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": payloads,
-                    "width": width,
-                    "height": height,
-                    "n_frames": n_frames,
-                    "mime": MJPEG_MIME,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def video_frame_sample_stage(
@@ -820,7 +620,6 @@ def video_frame_sample_stage(
     image pipeline (resize, features) chains per frame. This is the
     north-star "frame-sample" op with real decode, not an array slice."""
     from pipetree_spark.ops.avi import avi_mjpeg_decode
-    from pipetree_spark.ops.jpeg import jpeg_decode
 
     schema = T.StructType(
         [
@@ -835,22 +634,17 @@ def video_frame_sample_stage(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in batches:
             keys, idxs, contents, widths, heights, fpss = [], [], [], [], [], []
             for did, p in zip(pdf[key_col], pdf[content_col]):
                 frames, _, _, fps = avi_mjpeg_decode(bytes(p))
                 for fi in range(0, len(frames), every_n):
-                    img = jpeg_decode(frames[fi])
-                    h, w, ch = img.shape
-                    if ch == 1:
-                        img = np.repeat(img, 3, axis=2)
+                    img = _decode_rgb8(frames[fi])
                     keys.append(int(did))
                     idxs.append(fi)
                     contents.append(img.tobytes())
-                    widths.append(w)
-                    heights.append(h)
+                    heights.append(img.shape[0])
+                    widths.append(img.shape[1])
                     fpss.append(fps or 0)
             yield pd.DataFrame(
                 {
@@ -887,86 +681,11 @@ def make_wav_payload(
     from pipetree_spark.ops.wav import wav_encode
 
     need = n_samples * 2
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
+    return _make_payload(
+        df, text_col, key_col,
+        lambda t: wav_encode(np.frombuffer(_det_bytes("pcm:" + t, need), "<i2"), sample_rate),
+        WAV_MIME, n_samples=n_samples, sample_rate=sample_rate,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for t in pdf[text_col]:
-                base = hashlib.sha256(b"pcm:" + str(t).encode()).hexdigest()
-                buf = bytearray()
-                counter = 0
-                while len(buf) < need:
-                    buf += hashlib.sha256(f"{base}:{counter}".encode()).digest()
-                    counter += 1
-                x = np.frombuffer(bytes(buf[:need]), dtype="<i2")
-                payloads.append(wav_encode(x, sample_rate))
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": payloads,
-                    "n_samples": n_samples,
-                    "sample_rate": sample_rate,
-                    "mime": WAV_MIME,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def wav_decode_stage(
-    df: DataFrame, content_col: str = "content", key_col: str = "doc_id"
-) -> DataFrame:
-    """REAL audio-container decode stage: ``audio/wav`` payloads →
-    raw-PCM16 layout (content + n_samples/sample_rate read from the
-    RIFF header, mime flipped to RAW_PCM_MIME), after which the raw
-    waveform pipeline chains unchanged (:func:`pcm_feature_stage`,
-    :func:`pcm_downsample`). Multi-channel inputs downmix to the FIRST
-    channel (deterministic, no float mixing arithmetic) so downstream
-    stages see ONE layout. A corrupt payload fails the task loudly
-    (ops.wav.WavFormatError)."""
-    from pipetree_spark.ops.wav import wav_decode
-
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents, counts, rates = [], [], []
-            for p in pdf[content_col]:
-                samples, sr = wav_decode(bytes(p))
-                mono = samples[:, 0]
-                contents.append(mono.tobytes())
-                counts.append(len(mono))
-                rates.append(sr)
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": contents,
-                    "n_samples": pd.Series(counts, dtype="int32"),
-                    "sample_rate": pd.Series(rates, dtype="int32"),
-                    "mime": RAW_PCM_MIME,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
 
 
 FLAC_MIME = "audio/flac"
@@ -988,117 +707,51 @@ def make_flac_payload(
     from pipetree_spark.ops.flac import flac_encode
 
     need = n_samples * 2
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
+
+    def encode(t: str) -> bytes:
+        x = np.frombuffer(_det_bytes("pcm:" + t, need), "<i2").astype(np.int64)
+        return flac_encode(x, sample_rate, subframe=subframe)
+
+    return _make_payload(
+        df, text_col, key_col, encode, FLAC_MIME,
+        n_samples=n_samples, sample_rate=sample_rate,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        for pdf in batches:
-            payloads = []
-            for t in pdf[text_col]:
-                base = hashlib.sha256(b"pcm:" + str(t).encode()).hexdigest()
-                buf = bytearray()
-                counter = 0
-                while len(buf) < need:
-                    buf += hashlib.sha256(f"{base}:{counter}".encode()).digest()
-                    counter += 1
-                x = np.frombuffer(bytes(buf[:need]), dtype="<i2").astype(np.int64)
-                payloads.append(flac_encode(x, sample_rate, subframe=subframe))
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": payloads,
-                    "n_samples": n_samples,
-                    "sample_rate": sample_rate,
-                    "mime": FLAC_MIME,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def flac_decode_stage(
-    df: DataFrame, content_col: str = "content", key_col: str = "doc_id"
-) -> DataFrame:
-    """REAL lossless-audio decode stage: ``audio/flac`` payloads →
-    raw-PCM16 layout (first channel, like :func:`wav_decode_stage`), so
-    the waveform pipeline chains unchanged."""
+def _decode_pcm16(raw: bytes) -> tuple[np.ndarray, int]:
+    """Decode ONE WAV or FLAC payload, chosen by magic bytes, to its
+    FIRST channel as int16 samples plus the sample rate (deterministic
+    downmix, no float mixing arithmetic, so downstream stages see ONE
+    layout). An unknown magic raises ValueError; a corrupt payload
+    raises its codec's format error."""
     from pipetree_spark.ops.flac import flac_decode
+    from pipetree_spark.ops.wav import wav_decode
 
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents, counts, rates = [], [], []
-            for p in pdf[content_col]:
-                samples, sr = flac_decode(bytes(p))
-                mono = samples[:, 0].astype("<i2")
-                contents.append(mono.tobytes())
-                counts.append(len(mono))
-                rates.append(sr)
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": contents,
-                    "n_samples": pd.Series(counts, dtype="int32"),
-                    "sample_rate": pd.Series(rates, dtype="int32"),
-                    "mime": RAW_PCM_MIME,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
+    if raw[:4] == b"RIFF":
+        samples, sr = wav_decode(raw)
+    elif raw[:4] == b"fLaC":
+        samples, sr = flac_decode(raw)
+    else:
+        raise ValueError(f"unknown audio magic {raw[:4]!r} (wav/flac supported)")
+    return samples[:, 0].astype("<i2"), sr
 
 
 def audio_decode_stage(
     df: DataFrame, content_col: str = "content", key_col: str = "doc_id"
 ) -> DataFrame:
-    """REAL auto-dispatch audio decode: WAV or FLAC per row by magic
-    bytes (the audio twin of :func:`image_decode_stage`), emitting the
-    raw-PCM16 layout. Unknown magics fail the task loudly."""
-    from pipetree_spark.ops.flac import flac_decode
-    from pipetree_spark.ops.wav import wav_decode
-
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
-    )
+    """REAL audio decode stage: WAV or FLAC per row by magic bytes (the
+    audio twin of :func:`image_decode_stage`), emitting the raw-PCM16
+    layout (content + n_samples/sample_rate read from the stream, mime
+    flipped to RAW_PCM_MIME); the waveform pipeline
+    (:func:`pcm_feature_stage`, :func:`pcm_downsample_stage`) chains
+    unchanged. An unknown magic or a corrupt payload fails the task
+    loudly."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             contents, counts, rates = [], [], []
             for p in pdf[content_col]:
-                raw = bytes(p)
-                if raw[:4] == b"RIFF":
-                    samples, sr = wav_decode(raw)
-                    mono = samples[:, 0]
-                elif raw[:4] == b"fLaC":
-                    samples, sr = flac_decode(raw)
-                    mono = samples[:, 0].astype("<i2")
-                else:
-                    raise ValueError(
-                        f"unknown audio magic {raw[:4]!r} (wav/flac supported)"
-                    )
+                mono, sr = _decode_pcm16(bytes(p))
                 contents.append(mono.tobytes())
                 counts.append(len(mono))
                 rates.append(sr)
@@ -1112,15 +765,13 @@ def audio_decode_stage(
                 }
             )
 
-    return df.mapInPandas(run, schema=schema)
+    return df.mapInPandas(run, schema=_keyed_schema(PCM_LAYOUT_SCHEMA, key_col))
 
 
 def pcm_decode(payload: bytes, n_samples: int):
     """REAL decode of a raw PCM16-LE payload: byte buffer → int16
     sample array. Raises on size mismatch — a truncated waveform must
     fail loudly, not analyze garbage."""
-    import numpy as np
-
     arr = np.frombuffer(payload, dtype="<i2")
     if arr.size != n_samples:
         raise ValueError(
@@ -1145,7 +796,6 @@ def pcm_feature_stage(
     rate — the classic cheap features for silence / clipping / tone
     detection in a multimodal curation pipeline. Expects
     ``make_pcm_payload``'s layout (content + n_samples/sample_rate)."""
-    import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1193,42 +843,10 @@ def make_gif_payload(
 
     if width * height > 256:
         raise ValueError("make_gif_payload: width*height must be <= 256 (palette bound)")
-    need = width * height * 3
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
+    return _make_payload(
+        df, text_col, key_col, lambda t: gif_encode(_det_rgb("gif:" + t, width, height)),
+        GIF_MIME, width=width, height=height,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for t in pdf[text_col]:
-                base = hashlib.sha256(b"gif:" + str(t).encode()).hexdigest()
-                buf = bytearray()
-                counter = 0
-                while len(buf) < need:
-                    buf += hashlib.sha256(f"{base}:{counter}".encode()).digest()
-                    counter += 1
-                px = np.frombuffer(bytes(buf[:need]), np.uint8).reshape(height, width, 3)
-                payloads.append(gif_encode(px))
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": payloads,
-                    "width": width,
-                    "height": height,
-                    "mime": GIF_MIME,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def make_flac_stereo_payload(
@@ -1251,43 +869,14 @@ def make_flac_stereo_payload(
     from pipetree_spark.ops.flac import flac_encode
 
     need = n_frames * 2 * 2  # stereo int16
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
+
+    def encode(t: str) -> bytes:
+        x = np.frombuffer(_det_bytes("flac:" + t, need), "<i2").reshape(-1, 2)
+        return flac_encode(x, sample_rate, subframe="fixed", channel_mode=channel_mode)
+
+    return _make_payload(
+        df, text_col, key_col, encode, FLAC_MIME, n_samples=n_frames, sample_rate=sample_rate
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for t in pdf[text_col]:
-                base = hashlib.sha256(b"flac:" + str(t).encode()).hexdigest()
-                buf = bytearray()
-                counter = 0
-                while len(buf) < need:
-                    buf += hashlib.sha256(f"{base}:{counter}".encode()).digest()
-                    counter += 1
-                x = np.frombuffer(bytes(buf[:need]), dtype="<i2").reshape(-1, 2)
-                payloads.append(
-                    flac_encode(x, sample_rate, subframe="fixed", channel_mode=channel_mode)
-                )
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": payloads,
-                    "n_samples": n_frames,
-                    "sample_rate": sample_rate,
-                    "mime": FLAC_MIME,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def make_avi_payload(
@@ -1311,41 +900,19 @@ def make_avi_payload(
     from pipetree_spark.ops.avi import avi_mjpeg_encode
     from pipetree_spark.ops.jpeg import jpeg_encode
 
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("fps", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
+    def encode(t: str) -> bytes:
+        # sha256(base ':' k) is block k of _det_bytes' counter-mode stream
+        dig = _det_bytes("avi:" + t, 32 * n_frames)
+        frames = []
+        for k in range(n_frames):
+            img = np.empty((height, width, 3), np.uint8)
+            img[:, :] = np.frombuffer(dig[32 * k : 32 * k + 3], np.uint8)
+            frames.append(jpeg_encode(img, quality=85))
+        return avi_mjpeg_encode(frames, width, height, fps=fps)
+
+    return _make_payload(
+        df, text_col, key_col, encode, MJPEG_MIME, n_frames=n_frames, fps=fps
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for t in pdf[text_col]:
-                base = hashlib.sha256(b"avi:" + str(t).encode()).hexdigest()
-                frames = []
-                for k in range(n_frames):
-                    rgb = hashlib.sha256(f"{base}:{k}".encode()).digest()[:3]
-                    img = np.empty((height, width, 3), np.uint8)
-                    img[:, :] = np.frombuffer(rgb, np.uint8)
-                    frames.append(jpeg_encode(img, quality=85))
-                payloads.append(avi_mjpeg_encode(frames, width, height, fps=fps))
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": payloads,
-                    "n_frames": n_frames,
-                    "fps": fps,
-                    "mime": MJPEG_MIME,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
 
 
 RGB_FRAME_STATS_SCHEMA = T.StructType(
@@ -1368,7 +935,6 @@ def rgb_int_stats_by_frame_stage(
     one-row-per-sampled-frame layout :func:`video_frame_sample_stage`
     emits — same all-int64, float-free contract, with frame_idx carried
     through so the oracle can address individual frames."""
-    import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1425,7 +991,6 @@ def rgb_perturb_stage(
     re-encode/watermark drift perceptual dedup must survive). Purely
     byte-positional, so an oracle can re-derive the perturbed pixels
     from the payload DEFINITION with one CASE."""
-    import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1462,7 +1027,6 @@ def dhash_bands_stage(
 
     Scale shape: one narrow mapInPandas (no shuffle); the 64-bit
     fingerprint replaces the image for all downstream dedup."""
-    import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1567,7 +1131,6 @@ def pcm_perturb_stage(
     sample-positional and saturating at the int16 rails, so an oracle
     can re-derive the perturbed waveform from the sample DEFINITION
     with one CASE + LEAST/GREATEST."""
-    import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1606,7 +1169,6 @@ def audiofp_bands_stage(
 
     Scale shape: one narrow mapInPandas (no shuffle); the 8-byte
     fingerprint replaces the waveform for all downstream dedup."""
-    import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1661,47 +1223,24 @@ def make_avi_quad_payload(
     from pipetree_spark.ops.avi import avi_mjpeg_encode
     from pipetree_spark.ops.jpeg import jpeg_encode
 
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("fps", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ]
+    def encode(t: str) -> bytes:
+        # sha256(base ':' k) is block k of _det_bytes' counter-mode stream
+        blocks = _det_bytes("aviq:" + t, 32 * n_frames)
+        frames = []
+        for k in range(n_frames):
+            # repeat > 1 emits runs of identical frames (shot
+            # structure) for keyframe-selection tests/oracles
+            dig = blocks[32 * (k // repeat) :]
+            img = np.empty((16, 16, 3), np.uint8)
+            for q in range(4):
+                r0, c0 = (q // 2) * 8, (q % 2) * 8
+                img[r0 : r0 + 8, c0 : c0 + 8] = np.frombuffer(dig[3 * q : 3 * q + 3], np.uint8)
+            frames.append(jpeg_encode(img, quality=85))
+        return avi_mjpeg_encode(frames, 16, 16, fps=fps)
+
+    return _make_payload(
+        df, text_col, key_col, encode, MJPEG_MIME, n_frames=n_frames, fps=fps
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for t in pdf[text_col]:
-                base = hashlib.sha256(b"aviq:" + str(t).encode()).hexdigest()
-                frames = []
-                for k in range(n_frames):
-                    # repeat > 1 emits runs of identical frames (shot
-                    # structure) for keyframe-selection tests/oracles
-                    dig = hashlib.sha256(f"{base}:{k // repeat}".encode()).digest()
-                    img = np.empty((16, 16, 3), np.uint8)
-                    for q in range(4):
-                        r0, c0 = (q // 2) * 8, (q % 2) * 8
-                        img[r0 : r0 + 8, c0 : c0 + 8] = np.frombuffer(
-                            dig[3 * q : 3 * q + 3], np.uint8
-                        )
-                    frames.append(jpeg_encode(img, quality=85))
-                payloads.append(avi_mjpeg_encode(frames, 16, 16, fps=fps))
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": payloads,
-                    "n_frames": n_frames,
-                    "fps": fps,
-                    "mime": MJPEG_MIME,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
 
 
 VID_BLOCK_LUMA_SCHEMA = T.StructType(
@@ -1723,7 +1262,6 @@ def vid_block_luma_stage(
     (the dhash weights). Width/height must be even. Four int64s
     replace each frame — the narrow-map reduction that makes video
     fingerprinting affordable at scale."""
-    import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1817,49 +1355,29 @@ def make_jpeg_exif_payload(
     from pipetree_spark.ops.exif import exif_app1, insert_app1
     from pipetree_spark.ops.jpeg import jpeg_encode
 
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("mime", T.StringType()),
-        ]
-    )
+    def encode(t: str) -> bytes:
+        hx = hashlib.sha256(b"exif:" + t.encode()).hexdigest()
+        dig = bytes.fromhex(hx)
+        img = np.empty((16, 16, 3), np.uint8)
+        img[:, :] = np.frombuffer(dig[11:14], np.uint8)
+        dt = "%04d:%02d:%02d %02d:%02d:%02d" % (
+            2000 + dig[5] % 100,
+            1 + dig[6] % 12,
+            1 + dig[7] % 28,
+            dig[8] % 24,
+            dig[9] % 60,
+            dig[10] % 60,
+        )
+        app1 = exif_app1(
+            make="MK" + hx[4:10],
+            orientation=1 + dig[1] % 8,
+            xres=(dig[2] * 256 + dig[3], 1 + dig[4]),
+            dt_original=dt,
+            big_endian=bool(dig[0] % 2),
+        )
+        return insert_app1(jpeg_encode(img, quality=85), app1)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for t in pdf[text_col]:
-                hx = hashlib.sha256(b"exif:" + str(t).encode()).hexdigest()
-                dig = bytes.fromhex(hx)
-                img = np.empty((16, 16, 3), np.uint8)
-                img[:, :] = np.frombuffer(dig[11:14], np.uint8)
-                dt = "%04d:%02d:%02d %02d:%02d:%02d" % (
-                    2000 + dig[5] % 100,
-                    1 + dig[6] % 12,
-                    1 + dig[7] % 28,
-                    dig[8] % 24,
-                    dig[9] % 60,
-                    dig[10] % 60,
-                )
-                app1 = exif_app1(
-                    make="MK" + hx[4:10],
-                    orientation=1 + dig[1] % 8,
-                    xres=(dig[2] * 256 + dig[3], 1 + dig[4]),
-                    dt_original=dt,
-                    big_endian=bool(dig[0] % 2),
-                )
-                payloads.append(insert_app1(jpeg_encode(img, quality=85), app1))
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": payloads,
-                    "mime": JPEG_MIME,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
+    return _make_payload(df, text_col, key_col, encode, JPEG_MIME)
 
 
 EXIF_SCHEMA = T.StructType(
@@ -1944,72 +1462,52 @@ def make_warc_payload(
 
     from pipetree_spark.ops.warc import http_response, warc_record
 
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("mime", T.StringType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for t in pdf[text_col]:
-                t = str(t)
-                hx = hashlib.sha256(b"warc:" + t.encode()).hexdigest()
-                b0 = int(hx[:2], 16)
-                uri = "http://crawl.test/" + hx[:8]
-                if b0 % 4 == 0:
-                    status, reason = 404, "Not Found"
-                    body = "<html><body><p>not found</p></body></html>"
-                else:
-                    status, reason = 200, "OK"
-                    # realistic capture shape: pure-link nav + content
-                    # paragraph (entity included) + pure-link footer, so
-                    # the downstream link-density extractor has real
-                    # boilerplate to drop (q_pipe_crawl_e2e)
-                    body = (
-                        "<html><body><div id=nav><a href=/>Home</a> "
-                        "<a href=/a>About</a></div><p>" + t + " &amp; tail</p>"
-                        "<div id=footer><a href=/t>Terms</a> "
-                        "<a href=/p>Privacy</a></div></body></html>"
-                    )
-                records = [
-                    warc_record(
-                        "warcinfo",
-                        {"WARC-Record-ID": f"<urn:sha256:{hx[:16]}>"},
-                        b"software: pipetree-spark\r\n",
-                    ),
-                    warc_record(
-                        "request",
-                        {"WARC-Target-URI": uri},
-                        f"GET /{hx[:8]} HTTP/1.1\r\nHost: crawl.test\r\n\r\n".encode(),
-                    ),
-                    warc_record(
-                        "response",
-                        {"WARC-Target-URI": uri},
-                        http_response(status, reason, body.encode("utf-8")),
-                    ),
-                ]
-                if gzip_members:
-                    # the CommonCrawl layout: each record its own gzip
-                    # member, members concatenated (mtime pinned to 0
-                    # so payload bytes are deterministic)
-                    payloads.append(
-                        b"".join(gzip.compress(r, mtime=0) for r in records)
-                    )
-                else:
-                    payloads.append(b"".join(records))
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].astype("int64"),
-                    "content": payloads,
-                    "mime": WARC_GZ_MIME if gzip_members else WARC_MIME,
-                }
+    def encode(t: str) -> bytes:
+        hx = hashlib.sha256(b"warc:" + t.encode()).hexdigest()
+        b0 = int(hx[:2], 16)
+        uri = "http://crawl.test/" + hx[:8]
+        if b0 % 4 == 0:
+            status, reason = 404, "Not Found"
+            body = "<html><body><p>not found</p></body></html>"
+        else:
+            status, reason = 200, "OK"
+            # realistic capture shape: pure-link nav + content
+            # paragraph (entity included) + pure-link footer, so
+            # the downstream link-density extractor has real
+            # boilerplate to drop (q_pipe_crawl_e2e)
+            body = (
+                "<html><body><div id=nav><a href=/>Home</a> "
+                "<a href=/a>About</a></div><p>" + t + " &amp; tail</p>"
+                "<div id=footer><a href=/t>Terms</a> "
+                "<a href=/p>Privacy</a></div></body></html>"
             )
+        records = [
+            warc_record(
+                "warcinfo",
+                {"WARC-Record-ID": f"<urn:sha256:{hx[:16]}>"},
+                b"software: pipetree-spark\r\n",
+            ),
+            warc_record(
+                "request",
+                {"WARC-Target-URI": uri},
+                f"GET /{hx[:8]} HTTP/1.1\r\nHost: crawl.test\r\n\r\n".encode(),
+            ),
+            warc_record(
+                "response",
+                {"WARC-Target-URI": uri},
+                http_response(status, reason, body.encode("utf-8")),
+            ),
+        ]
+        if gzip_members:
+            # the CommonCrawl layout: each record its own gzip
+            # member, members concatenated (mtime pinned to 0
+            # so payload bytes are deterministic)
+            return b"".join(gzip.compress(r, mtime=0) for r in records)
+        return b"".join(records)
 
-    return df.mapInPandas(run, schema=schema)
+    return _make_payload(
+        df, text_col, key_col, encode, WARC_GZ_MIME if gzip_members else WARC_MIME
+    )
 
 
 WARC_EXTRACT_SCHEMA = T.StructType(
@@ -2217,32 +1715,22 @@ def classify_media_stage(
 
     Scale shape: narrow per-row map; failures cost only the bytes
     already read."""
-    from pipetree_spark.ops.gif import gif_decode
-    from pipetree_spark.ops.jpeg import jpeg_decode
-    from pipetree_spark.ops.png import png_decode
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             keys, fmts, stats, npx = [], [], [], []
             for did, p in zip(pdf[key_col], pdf[content_col]):
                 raw = bytes(p)
-                if raw[:8] == b"\x89PNG\r\n\x1a\n":
-                    fmt, decode = "png", png_decode
-                elif raw[:2] == b"\xff\xd8":
-                    fmt, decode = "jpeg", jpeg_decode
-                elif raw[:6] in (b"GIF87a", b"GIF89a"):
-                    fmt, decode = "gif", (lambda b: gif_decode(b)[0][0])
-                else:
-                    fmt, decode = "unknown", None
+                fmt = _image_format(raw)
                 status, n = "unknown", 0
-                if decode is not None:
+                if fmt is not None:
                     try:
-                        img = decode(raw)
+                        img = _decode_rgb8(raw)
                         status, n = "ok", int(img.shape[0]) * int(img.shape[1])
                     except Exception:
                         status = "corrupt"
                 keys.append(int(did))
-                fmts.append(fmt)
+                fmts.append(fmt or "unknown")
                 stats.append(status)
                 npx.append(n)
             yield pd.DataFrame(

@@ -9,7 +9,7 @@ variants a small codec must not silently mis-decode (IEEE-float,
 ADPCM/compressed format codes, 8/24/32-bit widths, truncated data).
 
 Spark-side shape is identical to the raw paths in ops/mm.py: payloads
-decode executor-side in Arrow batches (``wav_decode_stage`` emits the
+decode executor-side in Arrow batches (``audio_decode_stage`` emits the
 raw-PCM16 layout, after which ``pcm_feature_stage`` /
 ``pcm_downsample`` chain unchanged).
 """

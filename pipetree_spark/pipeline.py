@@ -353,22 +353,19 @@ def _op_registry() -> dict[str, tuple[Callable, int]]:
         "snapshot_diff": (RL.snapshot_diff, 2),
         # incremental_join_delta(a_old, a_delta, b_old, b_delta, on=[...])
         "incremental_join_delta": (RL.incremental_join_delta, 4),
-        # multimodal stages (r10): PNG and WAV are REAL pure-stdlib
-        # decodes (ops/png.py, ops/wav.py); each decode stage emits the
-        # corresponding raw layout, so decode → transform → features
-        # chains inside one JSON spec
+        # multimodal stages (r10): image_decode / audio_decode dispatch
+        # PNG|JPEG|GIF / WAV|FLAC by magic bytes to REAL pure-Python
+        # codecs and emit the raw-RGB8 / raw-PCM16 layout, so decode →
+        # transform → features chains inside one JSON spec
         "make_png_payload": (MM.make_png_payload, 1),
-        "png_decode": (MM.png_decode_stage, 1),
         "make_rgb_payload": (MM.make_rgb_payload, 1),
         "rgb_resize": (MM.rgb_resize_stage, 1),
         "rgb_features": (MM.rgb_feature_stage, 1),
         "make_wav_payload": (MM.make_wav_payload, 1),
-        "wav_decode": (MM.wav_decode_stage, 1),
         "make_pcm_payload": (MM.make_pcm_payload, 1),
         "pcm_features": (MM.pcm_feature_stage, 1),
         "payload_decompress": (MM.decompress_stage, 1),
         "make_jpeg_payload": (MM.make_jpeg_payload, 1),
-        "jpeg_decode": (MM.jpeg_decode_stage, 1),
         "make_mjpeg_payload": (MM.make_mjpeg_payload, 1),
         "video_frame_sample": (MM.video_frame_sample_stage, 1),
         "rgb_int_stats": (MM.rgb_int_stats_stage, 1),
@@ -382,7 +379,6 @@ def _op_registry() -> dict[str, tuple[Callable, int]]:
         "make_gif_payload": (MM.make_gif_payload, 1),
         "make_avi_payload": (MM.make_avi_payload, 1),
         "rgb_int_stats_by_frame": (MM.rgb_int_stats_by_frame_stage, 1),
-        "flac_decode": (MM.flac_decode_stage, 1),
         "audio_decode": (MM.audio_decode_stage, 1),
         # r11: distributed BPE merge training (ops/text.py)
         "bpe_train": (TX.bpe_train, 1),

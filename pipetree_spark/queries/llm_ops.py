@@ -2103,12 +2103,6 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return VX.semantic_dedup(e, key_col="vec_id", block_col="label")
 
 
-#: engine moved to the ops layer (r7) so the pipeline ``op`` stage type
-#: can declare semantic dedup from JSON; the query stays a thin
-#: declaration. Alias kept for the property-test import surface.
-_cos_pairs = VX.cos_pairs_blocked
-
-
 def _semantic_ann_sql(
     k: int = 8, scale: int = 1 << 20, threshold: float = 0.35, n_probe: int = 3
 ) -> str:
@@ -3123,7 +3117,7 @@ def q_mm_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
     pngs = MM.make_png_payload(d, width=16, height=16)  # 768 B = 24 digests
-    return MM.rgb_int_stats_stage(MM.png_decode_stage(pngs))
+    return MM.rgb_int_stats_stage(MM.image_decode_stage(pngs))
 
 
 @declare(
@@ -3170,7 +3164,7 @@ def q_mm_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
     wavs = MM.make_wav_payload(d, n_samples=256, sample_rate=8000)
-    return MM.pcm_int_stats_stage(MM.wav_decode_stage(wavs))
+    return MM.pcm_int_stats_stage(MM.audio_decode_stage(wavs))
 
 
 @declare(
@@ -3252,7 +3246,7 @@ def q_mm_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ('flac:'-prefixed sha256 counter-mode; interleaved L/R, so frame
     k's left sample is int16 #2k — the k % 2 = 0 rows in the oracle) →
     REAL FLAC encode (ops/flac.py: fixed predictors, rice residuals,
-    MID-SIDE stereo decorrelation) → REAL decode (flac_decode_stage
+    MID-SIDE stereo decorrelation) → REAL decode (audio_decode_stage
     keeps channel 0) → integer-exact waveform stats. The oracle
     re-derives the left channel from the byte DEFINITION with no audio
     code, so a hash match certifies the predictor/rice path AND the
@@ -3267,7 +3261,7 @@ def q_mm_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
     flacs = MM.make_flac_stereo_payload(d, n_frames=256, sample_rate=8000, channel_mode="mid_side")
-    return MM.pcm_int_stats_stage(MM.flac_decode_stage(flacs))
+    return MM.pcm_int_stats_stage(MM.audio_decode_stage(flacs))
 
 
 @declare(
@@ -3489,7 +3483,7 @@ def q_mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") < 24)
         .select("doc_id", "text")
     )
-    base = MM.png_decode_stage(MM.make_png_payload(d, width=16, height=16))
+    base = MM.image_decode_stage(MM.make_png_payload(d, width=16, height=16))
     variants = MM.rgb_perturb_stage(
         base.withColumn("doc_id", F.col("doc_id") + 100), every=64, delta=1
     )
@@ -3716,7 +3710,7 @@ def q_mm_audiofp_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") < 24)
         .select("doc_id", "text")
     )
-    base = MM.wav_decode_stage(MM.make_wav_payload(d, n_samples=512, sample_rate=8000))
+    base = MM.audio_decode_stage(MM.make_wav_payload(d, n_samples=512, sample_rate=8000))
     variants = MM.pcm_perturb_stage(
         base.withColumn("doc_id", F.col("doc_id") + 100), every=37, delta=1
     )
@@ -4347,7 +4341,7 @@ def q_mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") < 24)
         .select("doc_id", "text")
     )
-    base = MM.png_decode_stage(MM.make_png_payload(d, width=16, height=16))
+    base = MM.image_decode_stage(MM.make_png_payload(d, width=16, height=16))
     return MM.rgb_int_stats_stage(MM.rgb_resize_stage(base, out_w=8, out_h=8))
 
 
@@ -4397,7 +4391,7 @@ def q_mm_audio_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") < 24)
         .select("doc_id", "text")
     )
-    raw = MM.wav_decode_stage(MM.make_wav_payload(d, n_samples=512, sample_rate=8000))
+    raw = MM.audio_decode_stage(MM.make_wav_payload(d, n_samples=512, sample_rate=8000))
     return MM.pcm_int_stats_stage(MM.pcm_downsample_stage(raw, factor=4))
 
 

@@ -833,7 +833,7 @@ def test_multimodal_png_pipeline_is_json_declarable(spark, sf_small):
                 "inputs": ["docs"],
                 "args": {"width": 12, "height": 8},
             },
-            "raw": {"type": "op", "op": "png_decode", "inputs": ["pngs"]},
+            "raw": {"type": "op", "op": "image_decode", "inputs": ["pngs"]},
             "thumbs": {
                 "type": "op",
                 "op": "rgb_resize",
@@ -850,7 +850,7 @@ def test_multimodal_png_pipeline_is_json_declarable(spark, sf_small):
     docs = out["docs"]
     direct = MM.rgb_feature_stage(
         MM.rgb_resize_stage(
-            MM.png_decode_stage(MM.make_png_payload(docs, width=12, height=8)),
+            MM.image_decode_stage(MM.make_png_payload(docs, width=12, height=8)),
             out_w=6,
             out_h=4,
         )

@@ -513,12 +513,12 @@ def test_pipeline_random_dags_topo_order_and_stable_keys(spark, n, data):
 )
 def test_blocked_cos_pairs_arrow_bitexact_vs_expression(spark, vecs, n_blocks):
     """The Arrow pair stage (ops.vector.blocked_cos_pairs_arrow) claims
-    BIT-IDENTICAL pair sets to the JVM-expression fold (_cos_pairs) via
+    BIT-IDENTICAL pair sets to the JVM-expression fold
+    (ops.vector.cos_pairs_blocked) via
     dim-sequential accumulation. Pin it on RANDOM vectors and random
     block assignments — any summation-order drift (SIMD reassociation,
     chunk boundary bug) near the 0.35 threshold would diverge the sets."""
     from pipetree_spark.ops import vector as VX
-    from pipetree_spark.queries.llm_ops import _cos_pairs
 
     rows = [
         (i, i % n_blocks, [float(x) for x in v]) for i, v in enumerate(vecs)
@@ -527,7 +527,7 @@ def test_blocked_cos_pairs_arrow_bitexact_vs_expression(spark, vecs, n_blocks):
         rows, "rep_id long, block long, embedding array<float>"
     )
     want = {
-        (r.id_a, r.id_b) for r in _cos_pairs(m, 0.35).collect()
+        (r.id_a, r.id_b) for r in VX.cos_pairs_blocked(m, 0.35).collect()
     }
     got = {
         (r.id_a, r.id_b)

@@ -164,6 +164,65 @@ def oracle_dtype_problems(spark_fields, spark_rows, ora_df):
     return problems
 
 
+def check_query(spark, con, q, sf_dir, tol=0.0):
+    """Grade one declared query against its DuckDB oracle.
+
+    Runs it inside ``checkpoint_scope`` (so a long sweep pins no
+    executor storage), round-trips the collected rows through the
+    Arrow → pandas path ``toPandas`` takes, compares them order-insensitively
+    with the DuckDB oracle on ``con``, then checks the oracle's pandas
+    dtypes. Returns ``(problems, rows_only)``: no problems is a pass,
+    and ``rows_only`` marks a query without an oracle, which is graded
+    up to the round trip only.
+    """
+    try:
+        with checkpoint_scope(spark):
+            sdf = q.fn(spark, sf_dir)
+            srows = sdf.collect()
+    except Exception as exc:  # noqa: BLE001
+        return [f"spark error: {type(exc).__name__}: {exc}"], False
+    # Harness-representability round-trip: the grading harness
+    # canonicalizes the Spark result via toPandas() (Arrow path).
+    # Values that collect() handles fine can still blow up there —
+    # proven class: TIMESTAMP '9999-12-31' sentinel > Arrow's ns
+    # range (CORRECTNESS_r03 q_ts_scd2 ArrowInvalid). Exercise the
+    # same Arrow→pandas ns conversion on the ALREADY-collected rows
+    # (pa.Table from the Spark schema, then to_pandas) instead of
+    # sdf.toPandas(), which would re-execute the whole plan and
+    # double the gate's runtime on the expensive queries.
+    try:
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        tbl = pa.Table.from_pylist(
+            [r.asDict(recursive=True) for r in srows],
+            schema=to_arrow_schema(sdf.schema),
+        )
+        # Spark's toPandas passes coerce_temporal_nanoseconds=True
+        # (pandas-2 default unit would otherwise stay 'us' and mask
+        # the ns-range overflow toPandas actually hits).
+        tbl.to_pandas(coerce_temporal_nanoseconds=True)
+    except Exception as exc:  # noqa: BLE001
+        return [f"toPandas round-trip: {type(exc).__name__}: {str(exc)[:200]}"], False
+    if q.oracle is None:
+        return [], True
+    try:
+        ocols, orows = run_oracle(con, q.oracle)
+    except Exception as exc:  # noqa: BLE001
+        return [f"oracle error: {type(exc).__name__}: {exc}"], False
+    srows = [tuple(r) for r in srows]
+    sc, sr = canon_result(sdf.columns, srows)
+    oc, orr = canon_result(ocols, orows)
+    problems = compare(sc, sr, oc, orr, tol=tol)
+    if problems:
+        # diagnose: would it pass with loose tolerance?
+        if not compare(sc, sr, oc, orr, tol=1e-6):
+            problems.insert(0, "CLOSE: float drift only")
+        return problems, False
+    # values match — now check the oracle's pandas dtype view
+    return oracle_dtype_problems(sdf.schema.fields, srows, con.execute(q.oracle).df()), False
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--vanilla", action="store_true",
@@ -204,77 +263,21 @@ def main():
     n_pass = n_fail = n_rows_only = 0
     failures = []
     for name in names:
-        q = registry[name]
         t0 = time.perf_counter()
-        try:
-            with checkpoint_scope(spark):
-                sdf = q.fn(spark, args.sf)
-                srows = sdf.collect()
-            scols = sdf.columns
-        except Exception as exc:  # noqa: BLE001
-            n_fail += 1
-            failures.append(name)
-            print(f"FAIL  {name:24s} spark error: {type(exc).__name__}: {exc}")
-            continue
-        # Harness-representability round-trip: the round driver
-        # canonicalizes the Spark result via toPandas() (Arrow path).
-        # Values that collect() handles fine can still blow up there —
-        # proven class: TIMESTAMP '9999-12-31' sentinel > Arrow's ns
-        # range (CORRECTNESS_r03 q_ts_scd2 ArrowInvalid). Exercise the
-        # same Arrow→pandas ns conversion on the ALREADY-collected rows
-        # (pa.Table from the Spark schema, then to_pandas) instead of
-        # sdf.toPandas(), which would re-execute the whole plan and
-        # double the gate's runtime on the expensive queries.
-        try:
-            import pyarrow as pa
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            tbl = pa.Table.from_pylist(
-                [r.asDict(recursive=True) for r in srows],
-                schema=to_arrow_schema(sdf.schema),
-            )
-            # Spark's toPandas passes coerce_temporal_nanoseconds=True
-            # (pandas-2 default unit would otherwise stay 'us' and mask
-            # the ns-range overflow the driver actually hits).
-            tbl.to_pandas(coerce_temporal_nanoseconds=True)
-        except Exception as exc:  # noqa: BLE001
-            n_fail += 1
-            failures.append(name)
-            print(f"FAIL  {name:24s} toPandas round-trip: {type(exc).__name__}: {str(exc)[:200]}")
-            continue
-        if q.oracle is None:
-            n_rows_only += 1
-            print(f"rows  {name:24s} {len(srows)} rows (no oracle — rows-only) [{time.perf_counter()-t0:.1f}s]")
-            continue
-        try:
-            ocols, orows = run_oracle(con, q.oracle)
-        except Exception as exc:  # noqa: BLE001
-            n_fail += 1
-            failures.append(name)
-            print(f"FAIL  {name:24s} oracle error: {type(exc).__name__}: {exc}")
-            continue
-        sc, sr = canon_result(scols, [tuple(r) for r in srows])
-        oc, orr = canon_result(ocols, orows)
-        problems = compare(sc, sr, oc, orr, tol=args.tol)
-        if not problems:
-            # values match — now check the driver's pandas dtype view
-            ora_df = con.execute(q.oracle).df()
-            problems = oracle_dtype_problems(
-                sdf.schema.fields, [tuple(r) for r in srows], ora_df
-            )
+        problems, rows_only = check_query(spark, con, registry[name], args.sf, args.tol)
         dtime = time.perf_counter() - t0
         if problems:
-            # diagnose: would it pass with loose tolerance?
-            loose = not compare(sc, sr, oc, orr, tol=1e-6)
             n_fail += 1
             failures.append(name)
-            tagnote = " [CLOSE: float drift only]" if loose else ""
-            print(f"FAIL  {name:24s} ({len(sr)} rows) [{dtime:.1f}s]{tagnote}")
+            print(f"FAIL  {name:24s} [{dtime:.1f}s]")
             for p in problems:
                 print(f"      {p}")
+        elif rows_only:
+            n_rows_only += 1
+            print(f"rows  {name:24s} (no oracle — rows-only) [{dtime:.1f}s]")
         else:
             n_pass += 1
-            print(f"PASS  {name:24s} ({len(sr)} rows) [{dtime:.1f}s]")
+            print(f"PASS  {name:24s} [{dtime:.1f}s]")
 
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only of {len(names)}")
     if failures:

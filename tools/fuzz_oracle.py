@@ -28,7 +28,7 @@ import numpy as np
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from check_parity import canon_result, compare, run_oracle  # noqa: E402
+from check_parity import check_query  # noqa: E402
 
 from pipetree_spark.catalog import TABLES  # noqa: E402
 from pipetree_spark.queries import load_registry  # noqa: E402
@@ -207,25 +207,13 @@ def main() -> int:
             )
         n_pass = n_rows_only = 0
         for name in names:
-            q = registry[name]
             t0 = time.perf_counter()
-            try:
-                sdf = q.fn(spark, out)
-                srows = [tuple(r) for r in sdf.collect()]
-                if q.oracle is None:
-                    n_rows_only += 1
-                    continue
-                ocols, orows = run_oracle(con, q.oracle)
-                sc, sr = canon_result(sdf.columns, srows)
-                oc, orr = canon_result(ocols, orows)
-                problems = compare(sc, sr, oc, orr, tol=0.0)
-            except Exception as exc:  # noqa: BLE001
-                failures.append((seed, name, f"{type(exc).__name__}: {exc}"))
-                print(f"  CRASH {name}: {type(exc).__name__}: {str(exc)[:200]}", flush=True)
-                continue
+            problems, rows_only = check_query(spark, con, registry[name], out)
             if problems:
                 failures.append((seed, name, str(problems[:2])))
                 print(f"  FAIL  {name}: {problems[:2]}", flush=True)
+            elif rows_only:
+                n_rows_only += 1
             else:
                 n_pass += 1
                 secs = time.perf_counter() - t0

@@ -27,6 +27,7 @@ import duckdb
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pipetree_spark.catalog import TABLES, table_path  # noqa: E402
+from pipetree_spark.ops.relational import checkpoint_scope  # noqa: E402
 from pipetree_spark.queries import load_registry  # noqa: E402
 from pipetree_spark.session import get_spark  # noqa: E402
 
@@ -74,8 +75,9 @@ def main() -> None:
             q = registry[name]
             notes = []
             try:
-                sdf = q.fn(spark, sf)
-                s_hit = _neg_zero_cols(sdf.columns, [tuple(r) for r in sdf.collect()])
+                with checkpoint_scope(spark):
+                    sdf = q.fn(spark, sf)
+                    s_hit = _neg_zero_cols(sdf.columns, [tuple(r) for r in sdf.collect()])
                 if s_hit:
                     notes.append(f"spark:{sorted(s_hit)}")
             except Exception as exc:  # noqa: BLE001

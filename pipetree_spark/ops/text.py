@@ -1534,115 +1534,54 @@ def ngram_decontam(
     )
 
 
-# --------------------------------------------------------------- BPE train
+# -------------------------------------------------------------------- BPE
+#
+# Word-level byte-pair encoding (tokenizer fitting and per-doc token
+# counts), one code point per base symbol. The ONLY corpus-sized pass is
+# distributed (corpus → (word, freq) collapse, one map-side-combined
+# shuffle); then:
+#   * bpe_train trains merges DRIVER-SIDE over the vocab-bound state with
+#     incremental pair-count deltas (the subword-nmt shape: a lazy
+#     max-heap + a pair→words index; each merge touches only the words
+#     containing it) — O(total rewrites), independent of corpus size;
+#   * bpe_encode encodes with ONE mapInPandas stage, merge ranks
+#     broadcast as a plain dict, greedy linear scan per word with a
+#     per-partition word cache — one plan node regardless of n_merges,
+#     no shuffle.
+# Plan size never grows with n_merges, so a production 32k-merge vocab
+# plans like a 4-merge one. The DuckDB oracles bpe_train_sql /
+# bpe_apply_sql unroll the same rounds as CTEs (same tokenization, same
+# (count DESC, pair ASC) tie-break, same sequential-rank greedy
+# left-to-right application); property tests in tests/test_properties.py
+# pin the ops to them and to a pure-Python reference on random corpora.
 
 BPE_SEP = "\x1f"  # unit separator: never appears in whitespace-split tokens we keep
 
 
-def bpe_train(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 8,
-    sep: str = BPE_SEP,
-) -> DataFrame:
-    """Distributed byte-pair-encoding merge training (tokenizer fitting —
-    the LLM-pipeline op the token-counting family stops short of).
-
-    Classic word-level BPE: the corpus collapses ONCE to a
-    (word, freq) vocabulary (one map-side-combined shuffle — the only
-    corpus-sized pass), each word becomes a separator-delimited
-    character string, and every round then (1) counts freq-weighted
-    adjacent symbol pairs over the |vocab|-sized state, (2) picks the
-    max-count pair with a deterministic (count DESC, pair ASC)
-    tie-break, (3) applies the merge greedily left-to-right in every
-    word. The greedy merge is a pure string rewrite — double the
-    separators, replace ``sep·x·sep·sep·y·sep`` with ``sep·xy·sep``
-    (left-to-right non-overlapping, exactly BPE's scan; the doubled
-    inner separator prevents prefix collisions like (a,a) matching
-    a·ab), then halve separators — so the whole round is JVM-side
-    built-in functions: no UDF, no driver loop over data.
-
-    Scale shape: round state is |vocab| rows (≪ corpus; bounded by
-    distinct words), the best pair is a broadcast 1-row frame, and each
-    round adds exactly one small shuffle (the pair-count groupBy). Each
-    round's winner is localCheckpoint(eager=False)-ed — the
-    kmeans_portable pattern — so round r's plan does not replay rounds
-    0..r-1 per branch. Production BPE at larger n_merges would update
-    pair counts incrementally instead of recounting (only pairs
-    overlapping a merged occurrence change); the full recount keeps
-    every round oracle-expressible and costs O(n_merges · vocab).
-
-    Returns one row per merge: (rank, lhs, rhs, merged, pair_count),
-    rank 0-based in merge order. Words containing ``sep`` (impossible
-    for whitespace tokenization of sane text) and empty tokens are
-    excluded on both engines.
-    """
-    words = (
-        df.select(F.explode(tokens(text_col)).alias("word"))
-        .where((F.length("word") > 0) & (~F.col("word").contains(sep)))
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
-    )
-    state = words.select(
-        F.concat(F.lit(sep), F.regexp_replace("word", "(.)", "$1" + sep)).alias("w"),
-        "freq",
-    )
-    pairs_expr = (
-        f"zip_with(slice(split(w, '{sep}'), 2, greatest(size(split(w, '{sep}')) - 3, 0)), "
-        f"slice(split(w, '{sep}'), 3, greatest(size(split(w, '{sep}')) - 3, 0)), "
-        f"(x, y) -> concat(x, '{sep}', y))"
-    )
-    merge_expr = (
-        f"replace(replace(replace(w, '{sep}', '{sep}{sep}'), "
-        f"concat('{sep}', lhs, '{sep}{sep}', rhs, '{sep}'), "
-        f"concat('{sep}', lhs, rhs, '{sep}')), '{sep}{sep}', '{sep}')"
-    )
-    rounds = []
-    for r in range(n_merges):
-        cnt = (
-            state.select(F.explode(F.expr(pairs_expr)).alias("pair"), "freq")
-            .groupBy("pair")
-            .agg(F.sum("freq").alias("pair_count"))
-        )
-        best = (
-            cnt.orderBy(F.col("pair_count").desc(), F.col("pair").asc())
-            .limit(1)
-            .select(
-                F.lit(r).cast("long").alias("rank"),
-                F.split("pair", sep).getItem(0).alias("lhs"),
-                F.split("pair", sep).getItem(1).alias("rhs"),
-                "pair_count",
-            )
-            .localCheckpoint(eager=False)
-        )
-        rounds.append(best)
-        state = state.crossJoin(F.broadcast(best.select("lhs", "rhs"))).select(
-            F.expr(merge_expr).alias("w"), "freq"
-        )
-    out = rounds[0]
-    for b in rounds[1:]:
-        out = out.unionAll(b)
-    return out.select(
-        "rank", "lhs", "rhs", F.concat("lhs", "rhs").alias("merged"), "pair_count"
-    )
-
-
 def bpe_train_sql(n_merges: int, table: str = "documents", text_col: str = "text") -> str:
-    """DuckDB twin of :func:`bpe_train` for the oracle gate: the same
-    rounds unrolled as CTEs (w0 → c1/b1/w1 → … ), generated from the
-    same ``n_merges`` so Spark and SQL can never drift on round count.
+    """DuckDB oracle of :func:`bpe_train`: every merge round unrolled as
+    CTEs (w0 → c1/b1/w1 → … ), generated from the same ``n_merges`` so
+    Spark and SQL can never drift on round count.
+
+    Each word is a separator-delimited symbol string (the ``'gs'`` flag
+    makes ``.`` match every code point, line terminators included, so
+    one code point is one symbol as in the op). A round counts
+    freq-weighted adjacent pairs, picks the (count DESC, pair ASC)
+    winner, and applies it greedily left-to-right as a pure string
+    rewrite: double the separators, replace ``sep·x·sep·sep·y·sep``
+    with ``sep·xy·sep`` (the doubled inner separator prevents prefix
+    collisions like (a,a) matching a·ab), then halve separators.
 
     Every w{r}/b{r} is ``AS MATERIALIZED``: each is referenced twice
     (w{r} by p{r} and w{r+1}; b{r} by w{r+1} and the final union), so
     DuckDB's default inlining doubles the plan per round — 2^n_merges
     base-table scans, which exhausts file descriptors past ~13 rounds.
     Materialization makes the oracle linear in n_merges; results are
-    identical (r12: q_text_bpe_train/encode re-certify on the new
-    oracle text)."""
+    identical."""
     s = "chr(31)"
     head = f"""
 WITH w0 AS MATERIALIZED (
-  SELECT {s} || regexp_replace(word, '(.)', '\\1' || {s}, 'g') AS w,
+  SELECT {s} || regexp_replace(word, '(.)', '\\1' || {s}, 'gs') AS w,
          COUNT(*) AS freq
   FROM (SELECT unnest(string_split({text_col}, ' ')) AS word FROM {table}) t
   WHERE length(word) > 0 AND NOT contains(word, {s})
@@ -1673,77 +1612,16 @@ FROM ({union}) ORDER BY rank""")
     return "".join(parts)
 
 
-def bpe_apply(
-    df: DataFrame,
-    merges: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    n_merges: int | None = None,
-    sep: str = BPE_SEP,
-) -> DataFrame:
-    """Apply learned BPE merges (the :func:`bpe_train` output) to a
-    corpus and report per-doc token counts — the ENCODE half of the
-    tokenizer: (key, n_words, n_bpe_tokens).
-
-    The merge table is applied rank by rank to the |vocab|-sized
-    distinct-word state (same greedy doubled-separator rewrite as
-    training), then per-word symbol counts join back to the corpus on
-    the word — so the corpus is touched exactly twice (word explode +
-    the final count join) regardless of n_merges. Each rank's row
-    arrives as a broadcast LEFT join guarded by COALESCE: a corpus
-    whose pairs run out before n_merges (every word fully merged) has
-    empty late ranks, and the rewrite must pass state through, not
-    annihilate it — the crossJoin shape would. ``n_merges`` defaults to
-    one pass per distinct rank ONLY when given; pass it explicitly to
-    keep plan construction independent of the merge table's content
-    (no collect)."""
-    if n_merges is None:
-        raise ValueError("bpe_apply: pass n_merges explicitly (no driver-side collect)")
-    doc_words = df.select(
-        F.col(key_col),
-        F.explode(tokens(text_col)).alias("word"),
-    ).where((F.length("word") > 0) & (~F.col("word").contains(sep)))
-    state = doc_words.select("word").distinct().select(
-        "word",
-        F.concat(F.lit(sep), F.regexp_replace("word", "(.)", "$1" + sep)).alias("w"),
-    )
-    # pattern that can never occur in a delimited word: three separators
-    never = sep * 3
-    merge_expr = (
-        f"replace(replace(replace(w, '{sep}', '{sep}{sep}'), "
-        f"coalesce(concat('{sep}', lhs, '{sep}{sep}', rhs, '{sep}'), '{never}'), "
-        f"coalesce(concat('{sep}', lhs, rhs, '{sep}'), '{never}')), '{sep}{sep}', '{sep}')"
-    )
-    for r in range(n_merges):
-        mr = merges.where(F.col("rank") == r).select(
-            F.lit(1).alias("__k"), "lhs", "rhs"
-        )
-        state = (
-            state.withColumn("__k", F.lit(1))
-            .join(F.broadcast(mr), "__k", "left")
-            .select("word", F.expr(merge_expr).alias("w"))
-        )
-    counts = state.select(
-        "word", (F.size(F.split("w", sep)) - 2).cast("long").alias("n_sym")
-    )
-    return (
-        doc_words.join(counts, "word")
-        .groupBy(key_col)
-        .agg(
-            F.count("*").alias("n_words"),
-            F.sum("n_sym").alias("n_bpe_tokens"),
-        )
-    )
-
-
 def bpe_apply_sql(
     n_merges: int, table: str = "documents", text_col: str = "text", key_col: str = "doc_id"
 ) -> str:
-    """DuckDB twin of :func:`bpe_train` + :func:`bpe_apply` in one
-    statement: unrolls the training CTE chain (identical to
+    """DuckDB oracle of :func:`bpe_encode_corpus` (train, then encode)
+    in one statement: unrolls the training CTE chain (identical to
     :func:`bpe_train_sql`), then applies b0..b{n-1} to the distinct
-    words with LEFT JOIN ON TRUE (the empty-late-rank guard) and sums
-    symbol counts per doc."""
+    words with LEFT JOIN ON TRUE — a corpus whose pairs run out before
+    n_merges has empty late ranks, and the COALESCE guard passes state
+    through instead of annihilating it — and sums symbol counts per
+    doc."""
     s = "chr(31)"
     train = bpe_train_sql(n_merges, table=table, text_col=text_col)
     # keep only the WITH chain of the train SQL (drop its final SELECT)
@@ -1755,7 +1633,7 @@ dw AS MATERIALIZED (
   FROM (SELECT {key_col}, unnest(string_split({text_col}, ' ')) AS word FROM {table}) t
   WHERE length(word) > 0 AND NOT contains(word, {s})),
 a0 AS MATERIALIZED (
-  SELECT word, {s} || regexp_replace(word, '(.)', '\\1' || {s}, 'g') AS w
+  SELECT word, {s} || regexp_replace(word, '(.)', '\\1' || {s}, 'gs') AS w
   FROM (SELECT DISTINCT word FROM dw))""")
     for r in range(n_merges):
         parts.append(f""",
@@ -1775,34 +1653,10 @@ GROUP BY dw.{key_col}""")
     return "".join(parts)
 
 
-# ------------------------------------------------- BPE production-scale path
-#
-# The distributed bpe_train/bpe_apply above are the ORACLE-SHAPED forms:
-# every round is a Spark job (train) or a chained broadcast join
-# (apply), so plan depth grows with n_merges — fine at the certified
-# 4–16 merges, a Catalyst plan explosion at a production 32k-merge
-# vocab (r11 verdict, the one `weak`). The scale path below keeps the
-# ONLY corpus-sized pass distributed (corpus → (word, freq) collapse,
-# one map-side-combined shuffle) and then:
-#   * trains merges DRIVER-SIDE over the vocab-bound state with
-#     incremental pair-count deltas (the subword-nmt shape: a lazy
-#     max-heap + a pair→words index; each merge touches only the words
-#     containing it) — O(total rewrites), independent of corpus size;
-#   * encodes with ONE mapInPandas stage, merge ranks broadcast as a
-#     plain dict, greedy linear scan per word with a per-partition
-#     word cache — one plan node regardless of n_merges, no shuffle.
-# Both halves are BIT-IDENTICAL in semantics to bpe_train/bpe_apply
-# (same tokenization, same (count DESC, pair ASC) tie-break, same
-# sequential-rank greedy left-to-right application), so the SAME
-# unrolled-CTE DuckDB oracles certify them; differential property
-# tests in tests/test_properties.py pin the equivalence on random
-# corpora.
-
-
 def _bpe_merge_syms(syms: list[str], lhs: str, rhs: str) -> list[str]:
     """One greedy left-to-right non-overlapping (lhs, rhs) → lhs+rhs
     pass over a symbol list — the pure-Python twin of the
-    doubled-separator string rewrite in :func:`bpe_train`."""
+    doubled-separator string rewrite in :func:`bpe_train_sql`."""
     out: list[str] = []
     i, n = 0, len(syms)
     while i < n:
@@ -1818,17 +1672,16 @@ def _bpe_merge_syms(syms: list[str], lhs: str, rhs: str) -> list[str]:
 def bpe_train_merges(
     word_freqs: dict[str, int],
     n_merges: int,
-    sep: str = BPE_SEP,
 ) -> list[tuple[int, str, str, int]]:
     """Driver-side incremental BPE merge training over the vocab-bound
     (word, freq) state. Returns [(rank, lhs, rhs, pair_count), ...] in
-    merge order, identical to :func:`bpe_train`'s rows.
+    merge order — the rows of :func:`bpe_train` without ``merged``.
 
     Incremental delta counting: a merge only changes pair counts inside
     the words that contain the merged pair, so each round subtracts the
     touched words' old adjacent pairs, rewrites them, and adds the new
     ones — no full recount. The winner comes off a lazy max-heap keyed
-    (-count, lhs+sep+rhs): stale entries (count changed since push) are
+    (-count, lhs+BPE_SEP+rhs): stale entries (count changed since push) are
     discarded on pop and the current count re-pushed, so the
     (count DESC, pair ASC) tie-break is exact. Python str comparison is
     code-point order == UTF-8 byte order == Spark/DuckDB string order,
@@ -1844,7 +1697,7 @@ def bpe_train_merges(
             p = (syms[i], syms[i + 1])
             counts[p] = counts.get(p, 0) + f
             where.setdefault(p, set()).add(idx)
-    heap = [(-c, p[0] + sep + p[1], p) for p, c in counts.items()]
+    heap = [(-c, p[0] + BPE_SEP + p[1], p) for p, c in counts.items()]
     heapq.heapify(heap)
     out: list[tuple[int, str, str, int]] = []
     for r in range(n_merges):
@@ -1857,7 +1710,7 @@ def bpe_train_merges(
                 continue
             if -negc != cur:
                 heapq.heappop(heap)
-                heapq.heappush(heap, (-cur, p[0] + sep + p[1], p))
+                heapq.heappush(heap, (-cur, p[0] + BPE_SEP + p[1], p))
                 continue
             best, best_count = p, cur
             break
@@ -1887,7 +1740,7 @@ def bpe_train_merges(
         for p in changed:
             c = counts.get(p, 0)
             if c > 0:
-                heapq.heappush(heap, (-c, p[0] + sep + p[1], p))
+                heapq.heappush(heap, (-c, p[0] + BPE_SEP + p[1], p))
     return out
 
 
@@ -1895,30 +1748,29 @@ def bpe_word_freqs(
     df: DataFrame,
     text_col: str = "text",
     max_vocab: int | None = None,
-    sep: str = BPE_SEP,
     max_word_len: int | None = None,
     segmenter: str = "whitespace",
 ) -> dict[str, int]:
-    """The one corpus-sized pass of the scale path: distributed
-    corpus → (word, freq) collapse (map-side-combined groupBy),
-    collected as the vocab-bound training state. ``max_vocab`` caps the
-    driver state for production corpora (top-K by freq DESC, word ASC —
-    the standard tokenizer-trainer cap; None = exact, used by the
-    oracle-certified queries). ``max_word_len`` additionally drops the
-    long-tail words the unigram trainer excludes (None = keep all, the
-    BPE contract) — this is the SHARED collapse for both tokenizer
-    trainers, so the cap ordering and the sep filter can never drift
-    between them. ``segmenter="cjk_chars"`` pre-segments
-    whitespace-free scripts per codepoint BEFORE the word collapse
-    (SentencePiece's pre-tokenizer fallback), so CJK text trains on
-    per-char base units instead of one giant pseudo-word per
+    """The one corpus-sized pass of both tokenizer trainers:
+    distributed corpus → (word, freq) collapse (map-side-combined
+    groupBy), collected as the vocab-bound training state. ``max_vocab``
+    caps the driver state for production corpora (top-K by freq DESC,
+    word ASC — the standard tokenizer-trainer cap; None = exact, used
+    by the oracle-certified queries). ``max_word_len`` additionally
+    drops the long-tail words the unigram trainer excludes (None = keep
+    all, the BPE contract) — this is the SHARED collapse for both
+    tokenizer trainers, so the cap ordering and the :data:`BPE_SEP`
+    filter can never drift between them. ``segmenter="cjk_chars"``
+    pre-segments whitespace-free scripts per codepoint BEFORE the word
+    collapse (SentencePiece's pre-tokenizer fallback), so CJK text
+    trains on per-char base units instead of one giant pseudo-word per
     document."""
     length_ok = F.length("word") > 0
     if max_word_len is not None:
         length_ok = length_ok & (F.length("word") <= max_word_len)
     words = (
         df.select(F.explode(tokens(text_col, segmenter)).alias("word"))
-        .where(length_ok & (~F.col("word").contains(sep)))
+        .where(length_ok & (~F.col("word").contains(BPE_SEP)))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
     )
@@ -1929,21 +1781,23 @@ def bpe_word_freqs(
     return {r["word"]: r["freq"] for r in words.collect()}
 
 
-def bpe_train_scale(
+def bpe_train(
     df: DataFrame,
     text_col: str = "text",
     n_merges: int = 8,
     max_vocab: int | None = None,
-    sep: str = BPE_SEP,
 ) -> DataFrame:
-    """Scale-path BPE training: distributed vocab collapse + driver-side
-    incremental merge trainer. Output schema and values are identical
-    to :func:`bpe_train` (rank, lhs, rhs, merged, pair_count) — the
-    same :func:`bpe_train_sql` oracle certifies both — but the plan is
-    TWO stages total (explode + groupBy) regardless of n_merges, vs one
-    job per round for the unrolled form."""
-    wf = bpe_word_freqs(df, text_col, max_vocab=max_vocab, sep=sep)
-    merges = bpe_train_merges(wf, n_merges, sep=sep)
+    """BPE merge training (tokenizer fitting): distributed vocab
+    collapse (:func:`bpe_word_freqs`) + driver-side incremental merge
+    trainer (:func:`bpe_train_merges`). The plan is TWO stages
+    (explode + groupBy) however many merges run.
+
+    Returns one row per merge: (rank, lhs, rhs, merged, pair_count),
+    rank 0-based in merge order; fewer than ``n_merges`` rows when the
+    corpus runs out of pairs. Words containing :data:`BPE_SEP` and
+    empty tokens are excluded. Certified by :func:`bpe_train_sql`."""
+    wf = bpe_word_freqs(df, text_col, max_vocab=max_vocab)
+    merges = bpe_train_merges(wf, n_merges)
     rows = [(r, l, rh, l + rh, c) for (r, l, rh, c) in merges]
     return df.sparkSession.createDataFrame(
         rows, "rank long, lhs string, rhs string, merged string, pair_count long"
@@ -1952,13 +1806,13 @@ def bpe_train_scale(
 
 def _bpe_encode_word(word: str, ranks: dict[tuple[str, str], tuple[int, ...]]) -> int:
     """Sequential-rank greedy BPE encode of one word; returns the final
-    symbol count. Exactly bpe_apply's semantics — visit ranks in
-    ascending order, at each rank apply one left-to-right
+    symbol count. Exactly :func:`bpe_apply_sql`'s semantics — visit
+    ranks in ascending order, at each rank apply one left-to-right
     non-overlapping merge pass — but skips absent ranks via a heap of
     candidate (rank, pair) events, so cost is O(len²) per word and
     INDEPENDENT of n_merges. ``ranks`` maps pair → ascending rank tuple
     (a pair can be re-learned at a later rank if an intervening merge
-    recreates it; the certified LEFT-join form applies both)."""
+    recreates it; the oracle's per-rank rewrite applies both)."""
     import heapq
     from bisect import bisect_right
 
@@ -2003,14 +1857,11 @@ def bpe_encode(
     merges: list[tuple[str, str]],
     text_col: str = "text",
     key_col: str = "doc_id",
-    sep: str = BPE_SEP,
 ) -> DataFrame:
-    """Scale-path BPE ENCODE: one mapInPandas stage over the corpus with
-    the rank-ordered merge list broadcast as a dict — one narrow plan
-    node and ZERO shuffles regardless of n_merges (vs one chained
-    broadcast join per rank in :func:`bpe_apply`). Same output contract
-    as bpe_apply — (key, n_words, n_bpe_tokens), docs with no valid
-    words dropped — so :func:`bpe_apply_sql` certifies it. A
+    """BPE ENCODE: one mapInPandas stage over the corpus with the
+    rank-ordered (lhs, rhs) merge list broadcast as a dict — one narrow
+    plan node and ZERO shuffles regardless of n_merges. Returns (key,
+    n_words, n_bpe_tokens); docs with no valid words are dropped. A
     per-partition word→count cache exploits the Zipf shape of real
     corpora (each distinct word encodes once per task)."""
     import pandas as pd
@@ -2030,7 +1881,7 @@ def bpe_encode(
                     continue
                 nw = nt = 0
                 for w in text.split(" "):
-                    if not w or sep in w:
+                    if not w or BPE_SEP in w:
                         continue
                     nw += 1
                     c = cache.get(w)
@@ -2049,6 +1900,22 @@ def bpe_encode(
     return df.select(key_col, text_col).mapInPandas(
         encode_batches, f"{key_col} long, n_words long, n_bpe_tokens long"
     )
+
+
+def bpe_encode_corpus(
+    df: DataFrame,
+    n_merges: int = 64,
+    max_vocab: int | None = None,
+    text_col: str = "text",
+    key_col: str = "doc_id",
+) -> DataFrame:
+    """Train ``n_merges`` merges on ``df`` and encode ``df`` with them:
+    one (word, freq) collapse, driver-side merge training, ONE
+    broadcast-dict mapInPandas encode. The composition the encode
+    queries and the ``bpe_encode_scale`` op run; certified by
+    :func:`bpe_apply_sql`."""
+    merges = bpe_train_merges(bpe_word_freqs(df, text_col, max_vocab=max_vocab), n_merges)
+    return bpe_encode(df, [(l, r) for (_, l, r, _) in merges], text_col, key_col)
 
 
 # ------------------------------------------- substring-level exact dedup
@@ -2073,7 +1940,6 @@ def dup_span_islands(
     key_col: str = "doc_id",
     k: int = 8,
     min_count: int = 2,
-    sep: str = BPE_SEP,
     toks: DataFrame | None = None,
 ) -> DataFrame:
     """Substring-level exact duplication spans (the Lee et al. 2022
@@ -2106,7 +1972,7 @@ def dup_span_islands(
         toks.select(
             key_col,
             F.col("rn").alias("s"),
-            F.concat_ws(sep, *gram_cols).alias("gram"),
+            F.concat_ws(BPE_SEP, *gram_cols).alias("gram"),
             F.lead("word", k - 1).over(wr).alias("__full"),
         )
         .where(F.col("__full").isNotNull())
@@ -2297,11 +2163,10 @@ def unigram_train(
     max_piece_len: int = 4,
     max_word_len: int = 12,
     max_vocab: int | None = None,
-    sep: str = BPE_SEP,
 ) -> DataFrame:
     """Unigram-LM (SentencePiece-style) tokenizer training, hard-EM /
     Viterbi variant (r11 verdict item 5 — the EM twin of
-    :func:`bpe_train_scale`), in fully exact arithmetic:
+    :func:`bpe_train`), in fully exact arithmetic:
 
     * SEED: every ≤ max_piece_len substring of the vocab words, counted
       by freq-weighted occurrence; keep the top_k by (count DESC, piece
@@ -2333,7 +2198,7 @@ def unigram_train(
     the final M-step probability (exact count/total double — the SQL
     oracle reproduces it bit-for-bit)."""
     wf = bpe_word_freqs(
-        df, text_col, max_vocab=max_vocab, sep=sep, max_word_len=max_word_len
+        df, text_col, max_vocab=max_vocab, max_word_len=max_word_len
     )
 
     seed: dict[str, int] = {}
@@ -2354,8 +2219,8 @@ def unigram_train(
     for _ in range(n_rounds):
         used = {p: 0 for p in sel}
         for w, f in wf.items():
-            seg = _unigram_best_seg(w, probs, max_piece_len, sep)
-            for piece in seg[1:].split(sep) if seg else []:
+            seg = _unigram_best_seg(w, probs, max_piece_len, BPE_SEP)
+            for piece in seg[1:].split(BPE_SEP) if seg else []:
                 used[piece] += f
         total = sum(used[p] + 1 for p in sel)
         probs = {p: (used[p] + 1) / total for p in sel}
@@ -2453,7 +2318,6 @@ def unigram_probs(
     max_piece_len: int = 4,
     max_word_len: int = 12,
     max_vocab: int | None = None,
-    sep: str = BPE_SEP,
 ) -> dict[str, float]:
     """Train :func:`unigram_train` and collect the vocab-bound
     (piece → prob) dict the encoder broadcasts — the unigram twin of
@@ -2468,7 +2332,6 @@ def unigram_probs(
         max_piece_len=max_piece_len,
         max_word_len=max_word_len,
         max_vocab=max_vocab,
-        sep=sep,
     )
     return {r["piece"]: r["prob"] for r in trained.collect()}
 
@@ -2480,7 +2343,6 @@ def unigram_encode(
     key_col: str = "doc_id",
     max_piece_len: int = 4,
     max_word_len: int = 12,
-    sep: str = BPE_SEP,
 ) -> DataFrame:
     """Scale-path unigram-LM ENCODE (r12 verdict item 2 — the twin of
     :func:`bpe_encode`): segment every corpus word by maximum
@@ -2495,7 +2357,7 @@ def unigram_encode(
     rule; a per-partition word→piece-count cache exploits the Zipf
     shape (each distinct word segments once per task).
 
-    Contract mirrors bpe_apply/bpe_encode: valid words are non-empty,
+    Contract mirrors bpe_encode: valid words are non-empty,
     ≤ max_word_len, sep-free; docs with no valid words are dropped.
     Returns (key, n_words, n_pieces, n_oov) — n_oov counts valid words
     with NO segmentation path (possible only under a ``max_vocab``-
@@ -2523,14 +2385,14 @@ def unigram_encode(
             for did, text in zip(pdf[key_col], pdf[text_col]):
                 nw = npieces = oov = 0
                 for w in (text or "").split(" "):
-                    if not (0 < len(w) <= max_word_len) or sep in w:
+                    if not (0 < len(w) <= max_word_len) or BPE_SEP in w:
                         continue
                     nw += 1
                     c = cache.get(w)
                     if c is None:
-                        seg = _unigram_best_seg(w, pr, max_piece_len, sep)
+                        seg = _unigram_best_seg(w, pr, max_piece_len, BPE_SEP)
                         # leading-sep format: sep count == piece count
-                        c = seg.count(sep) if seg is not None else -1
+                        c = seg.count(BPE_SEP) if seg is not None else -1
                         cache[w] = c
                     if c < 0:
                         oov += 1
@@ -2698,7 +2560,7 @@ def bm25_scores(
     toks = df.select(
         F.col(key_col), F.explode(tokens(text_col)).alias("word")
     ).where(F.length("word") > 0)
-    # lazy checkpoint (the bpe_train precedent): ONE stats pass feeds
+    # lazy checkpoint: ONE stats pass feeds
     # both the per-doc tf frame and the corpus model aggregate (Catalyst
     # cannot share scans across self-join branches). r15 correction to
     # the earlier claim here: under AQE, localCheckpoint(eager=False)

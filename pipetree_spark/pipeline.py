@@ -380,21 +380,20 @@ def _op_registry() -> dict[str, tuple[Callable, int]]:
         "make_avi_payload": (MM.make_avi_payload, 1),
         "rgb_int_stats_by_frame": (MM.rgb_int_stats_by_frame_stage, 1),
         "audio_decode": (MM.audio_decode_stage, 1),
-        # r11: distributed BPE merge training (ops/text.py)
+        # BPE merge training (ops/text.py)
         "bpe_train": (TX.bpe_train, 1),
         # r12 text ops: substring dedup (stats + removal), HTML
-        # extraction, retrieval scoring, the production BPE trainer
+        # extraction, retrieval scoring, the unigram-LM trainer
         "dup_span_stats": (TX.dup_span_stats, 1),
         "dup_span_strip": (TX.dup_span_strip, 1),
         "html_extract": (TX.html_extract_stage, 1),
         "bm25_scores": (TX.bm25_scores, 1),
-        "bpe_train_scale": (TX.bpe_train_scale, 1),
         "unigram_train": (TX.unigram_train, 1),
         # r13: corpus-scale ENCODE stages. Trained driver state (merge
         # ranks / piece probs) is not JSON-able, so the JSON surface is
         # the train+encode composition over the input corpus — the
         # exact shape the certified queries run.
-        "bpe_encode_scale": (_bpe_encode_auto, 1),
+        "bpe_encode_scale": (TX.bpe_encode_corpus, 1),
         "unigram_encode": (_unigram_encode_auto, 1),
         # r12 reference-split models: the JSON surface selects the
         # training split as key_col % model_mod == model_rem (a Column
@@ -480,25 +479,6 @@ def _modsplit(fn: Callable) -> Callable:
                   key_col=key_col, **kw)
 
     return wrapped
-
-
-def _bpe_encode_auto(
-    df: DataFrame,
-    n_merges: int = 64,
-    max_vocab: int | None = None,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
-    """JSON surface of the BPE scale pair: one (word, freq) collapse,
-    driver-side merge training, ONE broadcast-dict mapInPandas encode
-    — exactly q_text_bpe_encode_scale's shape with spec-able ints."""
-    from pipetree_spark.ops import text as TX
-
-    wf = TX.bpe_word_freqs(df, text_col, max_vocab=max_vocab)
-    merges = TX.bpe_train_merges(wf, n_merges)
-    return TX.bpe_encode(
-        df, [(l, r) for (_, l, r, _) in merges], text_col, key_col
-    )
 
 
 def _unigram_encode_auto(

@@ -3325,18 +3325,16 @@ def q_mm_avi_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text",),
 )
 def q_text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE merge training (ops.text.bpe_train), 4 rounds
-    hash-certified: the corpus collapses once to a (word, freq) vocab,
-    then each round counts freq-weighted adjacent symbol pairs over the
-    vocab-sized state, broadcasts the (count DESC, pair ASC) winner,
-    and applies the greedy left-to-right merge as a pure JVM string
-    rewrite (doubled-separator replace — no UDF anywhere). The oracle
-    unrolls the SAME rounds as DuckDB CTEs from the same n_merges
-    constant, so the two sides cannot drift on round count; a hash
-    match certifies tokenization, pair counting, tie-breaks, and the
-    greedy merge semantics end-to-end. The op itself takes arbitrary
-    n_merges (state is |vocab| rows, one small shuffle per round,
-    winners localCheckpoint-ed — the kmeans_portable scale pattern)."""
+    """BPE merge training (ops.text.bpe_train), 4 merges
+    hash-certified: the corpus collapses once to a (word, freq) vocab
+    — distributed, map-side combined, the only corpus-sized pass — and
+    the merges train driver-side over that vocab-bound state, one code
+    point per base symbol, (count DESC, pair ASC) tie-break, greedy
+    left-to-right merge. The oracle unrolls the same rounds as DuckDB
+    CTEs from the same n_merges constant, so the two sides cannot drift
+    on round count; a hash match certifies tokenization, pair counting,
+    tie-breaks, and the greedy merge semantics end-to-end. Plan: two
+    stages (explode + groupBy) however many merges run."""
     d = load_table(spark, sf_dir, "documents")
     return TX.bpe_train(d, "text", n_merges=4)
 
@@ -3347,19 +3345,16 @@ def q_text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text",),
 )
 def q_text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE ENCODE (ops.text.bpe_apply): learn 4 merges on the corpus
-    (ops.text.bpe_train) and apply them back, reporting per-doc
-    (n_words, n_bpe_tokens) — the token-budget number a packing/pricing
-    pipeline actually consumes. Merges apply to the DISTINCT-WORD state
-    and join back on the word, so the corpus is touched exactly twice
-    however many merges run; empty late ranks (tiny corpora whose pairs
-    run out early — the fuzz corpora hit this) pass state through via
-    the COALESCE-guarded LEFT join rather than annihilating it. The
+    """BPE ENCODE (ops.text.bpe_encode_corpus): learn 4 merges on the
+    corpus and encode it with them, reporting per-doc (n_words,
+    n_bpe_tokens) — the token-budget number a packing/pricing pipeline
+    actually consumes. Encoding is ONE mapInPandas stage with the merge
+    ranks broadcast as a dict; corpora whose pairs run out before
+    n_merges (the fuzz corpora hit this) simply apply fewer ranks. The
     oracle re-runs training AND application as one unrolled-CTE DuckDB
     statement from the same n_merges constant. All-int64 output."""
     d = load_table(spark, sf_dir, "documents")
-    merges = TX.bpe_train(d, "text", n_merges=4)
-    return TX.bpe_apply(d, merges, "text", n_merges=4)
+    return TX.bpe_encode_corpus(d, 4)
 
 
 @declare(
@@ -3368,19 +3363,15 @@ def q_text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text",),
 )
 def q_text_bpe_train_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION-scale BPE training (ops.text.bpe_train_scale), 16
-    rounds hash-certified against the SAME unrolled-CTE oracle as the
-    distributed form: the corpus collapses once to (word, freq) —
-    distributed, map-side combined, the only corpus-sized pass — and
-    the merges then train DRIVER-SIDE over that vocab-bound state with
-    incremental pair-count deltas (subword-nmt shape: lazy max-heap +
-    pair→words index). Plan cost is TWO stages total however many
-    merges run — the r11-verdict fix for the one `weak` (plan depth ∝
-    n_merges in the unrolled trainer). Differential property tests pin
-    bit-equality with ops.text.bpe_train on random corpora; SCALING.md
-    r12 records n_merges=256 with flat plan size."""
+    """BPE training (ops.text.bpe_train) at 16 merges, hash-certified
+    against the same unrolled-CTE oracle as q_text_bpe_train: the
+    driver-side trainer counts pairs incrementally (subword-nmt shape:
+    lazy max-heap + pair→words index), so each merge touches only the
+    words containing it, and the plan stays TWO stages however many
+    merges run. SCALING.md r12 records n_merges=256 with flat plan
+    size."""
     d = load_table(spark, sf_dir, "documents")
-    return TX.bpe_train_scale(d, "text", n_merges=16)
+    return TX.bpe_train(d, "text", n_merges=16)
 
 
 @declare(
@@ -3389,21 +3380,17 @@ def q_text_bpe_train_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text",),
 )
 def q_text_bpe_encode_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION-scale BPE encode (ops.text.bpe_encode): train 16
-    merges via the scale trainer, then encode the corpus in ONE
-    mapInPandas stage with the rank-ordered merge table broadcast as a
-    dict — one narrow plan node, zero shuffles before the per-doc
-    emit, cost independent of n_merges (vs one chained broadcast join
-    per rank in the certified bpe_apply). Per-word greedy encoding
-    skips absent ranks via a candidate heap (O(len²) per word) and a
-    per-partition word cache exploits the corpus Zipf shape. The
-    oracle re-runs training AND application as one unrolled-CTE DuckDB
-    statement from the same n_merges constant — a hash match certifies
-    the whole scale path end-to-end. All-int64 output."""
+    """BPE encode (ops.text.bpe_encode_corpus) at 16 merges: train on
+    the corpus, then encode it in ONE mapInPandas stage with the
+    rank-ordered merge table broadcast as a dict — one narrow plan
+    node, zero shuffles before the per-doc emit, cost independent of
+    n_merges. Per-word greedy encoding skips absent ranks via a
+    candidate heap (O(len²) per word) and a per-partition word cache
+    exploits the corpus Zipf shape. The oracle re-runs training AND
+    application as one unrolled-CTE DuckDB statement from the same
+    n_merges constant. All-int64 output."""
     d = load_table(spark, sf_dir, "documents")
-    wf = TX.bpe_word_freqs(d, "text")
-    merges = TX.bpe_train_merges(wf, 16)
-    return TX.bpe_encode(d, [(l, r) for (_, l, r, _) in merges], "text", "doc_id")
+    return TX.bpe_encode_corpus(d, 16)
 
 
 @declare(
@@ -5757,7 +5744,7 @@ def q_text_bpe_train_cjk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-breaks, and greedy merge semantics over non-ASCII symbols.
 
     Scale shape: identical to q_text_bpe_train (one corpus collapse +
-    |vocab|-row rounds) plus two narrow regex maps."""
+    the driver-side trainer) plus two narrow regex maps."""
     d = load_table(spark, sf_dir, "documents")
     src = _cjk_corpus(d).select(
         "doc_id", TX.segment_text("text", "cjk_chars").alias("text")

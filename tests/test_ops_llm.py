@@ -2441,12 +2441,15 @@ def test_bpe_train_matches_hand_computed_merges(spark, tmp_path):
 
 
 def test_bpe_apply_counts_and_exhausted_merges(spark):
-    """ops.text.bpe_apply: per-doc BPE token counts on the textbook
-    corpus (low->1 sym, lower->1 sym after the (low,er) merge, newest
-    untouched at 6 syms), and the empty-late-rank guard — a corpus
-    whose pairs run out after one merge must pass state through the
-    remaining ranks, not annihilate it."""
+    """ops.text.bpe_encode with the ops.text.bpe_train merges: per-doc
+    BPE token counts on the textbook corpus (low->1 sym, lower->1 sym
+    after the (low,er) merge, newest untouched at 6 syms), and a corpus
+    whose pairs run out after one merge — the encoder must apply the
+    one learned merge and pass every word through, not drop it."""
     from pipetree_spark.ops import text as TXO
+
+    def pairs(merges):
+        return [(r.lhs, r.rhs) for r in merges.orderBy("rank").collect()]
 
     docs = spark.createDataFrame(
         [(0, "low low low"), (1, "lower lower"), (2, "newest")],
@@ -2454,26 +2457,26 @@ def test_bpe_apply_counts_and_exhausted_merges(spark):
     )
     merges = TXO.bpe_train(docs, "text", n_merges=4)
     got = {r.doc_id: (r.n_words, r.n_bpe_tokens)
-           for r in TXO.bpe_apply(docs, merges, "text", n_merges=4).collect()}
+           for r in TXO.bpe_encode(docs, pairs(merges), "text", "doc_id").collect()}
     assert got == {0: (3, 3), 1: (2, 2), 2: (1, 6)}
 
     tiny = spark.createDataFrame([(0, "aa aa"), (1, "b")], "doc_id long, text string")
     m2 = TXO.bpe_train(tiny, "text", n_merges=3)
     assert m2.count() == 1  # pairs run out after (a,a)
     got2 = {r.doc_id: (r.n_words, r.n_bpe_tokens)
-            for r in TXO.bpe_apply(tiny, m2, "text", n_merges=3).collect()}
+            for r in TXO.bpe_encode(tiny, pairs(m2), "text", "doc_id").collect()}
     assert got2 == {0: (2, 2), 1: (1, 1)}
 
 
 def test_bpe_train_matches_pure_python_reference(spark):
-    """Differential gate for the doubled-separator replace trick: the
-    DuckDB oracle shares the string-rewrite mechanism, so it cannot
-    catch a conceptual error in the trick itself. This reference
-    implements greedy BPE the textbook way — an explicit left-to-right
-    pair scan over symbol tuples — and must agree with bpe_train on
-    corpora built to stress the rewrite: odd same-symbol runs (aaa),
-    merged-symbol prefix collisions (a vs ab), count ties, and words
-    that exhaust their pairs mid-run."""
+    """Differential gate for the incremental driver-side trainer: this
+    reference implements greedy BPE the textbook way — a full pair
+    recount per round and an explicit left-to-right pair scan over
+    symbol tuples — and must agree with bpe_train on corpora built to
+    stress the merge: odd same-symbol runs (aaa), merged-symbol prefix
+    collisions (a vs ab), count ties, words that exhaust their pairs
+    mid-run, and line terminators inside words (one code point is one
+    symbol, line feed and carriage return included)."""
     from collections import Counter
 
     from pipetree_spark.ops import text as TXO
@@ -2512,6 +2515,7 @@ def test_bpe_train_matches_pure_python_reference(spark):
         ["aa ab ba bb aa ab", "a b"],           # dense ties
         ["xyz xyz xy yz", "zzz"],               # exhaustion + 3-symbol words
         ["the cat the hat", "the the cat"],     # words repeat across docs
+        ["ab\nab ab\nab a\rb", "ab\nab x\ny"],  # line terminators are symbols
     ]
     for docs in corpora:
         wf = Counter(w for d in docs for w in d.split(" ") if w)

@@ -13,7 +13,7 @@ import math
 
 import duckdb
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -1193,9 +1193,10 @@ def test_bpe_train_matches_reference_on_random_corpora(spark, docs):
 )
 def test_bpe_apply_matches_reference_on_random_corpora(spark, docs):
     """Encode half of the differential BPE gate: per-doc n_bpe_tokens
-    after 3 learned merges must equal the pure-Python reference's
-    greedy application — including corpora whose pairs run out before
-    n_merges (the LEFT-join guard path)."""
+    after 3 learned merges (ops.text.bpe_train, encoded by
+    ops.text.bpe_encode) must equal the pure-Python reference's greedy
+    application — including corpora whose pairs run out before
+    n_merges."""
     from collections import Counter
 
     from pipetree_spark.ops import text as TXO
@@ -1254,9 +1255,10 @@ def test_bpe_apply_matches_reference_on_random_corpora(spark, docs):
         [(i, t) for i, t in enumerate(docs)], "doc_id long, text string"
     )
     m = TXO.bpe_train(sdf, "text", n_merges=3)
+    pairs = [(r.lhs, r.rhs) for r in m.orderBy("rank").collect()]
     got = {
         r.doc_id: (r.n_words, r.n_bpe_tokens)
-        for r in TXO.bpe_apply(sdf, m, "text", n_merges=3).collect()
+        for r in TXO.bpe_encode(sdf, pairs, "text", "doc_id").collect()
     }
     assert got == expect, (docs, got, expect)
 
@@ -1274,38 +1276,36 @@ def test_bpe_apply_matches_reference_on_random_corpora(spark, docs):
     ),
     st.integers(min_value=1, max_value=6),
 )
+@example(docs=["ab\nab ab\nab a\rb", "ab\nab x\ny"], nm=3)
 def test_bpe_scale_path_matches_distributed_on_random_corpora(spark, docs, nm):
-    """r12 differential gate for the production-scale BPE path: on
-    random dense-tie corpora, the driver-side incremental trainer
-    (ops.text.bpe_train_scale) must equal the distributed unrolled
-    ops.text.bpe_train merge-for-merge, and the single-stage
-    mapInPandas encoder (ops.text.bpe_encode) must equal the chained
-    broadcast-join ops.text.bpe_apply doc-for-doc — including corpora
-    whose pairs run out before n_merges and words absent from the
-    training vocab ordering."""
+    """Differential gate of the BPE ops against their DuckDB oracles:
+    on random dense-tie corpora, the driver-side incremental trainer
+    (ops.text.bpe_train) must equal bpe_train_sql merge-for-merge, and
+    the single-stage mapInPandas encoder (ops.text.bpe_encode) fed the
+    learned merges must equal bpe_apply_sql doc-for-doc — including
+    corpora whose pairs run out before n_merges. The explicit example
+    puts line feeds and a carriage return inside words: one code point
+    is one symbol on both engines."""
     from pipetree_spark.ops import text as TXO
+
+    pdf = pd.DataFrame({"doc_id": list(range(len(docs))), "text": docs})
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    oracle = [tuple(r) for r in con.execute(TXO.bpe_train_sql(nm)).fetchall()]
+    exp = {
+        d: (w, t) for d, w, t in con.execute(TXO.bpe_apply_sql(nm)).fetchall()
+    }
 
     sdf = spark.createDataFrame(
         [(i, t) for i, t in enumerate(docs)], "doc_id long, text string"
     )
-    dist = [
+    scale = [
         tuple(r)
         for r in TXO.bpe_train(sdf, "text", n_merges=nm).orderBy("rank").collect()
     ]
-    scale = [
-        tuple(r)
-        for r in TXO.bpe_train_scale(sdf, "text", n_merges=nm)
-        .orderBy("rank")
-        .collect()
-    ]
-    assert scale == dist, (docs, nm, scale, dist)
+    assert scale == oracle, (docs, nm, scale, oracle)
 
-    m = TXO.bpe_train(sdf, "text", n_merges=nm)
-    exp = {
-        r.doc_id: (r.n_words, r.n_bpe_tokens)
-        for r in TXO.bpe_apply(sdf, m, "text", n_merges=nm).collect()
-    }
-    pairs = [(lhs, rhs) for (_, lhs, rhs, _, _) in dist]
+    pairs = [(lhs, rhs) for (_, lhs, rhs, _, _) in scale]
     got = {
         r.doc_id: (r.n_words, r.n_bpe_tokens)
         for r in TXO.bpe_encode(sdf, pairs, "text", "doc_id").collect()

@@ -105,10 +105,10 @@ QUERIES = [
     "q_agg_ks_hist",       # r9: shared-scan histograms + constant spine
     "q_agg_quantile_hist_bygroup",  # r9: per-group 256-bucket histograms
     "q_pipe_validate",     # r9: fingerprint + diff through the spec walker
-    "q_text_bpe_train",    # r11: corpus collapses to |vocab| once; 4 small per-round shuffles
-    "q_text_bpe_encode",   # r11: train + apply; corpus touched exactly twice
-    "q_text_bpe_train_scale",   # r12: one collapse pass + driver-side trainer
-    "q_text_bpe_encode_scale",  # r12: one mapInPandas stage, zero pre-emit shuffles
+    "q_text_bpe_train",    # one collapse pass + driver-side trainer (4 merges)
+    "q_text_bpe_encode",   # train + one mapInPandas encode, zero pre-emit shuffles
+    "q_text_bpe_train_scale",   # the same trainer at 16 merges — plan must be flat
+    "q_text_bpe_encode_scale",  # the same encode at 16 merges — plan must be flat
     "q_text_unigram_encode",    # r13: one collapse (train) + one mapInPandas encode
     "q_dedup_lines",       # r13: line-hash agg + join back — CCNet boilerplate strip
     "q_dedup_lines_rm",    # r13: the removal half — + per-doc ordered rebuild
@@ -124,7 +124,7 @@ QUERIES = [
     "q_text_minhash_sig_cjk",  # r14: per-char shingle minhash — explode+min aggs
     "q_text_script_profile",   # r14: five regex maps, zero shuffles — must be ~flat
     "q_text_langid_cjk",       # r14: segmentation + profile overlap — must be ~flat
-    "q_text_bpe_train_cjk",    # r14: segmented corpus collapse + |vocab|-row rounds
+    "q_text_bpe_train_cjk",    # r14: segmented corpus collapse + driver-side trainer
     "q_pipe_cjk_curation",     # r14: spec-walker composition (route+segment+report)
     "q_text_blocklist",        # r14: one regex map, zero shuffles — must be ~flat
     "q_text_cjk_segment_dict",  # r15: broadcast-lexicon MM pandas_udf — must be ~flat

@@ -2586,6 +2586,7 @@ def q_dedup_cluster_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rep ids are a subset of the slim stored map; beyond the gate the
     # hint would gamble driver memory on a corpus-proportional set —
     # fall through and let AQE pick from runtime sizes
+    # gating on all of m is deliberate: m is never smaller than the rep ids, so it may withhold a safe broadcast, never over-broadcast
     rep_ids = broadcast_if_small(
         m.filter(F.col("doc_id") == F.col("rep_id")).select("doc_id"), stored=m
     )

@@ -1,4 +1,5 @@
-"""tools/measure.py: the LAYERS record, RPC call sites, and tool imports."""
+"""tools/measure.py (the LAYERS record, RPC call sites), tools/scale_stress.py
+(the replica and the stress modes at toy size), and tool imports."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ from pathlib import Path
 import pytest
 
 from pipetree_spark.queries import load_registry
-from tools import measure
+from tools import measure, scale_stress
 
 TOOLS = Path(__file__).resolve().parent.parent / "tools"
 
@@ -86,3 +87,69 @@ def test_tool_imports_without_running_main(name):
     """A tool that imports a deleted or renamed module fails here, not
     when someone next runs it."""
     importlib.import_module(f"tools.{name}")
+
+
+def test_replicate_perturbs_each_copy_by_its_index(spark):
+    docs = spark.createDataFrame(
+        [(0, "alpha beta gamma", "en", "s0", 16), (7, " delta  eps", "de", "s1", 11)],
+        "doc_id long, text string, lang string, source string, n_chars long")
+    emb = spark.createDataFrame(
+        [(0, [0.1, 0.2, 0.3], 1), (4, [0.0, -0.5, 1.0], 2)],
+        "vec_id long, embedding array<float>, label int")
+    copies = 3
+    for src, table, key in ((docs, "documents", "doc_id"), (emb, "embeddings", "vec_id")):
+        out = scale_stress.replicate(src, table, copies)
+        assert out.schema == src.schema
+        rows = {r[key]: r for r in out.collect()}
+        assert len(rows) == out.count() == copies * src.count()  # keys unique across copies
+        [off] = scale_stress.key_offsets(src, table)
+        for s in src.collect():
+            assert rows[s[key]] == s  # copy 0 is the source
+            for i in range(1, copies):
+                c = rows[s[key] + i * off]
+                if table == "documents":
+                    a, b = s["text"].split(), c["text"].split()
+                    assert len(a) == len(b) and sum(x != y for x, y in zip(a, b)) == 1
+                    assert c["n_chars"] == len(c["text"]) and c["lang"] == s["lang"]
+                else:
+                    assert c["embedding"] != s["embedding"] and c["label"] == s["label"]
+                    assert all(abs(x - y) <= scale_stress.SIGMA + 1e-6
+                               for x, y in zip(c["embedding"], s["embedding"]))
+
+
+def test_skip_gen_refuses_a_replica_without_the_current_marker(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(scale_stress, "DST", str(tmp_path))
+    with pytest.raises(SystemExit, match="not a"):
+        scale_stress.ensure_replica(spark, skip_gen=True)
+    (tmp_path / scale_stress.MARKER).write_text("exact-copies\n")
+    with pytest.raises(SystemExit, match="not a"):
+        scale_stress.ensure_replica(spark, skip_gen=True)
+    (tmp_path / scale_stress.MARKER).write_text(scale_stress.REPLICA + "\n")
+    assert scale_stress.ensure_replica(spark, skip_gen=True) == str(tmp_path)
+
+
+def test_scale_modes_run_at_toy_size(spark, sf_small, tmp_path):
+    g = scale_stress.graph(spark, nodes=(100, 400), degree=4)
+    assert set(g["ratio"]) == {"triangle_counts", "bfs_khop(k=3)", "sssp_khop(k=3)"}
+    assert all(v > 0 for v in g["400"].values())
+
+    b = scale_stress.bpe(spark, n_words=300, n_merges=24, src=sf_small, dst=sf_small)
+    assert b["n_words"] == 300 and 0 < b["n_merges"] <= 24
+    assert b["encode_1x_s"] > 0 and b["encode_ratio"] > 0 and b["encode_plan_lines"] > 0
+
+    u = scale_stress.uvec(spark, sizes=((12, 5),), cap_reps=1, src=sf_small)
+    assert {"k", "p", "train_s", "dedup_s", "recall", "cell_avg", "cell_max"} <= set(u["60"])
+    assert [(r["rep"], r["cell_cap"]) for r in u["cap_matrix"]] == [(0, None), (0, 4096)]
+    assert all(0 <= r["recall"] <= 1 for r in u["cap_matrix"])
+
+
+def test_stream_mode_restores_the_state_store_confs(spark, tmp_path):
+    from pipetree_spark.ops.streaming import rocksdb_state_confs
+
+    keys = list(rocksdb_state_confs(bounded_memory_mb=512))
+    before = {k: spark.conf.get(k, None) for k in keys}
+    s = scale_stress.stream(spark, n_events=2000, files=2, n_docs=400, batches=4, root=str(tmp_path))
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+    assert s["rocksdb"]["dedup"]["rocksdb_metrics"] and not s["heap"]["dedup"]["rocksdb_metrics"]
+    assert s["heap"]["dedup"]["rows"] == s["rocksdb"]["dedup"]["rows"] == 2000
+    assert s["ingest"]["admitted"] == 100 + 3 * 80 and len(s["ingest"]["batch_s"]) == 4

@@ -1,187 +1,202 @@
-"""Scale-stress harness: does each hot plan hold at 10× the data?
+"""One scale harness: does each hot plan hold at 10× the data, and does
+each scale-bound operator hold at the size its regime needs?
 
-Synthesizes an sf1-equivalent dataset in /tmp by replicating the sf0.1
-fact tables 10× with key offsets (dims stay fixed — at 100 TB dims are
-still broadcast-sized), then times representative queries at both
-scales. The verdict is the RUNTIME RATIO: a plan that holds scales
-~linearly (ratio ≈ 10 at worst, much less while fixed JVM/scheduling
-overhead dominates); a hidden quadratic or a skew collapse shows up as a
-ratio ≫ 10. Results are recorded in SCALING.md.
+Usage: python tools/scale_stress.py [sweep|uvec|graph|stream|bpe]
+           [--skip-gen] [--only NAME ...] [--tag T]
 
-Usage: python tools/scale_stress.py [--skip-gen]
+- ``sweep`` (default): builds the 10× replica of the sf0.1 corpus in
+  DST, then per query and scale times a warm-up plus best-of-2 into the
+  noop sink and takes one ``tools.measure.measure_once`` rep for the
+  layer counters (jobs, stages, tasks, driver gap, executor run/CPU,
+  shuffle bytes). Queries: HOT_SET, or any registry names given to
+  ``--only`` (which skips the ANN-recall and flood sections).
+- ``uvec``: the auto-sized IVF quantizer on 20k and 200k UNIQUE jittered
+  vectors (planted pair-recall, cell occupancy), then interleaved
+  (no cap, cell_cap=4096) reps at 200k.
+- ``graph``: triangles, BFS and SSSP on constant-degree random graphs.
+- ``stream``: 1M events through the heap then the RocksDB state store,
+  then the hash-ledger incremental ingest.
+- ``bpe``: 32,768 merges over a 1M-word Zipf vocabulary, then encode
+  over sf0.1 and the 10× replica.
+
+The replica copies the fact tables 10× with key offsets; dims stay fixed,
+as they stay broadcast-sized at 100 TB. It is not an exact-copy flood:
+copy i ≥ 1 of a document has its first token replaced, and copy i of an
+embedding is jittered by its index (``replicate``), so exact-collapse
+leaves the near-dup work in place. ``--skip-gen`` reuses DST only if it
+carries the current REPLICA marker. The verdict is the runtime ratio:
+a plan that holds scales ~linearly (≤ 10 at 10× data, much less while
+fixed driver and scheduling cost dominates). ``--tag T`` writes
+SCALE_T.json at the repo root. Results are recorded in SCALING.md.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
+import math
+import os
+import shutil
+import statistics
 import sys
 import time
+import uuid
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from pipetree_spark.catalog import TABLES  # noqa: E402
+from bench import _cpu_totals  # noqa: E402
+from pipetree_spark.catalog import DEFAULT_SF_DIR, TABLES, load_table  # noqa: E402
+from pipetree_spark.ops import streaming as ST  # noqa: E402
+from pipetree_spark.ops import text as TX  # noqa: E402
+from pipetree_spark.ops import vector as VX  # noqa: E402
+from pipetree_spark.ops.graph import bfs_khop, sssp_khop, triangle_counts  # noqa: E402
+from pipetree_spark.ops.relational import checkpoint_scope  # noqa: E402
 from pipetree_spark.queries import load_registry  # noqa: E402
-from pipetree_spark.session import get_spark  # noqa: E402
+from pipetree_spark.session import default_parallelism, get_spark  # noqa: E402
+from tools.measure import COUNTERS, measure_once  # noqa: E402
 
-SRC = "/root/testdata/sf0.1"
+SRC = DEFAULT_SF_DIR
 DST = "/tmp/pipetree_spark_sfstress"
+STREAM_ROOT = "/tmp/pipetree_spark_streamstress"
 COPIES = 10
+#: Written to DST/MARKER by ``generate``; bump it whenever ``replicate`` changes.
+REPLICA = "perturbed-v1"
+MARKER = "_REPLICA"
+SIGMA = 0.01
 
-#: table → (unique key columns to offset, FK columns tied to another
-#: replicated fact's key). Dims and the doc/embedding corpora replicate
-#: with key offsets too; dims (region/nation/customer/supplier/part)
-#: stay fixed.
+#: The hot set: the near-dup, vector, graph and curation paths.
+HOT_SET = [
+    "q_text_decontam_bloom", "q_dedup_cluster_lsh", "q_dedup_near_lsh",
+    "q_dedup_semantic_ann", "q_vec_ann_pq_ivf", "q_dedup_cc",
+    "q_graph_pagerank", "q_pipe_curation_full",
+]
+FLOOD_COPIES = 100_000
+UVEC_SIZES = ((2000, 10), (2000, 100))  # (sf0.1 base vectors, jittered copies each)
+CAP_REPS = 2
+GRAPH_DEGREE = 20
+GRAPH_NODES = (10_000, 100_000)
+STREAM_EVENTS, STREAM_FILES = 1_000_000, 8
+INGEST_DOCS, INGEST_BATCHES = 100_000, 10
+BPE_WORDS, BPE_MERGES = 1_000_000, 32_768
+
+#: Replicated table → key columns offset by i·(max key + 1) in copy i.
+#: Foreign keys (o_custkey, l_partkey, l_suppkey, user_id) stay fixed, so
+#: every copy joins the same dims.
 REPLICATED = {
-    "orders": {"offset": ["o_orderkey"], "fixed_fk": ["o_custkey"]},
-    "lineitem": {"offset": ["l_orderkey"], "fixed_fk": ["l_partkey", "l_suppkey"]},
-    "events": {"offset": ["event_id"], "fixed_fk": ["user_id"]},
-    "documents": {"offset": ["doc_id"], "fixed_fk": []},
-    "embeddings": {"offset": ["vec_id"], "fixed_fk": []},
+    "orders": ["o_orderkey"],
+    "lineitem": ["l_orderkey"],
+    "events": ["event_id"],
+    "documents": ["doc_id"],
+    "embeddings": ["vec_id"],
 }
 
-QUERIES = [
-    "q_agg_groupby",       # scan+filter+group (flagship)
-    "q_join_3way",         # fact⋈fact⋈dims + agg pushdown
-    "q_topk_global",       # TakeOrderedAndProject
-    "q_agg_distinct_global",
-    "q_stream_tumbling",   # windowed event rollup
-    "q_dedup_exact",       # hash dedup over documents
-    "q_dedup_near",        # inverted-index Jaccard pairs
-    "q_dedup_substring",   # r12: k-gram span islands, 3 keyed shuffles
-    "q_dedup_substring_rm",  # r12: island marking + interval anti-join rewrite
-    "q_dedup_minhash_band",  # LSH banding + collapse_exact flood guard (r4)
-    "q_dedup_near_lsh",    # r5: THE production path (banding + exact verify)
-    "q_dedup_cc",          # r5: iterative min-label propagation (graph op)
-    "q_vec_cosine_knn",    # brute-force kNN (broadcast query side)
-    "q_text_tfidf",        # explode + two shuffles + window
-    "q_text_bm25",         # r12: explode + tf groupBy + broadcast df/corpus
-    "q_tpch_q5",           # six-way join
-    "q_vec_kmeans_port",   # portable Lloyd (r3): broadcast centroids + dim shuffle
-    "q_vec_pca_port",      # portable power iteration (r3): narrow dot + dim shuffle
-    "q_text_chunk",        # r6: sliding-window chunking (no shuffle — must be ~flat)
-    "q_text_shuffle_shard",  # r6: deterministic shuffle (window per shard)
-    "q_dedup_semantic",    # r6: embcos pairs → CC → keeper (label-block join)
-    "q_dedup_semantic_ann",  # r7: same, block = portable-IVF quantizer cell
-    "q_vec_decontam",      # r6: broadcast eval split × train cosine
-    "q_text_unigram_lm",   # r6: broadcast-vocab corpus-LM scoring
-    "q_text_ppl_bigram",   # r12: reference-split bigram LM, broadcast model joins
-    "q_text_nb_classify",  # r12: NB classifier, broadcast model + argmax window
-    "q_text_url_canon",    # r12: pure per-row regex/HOF normalization — must be ~flat
-    "q_text_ngram_top",    # r6: (lang, gram) map-side-combined counts
-    "q_dedup_incremental", # r6: broadcast-increment vs streaming corpus
-    "q_ts_sessionize",     # r6: gaps-and-islands, one user_id exchange
-    "q_ts_anomaly",        # r6: rolling-z window moments
-    "q_ts_ewma",           # r12: per-user fold, one user_id shuffle
-    "q_dedup_cluster_lsh", # r6: THE production clustered dedup e2e (capped pairs → CC)
-    "q_agg_moments",       # r6: three exact-decimal moments in one agg pass
-    "q_join_salted",       # r6: salted shuffle-hash skew join
-    "q_win_ignorenulls",   # r6: IGNORE-NULLS carry-forward window
-    "q_pipe_expect",       # r6: expectation suite (one agg pass + 2 set rules)
-    "q_vec_pq_codes",      # r8: PQ fit (per-subspace Lloyd, codes frame)
-    "q_vec_pq_adc",        # r8: PQ asymmetric-distance top-k scan
-    "q_vec_ann_pq_ivf",    # r8: IVF probe -> ADC shortlist -> exact rerank (IVF-PQ e2e)
-    "q_vec_ann_ivfpq_res", # r8: residual-encoded IVF-PQ (FAISS IndexIVFPQ layout)
-    "q_text_decontam_pairs",  # r8: pair-attributed n-gram decontam (broadcast eval grams)
-    "q_text_decontam_bloom",  # r9: bitmap-prefiltered exact decontam (must track q_text_decontam)
-    "q_agg_incremental",   # r9: partial-merge MV maintenance (merge is |groups|-sized)
-    "q_graph_pagerank",    # r9: integer PageRank, one |edges| shuffle per iteration
-    "q_agg_hll",           # r9: 64-register HLL — map-side combine, must be ~flat
-    "q_graph_triangles",   # r9: degree-oriented wedge join — wedges must stay ~linear
-    "q_join_range_binned", # r9: keyless interval join via bucket equi-rewrite
-    "q_table_fingerprint", # r9: one map-combined hash-sum pass — must scale with the scan
-    "q_table_diff",        # r9: (key, hash) full-outer diff — one shuffle join
-    "q_ts_ohlc",           # r9: shared-exchange double window + agg on (type, day)
-    "q_agg_kmv_setops",    # r9: two distinct-shuffles + k-row set ops — distinct-bound
-    "q_graph_bfs",         # r9: 3 frontier shuffles vs pre-partitioned edges
-    "q_sort_zorder",       # r9: narrow codegen interleave + 32-group agg — must be ~flat
-    "q_ts_trend",          # r9: one-pass exact-moment OLS — scan-bound
-    "q_text_pmi",          # r9: two count shuffles + vocab joins
-    "q_join_incremental",  # r9: delta-join maintenance — delta-sized probes
-    "q_agg_basket",        # r9: per-order brand pair join + threshold
-    "q_agg_ab_test",       # r9: two one-row moment frames — scan-bound
-    "q_agg_ks_hist",       # r9: shared-scan histograms + constant spine
-    "q_agg_quantile_hist_bygroup",  # r9: per-group 256-bucket histograms
-    "q_pipe_validate",     # r9: fingerprint + diff through the spec walker
-    "q_text_bpe_train",    # one collapse pass + driver-side trainer (4 merges)
-    "q_text_bpe_encode",   # train + one mapInPandas encode, zero pre-emit shuffles
-    "q_text_bpe_train_scale",   # the same trainer at 16 merges — plan must be flat
-    "q_text_bpe_encode_scale",  # the same encode at 16 merges — plan must be flat
-    "q_text_unigram_encode",    # r13: one collapse (train) + one mapInPandas encode
-    "q_dedup_lines",       # r13: line-hash agg + join back — CCNet boilerplate strip
-    "q_dedup_lines_rm",    # r13: the removal half — + per-doc ordered rebuild
-    "q_dedup_lines_nl",    # r14: real-newline mode (regex-planted corpus)
-    "q_dedup_sentences",   # r14: sentence-unit distinct-doc criterion
-    "q_text_domain_cap",   # r13: narrow URL map + one domain-key window shuffle
-    "q_search_rrf",        # r13: corpus work in the scorers; fusion is ≤200 rows flat
-    "q_search_rrf3",       # r13: three-list fold — one extra TakeOrdered column scan
-    "q_text_token_budget", # r13: narrow token-count map + one source-key window
-    "q_text_robots_filter", # r13: broadcast rule join + per-URL longest-match window
-    "q_text_nfc",          # r13: Arrow unicode-normalize map — must be ~flat
-    "q_text_cjk_segment",  # r14: two regex maps + splitters — must be ~flat
-    "q_text_minhash_sig_cjk",  # r14: per-char shingle minhash — explode+min aggs
-    "q_text_script_profile",   # r14: five regex maps, zero shuffles — must be ~flat
-    "q_text_langid_cjk",       # r14: segmentation + profile overlap — must be ~flat
-    "q_text_bpe_train_cjk",    # r14: segmented corpus collapse + driver-side trainer
-    "q_pipe_cjk_curation",     # r14: spec-walker composition (route+segment+report)
-    "q_text_blocklist",        # r14: one regex map, zero shuffles — must be ~flat
-    "q_text_cjk_segment_dict",  # r15: broadcast-lexicon MM pandas_udf — must be ~flat
-    "q_pipe_curation_full",     # r15: the 24-stage C4/CCNet/Gopher composite (cached walk)
-    "q_dedup_sentences_abbr",   # r15: 3-pass abbrev protect/mark/restore — must be ~flat
-    "q_agg_hll_sliding",   # r9: day-spine x 64-register merge — register-level work
-    "q_graph_sssp",        # r9: weighted Bellman-Ford, k frontier shuffles
-    "q_agg_gini",          # r9: per-group rank window + moment agg
-    "q_agg_kmv_retention", # r9: per-day k-min windows + k-row pair merges
-    "q_graph_common_neighbors",  # r9: wedge-count groupBy + anti-join
-    "q_agg_spearman",      # r9: two partitioned rank windows, one exchange
-    "q_ts_autocorr",       # r9: one lead window + moment agg, shared exchange
-    "q_agg_pearson",       # r9: five integer moments, one agg pass
-    "q_ts_cusum",          # r9: two shared-exchange window passes + top-1
-]
 
-
-def generate(spark) -> None:
-    for t in TABLES:
-        src = spark.read.parquet(f"{SRC}/{t}.parquet")
-        if t in REPLICATED:
-            spec = REPLICATED[t]
-            max_keys = {
-                c: src.agg(F.max(c)).collect()[0][0] + 1 for c in spec["offset"]
-            }
-            parts = []
-            for i in range(COPIES):
-                df = src
-                for c, mk in max_keys.items():
-                    df = df.withColumn(c, F.col(c) + F.lit(i * mk))
-                parts.append(df)
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-        else:
-            out = src
-        out.write.mode("overwrite").parquet(f"{DST}/{t}.parquet")
-        print(f"  wrote {t}", flush=True)
-
-
-def bench(spark, registry, sf_dir: str, names: list[str] | None = None) -> dict[str, float]:
-    # noop sink: the full plan (.count() prunes aggregates), no 10× rows shipped to the driver
-    out = {}
-    for name in (names if names is not None else QUERIES):
-        fn = registry[name].fn
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm-up
-        best = float("inf")
-        for _ in range(2):
+def best_of(spark, build) -> float:
+    """Warm-up, then the best of 2 timed runs of ``build()`` written to
+    the noop sink: the full plan (``.count()`` prunes aggregates), no
+    rows shipped to the driver. Each run frees its checkpoints."""
+    best = float("inf")
+    for rep in range(3):
+        with checkpoint_scope(spark):
             t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = best
-        print(f"  {name}: {best:.2f}s", flush=True)
+            build().write.format("noop").mode("overwrite").save()
+            if rep:
+                best = min(best, time.perf_counter() - t0)
+    return best
+
+
+# -- the 10× replica -----------------------------------------------------------
+def key_offsets(df, table: str) -> list[int]:
+    return [int(v) + 1 for v in df.agg(*[F.max(c) for c in REPLICATED[table]]).first()]
+
+
+def replicate(df, table: str, copies: int = COPIES):
+    """``copies`` copies of ``df``, a REPLICATED table, copy i's keys
+    offset by i·(max key + 1). Copy 0 is ``df``; later copies are
+    perturbed by their index so near-dup ops have work left after
+    exact-collapse: a document's first token becomes ``rep<i>`` (n_chars
+    recomputed), and each embedding component moves by at most SIGMA,
+    drawn from xxhash64(i, vec_id, j), staying array<float>."""
+    keys, offsets = REPLICATED[table], key_offsets(df, table)
+    out = None
+    for i in range(copies):
+        part = df
+        if i and table == "documents":
+            part = (part.withColumn("text", F.regexp_replace("text", r"^(\s*)\S+", f"$1rep{i}"))
+                    .withColumn("n_chars", F.length("text").cast("long")))
+        if i and table == "embeddings":
+            def jitter(x, j):  # SIGMA · u, u uniform in [-1, 1)
+                u = F.pmod(F.xxhash64(F.lit(i), F.col("vec_id"), j), F.lit(1 << 24)) / float(1 << 23) - 1
+                return (x + F.lit(SIGMA) * u).cast("float")
+            part = part.withColumn("embedding", F.transform("embedding", jitter))
+        for c, off in zip(keys, offsets):
+            part = part.withColumn(c, F.col(c) + F.lit(i * off))
+        out = part if out is None else out.unionByName(part)
     return out
 
 
-def ann_recall(spark, sf_dir: str) -> dict[str, tuple[float, float]]:
+def generate(spark) -> None:
+    marker = Path(DST, MARKER)
+    marker.unlink(missing_ok=True)  # an interrupted run leaves no valid replica
+    for t in TABLES:
+        df = spark.read.parquet(f"{SRC}/{t}.parquet")
+        (replicate(df, t) if t in REPLICATED else df).write.mode("overwrite").parquet(f"{DST}/{t}.parquet")
+        print(f"  wrote {t}", flush=True)
+    marker.write_text(REPLICA + "\n")
+
+
+def ensure_replica(spark, skip_gen: bool) -> str:
+    marker = Path(DST, MARKER)
+    if not skip_gen:
+        print(f"generating the 10x replica in {DST} ...", flush=True)
+        generate(spark)
+    elif not marker.exists() or marker.read_text().strip() != REPLICA:
+        raise SystemExit(f"{DST} is not a {REPLICA} replica; rerun without --skip-gen")
+    return DST
+
+
+# -- sweep ---------------------------------------------------------------------
+def sweep(spark, names: list[str], extras: bool = True) -> dict:
+    registry = load_registry()
+    rows: dict[str, dict] = {}
+    for name in names:
+        fn, row = registry[name].fn, rows.setdefault(name, {})
+        for label, sf_dir in (("1x", SRC), ("10x", DST)):
+            best = best_of(spark, lambda: fn(spark, sf_dir))
+            _, counts = measure_once(spark, fn, sf_dir, name)
+            row[label] = {"best_s": best, **{k: counts.get(k, 0) for k in ("wall_s", *COUNTERS)}}
+        row["ratio"] = row["10x"]["best_s"] / row["1x"]["best_s"]
+        big = row["10x"]
+        print(f"  {name:24s} {row['1x']['best_s']:7.2f}s -> {big['best_s']:7.2f}s ratio {row['ratio']:5.2f}"
+              f" | 10x: {big['spark.jobs']:.0f} jobs, gap {big['spark.driver_gap_s']:.2f}s,"
+              f" exec run {big['spark.exec_run_s']:.1f}s", flush=True)
+    if "q_dedup_near_lsh" in rows:
+        # pairs between copies of one source document: ids a multiple of the doc-key offset apart
+        [off] = key_offsets(spark.read.parquet(f"{SRC}/documents.parquet"), "documents")
+        for label, sf_dir in (("1x", SRC), ("10x", DST)):
+            with checkpoint_scope(spark):
+                pairs = registry["q_dedup_near_lsh"].fn(spark, sf_dir)
+                rows["q_dedup_near_lsh"][label]["cross_copy_pairs"] = pairs.filter(
+                    (F.col("id_b") - F.col("id_a")) % off == 0).count()
+        print(f"  q_dedup_near_lsh cross-copy pairs at 10x: "
+              f"{rows['q_dedup_near_lsh']['10x']['cross_copy_pairs']}", flush=True)
+    out = {"queries": rows}
+    if extras:
+        print("ANN recall vs exact (target >= 0.8 at both scales):", flush=True)
+        out["ann"] = {}
+        for label, sf_dir in (("1x", SRC), ("10x", DST)):
+            rec = out["ann"][label] = ann_recall(spark, sf_dir)
+            rec["semantic_ann_pair_recall"] = semantic_ann_pair_recall(spark, registry, sf_dir)
+            print(f"  {label}: {rec}", flush=True)
+        out["flood"] = flood_stress(spark)
+    return out
+
+
+def ann_recall(spark, sf_dir: str) -> dict[str, float]:
     """Recall-vs-exact for both ANN variants at one scale.
 
     - ``ivf``: uniform kNN workload (20 corpus vectors as queries),
@@ -189,15 +204,13 @@ def ann_recall(spark, sf_dir: str) -> dict[str, tuple[float, float]]:
       coarse quantizer on weakly-clustered geometry.
     - ``lsh``: near-dup candidate workload (20 perturbed corpus vectors,
       cos ≈ 0.98 to their source), scored on source-retrieval@top1 —
-      the regime sign-LSH exists for (q_dedup_embcos candidates).
-    Returns name → (recall, seconds).
+      the regime sign-LSH exists for (q_dedup_embcos candidates). In
+      the replica a jittered copy of the source counts as the source.
     """
     import numpy as np
 
-    from pipetree_spark.catalog import load_table
-    from pipetree_spark.ops import vector as VX
-
     emb = load_table(spark, sf_dir, "embeddings")
+    [off] = key_offsets(load_table(spark, SRC, "embeddings"), "embeddings")
     K = 10
 
     def topmap(df):
@@ -229,8 +242,9 @@ def ann_recall(spark, sf_dir: str) -> dict[str, tuple[float, float]]:
         key = (r["cos_sim"], -r["vec_id"])
         if r["query_id"] not in best or key > best[r["query_id"]][0]:
             best[r["query_id"]] = (key, r["vec_id"])
-    hits = sum(1 for q, (_, v) in best.items() if v == q - 10_000_000)
-    return {"ivf_uniform_recall@10": (r_ivf, t_ivf), "lsh_neardup_source@1": (hits / len(pert), t_lsh)}
+    hits = sum(1 for q, (_, v) in best.items() if v % off == q - 10_000_000)
+    return {"ivf_uniform_recall@10": r_ivf, "ivf_s": t_ivf,
+            "lsh_neardup_source@1": hits / len(pert), "lsh_s": t_lsh}
 
 
 def semantic_ann_pair_recall(spark, registry, sf_dir: str) -> float:
@@ -239,26 +253,21 @@ def semantic_ann_pair_recall(spark, registry, sf_dir: str) -> float:
     fraction of exact-path duplicate pairs (same component) that the
     quantizer-blocked path also clusters together. A pair is missed only
     when the coarse quantizer splits it across cells — the documented
-    ANN trade (target ≥ 0.8, the r6-verdict bar)."""
+    ANN trade (target ≥ 0.8, the r6-verdict bar). Pairs are counted in
+    Spark as Σ C(n, 2) over component groups, never listed on the driver
+    (the replica's components hold tens of millions of pairs)."""
 
-    def comp_pairs(df) -> set[tuple[int, int]]:
-        comps: dict[int, list[int]] = {}
-        for r in df.collect():
-            comps.setdefault(r["component"], []).append(r["vec_id"])
-        out: set[tuple[int, int]] = set()
-        for members in comps.values():
-            members.sort()
-            out.update(
-                (a, b) for i, a in enumerate(members) for b in members[i + 1 :]
-            )
-        return out
+    def pairs(df, *keys) -> float:
+        return df.groupBy(*keys).count().select(F.sum(F.col("count") * (F.col("count") - 1) / 2)).first()[0] or 0
 
-    exact = comp_pairs(registry["q_dedup_semantic"].fn(spark, sf_dir))
-    ann = comp_pairs(registry["q_dedup_semantic_ann"].fn(spark, sf_dir))
-    return len(ann & exact) / len(exact) if exact else 1.0
+    with checkpoint_scope(spark):
+        exact = registry["q_dedup_semantic"].fn(spark, sf_dir).select("vec_id", F.col("component").alias("e"))
+        ann = registry["q_dedup_semantic_ann"].fn(spark, sf_dir).select("vec_id", F.col("component").alias("a"))
+        total = pairs(exact, "e")
+        return pairs(exact.join(ann, "vec_id"), "e", "a") / total if total else 1.0
 
 
-def flood_stress(spark, n_copies: int = 100_000) -> dict[str, float]:
+def flood_stress(spark, n_copies: int = FLOOD_COPIES) -> dict[str, float]:
     """Exact-duplicate flood: n_copies byte-identical boilerplate docs +
     a handful of genuine near-dups. Without the ``collapse_exact`` guard
     this corpus puts all n_copies signatures into ONE band bucket and
@@ -266,8 +275,6 @@ def flood_stress(spark, n_copies: int = 100_000) -> dict[str, float]:
     flood collapses to one representative before signatures exist, so
     runtime must stay in the same ballpark as the small corpus and the
     emitted pairs must be exactly the planted near-dups."""
-    from pipetree_spark.ops import text as TX
-
     boiler = "subscribe to our newsletter for daily updates terms of service apply here"
     flood = spark.range(n_copies).select(
         F.col("id").alias("doc_id"), F.lit(boiler).alias("text")
@@ -293,142 +300,292 @@ def flood_stress(spark, n_copies: int = 100_000) -> dict[str, float]:
     return {"seconds": secs, "pairs": len(pairs), "planted_ok": float(ok)}
 
 
-def build_jittered_corpus(spark, n_bases: int = 2000, copies: int = 100,
-                          seed: int = 13, sigma: float = 0.01):
-    """THE unique-vector stress corpus: ``n_bases`` sf0.1 embedding
-    bases, each jittered ``copies`` times (within-base cos ≥ ~0.99).
-    Single definition shared by unique_vector_stress and
-    tools/uvec_cap_matrix.py so the cap-matrix measurements can never
-    desynchronize from the harness they calibrate. Returns the
-    materialized (vec_id, embedding) frame."""
+# -- uvec ----------------------------------------------------------------------
+def jittered_corpus(spark, n_bases: int, copies: int, src: str = SRC):
+    """``n_bases`` sf0.1 embedding bases, each jittered ``copies`` times
+    (σ=0.01, within-base cos ≥ ~0.99, cross-base well below): n_bases ×
+    copies unique vectors whose planted truth is the base. Returns the
+    materialized (vec_id, embedding) frame; vec_id // copies is the base."""
     import numpy as np
 
-    from pipetree_spark.catalog import load_table
-
-    base = load_table(spark, SRC, "embeddings").orderBy("vec_id").limit(n_bases).collect()
-    B = np.stack([np.array(r["embedding"], dtype=np.float64) for r in base])[:n_bases]
-    rng = np.random.RandomState(seed)
+    base = load_table(spark, src, "embeddings").orderBy("vec_id").limit(n_bases).collect()
+    B = np.stack([np.array(r["embedding"], dtype=np.float64) for r in base])
+    rng = np.random.RandomState(13)
     rows = []
     for b in range(len(B)):
-        noise = rng.normal(0.0, sigma, size=(copies, B.shape[1]))
-        V = (B[b][None, :] + noise).astype(np.float32)
-        for c in range(copies):
-            rows.append((b * copies + c, [float(x) for x in V[c]]))
+        V = (B[b][None, :] + rng.normal(0.0, 0.01, size=(copies, B.shape[1]))).astype(np.float32)
+        rows += [(b * copies + c, [float(x) for x in V[c]]) for c in range(copies)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").repartition(32)
     return df.localCheckpoint(eager=True)
 
 
-def unique_vector_stress(spark, n_bases: int = 2000, copies: int = 100) -> dict:
-    """r7 verdict #4: the 10×/100× replication checks kept distinct-vector
-    volume at 2k (exact-collapse ate the copies), so the auto-sized
-    quantizer was never stressed on UNIQUE vectors. This plants
-    ``n_bases × copies`` unique vectors (base vectors from sf0.1
-    embeddings, each jittered ``copies`` times with σ=0.01 noise —
-    within-cluster cosine ≥ ~0.99, cross-base well below) and runs the
-    PRODUCTION path end-to-end: sample-trained centroids (ivf_train on
-    a 5% sample, injected), n_clusters='auto' (⌈√n⌉), n_probe='auto'
-    (⌈log₂k⌉), assign_via='arrow'.
-
-    Reports pair-recall against the planted truth (a pair is planted
-    iff both vectors jitter the same base; recall = Σ_g C(n_g,2) /
-    (n_bases·C(copies,2)) over (planted, component) groups — computed
-    in Spark, no driver pair sets) plus per-cell occupancy, so the
-    'cells stay ~p·√n, never n/k_fixed' claim is measured, not
-    asserted."""
-    from pipetree_spark.ops import vector as VX
-
-    df = build_jittered_corpus(spark, n_bases=n_bases, copies=copies)
-    n = df.count()
-
+def uvec_dedup(df, cents, n: int, copies: int, cell_cap: int | None) -> tuple[float, float]:
+    """The production semantic dedup (sample-trained centroids injected,
+    auto k and n_probe, Arrow assignment, BLAS pair mode) → (seconds,
+    planted pair-recall). Recall = Σ C(n_g, 2) / (bases · C(copies, 2))
+    over (planted base, component) groups, computed in Spark."""
     t0 = time.perf_counter()
-    cents = VX.ivf_train(df.sample(0.05, seed=3), "embedding", "vec_id",
-                         n_clusters=max(8, int(n ** 0.5) + 1), iters=2)
-    cents = cents.localCheckpoint(eager=True)
-    t_train = time.perf_counter() - t0
-
-    t0 = time.perf_counter()
-    # cell_cap=4096: decided by tools/uvec_cap_matrix.py (interleaved
-    # clean-machine reps, 2 independent runs at 200k uniques) — capped
-    # tiling wins 3 of 4 pairs, mean 62.7 s vs 113.1 s uncapped and 3×
-    # on cold JVMs (the max cell is ~5× average; tiling breaks that
-    # straggler). An earlier single-shot 75→143 s reading that said
-    # the opposite was measurement noise — trust the matrix.
     res = VX.semantic_dedup_ann(
         df, threshold=0.9, n_clusters="auto", n_probe="auto",
-        centroids=cents, assign_via="arrow", exact_pairs=False, cell_cap=4096,
+        centroids=cents, assign_via="arrow", exact_pairs=False, cell_cap=cell_cap,
     ).localCheckpoint(eager=True)
     assert res.count() == n
-    t_dedup = time.perf_counter() - t0
+    secs = time.perf_counter() - t0
+    co = res.groupBy((F.col("vec_id") / copies).cast("long").alias("planted"), "component").count()
+    num = co.select(F.sum(F.col("count") * (F.col("count") - 1) / 2)).first()[0]
+    return secs, float(num) / (n // copies * copies * (copies - 1) / 2)
 
-    planted = res.withColumn("planted", (F.col("vec_id") / copies).cast("long"))
-    co = planted.groupBy("planted", "component").count()
-    num = co.select(F.sum(F.col("count") * (F.col("count") - 1) / 2).alias("s")).collect()[0]["s"]
-    denom = n_bases * copies * (copies - 1) / 2
-    recall = float(num) / denom
 
-    # occupancy of the auto-sized blocking (same params the dedup used)
-    import math
-    k = max(8, math.isqrt(max(n - 1, 0)) + 1)
-    p = max(3, math.ceil(math.log2(k)))
-    memb = VX.ivf_multiprobe_assign(
-        df, "embedding", "vec_id", n_probe=p, centroids=cents, via="arrow"
+def uvec(spark, sizes=UVEC_SIZES, cap_reps: int = CAP_REPS, src: str = SRC) -> dict:
+    """The auto-sized quantizer stressed on UNIQUE vectors (exact-collapse
+    cannot shrink them): per size, sample-trained centroids (5%),
+    k = ⌈√n⌉, n_probe = ⌈log₂k⌉, cell_cap=4096 — the production call —
+    with planted pair-recall and cell occupancy, so 'cells stay ~p·√n,
+    never n/k_fixed' is measured. At the last size, ``cap_reps``
+    interleaved (no cap, cell_cap=4096) reps, so host drift cancels out
+    of the cap decision."""
+    out: dict[str, dict] = {}
+    for idx, (n_bases, copies) in enumerate(sizes):
+        with checkpoint_scope(spark):
+            df = jittered_corpus(spark, n_bases, copies, src)
+            n = df.count()
+            t0 = time.perf_counter()
+            cents = VX.ivf_train(df.sample(0.05, seed=3), "embedding", "vec_id",
+                                 n_clusters=max(8, int(n ** 0.5) + 1), iters=2).localCheckpoint(eager=True)
+            t_train = time.perf_counter() - t0
+            t_dedup, recall = uvec_dedup(df, cents, n, copies, 4096)
+            k = max(8, math.isqrt(max(n - 1, 0)) + 1)
+            p = max(3, math.ceil(math.log2(k)))
+            occ = (VX.ivf_multiprobe_assign(df, "embedding", "vec_id", n_probe=p, centroids=cents, via="arrow")
+                   .groupBy("cluster").count()
+                   .agg(F.max("count").alias("mx"), F.avg("count").alias("avg"), F.count("*").alias("nonempty"))
+                   .first())
+            row = out[str(n)] = {"k": k, "p": p, "train_s": t_train, "dedup_s": t_dedup, "recall": recall,
+                                 "cell_avg": float(occ["avg"]), "cell_max": occ["mx"], "cells_nonempty": occ["nonempty"]}
+            print(f"  n={n} (k={k}, p={p}): train {t_train:.1f}s, dedup {t_dedup:.1f}s, pair-recall "
+                  f"{recall:.3f}, cells avg {row['cell_avg']:.0f} / max {occ['mx']} "
+                  f"({occ['nonempty']}/{k} nonempty; fixed k=8 would be {n // 8}/cell)", flush=True)
+            if idx == len(sizes) - 1:
+                out["cap_matrix"] = []
+                for rep in range(cap_reps):
+                    for cap in (None, 4096):
+                        with checkpoint_scope(spark):
+                            secs, rec = uvec_dedup(df, cents, n, copies, cap)
+                        out["cap_matrix"].append({"n": n, "rep": rep, "cell_cap": cap, "dedup_s": secs, "recall": rec})
+                        print(f"  n={n} rep{rep} cell_cap={cap}: dedup {secs:.1f}s recall {rec:.3f}", flush=True)
+    return out
+
+
+# -- graph ---------------------------------------------------------------------
+def random_edges(spark, n_nodes: int, degree: int):
+    """m = n_nodes·degree/2 undirected edges with endpoints from xxhash64
+    of the edge index: deterministic and uniform, self-loops and dups
+    left in (the ops canonicalize)."""
+    return (
+        spark.range(n_nodes * degree // 2)
+        .select(
+            F.pmod(F.xxhash64(F.col("id") * 2 + 1), F.lit(n_nodes)).alias("src"),
+            F.pmod(F.xxhash64(F.col("id") * 2 + 2), F.lit(n_nodes)).alias("dst"),
+        )
+        .localCheckpoint(eager=True)
     )
-    occ = memb.groupBy("cluster").count().agg(
-        F.max("count").alias("mx"), F.avg("count").alias("avg"),
-        F.count("*").alias("nonempty"),
-    ).collect()[0]
-    print(
-        f"  unique-vec stress n={n} (k={k}, p={p}): train {t_train:.1f}s, "
-        f"dedup {t_dedup:.1f}s, pair-recall {recall:.3f}, "
-        f"cell occupancy avg {occ['avg']:.0f} / max {occ['mx']} "
-        f"({occ['nonempty']}/{k} cells nonempty; fixed k=8 would be {n // 8}/cell)",
-        flush=True,
-    )
-    return {"n": n, "k": k, "p": p, "train_s": t_train, "dedup_s": t_dedup,
-            "recall": recall, "cell_avg": float(occ["avg"]), "cell_max": occ["mx"]}
+
+
+def graph(spark, nodes=GRAPH_NODES, degree: int = GRAPH_DEGREE) -> dict:
+    """Graph ops on constant-degree random graphs: real corpora grow nodes
+    and edges together, where the replica densifies the co-purchase graph
+    on fixed dims. Wedge work should grow ~linearly in m, BFS and SSSP
+    with |frontier|."""
+    out: dict[str, dict] = {}
+    for n in nodes:
+        with checkpoint_scope(spark):
+            e = random_edges(spark, n, degree)
+            srcs = spark.range(max(1, n // 1000)).select(F.pmod(F.xxhash64("id"), F.lit(n)).alias("node"))
+            ew = e.withColumn("w", F.pmod(F.xxhash64("src", "dst"), F.lit(100)) + 1)
+            row = out[str(n)] = {
+                "triangle_counts": best_of(spark, lambda: triangle_counts(e)),
+                "bfs_khop(k=3)": best_of(spark, lambda: bfs_khop(e, srcs, k=3)),
+                "sssp_khop(k=3)": best_of(spark, lambda: sssp_khop(ew, srcs, k=3)),
+            }
+        print(f"  n={n} m~{n * degree // 2}: " + ", ".join(f"{k} {v:.2f}s" for k, v in row.items()), flush=True)
+    lo, hi = out[str(nodes[0])], out[str(nodes[-1])]
+    out["ratio"] = {op: hi[op] / lo[op] for op in lo}
+    print(f"  ratios at {nodes[-1] // nodes[0]}x nodes+edges: {out['ratio']}", flush=True)
+    return out
+
+
+# -- stream --------------------------------------------------------------------
+def write_feed(spark, feed: str, n_events: int, files: int) -> None:
+    """``files`` parquet files, each a contiguous time slice (what a
+    replayed Kafka topic looks like), 50k users so dedup and window state
+    is non-trivial. 10 events/s of event time, so 1M events span ~28 h
+    and the hourly windows age past the watermark between micro-batches."""
+    shutil.rmtree(feed, ignore_errors=True)
+    per = n_events // files
+    for c in range(files):
+        spark.range(c * per, (c + 1) * per).select(
+            F.col("id").alias("event_id"),
+            F.timestamp_millis(F.lit(1704067200000) + F.col("id") * 100).alias("ts"),
+            (F.col("id") % 50_000).alias("user_id"),
+            F.element_at(F.array(F.lit("view"), F.lit("click"), F.lit("buy")),
+                         (F.col("id") % 3 + 1).cast("int")).alias("event_type"),
+            (F.col("id") % 997).cast("double").alias("value"),
+        ).coalesce(1).write.mode("append").parquet(feed)
+
+
+def drain(spark, sdf) -> tuple[int, bool]:
+    """Run ``sdf`` to completion into a memory sink → (rows, whether its
+    state store reported RocksDB metrics in the last progress)."""
+    q = (sdf.writeStream.format("memory").queryName(f"stress_{uuid.uuid4().hex[:8]}")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination()
+    ops = (q.lastProgress or {}).get("stateOperators", [])
+    return spark.table(q.name).count(), any(m.startswith("rocksdb") for op in ops for m in op.get("customMetrics", {}))
+
+
+def state_stages(spark, feed: str, files: int) -> dict:
+    """Watermarked tumbling counts and watermarked dedup over the whole
+    feed (availableNow: the backfill bound), in events/s."""
+    n, out = spark.read.parquet(feed).count(), {}
+    for stage, op in (("tumbling", ST.tumbling_counts), ("dedup", ST.stream_dedup)):
+        src = ST.file_stream(spark, feed, max_files_per_trigger=max(1, files // 4))
+        t0 = time.perf_counter()
+        rows, rocks = drain(spark, op(src, watermark="10 minutes"))
+        secs = time.perf_counter() - t0
+        out[stage] = {"s": secs, "events_per_s": n / secs, "rows": rows, "rocksdb_metrics": rocks}
+    return out
+
+
+def ingest(spark, root: str, n_docs: int, batches: int) -> dict:
+    """``batches`` doc batches, each 80% fresh and 20% repeats of batch 0's
+    texts, through ops.streaming.incremental_dedup_batch. Per-batch time
+    must stay ~flat as the ledger grows (the anti-join reads the (hash,
+    batch_id) ledger, not the corpus) and the admitted count must match
+    the planted dups."""
+    shutil.rmtree(root, ignore_errors=True)
+    per, times, admitted = n_docs // batches, [], 0
+    for b in range(batches):
+        body = F.when(F.col("id") % per < per * 8 // 10, F.col("id")).otherwise(F.col("id") % per)
+        df = spark.range(b * per, (b + 1) * per).select(
+            F.col("id").alias("doc_id"),
+            F.concat(F.lit("document body "), body.cast("string")).alias("text"),
+            F.lit("en").alias("lang"),
+        )
+        t0 = time.perf_counter()
+        admitted += ST.incremental_dedup_batch(df, b, f"{root}/ledger", f"{root}/out")
+        times.append(time.perf_counter() - t0)
+    return {"admitted": admitted, "docs": n_docs, "batch_s": times,
+            "head_s": statistics.mean(times[1:4]), "tail_s": statistics.mean(times[-3:])}
+
+
+def stream(spark, n_events: int = STREAM_EVENTS, files: int = STREAM_FILES, n_docs: int = INGEST_DOCS,
+           batches: int = INGEST_BATCHES, root: str = STREAM_ROOT) -> dict:
+    """The stateful streaming ops under the default heap state store, then
+    under ``rocksdb_state_confs`` (restored afterwards), then the
+    incremental ingest."""
+    feed = f"{root}/feed"
+    write_feed(spark, feed, n_events, files)
+    out = {"heap": state_stages(spark, feed, files)}
+    confs = ST.rocksdb_state_confs(bounded_memory_mb=512)
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        out["rocksdb"] = state_stages(spark, feed, files)
+    finally:
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    for store in ("heap", "rocksdb"):
+        print(f"  [{store}] " + ", ".join(f"{s} {r['s']:.1f}s ({r['events_per_s']:,.0f} events/s, "
+                                          f"{r['rows']} rows, rocksdb metrics {r['rocksdb_metrics']})"
+                                          for s, r in out[store].items()), flush=True)
+    out["ingest"] = ingest(spark, f"{root}/ingest", n_docs, batches)
+    g = out["ingest"]
+    print(f"  ingest: admitted {g['admitted']}/{n_docs}; per-batch head {g['head_s']:.2f}s vs tail "
+          f"{g['tail_s']:.2f}s (flat-ledger target: tail <~ 2x head)", flush=True)
+    return out
+
+
+# -- bpe -----------------------------------------------------------------------
+#: 64 deterministic CV(C) syllables: concatenations share subword
+#: structure for the merges to discover (letter soup would exercise only
+#: the heap, not the morphology).
+_SYL = [
+    c + v + ("nrs"[(ord(c) + ord(v)) % 3] if (ord(c) + ord(v)) % 2 else "")
+    for c in "bdfgklmnprstvz"
+    for v in "aeiou"
+][:64]
+
+
+def zipf_vocab(n_words: int) -> dict[str, int]:
+    """``n_words`` distinct words of 2-4 syllables (a mixed-radix walk over
+    the inventory), freq = max(1, n_words // rank)."""
+    words: dict[str, int] = {}
+    i = 0
+    while len(words) < n_words:
+        k, parts = i, []
+        for _ in range(2 + i % 3):
+            parts.append(_SYL[k % 64])
+            k //= 64
+        w = "".join(parts)
+        if w not in words:
+            words[w] = max(1, n_words // (len(words) + 1))
+        i += 1
+    return words
+
+
+def bpe(spark, n_words: int = BPE_WORDS, n_merges: int = BPE_MERGES, src: str = SRC, dst: str = DST) -> dict:
+    """The BPE scale path at production vocabulary size: the driver
+    trainer on a Zipf vocabulary, then the learned ranks through the
+    one-stage encoder. The encode plan must not grow with n_merges."""
+    t0 = time.perf_counter()
+    wf = zipf_vocab(n_words)
+    out: dict = {"n_words": len(wf), "vocab_gen_s": time.perf_counter() - t0}
+    t0 = time.perf_counter()
+    merges = [(lhs, rhs) for _r, lhs, rhs, _c in TX.bpe_train_merges(wf, n_merges)]
+    out.update(train_s=time.perf_counter() - t0, n_merges=len(merges))
+    for label, sf_dir in (("1x", src), ("10x", dst)):
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        out[f"encode_{label}_s"] = best_of(spark, lambda: TX.bpe_encode(docs, merges))
+    plan = TX.bpe_encode(spark.read.parquet(f"{src}/documents.parquet"), merges)._jdf.queryExecution().executedPlan()
+    out["encode_plan_lines"] = sum(1 for ln in plan.toString().splitlines() if ln.strip())
+    out["encode_ratio"] = out["encode_10x_s"] / out["encode_1x_s"]
+    print(f"  {json.dumps(out)}", flush=True)
+    return out
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--skip-gen", action="store_true")
-    ap.add_argument("--unique-vec", action="store_true",
-                    help="run only the unique-vector quantizer stress (10x and 100x uniques)")
-    ap.add_argument("--only", nargs="*", default=None,
-                    help="restrict the timing sweep to these query names "
-                         "(skips the ANN-recall and flood sections)")
+    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("mode", nargs="?", default="sweep", choices=["sweep", "uvec", "graph", "stream", "bpe"])
+    ap.add_argument("--skip-gen", action="store_true", help="reuse the replica in DST (sweep, bpe)")
+    ap.add_argument("--only", nargs="+", metavar="NAME",
+                    help="sweep these registry queries instead of HOT_SET, without the ANN and flood sections")
+    ap.add_argument("--tag", help="write SCALE_<TAG>.json at the repo root")
     args = ap.parse_args()
-    if args.unique_vec:
-        spark = get_spark("pipetree-spark-uvec-stress")
-        print("unique-vector stress (auto-k quantizer, sample-trained, arrow assign):", flush=True)
-        unique_vector_stress(spark, n_bases=2000, copies=10)    # 20k uniques
-        unique_vector_stress(spark, n_bases=2000, copies=100)   # 200k uniques
-        return
-    spark = get_spark("pipetree-spark-scale-stress")
-    if not args.skip_gen:
-        print("generating 10x dataset ...", flush=True)
-        generate(spark)
-    registry = load_registry()
-    names = args.only if args.only else QUERIES
-    unknown = [n for n in names if n not in QUERIES]
+    if args.only and args.mode != "sweep":
+        ap.error("--only is a sweep option")
+    unknown = sorted(set(args.only or ()) - set(load_registry()))
     if unknown:
-        raise SystemExit(f"--only names not in QUERIES: {unknown}")
-    print(f"timing at sf0.1 ({SRC}):", flush=True)
-    base = bench(spark, registry, SRC, names)
-    print(f"timing at 10x ({DST}):", flush=True)
-    big = bench(spark, registry, DST, names)
-    print("\nratios (10x data / 1x data; linear-or-better target ≤ 10):")
-    for name in names:
-        print(f"  {name:24s} {base[name]:7.2f}s -> {big[name]:7.2f}s  ratio {big[name]/base[name]:5.2f}")
-    if args.only:
-        return
-    print("\nANN recall vs exact (target ≥ 0.8 at both scales):")
-    for sf_dir, label in ((SRC, "1x"), (DST, "10x")):
-        for name, (rec, secs) in ann_recall(spark, sf_dir).items():
-            print(f"  {label:3s} {name:24s} recall {rec:5.3f}  ({secs:.2f}s)")
-        rec = semantic_ann_pair_recall(spark, registry, sf_dir)
-        print(f"  {label:3s} {'semantic_ann_pair_recall':24s} recall {rec:5.3f}")
-    print("\nexact-dup flood guard (banding must not expand the flood bucket):")
-    flood_stress(spark)
+        ap.error(f"unknown queries: {unknown}")
+    spark = get_spark(f"pipetree-spark-scale-{args.mode}")
+    total0, steal0 = _cpu_totals()
+    if args.mode == "sweep":
+        ensure_replica(spark, args.skip_gen)
+        result = sweep(spark, args.only or HOT_SET, extras=not args.only)
+    elif args.mode == "bpe":
+        ensure_replica(spark, args.skip_gen)
+        result = bpe(spark)
+    else:
+        result = {"uvec": uvec, "graph": graph, "stream": stream}[args.mode](spark)
+    total1, steal1 = _cpu_totals()
+    if args.tag:
+        record = {"mode": args.mode, "src": SRC, "dst": DST, "replica": REPLICA, "cores": default_parallelism(),
+                  "loadavg": list(os.getloadavg()),
+                  "steal_pct": round(100 * (steal1 - steal0) / max(total1 - total0, 1), 3), "results": result}
+        out = REPO / f"SCALE_{args.tag}.json"
+        out.write_text(json.dumps(record, indent=1) + "\n")
+        print(f"wrote {out.name}")
+    spark.stop()
 
 
 if __name__ == "__main__":

@@ -12,9 +12,11 @@ Scale notes (100 TB discipline):
 - Label propagation converges in O(max component diameter) rounds;
   near-dup graphs are overwhelmingly tiny star/clique components, so
   3-5 rounds are typical regardless of corpus size.
-- ``localCheckpoint`` truncates the lineage each round — without it the
-  plan doubles per iteration and the driver OOMs on plan bytes long
-  before data is a problem.
+- Each round is checkpointed (``ops.relational.checkpoint``), which
+  truncates the lineage — without it the plan doubles per iteration and
+  the driver OOMs on plan bytes long before data is a problem — and the
+  previous round is freed once the new one is stored, so an op leaves
+  pinned only what its returned plan reads.
 - Each round shuffles |edges| + |nodes| rows on node id; no
   driver-side collection of labels ever happens.
 
@@ -26,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from pipetree_spark.ops.relational import checkpoint, release
 
 
 def connected_components(
@@ -107,12 +111,11 @@ def connected_components(
     # dropDuplicates AFTER the repartition: hashpartitioning(v)
     # satisfies ClusteredDistribution(u, v), so the dedup aggregation
     # adds no exchange of its own (plan: 1 exchange, was 2).
-    sym = sym.repartition("v").dropDuplicates(["u", "v"]).localCheckpoint(eager=True)
+    sym = checkpoint(sym.repartition("v").dropDuplicates(["u", "v"]))
 
     own_sql = sym.schema["u"].dataType.simpleString()
 
-    labels = None
-    converged = False
+    labels = ck = None
     for it in range(max_iter):
         # candidate label for u: min over (own label, neighbors' labels).
         # Own rows carry their label in __own, neighbor rows carry null
@@ -161,18 +164,20 @@ def connected_components(
         # min beat the old one. On the final round this IS the fixpoint
         # assertion. (sum over an empty frame observes NULL → 0.)
         obs = Observation()
-        new_labels = new_labels.observe(
-            obs, F.expr("sum(cast((component < __own) as int)) AS changed")
-        ).localCheckpoint(eager=True)
-        labels = new_labels.drop("__own")
+        ck = checkpoint(
+            new_labels.observe(obs, F.expr("sum(cast((component < __own) as int)) AS changed")),
+            replaces=ck,
+        )
+        labels = ck.drop("__own")
         if not obs.get["changed"]:
-            converged = True
             break
-    if not converged:
+    else:
+        release(*[f for f in (sym, ck) if f is not None])
         raise RuntimeError(
             f"connected_components did not converge in max_iter={max_iter} rounds "
             "(component diameter exceeds max_iter); raise max_iter"
         )
+    release(sym)
     return labels.select(F.col("u").alias("node"), "component")
 
 
@@ -201,7 +206,7 @@ def pagerank_exact(
     (the rank side joins src via the pre-partitioned edge checkpoint —
     the CC trick above); the dangling total rides the round checkpoint
     as an observe metric and re-enters as a driver literal; ranks
-    localCheckpoint per round to cut lineage. O(iters) rounds, no
+    are checkpointed per round to cut lineage. O(iters) rounds, no
     driver-side data beyond the node count. Returns (node, rank).
 
     r15 round-body re-plan (guide §2.3/§2.4): the dangling mass used to
@@ -220,24 +225,20 @@ def pagerank_exact(
     # partitioned edge frame, and the dangling flag all derive from it,
     # and without the cut each would re-run the caller's (possibly
     # fact-join-sized) edge derivation from scratch
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
+    e = checkpoint(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct())
+    nodes = checkpoint(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n_total = nodes.count()
     if n_total == 0:
+        release(e)
         return nodes.withColumn("rank", F.lit(0).cast("long"))
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
     # degree rides the edge checkpoint; partition by src so each round's
     # rank join exchanges only the (|nodes|-sized) rank side
-    ed = e.join(deg, "src").repartition("src").localCheckpoint(eager=True)
+    ed = checkpoint(e.join(deg, "src").repartition("src"))
 
     teleport = (15 * scale) // (100 * n_total)
     # rank frame carries (node, rank, __dang): a node is dangling iff it
@@ -258,7 +259,7 @@ def pagerank_exact(
     # NULL → 0).
     _dang_sum = F.sum(F.when(F.col("__dang"), F.col("rank"))).alias("__dang_tot")
     obs = Observation()
-    ranks = (
+    ranks = checkpoint(
         nodes.join(deg.select(F.col("src").alias("node"), "deg"), "node", "left")
         .select(
             "node",
@@ -266,7 +267,6 @@ def pagerank_exact(
             F.col("deg").isNull().alias("__dang"),
         )
         .observe(obs, _dang_sum)
-        .localCheckpoint(eager=True)
     )
     for _ in range(iters):
         dang_share = (obs.get["__dang_tot"] or 0) // n_total
@@ -277,7 +277,7 @@ def pagerank_exact(
         ).select("dst", F.expr("rank div deg").alias("__c"))
         inflow = contrib.groupBy("dst").agg(F.sum("__c").alias("__inflow"))
         obs = Observation()
-        ranks = (
+        ranks = checkpoint(
             ranks.select("node", "__dang")
             .join(inflow.withColumnRenamed("dst", "node"), "node", "left")
             .select(
@@ -291,9 +291,10 @@ def pagerank_exact(
                 ).cast("long").alias("rank"),
                 "__dang",
             )
-            .observe(obs, _dang_sum)
-            .localCheckpoint(eager=True)
+            .observe(obs, _dang_sum),
+            replaces=ranks,
         )
+    release(e, nodes, ed)
     return ranks.select("node", "rank")
 
 
@@ -319,14 +320,13 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     edge list is localCheckpoint'd once since the wedge self-join and
     the closing-edge probe both reuse it.
     """
-    e = (
+    e = checkpoint(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
             F.greatest(F.col(src), F.col(dst)).alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = (
         e.select(F.col("u").alias("node"))
@@ -338,15 +338,15 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     # break by id, and ids are distinct, so the order is total
     du, dv = F.col("du"), F.col("dv")
     u_first = (du < dv) | ((du == dv) & (F.col("u") < F.col("v")))
-    oriented = (
+    oriented = checkpoint(
         e.join(deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u")
         .join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
         .select(
             F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
             F.when(u_first, dv).otherwise(du).alias("dt"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        replaces=e,
     )
     o1 = oriented.select(F.col("s"), F.col("t").alias("b"), F.col("dt").alias("db"))
     o2 = oriented.select(F.col("s"), F.col("t").alias("c"), F.col("dt").alias("dc"))
@@ -385,24 +385,22 @@ def bfs_khop(
     Scale: per round ONE shuffle of the frontier joined against the
     symmetrized edge list (pre-partitioned on the join key once, the
     CC/PageRank trick), state is (node, dist) — never materializes
-    paths. k rounds total, localCheckpoint per round to cut lineage.
+    paths. k rounds total, each checkpointed to cut lineage.
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    sym = (
+    sym = checkpoint(
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
         .repartition("u")
-        .localCheckpoint(eager=True)
     )
-    dist = (
+    dist = checkpoint(
         sources.select(F.col(sources.columns[0]).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0))
-        .localCheckpoint(eager=True)
     )
     for _ in range(k):
         reached = (
@@ -410,12 +408,13 @@ def bfs_khop(
             .join(sym, "u")
             .select(F.col("v").alias("node"), (F.col("dist") + 1).alias("dist"))
         )
-        dist = (
+        dist = checkpoint(
             dist.unionByName(reached)
             .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("dist").alias("dist")),
+            replaces=dist,
         )
+    release(sym)
     return dist
 
 
@@ -449,18 +448,16 @@ def sssp_khop(
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
     )
-    sym = (
+    sym = checkpoint(
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
         .repartition("u")
-        .localCheckpoint(eager=True)
     )
-    dist = (
+    dist = checkpoint(
         sources.select(F.col(sources.columns[0]).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(k):
         relaxed = (
@@ -468,10 +465,11 @@ def sssp_khop(
             .join(sym, "u")
             .select(F.col("v").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
         )
-        dist = (
+        dist = checkpoint(
             dist.unionByName(relaxed)
             .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("dist").alias("dist")),
+            replaces=dist,
         )
+    release(sym)
     return dist

@@ -329,8 +329,7 @@ def stored_bytes(df: DataFrame) -> int | None:
     Returns None when the backing RDD cannot be found (callers treat
     that as too-big)."""
     try:
-        jrdd = df._jdf.queryExecution().analyzed().rdd()
-        rid = jrdd.id()
+        rid = _checkpoint_rdd(df).id()
         for info in df.sparkSession._jsc.sc().getRDDStorageInfo():
             if info.id() == rid:
                 return int(info.memSize()) + int(info.diskSize())
@@ -354,14 +353,46 @@ def broadcast_if_small(
     return df
 
 
+def _checkpoint_rdd(df: DataFrame):
+    """The pinned RDD behind a checkpointed frame's analyzed ``LogicalRDD``;
+    ValueError for any other frame (a projection of one, a released one)."""
+    plan = df._jdf.queryExecution().analyzed()
+    rdd = plan.rdd() if plan.getClass().getSimpleName() == "LogicalRDD" else None
+    if rdd is None or not rdd.getStorageLevel().useDisk():
+        raise ValueError(f"not a pinned checkpoint: {plan.nodeName()}")
+    return rdd
+
+
+def checkpoint(df: DataFrame, *, eager: bool = True, replaces: DataFrame | None = None) -> DataFrame:
+    """``df.localCheckpoint(eager)``, the engine's one call site. ``replaces``
+    (a checkpoint ``df`` is computed from, e.g. a loop's previous round) is
+    released once ``df`` is stored; a lazy checkpoint still reads its
+    predecessor until its first action, so that raises with ``eager=False``."""
+    if replaces is not None and not eager:
+        raise ValueError("checkpoint(replaces=...) needs eager=True")
+    out = df.localCheckpoint(eager=eager)
+    if replaces is not None:
+        release(replaces)
+    return out
+
+
+def release(*frames: DataFrame) -> None:
+    """Free checkpointed frames' storage now (``Dataset.unpersist()`` cannot
+    reach it); raises before freeing any if one is not a pinned checkpoint."""
+    for rdd in [_checkpoint_rdd(df) for df in frames]:
+        rdd.unpersist(False)
+
+
 @contextmanager
 def checkpoint_scope(spark: SparkSession) -> Iterator[None]:
     """Free, on exit, every RDD pinned on the executors since entry —
     the storage ``localCheckpoint`` pins outside the SQL CacheManager,
     where ``Dataset.unpersist()`` cannot reach it. Spark lists every
     pinned RDD in ``getPersistentRDDs()``, so the scope diffs that map's
-    ids instead of registering checkpoints one by one. Open it where one
-    caller owns both a frame's construction and its last action; frames
+    ids instead of registering checkpoints one by one. It is for callers
+    that own both a frame's construction and its last action (tools,
+    tests, the CLI); ops free their own dead rounds with :func:`release`
+    and keep pinned only what their returned plan reads. Frames
     checkpointed inside cannot be recomputed after it closes.
 
     The scope must not overlap other work on the same SparkContext —

@@ -313,6 +313,7 @@ def incremental_dedup_batch(
     from pyspark.sql.utils import AnalysisException
 
     from pipetree_spark.ops import text as TX
+    from pipetree_spark.ops.relational import checkpoint, release
 
     spark = batch.sparkSession
     try:
@@ -343,12 +344,11 @@ def incremental_dedup_batch(
     # last as the commit point — see the crash analysis above), and
     # this batch's pinned blocks are freed before returning so a
     # long-lived stream's executor storage stays bounded. Only THIS
-    # frame's RDD is unpersisted (through its analyzed LogicalRDD;
-    # Dataset.unpersist() does not reach checkpoint state): the body
-    # runs on the stream's own thread, concurrently with the driver and
-    # other streams, so ops.relational.checkpoint_scope — which frees
-    # every RDD pinned on the SparkContext meanwhile — must not wrap it.
-    firsts = firsts.localCheckpoint(eager=False)
+    # frame is released: the body runs on the stream's own thread,
+    # concurrently with the driver and other streams, so
+    # ops.relational.checkpoint_scope — which frees every RDD pinned on
+    # the SparkContext meanwhile — must not wrap it.
+    firsts = checkpoint(firsts, eager=False)
     try:
         admitted = firsts.count()
         firsts.drop("__nh").write.mode("overwrite").parquet(
@@ -358,7 +358,7 @@ def incremental_dedup_batch(
             F.col("__nh").alias("nh"), F.lit(batch_id).cast("long").alias("batch_id")
         ).write.mode("append").parquet(ledger_dir)
     finally:
-        firsts._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        release(firsts)
     return admitted
 
 

@@ -1190,16 +1190,14 @@ def near_dup_pairs_lsh(
     exact-collapsed their input (e.g. q_dedup_cluster_lsh, which needs
     the rep map itself and would otherwise pay the normalize+md5
     corpus pass twice); default behavior is unchanged."""
-    from pipetree_spark.ops.relational import broadcast_if_small, fan_out
+    from pipetree_spark.ops.relational import broadcast_if_small, checkpoint, fan_out
 
     df = fan_out(df)
-    cand = (
+    cand = checkpoint(
         minhash_band_pairs(
             df, text_col, key_col, n, num_hashes, bands,
             collapse_exact=collapse_exact, max_bucket=max_bucket,
-        )
-        .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
+        ).select("id_a", "id_b")
     )
     ids = broadcast_if_small(
         cand.select(F.col("id_a").alias(key_col))
@@ -2531,6 +2529,7 @@ def bm25_scores(
     import warnings
 
     from pipetree_spark.exact import pin_zero
+    from pipetree_spark.ops.relational import checkpoint
 
     # dedupe (order-preserving): a repeated term must not double its
     # (doc, term) rows; empty list → empty frame, not an IndexError —
@@ -2571,13 +2570,16 @@ def bm25_scores(
     # be lazy but canonicalized plan matching could serve one bench
     # rep's result to the next — cross-run result reuse — so it is
     # banned here.)
-    docstats = toks.groupBy(key_col).agg(
-        F.count("*").alias("dl"),
-        *[
-            F.sum((F.col("word") == t).cast("long")).alias(f"__tf_{i}")
-            for i, t in enumerate(terms)
-        ],
-    ).localCheckpoint(eager=False)
+    docstats = checkpoint(
+        toks.groupBy(key_col).agg(
+            F.count("*").alias("dl"),
+            *[
+                F.sum((F.col("word") == t).cast("long")).alias(f"__tf_{i}")
+                for i, t in enumerate(terms)
+            ],
+        ),
+        eager=False,
+    )
     model = docstats.agg(
         F.count("*").alias("n_docs"),
         F.sum("dl").alias("sum_dl"),

@@ -21,7 +21,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pipetree_spark.ops.relational import topk_per_group
+from pipetree_spark.ops.relational import checkpoint, release, topk_per_group
 
 
 def sql_ident(name: str) -> str:
@@ -867,7 +867,7 @@ def blocked_cos_pairs_arrow(
         # it, and without the materialization the (possibly expensive)
         # membership-producing stage runs twice — measured 2× the whole
         # pair pass on the 200k stress.
-        src = memberships.localCheckpoint(eager=False)
+        src = checkpoint(memberships, eager=False)
         sizes = src.groupBy(block_col).agg(F.count("*").alias("__m"))
         src = (
             src.join(F.broadcast(sizes), block_col)
@@ -1060,11 +1060,7 @@ def semantic_dedup_ann(
     # job) and the final rep_comp join — so without a lineage cut it
     # evaluates twice per query. Lazy checkpoint: CC's first job
     # materializes it, the final join reads the stored blocks.
-    grp = (
-        nz.groupBy("embedding")
-        .agg(F.min("vec_id").alias("rep_id"))
-        .localCheckpoint(eager=False)
-    )
+    grp = checkpoint(nz.groupBy("embedding").agg(F.min("vec_id").alias("rep_id")), eager=False)
     if n_clusters == "auto" or n_probe == "auto":
         import math
 
@@ -1303,14 +1299,13 @@ def pca_power_portable(
         ).alias("__qv"),
     )
     dims = F.posexplode("__qv")
-    mu_row = (
+    mu_row = checkpoint(
         q.select(dims.alias("__i", "__x"))
         .groupBy("__i")
         .agg(F.floor(F.sum("__x").cast("double") / F.count("*")).cast("long").alias("__m"))
         .groupBy()
         .agg(F.array_sort(F.collect_list(F.struct("__i", "__m"))).alias("__s"))
         .select(F.transform("__s", lambda t: t["__m"]).alias("__mu"))
-        .localCheckpoint()
     )
     cq = q.crossJoin(F.broadcast(mu_row)).select(
         key_col, F.zip_with("__qv", "__mu", lambda x, m: x - m).alias("__cq")
@@ -1337,7 +1332,7 @@ def pca_power_portable(
             t = cq.crossJoin(F.broadcast(v_row)).select(
                 key_col, "__cq", dot_v(F.col("__v")).alias("__t")
             )
-        mt = t.agg(F.max(F.abs("__t")).alias("__mt")).localCheckpoint()
+        mt = checkpoint(t.agg(F.max(F.abs("__t")).alias("__mt")))
         s = t.crossJoin(F.broadcast(mt)).select(
             "__cq",
             F.floor(F.col("__t").cast("double") / F.col("__mt") * F.lit(float(rescale)))
@@ -1346,14 +1341,13 @@ def pca_power_portable(
         )
         # checkpoint the 64-row w — mw and the next iterate then derive
         # from materialized data instead of re-running the corpus pass
-        w = (
+        w = checkpoint(
             s.select(F.col("__sc"), F.posexplode("__cq").alias("__i", "__x"))
             .groupBy("__i")
             .agg(F.sum(F.col("__sc") * F.col("__x")).alias("__w"))
-            .localCheckpoint()
         )
         mw = w.agg(F.max(F.abs("__w")).alias("__mw"))
-        v_row = (
+        v_row = checkpoint(
             w.crossJoin(F.broadcast(mw))
             .select(
                 "__i",
@@ -1363,9 +1357,11 @@ def pca_power_portable(
             )
             .groupBy()
             .agg(F.array_sort(F.collect_list(F.struct("__i", "__vd"))).alias("__s"))
-            .select(F.transform("__s", lambda st: st["__vd"]).alias("__v"))
-            .localCheckpoint()
+            .select(F.transform("__s", lambda st: st["__vd"]).alias("__v")),
+            replaces=v_row,
         )
+        release(mt, w)
+    release(mu_row)
     absv = F.transform("__v", F.abs)
     mabs = F.array_max(absv)
     signed = F.when(

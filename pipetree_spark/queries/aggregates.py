@@ -1281,15 +1281,16 @@ def q_agg_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     and Bloom bitmap rows: persist them per day/segment and answer
     overlap queries without touching raw data again.
     """
+    from pipetree_spark.ops.relational import checkpoint
     from pipetree_spark.ops.sketch import kmv_estimate, kmv_sketch, kmv_union
 
     k = 256
     o = load_table(spark, sf_dir, "orders")
     ua = o.where(F.col("o_orderpriority") == "1-URGENT")
     ub = o.where(F.col("o_orderpriority") == "5-LOW")
-    ska = kmv_sketch(ua, "o_custkey", k).localCheckpoint(eager=True)
-    skb = kmv_sketch(ub, "o_custkey", k).localCheckpoint(eager=True)
-    sku = kmv_union(ska, skb, k).localCheckpoint(eager=True)
+    ska = checkpoint(kmv_sketch(ua, "o_custkey", k))
+    skb = checkpoint(kmv_sketch(ub, "o_custkey", k))
+    sku = checkpoint(kmv_union(ska, skb, k))
 
     def est(sk: DataFrame, name: str) -> DataFrame:
         return sk.agg(

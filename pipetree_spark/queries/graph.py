@@ -24,6 +24,7 @@ from pipetree_spark.ops.graph import (
     sssp_khop,
     triangle_counts,
 )
+from pipetree_spark.ops.relational import checkpoint
 from pipetree_spark.queries import declare
 
 _SCALE = 10**12
@@ -323,11 +324,10 @@ def q_graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     a, b = cp.alias("a"), cp.alias("b")
-    e = (
+    e = checkpoint(
         a.join(b, (F.col("a.p") == F.col("b.p")) & (F.col("a.c") < F.col("b.c")))
         .select(F.col("a.c").alias("u"), F.col("b.c").alias("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sym = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))

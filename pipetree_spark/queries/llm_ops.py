@@ -2559,7 +2559,7 @@ def q_dedup_cluster_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized rep map stays small — the same zero-job stored-bytes
     gate as the LSH verify prefilter)."""
     from pipetree_spark.ops.graph import connected_components
-    from pipetree_spark.ops.relational import broadcast_if_small
+    from pipetree_spark.ops.relational import broadcast_if_small, checkpoint
 
     d = load_table(spark, sf_dir, "documents")
     # flood discipline (r16 review): the rep selection must stay
@@ -2569,20 +2569,10 @@ def q_dedup_cluster_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # skew-split a window). The slim docs frame is checkpointed once
     # (ONE md5 pass), the rep groupBy partial-aggregates before its
     # exchange, and the enrich join back is AQE-skew-splittable.
-    docs = (
-        d.select("doc_id", "n_chars", TX.text_hash("text").alias("__nh"))
-        .localCheckpoint(eager=True)
-    )
+    docs = checkpoint(d.select("doc_id", "n_chars", TX.text_hash("text").alias("__nh")))
     reps = docs.groupBy("__nh").agg(F.min("doc_id").alias("rep_id"))
-    m = (
-        docs.join(reps, "__nh")
-        .select("doc_id", "n_chars", "rep_id")
-        .localCheckpoint(eager=True)
-    )
-    # m is materialized, so the md5 pass is done: free its pinned blocks
-    # now (through the analyzed LogicalRDD — Dataset.unpersist() does not
-    # reach checkpoint state) rather than at scope exit or a JVM GC
-    docs._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    # once m is stored the md5 pass is done: free its blocks now
+    m = checkpoint(docs.join(reps, "__nh").select("doc_id", "n_chars", "rep_id"), replaces=docs)
     # rep ids are a subset of the slim stored map; beyond the gate the
     # hint would gamble driver memory on a corpus-proportional set —
     # fall through and let AQE pick from runtime sizes

@@ -143,6 +143,20 @@ def test_scale_modes_run_at_toy_size(spark, sf_small, tmp_path):
     assert all(0 <= r["recall"] <= 1 for r in u["cap_matrix"])
 
 
+def test_sweep_reps_of_a_cached_query_start_cold():
+    """``cold`` removes a cached query's process-wide artifact root, and the
+    next call recreates an empty one, so each sweep rep walks cold."""
+    from pipetree_spark.cache import process_cache_root
+
+    root = Path(process_cache_root("curation_full_artifacts"))
+    (root / "hit").write_text("x")
+    scale_stress.cold("q_graph_pagerank")  # no cache root: left alone
+    assert (root / "hit").exists()
+    scale_stress.cold("q_pipe_curation_full")
+    assert not root.exists()
+    assert not any(Path(process_cache_root("curation_full_artifacts")).iterdir())
+
+
 def test_stream_mode_restores_the_state_store_confs(spark, tmp_path):
     from pipetree_spark.ops.streaming import rocksdb_state_confs
 

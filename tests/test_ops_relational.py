@@ -494,3 +494,82 @@ def test_fan_out_floors_small_scans_and_noops_elsewhere(spark, tmp_path):
     # the parquet scan (PushedFilters), so eval-style branches stay cheap
     plan = fan_out(small).filter(F.col("id") < 5)._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in plan and "LessThan(id,5)" in plan
+
+
+# ---------------------------------------------------------------------------
+# checkpoint / release: iterative ops keep pinned only what their returned
+# plan reads. Pins are compared by RDD id, so a GC that frees an unrelated
+# older frame mid-test cannot fail these.
+# ---------------------------------------------------------------------------
+
+
+def _pinned(spark) -> set:
+    return set(spark._jsc.getPersistentRDDs().keys())
+
+
+def _path_edges(spark, n: int = 6):
+    return spark.createDataFrame([(i, i + 1) for i in range(1, n)], "src long, dst long")
+
+
+@pytest.mark.parametrize("op", ["pagerank_exact", "bfs_khop"])
+def test_iterative_op_leaves_one_round_pinned(spark, op):
+    """A 3-round loop leaves exactly one new pinned RDD (its last round),
+    and the returned frame still collects the rows of a scoped run."""
+    from pipetree_spark.ops import graph
+    from pipetree_spark.ops.relational import checkpoint_scope
+
+    edges = _path_edges(spark)
+    sources = spark.createDataFrame([(1,)], "node long")
+
+    def run():
+        if op == "pagerank_exact":
+            return graph.pagerank_exact(edges, iters=3)
+        return graph.bfs_khop(edges, sources, k=3)
+
+    with checkpoint_scope(spark):
+        expected = sorted(run().collect())
+    with checkpoint_scope(spark):  # frees the one pin the op keeps
+        before = _pinned(spark)
+        out = run()
+        assert len(_pinned(spark) - before) == 1
+        assert sorted(out.collect()) == expected
+    assert expected
+
+
+def test_connected_components_frees_its_rounds_when_it_does_not_converge(spark):
+    from pipetree_spark.ops.graph import connected_components
+
+    before = _pinned(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(_path_edges(spark, 4), max_iter=1)
+    assert not _pinned(spark) - before
+
+
+def test_release_refuses_a_frame_that_is_not_a_pinned_checkpoint(spark):
+    from pipetree_spark.ops.relational import checkpoint, release
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "x long, y string")
+    before = _pinned(spark)
+    ck = checkpoint(df)
+    for bad in (ck.drop("y"), df):
+        with pytest.raises(ValueError, match="not a pinned checkpoint"):
+            release(ck, bad)  # checked before anything is freed
+    assert len(_pinned(spark) - before) == 1
+    release(ck)
+    assert not _pinned(spark) - before
+    with pytest.raises(ValueError, match="not a pinned checkpoint"):
+        release(ck)  # a second release would free nothing
+
+
+def test_checkpoint_replaces_needs_an_eager_checkpoint(spark):
+    from pipetree_spark.ops.relational import checkpoint, release
+
+    df = spark.createDataFrame([(1,), (2,)], "x long")
+    prev = checkpoint(df)
+    with pytest.raises(ValueError, match="eager"):
+        checkpoint(df.selectExpr("x + 1 AS x"), eager=False, replaces=prev)
+    nxt = checkpoint(prev.selectExpr("x + 1 AS x"), replaces=prev)
+    assert sorted(r.x for r in nxt.collect()) == [2, 3]
+    with pytest.raises(ValueError):
+        release(prev)  # already freed by replaces=
+    release(nxt)

@@ -543,6 +543,64 @@ def test_negzero_lint_catches_planted_emitter(tmp_path):
         sys.path.remove(str(tools))
 
 
+# ---------------------------------------------------------------------------
+# Checkpoint lint: every localCheckpoint, and every reach into a checkpoint's
+# RDD through its analyzed plan, goes through ops/relational.py (checkpoint,
+# release, stored_bytes), so one module owns when storage is pinned and freed.
+# ---------------------------------------------------------------------------
+
+_CHECKPOINT_CALLS = (".localCheckpoint(", "analyzed().rdd()")
+
+
+def _checkpoint_call_sites(root) -> list[tuple[str, str, int]]:
+    """(relpath, call, count) for each checkpoint call in the CODE of the
+    .py files under ``root``: only name and operator tokens are kept, so
+    comments, docstrings and other string literals never match."""
+    import io
+    import tokenize
+    from pathlib import Path
+
+    hits = []
+    for path in sorted(Path(root).rglob("*.py")):
+        toks = tokenize.generate_tokens(io.StringIO(path.read_text()).readline)
+        code = "".join(t.string for t in toks if t.type in (tokenize.NAME, tokenize.OP))
+        rel = path.relative_to(root).as_posix()
+        hits += [(rel, c, code.count(c)) for c in _CHECKPOINT_CALLS if c in code]
+    return hits
+
+
+def test_checkpoint_calls_only_in_ops_relational():
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    pkg = _checkpoint_call_sites(root / "pipetree_spark")
+    assert {h[0] for h in pkg} == {"ops/relational.py"}  # the helper is seen, nothing else
+    assert _checkpoint_call_sites(root / "tools") == []
+
+
+def test_checkpoint_lint_catches_planted_call(tmp_path):
+    """The lint must FAIL on planted calls in code and ignore the same text
+    in comments and docstrings."""
+    (tmp_path / "planted.py").write_text(
+        "def q_planted(df):\n"
+        '    """Pins with df.localCheckpoint(eager=True); see analyzed().rdd()."""\n'
+        "    # df.localCheckpoint(eager=True)\n"
+        "    out = df.localCheckpoint (eager=True)\n"
+        "    out._jdf.queryExecution().analyzed()\\\n"
+        "        .rdd().unpersist(False)\n"
+        "    return out\n"
+    )
+    (tmp_path / "clean.py").write_text(
+        '"""A docstring may name df.localCheckpoint( and analyzed().rdd()."""\n'
+        "# so may a comment: df.localCheckpoint(eager=True)\n"
+        "MSG = 'analyzed().rdd()'\n"
+    )
+    assert _checkpoint_call_sites(tmp_path) == [
+        ("planted.py", ".localCheckpoint(", 1),
+        ("planted.py", "analyzed().rdd()", 1),
+    ]
+
+
 def test_negzero_lint_string_channel(tmp_path):
     """r12 (r11-advice fix): round() inside F.expr/selectExpr/spark.sql
     STRING literals is linted too — integral casts and the '+ 0.0' twin

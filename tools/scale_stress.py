@@ -9,7 +9,8 @@ Usage: python tools/scale_stress.py [sweep|uvec|graph|stream|bpe]
   noop sink and takes one ``tools.measure.measure_once`` rep for the
   layer counters (jobs, stages, tasks, driver gap, executor run/CPU,
   shuffle bytes). Queries: HOT_SET, or any registry names given to
-  ``--only`` (which skips the ANN-recall and flood sections).
+  ``--only`` (which skips the ANN-recall and flood sections). A query in
+  CACHE_ROOTS starts every rep with its artifact cache removed.
 - ``uvec``: the auto-sized IVF quantizer on 20k and 200k UNIQUE jittered
   vectors (planted pair-recall, cell occupancy), then interleaved
   (no cap, cell_cap=4096) reps at 200k.
@@ -49,12 +50,13 @@ sys.path.insert(0, str(REPO))
 from pyspark.sql import functions as F  # noqa: E402
 
 from bench import _cpu_totals  # noqa: E402
+from pipetree_spark.cache import process_cache_root  # noqa: E402
 from pipetree_spark.catalog import DEFAULT_SF_DIR, TABLES, load_table  # noqa: E402
 from pipetree_spark.ops import streaming as ST  # noqa: E402
 from pipetree_spark.ops import text as TX  # noqa: E402
 from pipetree_spark.ops import vector as VX  # noqa: E402
 from pipetree_spark.ops.graph import bfs_khop, sssp_khop, triangle_counts  # noqa: E402
-from pipetree_spark.ops.relational import checkpoint_scope  # noqa: E402
+from pipetree_spark.ops.relational import checkpoint, checkpoint_scope  # noqa: E402
 from pipetree_spark.queries import load_registry  # noqa: E402
 from pipetree_spark.session import default_parallelism, get_spark  # noqa: E402
 from tools.measure import COUNTERS, measure_once  # noqa: E402
@@ -74,6 +76,10 @@ HOT_SET = [
     "q_dedup_semantic_ann", "q_vec_ann_pq_ivf", "q_dedup_cc",
     "q_graph_pagerank", "q_pipe_curation_full",
 ]
+#: Queries that keep an artifact cache in a process-wide root: ``cold``
+#: removes it before each timed or traced rep (the query recreates it), so
+#: every rep walks the stages cold instead of reading the warm-up's hits.
+CACHE_ROOTS = {"q_pipe_curation_full": "curation_full_artifacts"}
 FLOOD_COPIES = 100_000
 UVEC_SIZES = ((2000, 10), (2000, 100))  # (sf0.1 base vectors, jittered copies each)
 CAP_REPS = 2
@@ -95,12 +101,19 @@ REPLICATED = {
 }
 
 
-def best_of(spark, build) -> float:
+def cold(name: str) -> None:
+    if name in CACHE_ROOTS:
+        shutil.rmtree(process_cache_root(CACHE_ROOTS[name]), ignore_errors=True)
+
+
+def best_of(spark, build, reset=lambda: None) -> float:
     """Warm-up, then the best of 2 timed runs of ``build()`` written to
     the noop sink: the full plan (``.count()`` prunes aggregates), no
-    rows shipped to the driver. Each run frees its checkpoints."""
+    rows shipped to the driver. ``reset()`` runs before each run's clock
+    starts. Each run frees its checkpoints."""
     best = float("inf")
     for rep in range(3):
+        reset()
         with checkpoint_scope(spark):
             t0 = time.perf_counter()
             build().write.format("noop").mode("overwrite").save()
@@ -166,7 +179,8 @@ def sweep(spark, names: list[str], extras: bool = True) -> dict:
     for name in names:
         fn, row = registry[name].fn, rows.setdefault(name, {})
         for label, sf_dir in (("1x", SRC), ("10x", DST)):
-            best = best_of(spark, lambda: fn(spark, sf_dir))
+            best = best_of(spark, lambda: fn(spark, sf_dir), lambda: cold(name))
+            cold(name)
             _, counts = measure_once(spark, fn, sf_dir, name)
             row[label] = {"best_s": best, **{k: counts.get(k, 0) for k in ("wall_s", *COUNTERS)}}
         row["ratio"] = row["10x"]["best_s"] / row["1x"]["best_s"]
@@ -316,7 +330,7 @@ def jittered_corpus(spark, n_bases: int, copies: int, src: str = SRC):
         V = (B[b][None, :] + rng.normal(0.0, 0.01, size=(copies, B.shape[1]))).astype(np.float32)
         rows += [(b * copies + c, [float(x) for x in V[c]]) for c in range(copies)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").repartition(32)
-    return df.localCheckpoint(eager=True)
+    return checkpoint(df)
 
 
 def uvec_dedup(df, cents, n: int, copies: int, cell_cap: int | None) -> tuple[float, float]:
@@ -325,10 +339,10 @@ def uvec_dedup(df, cents, n: int, copies: int, cell_cap: int | None) -> tuple[fl
     planted pair-recall). Recall = Σ C(n_g, 2) / (bases · C(copies, 2))
     over (planted base, component) groups, computed in Spark."""
     t0 = time.perf_counter()
-    res = VX.semantic_dedup_ann(
+    res = checkpoint(VX.semantic_dedup_ann(
         df, threshold=0.9, n_clusters="auto", n_probe="auto",
         centroids=cents, assign_via="arrow", exact_pairs=False, cell_cap=cell_cap,
-    ).localCheckpoint(eager=True)
+    ))
     assert res.count() == n
     secs = time.perf_counter() - t0
     co = res.groupBy((F.col("vec_id") / copies).cast("long").alias("planted"), "component").count()
@@ -350,8 +364,8 @@ def uvec(spark, sizes=UVEC_SIZES, cap_reps: int = CAP_REPS, src: str = SRC) -> d
             df = jittered_corpus(spark, n_bases, copies, src)
             n = df.count()
             t0 = time.perf_counter()
-            cents = VX.ivf_train(df.sample(0.05, seed=3), "embedding", "vec_id",
-                                 n_clusters=max(8, int(n ** 0.5) + 1), iters=2).localCheckpoint(eager=True)
+            cents = checkpoint(VX.ivf_train(df.sample(0.05, seed=3), "embedding", "vec_id",
+                                            n_clusters=max(8, int(n ** 0.5) + 1), iters=2))
             t_train = time.perf_counter() - t0
             t_dedup, recall = uvec_dedup(df, cents, n, copies, 4096)
             k = max(8, math.isqrt(max(n - 1, 0)) + 1)
@@ -381,13 +395,11 @@ def random_edges(spark, n_nodes: int, degree: int):
     """m = n_nodes·degree/2 undirected edges with endpoints from xxhash64
     of the edge index: deterministic and uniform, self-loops and dups
     left in (the ops canonicalize)."""
-    return (
-        spark.range(n_nodes * degree // 2)
-        .select(
+    return checkpoint(
+        spark.range(n_nodes * degree // 2).select(
             F.pmod(F.xxhash64(F.col("id") * 2 + 1), F.lit(n_nodes)).alias("src"),
             F.pmod(F.xxhash64(F.col("id") * 2 + 2), F.lit(n_nodes)).alias("dst"),
         )
-        .localCheckpoint(eager=True)
     )
 
 

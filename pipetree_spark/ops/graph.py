@@ -150,11 +150,16 @@ def connected_components(
             )
         if jump_after is not None and it >= jump_after:
             # pointer jump: label ← label[label], fused into this
-            # round's plan — the aggregate feeds both join sides, AQE
-            # materializes its exchange once (ReusedExchange). Every
-            # component value is itself a labeled node, so the inner
-            # join is total. Labels only decrease, so __own comparisons
-            # below remain valid.
+            # round's plan — the round's subtree feeds both join sides.
+            # Every component value is itself a labeled node, so the
+            # inner join is total. Labels only decrease, so __own
+            # comparisons below remain valid. The explicit non-null u
+            # (the lookup side's inferred join filter) gives both copies
+            # identical leaf scans, so AQE reuses their exchanges and the
+            # labels broadcast; without it the copies re-planned apart
+            # and whichever leaf shuffle finished first picked a build
+            # side, adding one broadcast job in about half the runs.
+            new_labels = new_labels.filter("u IS NOT NULL")
             lk = new_labels.selectExpr("u AS __cu", "component AS __cc")
             new_labels = new_labels.join(lk, F.expr("component = __cu")).selectExpr(
                 "u", "__cc AS component", "__own"

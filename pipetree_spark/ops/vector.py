@@ -1,8 +1,10 @@
 """Vector / similarity-search operators (SURVEY §2.12).
 
 Embeddings are ``array<float>`` columns. All math casts to double
-per-element first (float32 arithmetic differs across engines) and uses
-higher-order functions — JVM-side, no Python in the hot path.
+per-element first (float32 arithmetic differs across engines). Scoring,
+quantization and probing are higher-order functions evaluated JVM-side;
+the one Python stage is the within-cell pair pass of the semantic
+dedups (:func:`blocked_cos_pairs_arrow`, numpy over Arrow batches).
 
 Float policy: these are short (64-element) unit-scale sums — absolute
 drift ~1e-15, so round(4) outputs are flip-safe (unlike money sums,
@@ -99,6 +101,49 @@ def l2_normalize(a: Column, norm: Column | None = None) -> Column:
     return F.transform(a, lambda x: _d(x) / n)
 
 
+def _normed(
+    df: DataFrame, key: str, vec_col: str, vec_as: str, norm_as: str, *extra: Column
+) -> DataFrame:
+    """``(key, vec AS vec_as, ‖vec‖ AS norm_as, *extra)``. Norms are
+    per-ROW: computed before any pair join, the per-pair work is one dot
+    product, not dot + two 64-element norm reductions."""
+    return df.select(
+        F.col(key), F.col(vec_col).alias(vec_as), l2_norm(F.col(vec_col)).alias(norm_as), *extra
+    )
+
+
+def _rounded_cos_topk(
+    pair_with,
+    corpus: DataFrame,
+    k: int,
+    query_key: str,
+    corpus_key: str,
+    vec_col: str,
+    *corpus_extra: Column,
+) -> DataFrame:
+    """Top-k by rounded cosine — the float policy every exact-scoring
+    vector op shares (q_vec_cosine_knn's ROUND(·,4), pinned to +0.0,
+    corpus-key tie-break, so the result set is deterministic under float
+    ties). ``pair_with(c)`` joins the query side, which carries
+    ``(query_key, __mv, __qn)``, to the corpus prep ``c = (corpus_key,
+    __cv, __cn, *corpus_extra)``; the join shape stays the caller's.
+    dot/(qn·cn) keeps the oracles' exact expression tree (bit-stable)."""
+    pairs = pair_with(_normed(corpus, corpus_key, vec_col, "__cv", "__cn", *corpus_extra))
+    scored = pairs.select(
+        query_key,
+        corpus_key,
+        pin_zero(F.round(
+            safe_div(dot(F.col("__mv"), F.col("__cv")), F.col("__qn") * F.col("__cn")), 4
+        )).alias("cos_sim"),
+    )
+    return topk_per_group(
+        scored,
+        partition_by=[query_key],
+        order_by=[F.col("cos_sim").desc(), F.col(corpus_key).asc()],
+        k=k,
+    )
+
+
 def knn_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
@@ -106,7 +151,6 @@ def knn_bruteforce(
     query_key: str = "query_id",
     corpus_key: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 4,
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query vector.
 
@@ -115,28 +159,10 @@ def knn_bruteforce(
     *rounded* cosine with the corpus key as tie-break so the result set
     is deterministic under float ties (SURVEY §2.12).
     """
-    # Norms are per-ROW: compute them before the pair join so the per-pair
-    # work is one dot product, not dot + two 64-element norm reductions.
-    # dot/(qn·cn) keeps the oracle's exact expression tree (bit-stable).
-    q = queries.select(
-        F.col(query_key), F.col(vec_col).alias("__qv"), l2_norm(F.col(vec_col)).alias("__qn")
-    )
-    c = corpus.select(
-        F.col(corpus_key), F.col(vec_col).alias("__cv"), l2_norm(F.col(vec_col)).alias("__cn")
-    )
-    pairs = c.join(F.broadcast(q), F.col(query_key) != F.col(corpus_key))
-    scored = pairs.select(
-        query_key,
-        corpus_key,
-        pin_zero(F.round(
-            safe_div(dot(F.col("__qv"), F.col("__cv")), F.col("__qn") * F.col("__cn")), round_digits
-        )).alias("cos_sim"),
-    )
-    return topk_per_group(
-        scored,
-        partition_by=[query_key],
-        order_by=[F.col("cos_sim").desc(), F.col(corpus_key).asc()],
-        k=k,
+    q = _normed(queries, query_key, vec_col, "__mv", "__qn")
+    return _rounded_cos_topk(
+        lambda c: c.join(F.broadcast(q), F.col(query_key) != F.col(corpus_key)),
+        corpus, k, query_key, corpus_key, vec_col,
     )
 
 
@@ -211,14 +237,12 @@ def lsh_bucket_ann(
     for r in range(1, multi_probe + 1):
         for bits in _it.combinations(range(n_planes), r):
             probe_masks.append(sum(1 << b for b in bits))
-    q = queries.select(
-        F.col(query_key),
-        F.col(vec_col).alias("__qv"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
+    q = _normed(
+        queries, query_key, vec_col, "__mv", "__qn",
         lsh_bucket(F.col(vec_col), planes).alias("__b0"),
     ).select(
         query_key,
-        "__qv",
+        "__mv",
         "__qn",
         # probed buckets are distinct masks ⇒ distinct buckets, and each
         # corpus vector lives in exactly one bucket ⇒ no duplicate pairs
@@ -226,89 +250,43 @@ def lsh_bucket_ann(
             F.array(*[F.col("__b0").bitwiseXOR(F.lit(m)) for m in probe_masks])
         ).alias("__b"),
     )
-    c = corpus.select(
-        F.col(corpus_key),
-        F.col(vec_col).alias("__cv"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
+    return _rounded_cos_topk(
+        lambda c: c.join(q, on="__b").filter(F.col(query_key) != F.col(corpus_key)),
+        corpus, k, query_key, corpus_key, vec_col,
         lsh_bucket(F.col(vec_col), planes).alias("__b"),
     )
-    pairs = c.join(q, on="__b").filter(F.col(query_key) != F.col(corpus_key))
-    scored = pairs.select(
-        query_key,
-        corpus_key,
-        pin_zero(F.round(
-            safe_div(dot(F.col("__qv"), F.col("__cv")), F.col("__qn") * F.col("__cn")), 4
-        )).alias("cos_sim"),
-    )
-    return topk_per_group(
-        scored,
-        partition_by=[query_key],
-        order_by=[F.col("cos_sim").desc(), F.col(corpus_key).asc()],
-        k=k,
-    )
 
 
-def _centroid_frame(spark, rows) -> DataFrame:
-    """1-row LOCAL ``__cs`` centroid frame from driver-collected
-    ``(cid, cv)`` rows — the r15 opt-wave-2 model-state transport for
-    :func:`kmeans_portable_fit` (guide §2.4/§5). The values are
-    computed ENTIRELY by Spark aggregates; Python only ferries exact
-    longs (NULLs preserved), so the frame is bit-identical to the old
-    ``collect_list`` + ``localCheckpoint`` formulation it replaces —
-    minus the checkpoint job, the block-store round trip and the
-    corpus-lineage broadcast build every consumer used to pay. Every
-    consumer expression (array_min argmin, (d, cid) struct sort,
-    filter-by-cid) is order-insensitive; rows are sorted by cid only
-    so the frame itself is deterministic."""
+def _model_frame(spark, rows, col: str, **keys: str) -> DataFrame:
+    """1-row LOCAL model frame ``col: array<struct<*keys, cv:
+    array<bigint>>>`` from driver-collected rows carrying the ``keys``
+    fields (name=SQL type) and ``cv`` — the r15 opt-wave-2 model-state
+    transport for :func:`kmeans_portable_fit` (``__cs``, keys ``cid``)
+    and :func:`pq_fit_portable` (``__cb``, keys ``sub, cid``); guide
+    §2.4/§5. The values are computed ENTIRELY by Spark aggregates;
+    Python only ferries exact longs (NULLs preserved), so the frame is
+    bit-identical to the old ``collect_list`` + ``localCheckpoint``
+    formulation it replaces — minus the checkpoint job, the block-store
+    round trip and the corpus-lineage broadcast build every consumer
+    used to pay. The frame is still RDD-backed, so each query execution
+    that broadcasts it runs one 1-task collect job. Every consumer
+    (array_min argmin, (d, cid) struct sort, filter by key) is
+    order-insensitive; entries are sorted by the keys only so the frame
+    itself is deterministic."""
     data = sorted(
         (
-            (
-                int(r["cid"]),
-                None
-                if r["cv"] is None
-                else [None if x is None else int(x) for x in r["cv"]],
-            )
+            {key: int(r[key]) for key in keys}
+            | {"cv": None if r["cv"] is None else [None if x is None else int(x) for x in r["cv"]]}
             for r in rows
         ),
-        key=lambda t: t[0],
+        key=lambda d: tuple(d[key] for key in keys),
     )
     # ONE slice: the default parallelize fans 1 row into
     # defaultParallelism empty partitions, so every broadcast build of
     # the model frame would dispatch a core-count of no-op tasks
-    rdd = spark.sparkContext.parallelize(
-        [([{"cid": c, "cv": v} for c, v in data],)], 1
-    )
-    return spark.createDataFrame(
-        rdd, schema="__cs array<struct<cid:bigint,cv:array<bigint>>>"
-    )
-
-
-def _codebook_frame(spark, rows) -> DataFrame:
-    """1-row LOCAL ``__cb`` codebook frame from driver-collected
-    ``(sub, cid, cv)`` rows — :func:`_centroid_frame`'s twin for
-    :func:`pq_fit_portable` (same exact-transport contract; consumers
-    filter by unique (sub, cid), so row order is free and pinned to
-    (sub, cid) for determinism)."""
-    data = sorted(
-        (
-            (
-                int(r["sub"]),
-                int(r["cid"]),
-                None
-                if r["cv"] is None
-                else [None if x is None else int(x) for x in r["cv"]],
-            )
-            for r in rows
-        ),
-        key=lambda t: (t[0], t[1]),
-    )
-    # one slice — see _centroid_frame
-    rdd = spark.sparkContext.parallelize(
-        [([{"sub": s, "cid": c, "cv": v} for s, c, v in data],)], 1
-    )
-    return spark.createDataFrame(
-        rdd, schema="__cb array<struct<sub:int,cid:bigint,cv:array<bigint>>>"
-    )
+    rdd = spark.sparkContext.parallelize([(data,)], 1)
+    fields = ",".join(f"{key}:{t}" for key, t in keys.items())
+    return spark.createDataFrame(rdd, schema=f"{col} array<struct<{fields},cv:array<bigint>>>")
 
 
 def kmeans_portable(
@@ -423,7 +401,7 @@ def kmeans_portable_fit(
 
     # Model-state transport (r15 opt-wave-2, guide §2.4/§5): each k-row
     # centroid state is COLLECTED and re-enters as a LOCAL 1-row frame
-    # (:func:`_centroid_frame`) instead of the r9→r15 ``collect_list``
+    # (:func:`_model_frame`) instead of the r9→r15 ``collect_list``
     # + ``localCheckpoint(eager=False)`` formulation. The values are
     # unchanged (same Spark aggregates; Python only ferries exact
     # longs), downstream plans still see a leaf — but the leaf is now
@@ -450,9 +428,10 @@ def kmeans_portable_fit(
         q.orderBy(key_col).limit(k).select(key_col, "__qv").collect(),
         key=lambda r: r[0],
     )
-    cents = _centroid_frame(
+    cents = _model_frame(
         spark,
         [{"cid": i, "cv": r["__qv"]} for i, r in enumerate(init_rows)],
+        "__cs", cid="bigint",
     )
 
     a = assign(cents)
@@ -484,12 +463,13 @@ def kmeans_portable_fit(
                 "transform(__sums,"
                 " s -> cast(floor(cast(s as double) / __n) as bigint)) AS cv"
             )
-            cents = _centroid_frame(
+            cents = _model_frame(
                 spark,
                 a.groupBy("cluster")
                 .agg(F.count(F.lit(1)).alias("__n"), sums)
                 .select(F.col("cluster").alias("cid"), cv)
                 .collect(),
+                "__cs", cid="bigint",
             )
             a = assign(cents)
             continue
@@ -500,7 +480,7 @@ def kmeans_portable_fit(
                 F.floor(F.sum("__x").cast("double") / F.count("*")).cast("long").alias("__cd")
             )
         )
-        cents = _centroid_frame(
+        cents = _model_frame(
             spark,
             comp.groupBy("cluster")
             .agg(F.array_sort(F.collect_list(F.struct("__i", "__cd"))).alias("__s"))
@@ -509,6 +489,7 @@ def kmeans_portable_fit(
                 F.transform("__s", lambda t: t["__cd"]).alias("cv"),
             )
             .collect(),
+            "__cs", cid="bigint",
         )
         a = assign(cents)
     return a, cents
@@ -540,70 +521,6 @@ def ivf_train(
     return cents
 
 
-def _multiprobe_assign_arrow(
-    tgt: DataFrame,
-    cents_row: list,
-    n_probe: int,
-    key_col: str,
-    vec_col: str,
-    scale: int,
-    carry_cols: tuple[str, ...],
-) -> DataFrame:
-    """Arrow twin of the HOF multi-probe assignment: numpy int64
-    distance matrix against the collected centroid array. All math is
-    exact integer (quantization is the identical IEEE floor(x·scale);
-    int64 sums of squared diffs cannot overflow at scale=2²⁰, dim 64),
-    and the (d, cid) tie rule is reproduced by argsorting d·k + cid —
-    bit-identical probes to the expression twin, pinned by pytest. For
-    k ≳ 100 the interpreted per-row k×dim HOF fold dominates the
-    expression path; this twin keeps assignment O(n·k·d) in BLAS-speed
-    numpy (the FAISS shape)."""
-    import pandas as pd
-
-    C = np.array([list(s["cv"]) for s in sorted(cents_row, key=lambda s: s["cid"])],
-                 dtype=np.int64)
-    cids = np.array([s["cid"] for s in sorted(cents_row, key=lambda s: s["cid"])],
-                    dtype=np.int64)
-    k = len(cids)
-    out_schema = ", ".join(
-        [f"{sql_ident(key_col)} {tgt.schema[key_col].dataType.simpleString()}"]
-        + [f"{sql_ident(c)} {tgt.schema[c].dataType.simpleString()}" for c in carry_cols]
-        + ["cluster long"]
-    )
-
-    def assign_batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy())
-            Q = np.floor(V.astype(np.float64) * float(scale)).astype(np.int64)
-            # ||q-c||² = q·q - 2q·c + c·c, all exact int64
-            d2 = (
-                (Q * Q).sum(axis=1)[:, None]
-                - 2 * (Q @ C.T)
-                + (C * C).sum(axis=1)[None, :]
-            )
-            enc = d2 * np.int64(k) + cids[None, :]
-            # match the expr twin's F.slice semantics when the injected
-            # quantizer has fewer centroids than the requested probes
-            # (auto n_probe derives from the CALLER's k, not this
-            # frame's) — emit min(k, n_probe) rows per key, not a
-            # pandas length-mismatch crash
-            p = min(n_probe, k)
-            probes = np.argsort(enc, axis=1, kind="stable")[:, :p]
-            chosen = cids[probes]  # (n, p)
-            base = {key_col: pdf[key_col].to_numpy().repeat(p)}
-            for c in carry_cols:
-                base[c] = pdf[c].to_numpy().repeat(p)
-            base["cluster"] = chosen.reshape(-1)
-            yield pd.DataFrame(base)
-
-    in_cols = [key_col] + [c for c in carry_cols if c != key_col]
-    if vec_col not in in_cols:
-        in_cols.append(vec_col)
-    return tgt.select(*in_cols).mapInPandas(assign_batches, out_schema)
-
-
 def ivf_multiprobe_assign(
     df: DataFrame | None,
     vec_col: str = "embedding",
@@ -616,7 +533,6 @@ def ivf_multiprobe_assign(
     assign_key: str | None = None,
     centroids: DataFrame | None = None,
     carry_cols: tuple[str, ...] = (),
-    via: str = "expr",
 ) -> DataFrame:
     """Deterministic multi-probe IVF assignment: each key maps to its
     ``n_probe`` nearest portable-Lloyd centroids (exact integer
@@ -635,14 +551,12 @@ def ivf_multiprobe_assign(
 
     ``centroids`` injects a pre-trained quantizer (see
     :func:`ivf_train`) and skips the Lloyd fit entirely; ``df`` may
-    then be None. ``via="arrow"`` switches the per-row k-centroid
-    distance scan from the interpreted HOF fold to the bit-identical
-    numpy twin (:func:`_multiprobe_assign_arrow`) — the right engine
-    once auto-sizing pushes k past ~100.
+    then be None. A quantizer with fewer centroids than ``n_probe``
+    yields min(k, n_probe) rows per key.
 
-    Scale shape: centroids are a k-row broadcast (expr) or a
-    closure-shipped int64 matrix (arrow); assignment is a narrow map +
-    explode — no shuffle."""
+    Scale shape: centroids are a k-row broadcast; assignment is a
+    narrow map + explode — no shuffle. The probe rule is
+    :func:`_probe_cells`, the one every portable ANN op shares."""
     if centroids is None:
         # train on df, assign to assign_to (default df): blocks are a
         # pure function of the vector, so a dup-heavy corpus can
@@ -654,11 +568,6 @@ def ivf_multiprobe_assign(
     tgt = df if assign_to is None else assign_to
     tgt_key = key_col if assign_key is None else assign_key
     renamed = tgt if tgt_key == key_col else tgt.withColumnRenamed(tgt_key, key_col)
-    if via == "arrow":
-        cents_row = centroids.collect()[0]["__cs"]  # 1-row model state
-        return _multiprobe_assign_arrow(
-            renamed, cents_row, n_probe, key_col, vec_col, scale, carry_cols
-        )
     q = renamed.select(
         key_col,
         *carry_cols,
@@ -676,7 +585,6 @@ def blocked_cos_pairs_arrow(
     chunk: int = 2048,
     contract: bool = False,
     exact_order: bool = True,
-    cell_cap: int | None = None,
 ) -> DataFrame:
     """Within-block all-pairs cosine candidates via applyInPandas — the
     Arrow-vectorized twin of the JVM-expression pair stage
@@ -716,105 +624,53 @@ def blocked_cos_pairs_arrow(
     threshold can flip — NOT oracle-certifiable; the certified queries
     keep the default. Measured on the 200k-unique stress: the pair
     stage's 30-minute dim-sequential pass drops to ~2 minutes
-    end-to-end with identical planted-truth recall.
-
-    ``cell_cap`` (the skew knob, r8): a k-means quantizer's occupancy
-    is skewed (measured max ≈ 5× average at 200k uniques), and one
-    oversized cell serializes onto one task. With a cap, each block of
-    m > cap rows is TILED: rows hash into T = ⌈m/cap⌉ buckets and the
-    all-pairs work splits into the T(T+1)/2 bucket-pair tiles (every
-    row replicated into its T tiles). A mixed tile (i, j) evaluates
-    ONLY the cross i×j matrix — each unordered pair once, reoriented
-    to (min, max) on emit (commutative per-dim products, so the
-    per-pair dim-sequential sum is bit-identical either way); the
-    diagonal tile (i, i) evaluates its full matrix with the usual
-    a<b halving. Every pair is therefore evaluated exactly once, the
-    emitted pair set is identical to the untiled pass (pinned by the
-    hypothesis twin test), and total matrix work is ~HALF the untiled
-    full-matrix pass (which computes both orientations). Pure
-    parallelism, no recall trade, unlike sub-quantization; cost is ×T
-    row replication of the oversized cells only."""
+    end-to-end with identical planted-truth recall."""
     import pandas as pd
-
-    tiled = cell_cap is not None
 
     def per_block(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import numpy as np
 
+        empty = pd.DataFrame(
+            {"id_a": np.array([], dtype="int64"), "id_b": np.array([], dtype="int64")}
+        )
         ids = pdf[id_col].to_numpy()
         V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        bks = pdf["__bk"].to_numpy() if tiled else None
-        mixed = tiled and len(pdf) and pdf["__ti"].iat[0] != pdf["__tj"].iat[0]
         n, d = V.shape
-        nrm = None
-        if n >= 2:
-            # zero-norm and non-finite vectors: cosine undefined, never
-            # near-dups — excluded exactly as the expression twin's
-            # finite_pos_norm filter. Masking rows does not change
-            # per-row dim-sequential sums, so surviving norms are
-            # reused as-is.
-            s = V[:, 0] * V[:, 0]
-            for i in range(1, d):
-                s = s + V[:, i] * V[:, i]
-            keep = np.isfinite(s) & (s > 0)
-            ids, V = ids[keep], V[keep]
-            if tiled:
-                bks = bks[keep]
-            nrm = np.sqrt(s[keep])
-            n = len(ids)
         if n < 2:
-            return pd.DataFrame(
-                {"id_a": np.array([], dtype="int64"), "id_b": np.array([], dtype="int64")}
-            )
+            return empty
+        # zero-norm and non-finite vectors: cosine undefined, never
+        # near-dups — excluded exactly as the expression twin's
+        # finite_pos_norm filter. Masking rows does not change per-row
+        # dim-sequential sums, so surviving norms are reused as-is.
+        s = V[:, 0] * V[:, 0]
+        for i in range(1, d):
+            s = s + V[:, i] * V[:, i]
+        keep = np.isfinite(s) & (s > 0)
+        ids, V, nrm = ids[keep], V[keep], np.sqrt(s[keep])
         outs_a, outs_b = [], []
-
-        def scan(c_ids, c_V, c_nrm, r_ids, r_V, r_nrm, full):
-            # full=True: self all-pairs — scan only the block-upper
-            # triangle (R = rows[lo:], keep strictly-later POSITIONS
-            # ju > iu), so each unordered pair's matrix entry is
-            # computed exactly once regardless of id order, then
-            # reorient ids to (min, max) on emit. Per-pair sums are
-            # unchanged (commutative per-dim products).
-            # full=False: cross product — each pair once, reorient.
-            for lo in range(0, len(c_ids), chunk):
-                C = c_V[lo : lo + chunk]
-                if full:
-                    R_ids, R_V, R_nrm = r_ids[lo:], r_V[lo:], r_nrm[lo:]
-                else:
-                    R_ids, R_V, R_nrm = r_ids, r_V, r_nrm
-                if exact_order:
-                    acc = C[:, 0][:, None] * R_V[:, 0][None, :]
-                    for i in range(1, d):
-                        acc += C[:, i][:, None] * R_V[:, i][None, :]
-                else:
-                    acc = C @ R_V.T
-                cos = acc / (c_nrm[lo : lo + chunk][:, None] * R_nrm[None, :])
-                iu, ju = np.where(cos >= threshold)
-                if full:
-                    # R is positionally aligned to C at offset lo, so
-                    # ju > iu keeps the strict upper triangle (and
-                    # drops the cos(a,a)=1 diagonal)
-                    keep_ut = ju > iu
-                    iu, ju = iu[keep_ut], ju[keep_ut]
-                ia, jb = c_ids[lo : lo + chunk][iu], R_ids[ju]
-                outs_a.append(np.minimum(ia, jb))
-                outs_b.append(np.maximum(ia, jb))
-
-        if mixed:
-            # a mixed tile (i, j) owns ONLY cross-bucket pairs —
-            # intra-bucket pairs belong to the diagonal tiles. Scan the
-            # i×j cross matrix directly (half the work of masking a
-            # full matrix; measured 1793 s → 2914 s regression when the
-            # first cut did the latter).
-            sel = bks == pdf["__ti"].iat[0]
-            if sel.any() and (~sel).any():
-                scan(ids[sel], V[sel], nrm[sel], ids[~sel], V[~sel], nrm[~sel], False)
-        else:
-            scan(ids, V, nrm, ids, V, nrm, True)
+        # scan only the block-upper triangle (rows[lo:] against the
+        # chunk, keeping strictly-later POSITIONS ju > iu), so each
+        # unordered pair's matrix entry is computed exactly once
+        # regardless of id order, then reorient ids to (min, max) on
+        # emit. Per-pair sums are unchanged (commutative per-dim products).
+        for lo in range(0, len(ids), chunk):
+            C, R = V[lo : lo + chunk], V[lo:]
+            if exact_order:
+                acc = C[:, 0][:, None] * R[:, 0][None, :]
+                for i in range(1, d):
+                    acc += C[:, i][:, None] * R[:, i][None, :]
+            else:
+                acc = C @ R.T
+            cos = acc / (nrm[lo : lo + chunk][:, None] * nrm[lo:][None, :])
+            iu, ju = np.where(cos >= threshold)
+            # ju > iu keeps the strict upper triangle (and drops the
+            # cos(a,a)=1 diagonal)
+            iu, ju = iu[ju > iu], ju[ju > iu]
+            ia, jb = ids[lo : lo + chunk][iu], ids[lo:][ju]
+            outs_a.append(np.minimum(ia, jb))
+            outs_b.append(np.maximum(ia, jb))
         if not outs_a:
-            return pd.DataFrame(
-                {"id_a": np.array([], dtype="int64"), "id_b": np.array([], dtype="int64")}
-            )
+            return empty
         id_a, id_b = np.concatenate(outs_a), np.concatenate(outs_b)
         if contract and len(id_a):
             # per-block union-find → star edges (member, local-min id)
@@ -858,28 +714,7 @@ def blocked_cos_pairs_arrow(
     except ValueError:  # e.g. "auto" under vendor AQE auto-tuning
         conf_parts = 0
     n_tasks = max(conf_parts, spark.sparkContext.defaultParallelism)
-    src, group_cols = memberships, [block_col]
-    if tiled:
-        # tile oversized blocks: T = ⌈m/cap⌉ hash buckets per block,
-        # each row exploded into its T bucket-pair tiles. The sizes
-        # frame is k rows — broadcast, never a shuffle. The input is
-        # lazily checkpointed first: sizes AND the join both consume
-        # it, and without the materialization the (possibly expensive)
-        # membership-producing stage runs twice — measured 2× the whole
-        # pair pass on the 200k stress.
-        src = checkpoint(memberships, eager=False)
-        sizes = src.groupBy(block_col).agg(F.count("*").alias("__m"))
-        src = (
-            src.join(F.broadcast(sizes), block_col)
-            .withColumn("__nt", F.ceil(F.col("__m") / F.lit(cell_cap)).cast("int"))
-            .withColumn("__bk", F.pmod(F.xxhash64(F.col(id_col)), F.col("__nt")).cast("int"))
-            .withColumn("__ot", F.explode(F.sequence(F.lit(0), F.col("__nt") - 1)))
-            .withColumn("__ti", F.least("__bk", "__ot"))
-            .withColumn("__tj", F.greatest("__bk", "__ot"))
-            .drop("__m", "__nt", "__ot")
-        )
-        group_cols = [block_col, "__ti", "__tj"]
-    return src.repartition(n_tasks, *group_cols).groupBy(*group_cols).applyInPandas(
+    return memberships.repartition(n_tasks, block_col).groupBy(block_col).applyInPandas(
         per_block, "id_a long, id_b long"
     )
 
@@ -994,9 +829,7 @@ def semantic_dedup_ann(
     n_probe: int | str = 3,
     iters: int = 2,
     centroids: DataFrame | None = None,
-    assign_via: str = "expr",
     exact_pairs: bool = True,
-    cell_cap: int | None = None,
 ) -> DataFrame:
     """Label-free semantic dedup — the engine behind
     q_dedup_semantic_ann (the at-scale shape): block by the portable
@@ -1023,22 +856,15 @@ def semantic_dedup_ann(
       full-corpus Lloyd rescan — identical components whenever the
       same centroid frame is supplied (blocks are a pure function of
       (vector, centroids); pinned by pytest).
-    - ``assign_via="arrow"`` uses the bit-identical numpy assignment
-      twin — the right engine once auto-sizing pushes k past ~100.
     - ``exact_pairs=False`` computes the within-cell dot products with
       one BLAS GEMM instead of the dim-sequential IEEE fold — ~20×
       faster pair stage, threshold decisions can flip within ~1e-15
       relative; production-only, never for oracle-certified queries.
-    - ``cell_cap`` tiles quantizer cells above the cap into bucket-pair
-      tasks — identical pair set (no recall trade), parallelizes the
-      skewed-cell tail (see :func:`blocked_cos_pairs_arrow`). Pass
-      4096 in production at ≥~100k uniques (the r8 interleaved cap
-      matrix: mean 1.8×, 3× on cold JVMs at 200k — the stress harness
-      does). Default ``None``: setting the cap engages the tiling
-      machinery (checkpoint + size pass + tile join) even when no
-      cell exceeds it — pure overhead below the regime the matrix
-      proved, so the certified small-scale path keeps it off and
-      production opts in.
+
+    Each step has one engine: memberships come from
+    :func:`ivf_multiprobe_assign` (the shared :func:`_probe_cells`
+    rule) and every quantizer cell is one pair task, whatever its size
+    — the auto-k quantizer already sizes cells to the data.
     """
     from pipetree_spark.ops.graph import connected_components
 
@@ -1082,7 +908,7 @@ def semantic_dedup_ann(
         "embedding", "vec_id",
         n_probe=n_probe, n_clusters=n_clusters, iters=iters,
         assign_to=grp.select("rep_id", "embedding"), assign_key="rep_id",
-        centroids=centroids, carry_cols=("embedding",), via=assign_via,
+        centroids=centroids, carry_cols=("embedding",),
     ).select(F.col("vec_id").alias("rep_id"), F.col("cluster").alias("block"), "embedding")
     # contract=True: per-block union-find emits star edges instead of
     # all pairs — identical transitive closure, O(Σm) instead of O(Σm²)
@@ -1092,8 +918,7 @@ def semantic_dedup_ann(
     # CC's two-branch symmetric union a ReusedExchange point — without
     # it each branch re-runs the Arrow pair stage (measured +1 s).
     pairs = blocked_cos_pairs_arrow(
-        memberships, threshold, contract=True, exact_order=exact_pairs,
-        cell_cap=cell_cap,
+        memberships, threshold, contract=True, exact_order=exact_pairs
     ).distinct()
     cc = connected_components(pairs, src="id_a", dst="id_b")
     rep_comp = grp.join(cc, grp["rep_id"] == cc["node"], "left").select(
@@ -1154,36 +979,6 @@ def _adc_shortlist(
     )
 
 
-def _rerank_exact(
-    short: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    query_key: str,
-    corpus_key: str,
-    vec_col: str,
-) -> DataFrame:
-    """Exact rounded-cosine re-rank (the q_vec_cosine_knn float policy:
-    ROUND(·,4) + key tie-break) of a shortlist carrying (__mv, __qn)."""
-    emb = corpus.select(
-        F.col(corpus_key),
-        F.col(vec_col).alias("__cv"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
-    )
-    scored = short.join(emb, corpus_key).select(
-        query_key,
-        corpus_key,
-        pin_zero(F.round(
-            safe_div(dot(F.col("__mv"), F.col("__cv")), F.col("__qn") * F.col("__cn")), 4
-        )).alias("cos_sim"),
-    )
-    return topk_per_group(
-        scored,
-        partition_by=[query_key],
-        order_by=[F.col("cos_sim").desc(), F.col(corpus_key).asc()],
-        k=k,
-    )
-
-
 def ivf_ann_portable(
     queries: DataFrame,
     corpus: DataFrame,
@@ -1217,32 +1012,15 @@ def ivf_ann_portable(
     assign_df, cents = kmeans_portable_fit(
         corpus, vec_col, corpus_key, k=n_clusters, iters=iters, scale=scale
     )
-    c = corpus.select(
-        F.col(corpus_key),
-        F.col(vec_col).alias("__cv"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
-    ).join(assign_df.select(corpus_key, "cluster"), corpus_key)
-
-    qq = queries.select(
-        F.col(query_key),
-        F.col(vec_col).alias("__mv"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-        _pq_quantize(vec_col, scale).alias("__qv"),
+    cells = assign_df.select(corpus_key, "cluster")
+    qq = _normed(
+        queries, query_key, vec_col, "__mv", "__qn", _pq_quantize(vec_col, scale).alias("__qv")
     )
     probes = _probe_cells(qq, cents, n_probe, query_key, ("__mv", "__qn"))
-    pairs = probes.join(c, on="cluster").filter(F.col(query_key) != F.col(corpus_key))
-    scored = pairs.select(
-        query_key,
-        corpus_key,
-        pin_zero(F.round(
-            safe_div(dot(F.col("__mv"), F.col("__cv")), F.col("__qn") * F.col("__cn")), 4
-        )).alias("cos_sim"),
-    )
-    return topk_per_group(
-        scored,
-        partition_by=[query_key],
-        order_by=[F.col("cos_sim").desc(), F.col(corpus_key).asc()],
-        k=k,
+    return _rounded_cos_topk(
+        lambda c: probes.join(c.join(cells, corpus_key), on="cluster")
+        .filter(F.col(query_key) != F.col(corpus_key)),
+        corpus, k, query_key, corpus_key, vec_col,
     )
 
 
@@ -1504,11 +1282,12 @@ def pq_fit_portable(
     # broadcast-join it in branches separate from the codes frame
     # build those broadcasts from local rows.
     spark = df.sparkSession
-    cb = _codebook_frame(
+    cb = _model_frame(
         spark,
         sv.join(F.broadcast(ranked), key_col)
         .select("sub", "cid", F.col("__qsv").alias("cv"))
         .collect(),
+        "__cb", sub="int", cid="bigint",
     )
     a = assign(cb)
     for _ in range(iters - 1):
@@ -1532,12 +1311,13 @@ def pq_fit_portable(
             "transform(__sums,"
             " s -> cast(floor(cast(s as double) / __n) as bigint)) AS cv"
         )
-        cb = _codebook_frame(
+        cb = _model_frame(
             spark,
             a.groupBy("sub", "code")
             .agg(F.count(F.lit(1)).alias("__n"), sums)
             .select(F.col("sub"), F.col("code").alias("cid"), cv)
             .collect(),
+            "__cb", sub="int", cid="bigint",
         )
         a = assign(cb)
     return to_codes(a), cb
@@ -1686,11 +1466,8 @@ def pq_ivf_ann_portable(
     # quantize once, slice the SAME __qv into subvectors: HOFs evaluate
     # interpreted (no CSE), so an inline second _pq_quantize would
     # re-run the floor transform per query row
-    qq = queries.select(
-        F.col(query_key),
-        F.col(vec_col).alias("__mv"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-        _pq_quantize(vec_col, scale).alias("__qv"),
+    qq = _normed(
+        queries, query_key, vec_col, "__mv", "__qn", _pq_quantize(vec_col, scale).alias("__qv")
     ).withColumn("__qsubs", _pq_subvectors(F.col("__qv"), m, dim))
     probes = _probe_cells(qq, cents, n_probe, query_key, ("__mv", "__qn", "__qsubs"))
     cand = (
@@ -1699,7 +1476,9 @@ def pq_ivf_ann_portable(
         .crossJoin(F.broadcast(cb))
     )
     short = _adc_shortlist(cand, m, shortlist, query_key, corpus_key)
-    return _rerank_exact(short, corpus, k, query_key, corpus_key, vec_col)
+    return _rounded_cos_topk(
+        lambda c: short.join(c, corpus_key), corpus, k, query_key, corpus_key, vec_col
+    )
 
 
 def ivfpq_residual_ann_portable(
@@ -1771,11 +1550,8 @@ def ivfpq_residual_ann_portable(
     )
     cand_codes = codes.join(rv.select(corpus_key, "cluster"), corpus_key)
 
-    qq = queries.select(
-        F.col(query_key),
-        F.col(vec_col).alias("__mv"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-        _pq_quantize(vec_col, scale).alias("__qv"),
+    qq = _normed(
+        queries, query_key, vec_col, "__mv", "__qn", _pq_quantize(vec_col, scale).alias("__qv")
     )
     probed = _probe_cells(
         qq, cents, n_probe, query_key, ("__mv", "__qn", "__qv", "__cs")
@@ -1796,4 +1572,6 @@ def ivfpq_residual_ann_portable(
         .crossJoin(F.broadcast(cb))
     )
     short = _adc_shortlist(cand, m, shortlist, query_key, corpus_key)
-    return _rerank_exact(short, corpus, k, query_key, corpus_key, vec_col)
+    return _rounded_cos_topk(
+        lambda c: short.join(c, corpus_key), corpus, k, query_key, corpus_key, vec_col
+    )

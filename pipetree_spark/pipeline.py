@@ -75,7 +75,7 @@ class Pipeline:
             elif kind == "python":
                 fn = s["fn"]  # direct-API only; not JSON-serializable
             elif kind == "op":
-                fn = _op_fn(s["op"], inputs, s.get("args", {}))
+                fn = _op_fn(name, s["op"], inputs, s.get("args", {}))
             elif kind == "grid":
                 fn = _values_fn(
                     list(s["grid"].keys()),
@@ -510,7 +510,7 @@ def _unigram_encode_auto(
     )
 
 
-def _op_fn(op: str, inputs: list[str], args: dict) -> StageFn:
+def _op_fn(stage: str, op: str, inputs: list[str], args: dict) -> StageFn:
     reg = _op_registry()
     if op not in reg:
         raise ValueError(f"unknown op {op!r}; spec-able ops: {sorted(reg)}")
@@ -519,6 +519,17 @@ def _op_fn(op: str, inputs: list[str], args: dict) -> StageFn:
         raise ValueError(
             f"op {op!r} takes exactly {arity} input(s), got {inputs!r}"
         )
+    # bind the spec's args now, so a misspelled kwarg fails at build time
+    # instead of at run, after the upstream stages have computed; an op
+    # taking **kw forwards its args and is checked only when it runs
+    sig = inspect.signature(fn_)
+    if all(p.kind is not p.VAR_KEYWORD for p in sig.parameters.values()):
+        try:
+            sig.bind_partial(*inputs, **args)
+        except TypeError as exc:
+            unknown = sorted(set(args) - set(sig.parameters))
+            why = f"unknown args {unknown}" if unknown else str(exc)
+            raise ValueError(f"stage {stage!r}: op {op!r}: {why}") from None
 
     def fn(spark: SparkSession, frames: dict[str, DataFrame]) -> DataFrame:
         return fn_(*[frames[i] for i in inputs], **args)

@@ -248,8 +248,8 @@ def test_vector_sql_fragments_quote_column_names(spark, vec, key):
     """Column names reach the parsed-SQL quantizer fragments through
     ``sql_ident``: a hyphenated name must not parse as subtraction, nor
     a reserved word as a keyword. The IVF-PQ composition (quantize,
-    probe, PQ fit) and both multi-probe twins must return exactly the
-    plain-name result."""
+    probe, PQ fit) and the multi-probe assignment must return exactly
+    the plain-name result."""
     rng = np.random.RandomState(5)
     rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(60)]
 
@@ -261,11 +261,8 @@ def test_vector_sql_fragments_quote_column_names(spark, vec, key):
         ann = VX.pq_ivf_ann_portable(
             q, df, k=3, n_clusters=4, m=4, n_codes=8, dim=8, corpus_key=k, vec_col=v
         )
-        probes = [
-            VX.ivf_multiprobe_assign(df, v, k, n_probe=2, n_clusters=4, via=via)
-            for via in ("expr", "arrow")
-        ]
-        return [sorted(tuple(r) for r in out.collect()) for out in (ann, *probes)]
+        probes = VX.ivf_multiprobe_assign(df, v, k, n_probe=2, n_clusters=4)
+        return [sorted(tuple(r) for r in out.collect()) for out in (ann, probes)]
 
     assert run(vec, key) == run("embedding", "vec_id")
 
@@ -459,24 +456,17 @@ def test_injected_model_size_need_not_match_k_params(spark, sf_small):
     }
 
 
-def test_multiprobe_arrow_truncates_when_probes_exceed_centroids(spark, sf_small):
-    """r8 review finding: the Arrow assignment twin crashed with a
-    pandas length mismatch when n_probe > number of centroids (auto
-    n_probe derives from the caller's k, not the injected frame's).
-    Both twins must emit min(k, n_probe) rows per key, identically."""
+def test_multiprobe_truncates_when_probes_exceed_centroids(spark, sf_small):
+    """r8 review finding: n_probe can exceed the number of centroids
+    (auto n_probe derives from the caller's k, not the injected
+    frame's). The assignment must then emit min(k, n_probe) distinct
+    cells per key."""
     e = load_table(spark, sf_small, "embeddings").limit(50)
-    kwargs = dict(n_probe=10, n_clusters=4, iters=2)
-    expr = {
-        (r.vec_id, r.cluster)
-        for r in VX.ivf_multiprobe_assign(e, via="expr", **kwargs).collect()
-    }
-    arrow = {
-        (r.vec_id, r.cluster)
-        for r in VX.ivf_multiprobe_assign(e, via="arrow", **kwargs).collect()
-    }
-    assert arrow == expr
+    rows = VX.ivf_multiprobe_assign(e, n_probe=10, n_clusters=4, iters=2).collect()
+    probes = {(r.vec_id, r.cluster) for r in rows}
+    assert len(probes) == len(rows)
     per_key = {}
-    for k_, _ in arrow:
+    for k_, _ in probes:
         per_key[k_] = per_key.get(k_, 0) + 1
     assert set(per_key.values()) == {4}  # min(k=4, n_probe=10)
 
@@ -1958,13 +1948,11 @@ def test_zero_norm_vectors_dont_crash_cosine_paths(spark):
     assert [v for u in flat for v in u].count(None) == 8  # zero vec -> NULLs
 
 
-def test_semantic_ann_centroid_injection_and_arrow_assign(spark):
+def test_semantic_ann_centroid_injection(spark):
     """r7 verdict #4/#5: (a) supplying a pre-trained centroid frame
     (ivf_train) must yield IDENTICAL components to the integrated
     full-corpus-training run — blocks are a pure function of (vector,
-    centroids); (b) the numpy assignment twin (via='arrow') must be
-    bit-identical to the HOF expression fold — exact integer math on
-    both sides; (c) n_clusters='auto' on a small corpus floors at the
+    centroids); (b) n_clusters='auto' on a small corpus floors at the
     shipped k=8/p=3 point, so auto equals fixed there."""
     import numpy as np
 
@@ -1987,12 +1975,6 @@ def test_semantic_ann_centroid_injection_and_arrow_assign(spark):
         VX.semantic_dedup_ann(df, threshold=0.8, n_clusters=8, n_probe=3, centroids=cents)
     )
     assert got_inj == want
-    got_arrow = comps(
-        VX.semantic_dedup_ann(
-            df, threshold=0.8, n_clusters=8, n_probe=3, centroids=cents, assign_via="arrow"
-        )
-    )
-    assert got_arrow == want
     got_auto = comps(VX.semantic_dedup_ann(df, threshold=0.8, n_clusters="auto", n_probe="auto"))
     assert got_auto == want
 
@@ -2006,30 +1988,6 @@ def test_semantic_ann_centroid_injection_and_arrow_assign(spark):
     ).collect()
     assert len(got_sample) == 60 and len({r.vec_id for r in got_sample}) == 60
     assert all((r.vec_id == r.component) == bool(r.is_kept) for r in got_sample)
-
-
-def test_multiprobe_assign_arrow_bitexact_vs_expr(spark):
-    """The Arrow assignment twin must produce the exact probe set of
-    the HOF expression fold on random vectors — including the
-    (distance, cid) tie rule, which the twin encodes as argsort of
-    d·k + cid."""
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    rows = [(i, [float(x) for x in rng.standard_normal(8).astype(np.float32)]) for i in range(60)]
-    # planted exact ties: duplicate vectors equidistant to every centroid
-    rows += [(100 + i, rows[i][1]) for i in range(5)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cents = VX.ivf_train(df, "embedding", "vec_id", n_clusters=8, iters=2)
-    expr = VX.ivf_multiprobe_assign(
-        df, "embedding", "vec_id", n_probe=3, centroids=cents, via="expr"
-    )
-    arrow = VX.ivf_multiprobe_assign(
-        df, "embedding", "vec_id", n_probe=3, centroids=cents, via="arrow"
-    )
-    assert {(r.vec_id, r.cluster) for r in expr.collect()} == {
-        (r.vec_id, r.cluster) for r in arrow.collect()
-    }
 
 
 def test_nonfinite_vectors_are_singletons_in_both_pair_twins(spark):

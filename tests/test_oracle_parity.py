@@ -15,6 +15,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
 from check_parity import (  # noqa: E402
     canon_result,
+    check_query,
     compare,
     oracle_dtype_problems,
     run_oracle,
@@ -91,3 +92,23 @@ def test_driver_contract_shape():
     assert len(qs) >= 75
     assert all(callable(f) for f in qs.values())
     assert all(isinstance(s, str) and s.strip() for s in osql.values())
+
+
+@pytest.mark.parametrize(
+    "spark_sql, oracle_sql, want",
+    [
+        ("CAST('-0.0' AS DOUBLE) AS x", "CAST('-0.0' AS DOUBLE) AS x", ["spark", "oracle"]),
+        ("array(1.5D, CAST('-0.0' AS DOUBLE)) AS x", "[1.5, CAST('0.0' AS DOUBLE)] AS x", ["spark"]),
+        ("CAST('0.0' AS DOUBLE) AS x", "CAST('0.0' AS DOUBLE) AS x", []),
+    ],
+)
+def test_check_query_flags_negative_zero_from_either_engine(spark, spark_sql, oracle_sql, want):
+    """A bitwise -0.0 float, bare or in an array, is a reported problem
+    for the engine that emits it, even when both engines agree: the
+    engines disagree on the sign of a rounds-to-zero value elsewhere."""
+    from types import SimpleNamespace
+
+    q = SimpleNamespace(fn=lambda s, _: s.sql(f"SELECT {spark_sql}"), oracle=f"SELECT {oracle_sql}")
+    problems, rows_only = check_query(spark, duckdb.connect(), q, None)
+    assert not rows_only
+    assert [p.split()[0] for p in problems if "emits -0.0" in p] == want

@@ -621,6 +621,24 @@ def test_op_stage_curation_pipeline_end_to_end(spark, sf_small, tmp_path):
         Pipeline.from_spec(bad)
 
 
+def test_op_stage_args_are_checked_at_from_spec():
+    """A misspelled op kwarg fails when the spec is built, naming the
+    stage, the op and the unknown key, not at run after the upstream
+    stages computed. Every shipped example spec still builds."""
+    import copy
+    import json
+    from pathlib import Path
+
+    examples = sorted((Path(__file__).resolve().parent.parent / "examples").glob("*.json"))
+    specs = {p.name: json.loads(p.read_text()) for p in examples}
+    for spec in specs.values():
+        Pipeline.from_spec(spec)
+    bad = copy.deepcopy(specs["embedding_dedup_pipeline.json"])
+    bad["stages"]["dedup"]["args"]["treshold"] = bad["stages"]["dedup"]["args"].pop("threshold")
+    with pytest.raises(ValueError, match=r"'dedup'.*'semantic_dedup_ann'.*\['treshold'\]"):
+        Pipeline.from_spec(bad)
+
+
 def test_shipped_embedding_dedup_spec_runs(spark, sf_small, tmp_path):
     """The shipped embedding-dedup example spec
     (examples/embedding_dedup_pipeline.json) runs end-to-end through

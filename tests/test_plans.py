@@ -454,7 +454,7 @@ def test_incremental_agg_merge_equals_flat_recompute(spark, sf_small):
 
 # ---------------------------------------------------------------------------
 # Signed-zero lint gate (r11): the class is closed by CONSTRUCTION, not by
-# corpus sweeps — tools/negzero_audit.py missed q_vec_norm twice because the
+# corpus sweeps — the -0.0 sweep missed q_vec_norm twice because the
 # on-disk corpora never produce a rounds-to-zero negative sum (r10 verdict).
 # ---------------------------------------------------------------------------
 

@@ -559,20 +559,6 @@ def test_blocked_cos_pairs_arrow_bitexact_vs_expression(spark, vecs, n_blocks):
     assert closure(star) == closure(want)
     # star edges always point member → its component's min id
     assert all(a == min(c) for c in closure(star) for a, b in star if b in c)
-    # cell_cap tiling: every pair evaluated exactly once across the
-    # bucket-pair tiles → identical pair set to the untiled pass
-    tiled = [
-        (r.id_a, r.id_b)
-        for r in VX.blocked_cos_pairs_arrow(m, 0.35, chunk=5, cell_cap=3).collect()
-    ]
-    assert sorted(tiled) == sorted(want)
-    star_tiled = [
-        (r.id_a, r.id_b)
-        for r in VX.blocked_cos_pairs_arrow(
-            m, 0.35, chunk=5, cell_cap=3, contract=True
-        ).collect()
-    ]
-    assert closure(star_tiled) == closure(want)
 
 
 @settings(**SETTINGS)

@@ -164,13 +164,33 @@ def oracle_dtype_problems(spark_fields, spark_rows, ora_df):
     return problems
 
 
+def neg_zero_cols(cols, rows) -> list[str]:
+    """Columns holding a bitwise ``-0.0`` float, bare or inside an array.
+
+    The engines do not agree on the SIGN of a rounds-to-zero result
+    (CORRECTNESS_r09 q_text_pmi; q_vec_centroid at sf0.001), so an
+    oracled query that emits ``-0.0`` from EITHER engine is a latent
+    driver-hash failure even while both happen to agree on this corpus.
+    The fix is :func:`pipetree_spark.exact.pin_zero` at that round edge
+    (``+ 0.0`` in the oracle), an IEEE identity for every other value.
+    """
+
+    def neg(v):
+        if isinstance(v, (list, tuple)):
+            return any(neg(x) for x in v)
+        return isinstance(v, float) and v == 0.0 and math.copysign(1.0, v) < 0
+
+    return sorted({name for row in rows for name, v in zip(cols, row) if neg(v)})
+
+
 def check_query(spark, con, q, sf_dir, tol=0.0):
     """Grade one declared query against its DuckDB oracle.
 
     Runs it inside ``checkpoint_scope`` (so a long sweep pins no
     executor storage), round-trips the collected rows through the
     Arrow → pandas path ``toPandas`` takes, compares them order-insensitively
-    with the DuckDB oracle on ``con``, then checks the oracle's pandas
+    with the DuckDB oracle on ``con``, flags any ``-0.0`` in either
+    engine's rows (:func:`neg_zero_cols`), then checks the oracle's pandas
     dtypes. Returns ``(problems, rows_only)``: no problems is a pass,
     and ``rows_only`` marks a query without an oracle, which is graded
     up to the round trip only.
@@ -218,6 +238,13 @@ def check_query(spark, con, q, sf_dir, tol=0.0):
         # diagnose: would it pass with loose tolerance?
         if not compare(sc, sr, oc, orr, tol=1e-6):
             problems.insert(0, "CLOSE: float drift only")
+    problems += [
+        f"{engine} emits -0.0 in {cols} (pin_zero the round edge)"
+        for engine, cols in (("spark", neg_zero_cols(sdf.columns, srows)),
+                             ("oracle", neg_zero_cols(ocols, orows)))
+        if cols
+    ]
+    if problems:
         return problems, False
     # values match — now check the oracle's pandas dtype view
     return oracle_dtype_problems(sdf.schema.fields, srows, con.execute(q.oracle).df()), False

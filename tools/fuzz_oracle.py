@@ -160,7 +160,7 @@ def generate(spark, out: str, seed: int) -> None:
     vecs[n_vec - 1] = vecs[0]          # byte-identical pair
     vecs[n_vec - 2] = np.float32(0.0)  # zero vector
     # Adversarial signed-zero emitters (r10 verdict: the corpus-based
-    # negzero audit missed q_vec_norm because uniform draws almost never
+    # -0.0 sweep missed q_vec_norm because uniform draws almost never
     # land a component sum in (-5e-5, 0)). Plant vectors whose sums,
     # means, and pairwise cosines round to zero FROM BELOW so any
     # unpinned round() edge over vector math diverges on every seed:

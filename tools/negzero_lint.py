@@ -4,9 +4,9 @@ The engines disagree on the SIGN of a rounds-to-zero float
 (CORRECTNESS_r09 q_text_pmi; r10-verdict latent q_vec_norm): Spark emits
 ``+0.0`` where DuckDB emits ``-0.0`` (or vice versa) whenever a tiny
 signed value rounds to zero, and the driver's pandas value-hash is
-bitwise. tools/negzero_audit.py only sweeps datasets that exist on disk
-and provably misses emitters the corpus never triggers (r10 verdict
-"What's wrong" #2). This lint makes the class unrepresentable instead:
+bitwise. The ``-0.0`` check in ``check_parity.check_query`` only sees
+datasets that exist on disk and provably misses emitters the corpus
+never triggers (r10 verdict "What's wrong" #2). This lint makes the class unrepresentable instead:
 it parses every source file under ``pipetree_spark/`` and FAILS when an
 ``F.round(...)`` call is not, by construction, incapable of emitting a
 signed zero. A round edge is safe iff one of:

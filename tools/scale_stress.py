@@ -12,8 +12,7 @@ Usage: python tools/scale_stress.py [sweep|uvec|graph|stream|bpe]
   ``--only`` (which skips the ANN-recall and flood sections). A query in
   CACHE_ROOTS starts every rep with its artifact cache removed.
 - ``uvec``: the auto-sized IVF quantizer on 20k and 200k UNIQUE jittered
-  vectors (planted pair-recall, cell occupancy), then interleaved
-  (no cap, cell_cap=4096) reps at 200k.
+  vectors (planted pair-recall, cell occupancy).
 - ``graph``: triangles, BFS and SSSP on constant-degree random graphs.
 - ``stream``: 1M events through the heap then the RocksDB state store,
   then the hash-ledger incremental ingest.
@@ -82,7 +81,6 @@ HOT_SET = [
 CACHE_ROOTS = {"q_pipe_curation_full": "curation_full_artifacts"}
 FLOOD_COPIES = 100_000
 UVEC_SIZES = ((2000, 10), (2000, 100))  # (sf0.1 base vectors, jittered copies each)
-CAP_REPS = 2
 GRAPH_DEGREE = 20
 GRAPH_NODES = (10_000, 100_000)
 STREAM_EVENTS, STREAM_FILES = 1_000_000, 8
@@ -333,15 +331,15 @@ def jittered_corpus(spark, n_bases: int, copies: int, src: str = SRC):
     return checkpoint(df)
 
 
-def uvec_dedup(df, cents, n: int, copies: int, cell_cap: int | None) -> tuple[float, float]:
+def uvec_dedup(df, cents, n: int, copies: int) -> tuple[float, float]:
     """The production semantic dedup (sample-trained centroids injected,
-    auto k and n_probe, Arrow assignment, BLAS pair mode) → (seconds,
+    auto k and n_probe, BLAS pair mode) → (seconds,
     planted pair-recall). Recall = Σ C(n_g, 2) / (bases · C(copies, 2))
     over (planted base, component) groups, computed in Spark."""
     t0 = time.perf_counter()
     res = checkpoint(VX.semantic_dedup_ann(
         df, threshold=0.9, n_clusters="auto", n_probe="auto",
-        centroids=cents, assign_via="arrow", exact_pairs=False, cell_cap=cell_cap,
+        centroids=cents, exact_pairs=False,
     ))
     assert res.count() == n
     secs = time.perf_counter() - t0
@@ -350,16 +348,14 @@ def uvec_dedup(df, cents, n: int, copies: int, cell_cap: int | None) -> tuple[fl
     return secs, float(num) / (n // copies * copies * (copies - 1) / 2)
 
 
-def uvec(spark, sizes=UVEC_SIZES, cap_reps: int = CAP_REPS, src: str = SRC) -> dict:
+def uvec(spark, sizes=UVEC_SIZES, src: str = SRC) -> dict:
     """The auto-sized quantizer stressed on UNIQUE vectors (exact-collapse
     cannot shrink them): per size, sample-trained centroids (5%),
-    k = ⌈√n⌉, n_probe = ⌈log₂k⌉, cell_cap=4096 — the production call —
-    with planted pair-recall and cell occupancy, so 'cells stay ~p·√n,
-    never n/k_fixed' is measured. At the last size, ``cap_reps``
-    interleaved (no cap, cell_cap=4096) reps, so host drift cancels out
-    of the cap decision."""
+    k = ⌈√n⌉, n_probe = ⌈log₂k⌉ — the production call — with planted
+    pair-recall and cell occupancy, so 'cells stay ~p·√n, never
+    n/k_fixed' is measured."""
     out: dict[str, dict] = {}
-    for idx, (n_bases, copies) in enumerate(sizes):
+    for n_bases, copies in sizes:
         with checkpoint_scope(spark):
             df = jittered_corpus(spark, n_bases, copies, src)
             n = df.count()
@@ -367,10 +363,10 @@ def uvec(spark, sizes=UVEC_SIZES, cap_reps: int = CAP_REPS, src: str = SRC) -> d
             cents = checkpoint(VX.ivf_train(df.sample(0.05, seed=3), "embedding", "vec_id",
                                             n_clusters=max(8, int(n ** 0.5) + 1), iters=2))
             t_train = time.perf_counter() - t0
-            t_dedup, recall = uvec_dedup(df, cents, n, copies, 4096)
+            t_dedup, recall = uvec_dedup(df, cents, n, copies)
             k = max(8, math.isqrt(max(n - 1, 0)) + 1)
             p = max(3, math.ceil(math.log2(k)))
-            occ = (VX.ivf_multiprobe_assign(df, "embedding", "vec_id", n_probe=p, centroids=cents, via="arrow")
+            occ = (VX.ivf_multiprobe_assign(df, "embedding", "vec_id", n_probe=p, centroids=cents)
                    .groupBy("cluster").count()
                    .agg(F.max("count").alias("mx"), F.avg("count").alias("avg"), F.count("*").alias("nonempty"))
                    .first())
@@ -379,14 +375,6 @@ def uvec(spark, sizes=UVEC_SIZES, cap_reps: int = CAP_REPS, src: str = SRC) -> d
             print(f"  n={n} (k={k}, p={p}): train {t_train:.1f}s, dedup {t_dedup:.1f}s, pair-recall "
                   f"{recall:.3f}, cells avg {row['cell_avg']:.0f} / max {occ['mx']} "
                   f"({occ['nonempty']}/{k} nonempty; fixed k=8 would be {n // 8}/cell)", flush=True)
-            if idx == len(sizes) - 1:
-                out["cap_matrix"] = []
-                for rep in range(cap_reps):
-                    for cap in (None, 4096):
-                        with checkpoint_scope(spark):
-                            secs, rec = uvec_dedup(df, cents, n, copies, cap)
-                        out["cap_matrix"].append({"n": n, "rep": rep, "cell_cap": cap, "dedup_s": secs, "recall": rec})
-                        print(f"  n={n} rep{rep} cell_cap={cap}: dedup {secs:.1f}s recall {rec:.3f}", flush=True)
     return out
 
 

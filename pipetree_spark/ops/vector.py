@@ -34,25 +34,26 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-#: Shared SQL fragments for the portable-quantizer hot paths (r16,
-#: guide §1.2 step 2): one parsed string replaces a lambda-built HOF
-#: tree of ~30-150 py4j round trips. Each parses to the IDENTICAL
-#: expression tree the Column formulation built (typing notes at the
-#: use sites); every consumer family is parity- and pytest-pinned.
-#: Column names are interpolated through :func:`sql_ident`.
-#: exact-integer squared distance between the quantized vector and a
-#: lambda-bound centroid struct ``c`` (fields cv, cid)
-_SQDIST_SQL = (
-    "aggregate(zip_with({vec}, c.cv, (x, y) -> (x - y) * (x - y)),"
-    " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-)
-#: floor(x · scale) quantization of a float vector to exact longs —
-#: CAST({scale} AS DOUBLE) constant-folds to the same double literal
-#: F.lit(float(scale)) shipped (scale ≪ 2⁵³)
-_QUANTIZE_SQL = (
-    "transform({col}, x -> cast(floor(cast(x as double)"
-    " * CAST({scale} AS DOUBLE)) as bigint))"
-)
+#: The portable quantizers' grid: floor(x · _SCALE) maps unit-range
+#: floats to exact longs. A module constant, not a parameter, so an
+#: injected model can never meet vectors quantized on another grid.
+_SCALE = 1 << 20
+#: pca_power_portable's loading grid: loadings are exact integers in
+#: [-_RESCALE, _RESCALE].
+_RESCALE = 1 << 10
+
+
+def _quantize(vec_col: str) -> Column:
+    """floor(double(x) · _SCALE) of each element, as exact longs. One
+    parsed SQL string (r16, guide §1.2 step 2) instead of a lambda-built
+    HOF tree of py4j round trips; it parses to the IDENTICAL expression
+    tree, and CAST(_SCALE AS DOUBLE) constant-folds to the same double
+    literal F.lit(float(_SCALE)) ships (_SCALE ≪ 2⁵³). The column name
+    goes through :func:`sql_ident`."""
+    return F.expr(
+        f"transform({sql_ident(vec_col)}, x -> cast(floor(cast(x as double)"
+        f" * CAST({_SCALE} AS DOUBLE)) as bigint))"
+    )
 
 
 def _d(x: Column) -> Column:
@@ -261,16 +262,15 @@ def _model_frame(spark, rows, col: str, **keys: str) -> DataFrame:
     """1-row LOCAL model frame ``col: array<struct<*keys, cv:
     array<bigint>>>`` from driver-collected rows carrying the ``keys``
     fields (name=SQL type) and ``cv`` — the r15 opt-wave-2 model-state
-    transport for :func:`kmeans_portable_fit` (``__cs``, keys ``cid``)
-    and :func:`pq_fit_portable` (``__cb``, keys ``sub, cid``); guide
-    §2.4/§5. The values are computed ENTIRELY by Spark aggregates;
-    Python only ferries exact longs (NULLs preserved), so the frame is
-    bit-identical to the old ``collect_list`` + ``localCheckpoint``
-    formulation it replaces — minus the checkpoint job, the block-store
-    round trip and the corpus-lineage broadcast build every consumer
-    used to pay. The frame is still RDD-backed, so each query execution
-    that broadcasts it runs one 1-task collect job. Every consumer
-    (array_min argmin, (d, cid) struct sort, filter by key) is
+    transport of :func:`_lloyd` (``__cs``, keys ``cid``; ``__cb``, keys
+    ``sub, cid``); guide §2.4/§5. The values are computed ENTIRELY by
+    Spark aggregates; Python only ferries exact longs (NULLs preserved),
+    so the frame is bit-identical to the old ``collect_list`` +
+    ``localCheckpoint`` formulation it replaces — minus the checkpoint
+    job, the block-store round trip and the corpus-lineage broadcast
+    build every consumer used to pay. The frame is still RDD-backed, so
+    each query execution that broadcasts it runs one 1-task collect job.
+    Every consumer ((d, cid) struct sort, filter by key) is
     order-insensitive; entries are sorted by the keys only so the frame
     itself is deterministic."""
     data = sorted(
@@ -289,17 +289,195 @@ def _model_frame(spark, rows, col: str, **keys: str) -> DataFrame:
     return spark.createDataFrame(rdd, schema=f"{col} array<struct<{fields},cv:array<bigint>>>")
 
 
+def _probe_cells(
+    qq: DataFrame,
+    model: DataFrame,
+    n_probe: int,
+    query_key: str,
+    carry: tuple[str, ...],
+    entries: str = "__cs",
+) -> DataFrame:
+    """Explode each row into its ``n_probe`` nearest model entries as
+    ``cluster`` — exact integer distance from ``__qv``, ties → smaller
+    cid via the (d, cid) struct sort. The ONE assignment rule: every
+    portable ANN op probes with it and :func:`_lloyd` assigns with it
+    (one probe), so a change here moves k-means, PQ, ivf and residual in
+    lockstep, keeping their certified oracles in parity. ``entries`` is
+    the SQL array a row may take (default every centroid of ``__cs``;
+    the PQ view filters ``__cb`` to the row's subspace); ``carry``
+    columns ride the explode.
+
+    The row guard: a row whose distance to every entry is NULL — a NULL
+    vector, a NULL element, or a length other than the entries' (zip_with
+    pads the shorter side with NULLs) — gets no cell and is DROPPED,
+    where the sort would have handed it cid 0. One parsed expr (r16, the
+    W3 pattern — was ~70 RPCs of lambda-built Column tree); named_struct
+    builds the same struct<d,cid> the F.struct formulation did."""
+    # exact-integer squared distance between __qv and the entry ``c``
+    sqd = (
+        "aggregate(zip_with(__qv, c.cv, (x, y) -> (x - y) * (x - y)),"
+        " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
+    )
+    return qq.crossJoin(F.broadcast(model)).select(
+        query_key,
+        *carry,
+        F.expr(
+            f"explode(transform(slice(array_sort(filter(transform({entries},"
+            f" c -> named_struct('d', {sqd}, 'cid', c.cid)), s -> s.d IS NOT NULL)),"
+            f" 1, {n_probe}), s -> s.cid)) AS cluster"
+        ),
+    )
+
+
+def _lloyd(
+    q: DataFrame,
+    key_col: str,
+    k: int,
+    iters: int,
+    model: DataFrame | None,
+    m: int = 0,
+    dim: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The exact-integer Lloyd engine behind both portable quantizers.
+    ``q`` is ``(key, __qv)`` with ``__qv`` the quantized vector. ``m=0``
+    is the k-means view: one space, model frame ``__cs:
+    array<struct<cid, cv>>``. ``m ≥ 1`` is the PQ view: ``__qv`` splits
+    into ``m`` contiguous subvectors of ``dim/m`` and each subspace
+    clusters on its own, model frame ``__cb: array<struct<sub, cid,
+    cv>>``. Returns ``(assignment, model)``; the assignment is ``(key,
+    [sub,] __qv, cluster)``, one row per point.
+
+    Everything that decides an assignment is EXACT integer math, so any
+    engine computes bit-identical clusters (the certification pattern
+    that moved SimHash/MinHash off rows-only in r2):
+
+    - init is the ``k`` smallest keys' vectors among rows with no NULL
+      element, cid = key rank (seed-free); the PQ view slices each into
+      its subvectors on the driver. The first row's length is the
+      vector length; an init row of another length is skipped and the
+      ranks close up;
+    - assignment is :func:`_probe_cells` with one probe: integer sums
+      of squared diffs, argmin with the smaller-cid tie-break, and no
+      cell for a row without a defined distance;
+    - new centroid components are ``floor(double(sum)/count)``: the
+      numerator is an exact long (≪2⁵³ even at 10⁹ members), so the
+      IEEE division and floor are reproducible everywhere.
+
+    Scale shape (the same as distributed MLlib Lloyd): the model is a
+    1-row broadcast, assignment is a narrow map over the corpus, and
+    the recompute is ONE shuffle per iteration keyed ([sub,] cluster)
+    with map-side partial sums. ``iters`` is fixed for certification;
+    production loops until centroid movement < ε.
+
+    ``model`` injects a pre-trained frame and skips init + iterations:
+    ONE assignment pass (the r7-verdict-#5 amortization pattern). The
+    assignment is a pure function of (vector, model), whatever its size.
+    """
+    spark = q.sparkSession
+    pq = m > 0
+    grp = ("sub",) if pq else ()
+    col, keys = ("__cb", {"sub": "int", "cid": "bigint"}) if pq else ("__cs", {"cid": "bigint"})
+    # The row guard: no NULL element, and in the PQ view the WHOLE vector
+    # is dim long (after the split a longer vector would pass as m full
+    # subvectors). It gates the init rows and the split; a k-means point
+    # it would reject has no distance to the model, so the assignment
+    # rule drops it. Inside the generator it is no Filter node, so the
+    # fan_out exchange under both fits of a composition stays one
+    # reusable exchange.
+    ok = "forall(__qv, x -> x IS NOT NULL)" + (f" AND size(__qv) = {dim}" if pq else "")
+    pts = (
+        q.select(
+            key_col,
+            F.posexplode(F.when(F.expr(ok), _pq_subvectors(F.col("__qv"), m, dim))).alias("sub", "__qv"),
+        )
+        if pq else q
+    )
+
+    def assign(state: DataFrame) -> DataFrame:
+        # in the filter lambda the bare ``sub`` resolves to the OUTER
+        # row's subspace column
+        return _probe_cells(
+            pts, state, 1, key_col, (*grp, "__qv"),
+            "filter(__cb, e -> e.sub = sub)" if pq else "__cs",
+        )
+
+    if model is not None:
+        return assign(model), model
+    # Model-state transport (r15 opt-wave-2, guide §2.4/§5): each model
+    # state is COLLECTED and re-enters as a LOCAL 1-row frame
+    # (:func:`_model_frame`) instead of the r9→r15 ``collect_list`` +
+    # ``localCheckpoint(eager=False)`` formulation. The values are
+    # unchanged (same Spark aggregates; Python only ferries exact
+    # longs), downstream plans still see a leaf — but the leaf is now
+    # driver-local data: no checkpoint-materialization job and no
+    # block-store round trip per iteration, and every downstream
+    # broadcast of the model builds from local rows instead of
+    # re-collecting a checkpointed RDD (one fewer job per consumer
+    # branch). Cost: the fit becomes EAGER at construction — exactly
+    # the jobs the first action used to trigger, just earlier; the
+    # driver-side bytes are the same model longs the old broadcast
+    # already collected to the driver.
+    # init = the k smallest keys' vectors, cid = key rank: ONE
+    # TakeOrdered job; the rank assignment (row_number over
+    # Window.orderBy(key) in the pre-r15 shape) happens on the k
+    # collected rows — identical cids, one fewer window pass.
+    # r16 (r15 ADVICE, low): collect the KEY alongside and re-sort the
+    # k rows driver-side rather than rely on TakeOrderedAndProjectExec
+    # preserving sort order after the sort column is projected away.
+    # Keys here are the engine's integer ids, so the Python sort is the
+    # same total order.
+    init = sorted(
+        q.filter(ok).orderBy(key_col).limit(k).collect(),
+        key=lambda r: r[0],
+    )
+    dim = dim or (len(init[0][1]) if init else 0)
+    d_sub = dim // max(m, 1)
+    state = _model_frame(
+        spark,
+        [
+            {"sub": s, "cid": i, "cv": v[s * d_sub:(s + 1) * d_sub]}
+            for i, v in enumerate(r[1] for r in init if len(r[1]) == dim)
+            for s in range(max(m, 1))
+        ],
+        col, **keys,
+    )
+    # r15 (guide §2.3): the recompute is d_sub map-side-combinable long
+    # sums + one count per ([sub,] cluster) — no d_sub×-row posexplode
+    # inflation, and ONE tiny exchange instead of the explode shape's
+    # two (hash(cluster, dim) does not satisfy the follow-up
+    # hash(cluster) agg). ONE parsed expr for the array of sums
+    # (Catalyst extracts each sum into the agg node, map-side combine
+    # intact) and ONE transform for the recomposed centroid — 2 RPCs per
+    # iteration instead of d_sub+1. Every assigned point is d_sub long:
+    # a point of another length has no distance to the model.
+    sums = F.expr(
+        "array(" + ",".join(f"sum(element_at(__qv, {i + 1}))" for i in range(d_sub)) + ") AS __sums"
+    )
+    cv = F.expr("transform(__sums, s -> cast(floor(cast(s as double) / __n) as bigint)) AS cv")
+    a = assign(state)
+    for _ in range(iters - 1):
+        state = _model_frame(
+            spark,
+            a.groupBy(*grp, "cluster")
+            .agg(F.count(F.lit(1)).alias("__n"), sums)
+            .select(*grp, F.col("cluster").alias("cid"), cv)
+            .collect(),
+            col, **keys,
+        )
+        a = assign(state)
+    return a, state
+
+
 def kmeans_portable(
     df: DataFrame,
     vec_col: str = "embedding",
     key_col: str = "vec_id",
     k: int = 8,
     iters: int = 2,
-    scale: int = 1 << 20,
 ) -> DataFrame:
     """Deterministic, engine-portable Lloyd k-means assignment — see
     :func:`kmeans_portable_fit` (this is its assignment-only view)."""
-    a, _ = kmeans_portable_fit(df, vec_col, key_col, k=k, iters=iters, scale=scale)
+    a, _ = kmeans_portable_fit(df, vec_col, key_col, k=k, iters=iters)
     return a.select(key_col, "cluster")
 
 
@@ -309,51 +487,26 @@ def kmeans_portable_fit(
     key_col: str = "vec_id",
     k: int = 8,
     iters: int = 2,
-    scale: int = 1 << 20,
     centroids: DataFrame | None = None,
-    dim: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Deterministic, engine-portable Lloyd k-means: returns
-    ``(assignment, centroids)`` after ``iters`` iterations — the
-    assignment frame ``(key, __qv, cluster)`` and the 1-row centroid
-    frame ``__cs: array<struct<cid, cv>>`` (quantized-integer final
-    centroids, the coarse-quantizer state :func:`ivf_ann_portable`
+    """Deterministic, engine-portable Lloyd k-means: the one-space view
+    of :func:`_lloyd`. Embeddings quantize once to longs,
+    ``floor(double(x) · 2²⁰)`` (floor, not round — no rounding-mode
+    ambiguity across engines), then ``iters`` exact-integer Lloyd
+    iterations run from the ``k`` smallest keys. Returns ``(assignment,
+    centroids)``: the assignment frame ``(key, __qv, cluster)`` and the
+    1-row centroid frame ``__cs: array<struct<cid, cv>>`` (quantized
+    final centroids, the coarse-quantizer state :func:`ivf_ann_portable`
     probes against).
 
-    Everything that decides an assignment is EXACT integer math, so any
-    engine computes bit-identical clusters (the certification pattern
-    that moved SimHash/MinHash off rows-only in r2):
+    ``centroids=`` injects a pre-trained 1-row ``__cs`` frame (fit on a
+    sample, or cached) and skips init + iterations entirely — ONE
+    assignment pass. Injecting a full fit's own centroid frame
+    reproduces its assignment bit-exactly (pinned by pytest).
 
-    - embeddings quantize once to longs: ``floor(double(x) · scale)``
-      (floor, not round — no rounding-mode ambiguity across engines);
-    - init is the ``k`` smallest keys' vectors, cid = rank (seed-free);
-    - distances are integer sums of squared diffs; argmin + smallest-cid
-      tie-break is ``min(dist·k + cid) % k`` — one exact bigint;
-    - new centroid components are ``floor(double(sum)/count)``: the
-      numerator is an exact long (≪2⁵³ even at 10⁹ members), so the
-      IEEE division and floor are reproducible everywhere.
-
-    Scale shape (the same as distributed MLlib Lloyd): centroids are a
-    k-row broadcast, assignment is a narrow map over the corpus, and
-    the recompute is ONE shuffle per iteration keyed (cluster, dim)
-    with map-side partial sums. ``iters`` is fixed for certification;
-    production loops until centroid movement < ε.
-
-    ``centroids=`` injects a pre-trained 1-row ``__cs`` frame (fit on
-    a sample, or cached from a prior run) and skips init + iterations
-    entirely — ONE assignment pass, the r7-verdict-#5 amortization
-    pattern. Assignments are a pure function of (vector, centroids),
-    so injecting a full fit's own centroid frame reproduces its
-    assignment bit-exactly (pinned by pytest).
-
-    ``dim=`` (r15, guide §2.3) opts the centroid recompute into the
-    wide-sum formulation — ``dim`` map-side long sums + a count per
-    cluster instead of a dim×-row posexplode, one fewer exchange per
-    iteration, bit-identical centroids. CONTRACT: every vector must be
-    exactly ``dim`` long with no NULLs (a short/NULL vector silently
-    contributes NULL component sums here, where the explode path drops
-    its rows) — the PQ compositions already require this, generic
-    callers without a fixed-dim guarantee must leave it None.
+    A row whose vector is NULL, holds a NULL, or differs in length from
+    the centroids gets no cluster: it is dropped from the assignment and
+    moves no centroid.
 
     r15 (guide §2.5): the quantize + per-row integer-distance argmin
     HOFs are CPU-dense and fuse into the scan; the input takes the
@@ -361,138 +514,8 @@ def kmeans_portable_fit(
     """
     from pipetree_spark.ops.relational import fan_out
 
-    df = fan_out(df)
-    # r16 (guide §1.2 step 2, the W3 pattern): the quantize transform,
-    # the argmin encode and the injected-state struct sort are each ONE
-    # parsed expr string — the lambda-built HOF trees issued ~150 py4j
-    # RPCs per assign() call (~0.2-1.2 ms each on this host). The SQL
-    # parses to the identical expression tree (integer-literal typing
-    # INT×BIGINT→BIGINT matches Column ops; CAST(int AS DOUBLE) folds
-    # to the same double literal), so assignments stay bit-identical —
-    # parity + the injection-reproducibility pytest pin it.
-    q = df.select(
-        key_col,
-        F.expr(_QUANTIZE_SQL.format(col=sql_ident(vec_col), scale=scale)).alias("__qv"),
-    )
-    sqd = _SQDIST_SQL.format(vec=sql_ident("__qv"))
-
-    def assign(centroid_row: DataFrame) -> DataFrame:
-        enc = F.expr(
-            f"array_min(transform(__cs, c -> {sqd}"
-            f" * CAST({k} AS BIGINT) + c.cid)) % {k}"
-        )
-        return q.crossJoin(F.broadcast(centroid_row)).select(
-            key_col, "__qv", enc.alias("cluster")
-        )
-
-    if centroids is not None:
-        # the multiplier encode above is only sound while every cid < k;
-        # an injected frame's size is the CALLER's k, so argmin via the
-        # (dist, cid) struct sort instead — identical assignment + tie
-        # break with no dependence on this function's k parameter
-        best = F.expr(
-            f"element_at(array_sort(transform(__cs,"
-            f" c -> named_struct('d', {sqd}, 'cid', c.cid))), 1).cid"
-        )
-        a_inj = q.crossJoin(F.broadcast(centroids)).select(
-            key_col, "__qv", best.alias("cluster")
-        )
-        return a_inj, centroids
-
-    # Model-state transport (r15 opt-wave-2, guide §2.4/§5): each k-row
-    # centroid state is COLLECTED and re-enters as a LOCAL 1-row frame
-    # (:func:`_model_frame`) instead of the r9→r15 ``collect_list``
-    # + ``localCheckpoint(eager=False)`` formulation. The values are
-    # unchanged (same Spark aggregates; Python only ferries exact
-    # longs), downstream plans still see a leaf — but the leaf is now
-    # driver-local data: no checkpoint-materialization job and no
-    # block-store round trip per iteration, and every downstream
-    # broadcast of the model builds from local rows instead of
-    # re-collecting a checkpointed RDD (one fewer job per consumer
-    # branch). Cost: the fit becomes EAGER at construction — exactly
-    # the jobs the first action used to trigger, just earlier; the
-    # driver-side bytes are the same k×dim longs the old broadcast
-    # already collected to the driver.
-    spark = df.sparkSession
-    # init = the k smallest keys' vectors, cid = key rank: ONE
-    # TakeOrdered job; the rank assignment (row_number over
-    # Window.orderBy(key) in the pre-r15 shape) happens on the k
-    # collected rows — identical cids, one fewer window pass.
-    # r16 (r15 ADVICE, low): collect the KEY alongside and re-sort the
-    # k rows driver-side — the previous select("__qv")-only collect
-    # relied on TakeOrderedAndProjectExec preserving sort order after
-    # the sort column is projected away, an implicit planner contract
-    # a future planner change could silently break. Keys here are the
-    # engine's integer ids, so the Python sort is the same total order.
-    init_rows = sorted(
-        q.orderBy(key_col).limit(k).select(key_col, "__qv").collect(),
-        key=lambda r: r[0],
-    )
-    cents = _model_frame(
-        spark,
-        [{"cid": i, "cv": r["__qv"]} for i, r in enumerate(init_rows)],
-        "__cs", cid="bigint",
-    )
-
-    a = assign(cents)
-    for _ in range(iters - 1):
-        if dim is not None:
-            # r15 (guide §2.3): with a known dimensionality the
-            # centroid recompute is ``dim`` map-side-combinable long
-            # sums + one count, grouped by cluster — no 64×-row
-            # posexplode inflation, and ONE tiny exchange (k rows)
-            # instead of the explode path's two (hash(cluster, dim)
-            # does not satisfy the follow-up hash(cluster) agg). Each
-            # component is the SAME expression — floor(double(sum) /
-            # count) — over the same exact long sums, so the centroid
-            # frame is bit-identical to the fallback's (parity +
-            # pytest pinned).
-            # ONE parsed expr for all dim component sums (an array of
-            # aggregates — Catalyst extracts each sum into the agg node
-            # as before, map-side combine intact) and ONE transform for
-            # the recomposed centroid: r15's per-component strings still
-            # cost dim+1 RPCs per iteration (65 at dim=64); this is 2.
-            # Component math unchanged: floor(double(sum)/count) per
-            # element over the same exact long sums (parity-pinned).
-            sums = F.expr(
-                "array("
-                + ",".join(f"sum(element_at(__qv, {i + 1}))" for i in range(dim))
-                + ") AS __sums"
-            )
-            cv = F.expr(
-                "transform(__sums,"
-                " s -> cast(floor(cast(s as double) / __n) as bigint)) AS cv"
-            )
-            cents = _model_frame(
-                spark,
-                a.groupBy("cluster")
-                .agg(F.count(F.lit(1)).alias("__n"), sums)
-                .select(F.col("cluster").alias("cid"), cv)
-                .collect(),
-                "__cs", cid="bigint",
-            )
-            a = assign(cents)
-            continue
-        comp = (
-            a.select("cluster", F.posexplode("__qv").alias("__i", "__x"))
-            .groupBy("cluster", "__i")
-            .agg(
-                F.floor(F.sum("__x").cast("double") / F.count("*")).cast("long").alias("__cd")
-            )
-        )
-        cents = _model_frame(
-            spark,
-            comp.groupBy("cluster")
-            .agg(F.array_sort(F.collect_list(F.struct("__i", "__cd"))).alias("__s"))
-            .select(
-                F.col("cluster").alias("cid"),
-                F.transform("__s", lambda t: t["__cd"]).alias("cv"),
-            )
-            .collect(),
-            "__cs", cid="bigint",
-        )
-        a = assign(cents)
-    return a, cents
+    q = fan_out(df).select(key_col, _quantize(vec_col).alias("__qv"))
+    return _lloyd(q, key_col, k, iters, centroids)
 
 
 def ivf_train(
@@ -501,7 +524,6 @@ def ivf_train(
     key_col: str = "vec_id",
     n_clusters: int = 8,
     iters: int = 2,
-    scale: int = 1 << 20,
 ) -> DataFrame:
     """Train the portable-Lloyd coarse quantizer and return its 1-row
     centroid frame (``__cs: array<struct<cid, cv>>``) — the injectable
@@ -515,9 +537,7 @@ def ivf_train(
     parity never runs. Blocks are a pure function of (vector,
     centroids), so any training corpus yields a valid blocking; only
     recall, not correctness, depends on centroid quality."""
-    _, cents = kmeans_portable_fit(
-        df, vec_col, key_col, k=n_clusters, iters=iters, scale=scale
-    )
+    _, cents = kmeans_portable_fit(df, vec_col, key_col, k=n_clusters, iters=iters)
     return cents
 
 
@@ -528,7 +548,6 @@ def ivf_multiprobe_assign(
     n_probe: int = 2,
     n_clusters: int = 8,
     iters: int = 2,
-    scale: int = 1 << 20,
     assign_to: DataFrame | None = None,
     assign_key: str | None = None,
     centroids: DataFrame | None = None,
@@ -542,6 +561,8 @@ def ivf_multiprobe_assign(
     cluster)`` with ``n_probe`` rows per key — ``carry_cols`` ride the
     narrow assignment map so callers need no re-join against the
     assignment output (the r7 plan shaved one shuffle join this way).
+    A key whose vector is NULL, holds a NULL or differs in length from
+    the centroids gets no row.
 
     This is the standard recall lever for BLOCKED pairwise ops
     (semantic dedup, decontamination): two vectors collide if ANY
@@ -564,15 +585,11 @@ def ivf_multiprobe_assign(
         # quantizer still trains on the FULL corpus (duplicates weight
         # the centroid means, which is what any oracle re-derivation
         # sees)
-        centroids = ivf_train(df, vec_col, key_col, n_clusters, iters, scale)
+        centroids = ivf_train(df, vec_col, key_col, n_clusters, iters)
     tgt = df if assign_to is None else assign_to
     tgt_key = key_col if assign_key is None else assign_key
     renamed = tgt if tgt_key == key_col else tgt.withColumnRenamed(tgt_key, key_col)
-    q = renamed.select(
-        key_col,
-        *carry_cols,
-        F.expr(_QUANTIZE_SQL.format(col=sql_ident(vec_col), scale=scale)).alias("__qv"),
-    )
+    q = renamed.select(key_col, *carry_cols, _quantize(vec_col).alias("__qv"))
     return _probe_cells(q, centroids, n_probe, key_col, tuple(carry_cols))
 
 
@@ -935,34 +952,6 @@ def semantic_dedup_ann(
     )
 
 
-def _probe_cells(
-    qq: DataFrame,
-    cents: DataFrame,
-    n_probe: int,
-    query_key: str,
-    carry: tuple[str, ...],
-) -> DataFrame:
-    """Explode each query row into its ``n_probe`` nearest centroid
-    cells — exact integer distance, ties → smaller cid via the (d, cid)
-    struct sort. The ONE probe rule every portable ANN op shares (a
-    change here moves ivf/pq/residual in lockstep, keeping their
-    certified oracles in parity). ``qq`` must carry ``__qv``;
-    ``carry`` columns ride the explode. One parsed expr (r16, the W3
-    pattern — was ~70 RPCs of lambda-built Column tree); named_struct
-    builds the same struct<d,cid> the F.struct formulation did, so the
-    (d, cid) array_sort tie-break is unchanged."""
-    sqd = _SQDIST_SQL.format(vec=sql_ident("__qv"))
-    return qq.crossJoin(F.broadcast(cents)).select(
-        query_key,
-        *carry,
-        F.expr(
-            f"explode(transform(slice(array_sort(transform(__cs,"
-            f" c -> named_struct('d', {sqd}, 'cid', c.cid))), 1, {n_probe}),"
-            f" s -> s.cid)) AS cluster"
-        ),
-    )
-
-
 def _adc_shortlist(
     cand: DataFrame, m: int, shortlist: int, query_key: str, corpus_key: str
 ) -> DataFrame:
@@ -989,7 +978,6 @@ def ivf_ann_portable(
     query_key: str = "query_id",
     corpus_key: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = 1 << 20,
 ) -> DataFrame:
     """IVF ANN whose every stage is deterministic and engine-portable:
 
@@ -1009,12 +997,10 @@ def ivf_ann_portable(
     fixed-step integer Lloyd rather than converged seeded k-means,
     which costs a little recall, not scalability.
     """
-    assign_df, cents = kmeans_portable_fit(
-        corpus, vec_col, corpus_key, k=n_clusters, iters=iters, scale=scale
-    )
+    assign_df, cents = kmeans_portable_fit(corpus, vec_col, corpus_key, k=n_clusters, iters=iters)
     cells = assign_df.select(corpus_key, "cluster")
     qq = _normed(
-        queries, query_key, vec_col, "__mv", "__qn", _pq_quantize(vec_col, scale).alias("__qv")
+        queries, query_key, vec_col, "__mv", "__qn", _quantize(vec_col).alias("__qv")
     )
     probes = _probe_cells(qq, cents, n_probe, query_key, ("__mv", "__qn"))
     return _rounded_cos_topk(
@@ -1029,13 +1015,11 @@ def pca_power_portable(
     vec_col: str = "embedding",
     key_col: str = "vec_id",
     iters: int = 3,
-    scale: int = 1 << 20,
-    rescale: int = 1 << 10,
 ) -> DataFrame:
     """Deterministic, engine-portable ``iters``-step power-iteration
     direction (integer-quantized) — the certifiable statistic of the
     PCA family; returns 64 rows ``(component, loading)`` with
-    exact-integer loadings in [-rescale, rescale]. With a healthy
+    exact-integer loadings in [-2¹⁰, 2¹⁰]. With a healthy
     eigengap it converges to the top principal direction; on
     near-isotropic data small ``iters`` only turns toward it — this op
     certifies DETERMINISM (any engine, bit-identical), not
@@ -1046,10 +1030,10 @@ def pca_power_portable(
     identical IEEE double expression, so any engine reproduces it
     bit-for-bit:
 
-    - quantize ``floor(double(x)·scale)``, center by the per-dim
+    - quantize ``floor(double(x)·2²⁰)``, center by the per-dim
       ``floor(sum/count)`` integer mean;
     - iterate ``t_i = Σ_d cq_id·v_d`` (exact longs, v₀ = all-ones),
-      rescaled to ±rescale via ``floor(double(t)/max|t|·rescale)``,
+      rescaled to ±2¹⁰ via ``floor(double(t)/max|t|·2¹⁰)``,
       then ``w_d = Σ_i s_i·cq_id`` rescaled the same way;
     - sign convention: the first maximal-|loading| component is
       non-negative (array_position / list_position agree on "first").
@@ -1070,12 +1054,7 @@ def pca_power_portable(
     50 s vs ~6 s at sf0.01). Only 1-row model state is materialized —
     corpus rows never leave executors.
     """
-    q = df.select(
-        key_col,
-        F.transform(
-            vec_col, lambda x: F.floor(x.cast("double") * F.lit(float(scale))).cast("long")
-        ).alias("__qv"),
-    )
+    q = df.select(key_col, _quantize(vec_col).alias("__qv"))
     dims = F.posexplode("__qv")
     mu_row = checkpoint(
         q.select(dims.alias("__i", "__x"))
@@ -1113,7 +1092,7 @@ def pca_power_portable(
         mt = checkpoint(t.agg(F.max(F.abs("__t")).alias("__mt")))
         s = t.crossJoin(F.broadcast(mt)).select(
             "__cq",
-            F.floor(F.col("__t").cast("double") / F.col("__mt") * F.lit(float(rescale)))
+            F.floor(F.col("__t").cast("double") / F.col("__mt") * F.lit(float(_RESCALE)))
             .cast("long")
             .alias("__sc"),
         )
@@ -1129,7 +1108,7 @@ def pca_power_portable(
             w.crossJoin(F.broadcast(mw))
             .select(
                 "__i",
-                F.floor(F.col("__w").cast("double") / F.col("__mw") * F.lit(float(rescale)))
+                F.floor(F.col("__w").cast("double") / F.col("__mw") * F.lit(float(_RESCALE)))
                 .cast("long")
                 .alias("__vd"),
             )
@@ -1152,10 +1131,6 @@ def pca_power_portable(
     )
 
 
-def _pq_quantize(vec_col: str, scale: int) -> Column:
-    return F.expr(_QUANTIZE_SQL.format(col=sql_ident(vec_col), scale=scale))
-
-
 def _pq_subvectors(qv: Column, m: int, dim: int) -> Column:
     d_sub = dim // m
     return F.array(*[F.slice(qv, s * d_sub + 1, d_sub) for s in range(m)])
@@ -1169,158 +1144,56 @@ def pq_fit_portable(
     n_codes: int = 16,
     dim: int = 64,
     iters: int = 2,
-    scale: int = 1 << 20,
     quantized_col: str | None = None,
     codebook: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Deterministic, engine-portable product quantization (PQ): split
-    each vector into ``m`` contiguous subvectors of ``dim/m`` dims and
-    Lloyd-cluster every subspace into ``n_codes`` codes. Returns
+    """Deterministic, engine-portable product quantization (PQ): the
+    m-subspace view of :func:`_lloyd`. Each quantized vector splits into
+    ``m`` contiguous subvectors of ``dim/m`` dims and every subspace is
+    Lloyd-clustered into ``n_codes`` codes, from the ``n_codes``
+    smallest keys' subvectors (Jégou, Douze & Schmid 2011). Returns
     ``(codes, codebook)`` — ``codes`` is ``(key, codes: array<long>)``
     (the ``m``-byte compressed representation: 64 float32 dims → m
     small ints, 64× memory cut at m=4/n_codes=16), ``codebook`` the
     1-row frame ``__cb: array<struct<sub, cid, cv>>`` every decode /
-    ADC pass broadcasts.
+    ADC pass broadcasts. Same certification contract as
+    :func:`kmeans_portable_fit`: codes are bit-identical on any engine.
 
-    This is :func:`kmeans_portable_fit` generalized with a subspace
-    grouping key, under the same certification contract — every
-    assignment-deciding value is exact integer math (floor-quantized
-    inputs, integer squared distances, ``min(dist·n_codes+cid)``
-    argmin-with-tie-break, ``floor(sum/count)`` centroid recompute),
-    so any engine reproduces codes bit-identically:
-
-    - init: subspace ``s``'s codebook = the ``n_codes`` smallest keys'
-      ``s``-th subvectors, cid = key rank (seed-free);
-    - each iteration is ONE assignment pass (narrow map against the
-      broadcast codebook — all m subspaces assigned in a single
-      expression, no per-subspace job) + ONE ``groupBy(sub, code,
-      dim)`` recompute shuffle with map-side partial sums.
-
-    Scale shape: the corpus never replicates (the exploded sv frame is
-    m narrow rows per vector), the model state is m·n_codes rows
-    broadcast once per pass — the same distributed-Lloyd shape as the
-    coarse quantizer. Production trains on a sample and injects the
-    codebook, exactly like :func:`ivf_train` (r7 verdict #5 pattern).
+    Scale shape: the corpus never replicates (the exploded point frame
+    is m narrow rows per vector; all m subspaces are assigned in one
+    pass, no per-subspace job), the model state is m·n_codes entries
+    broadcast once per pass. Production trains on a sample and injects
+    the codebook, exactly like :func:`ivf_train` (r7 verdict #5).
 
     ``quantized_col`` feeds an already-integer vector column (e.g. the
     residuals of :func:`ivfpq_residual_ann_portable`) straight into the
     subspace split, skipping the float quantization step.
 
     ``codebook=`` injects a pre-trained 1-row ``__cb`` frame (fit on a
-    sample, or cached) and skips init + iterations: ONE encode pass —
-    the r7-verdict-#5 amortization pattern, same as ``centroids=`` on
-    :func:`kmeans_portable_fit`. Codes are a pure function of
-    (vector, codebook), so injecting a full fit's own codebook
-    reproduces its codes bit-exactly (pinned by pytest).
-    """
-    d_sub = dim // m
-    if d_sub * m != dim:
-        raise ValueError(f"dim={dim} not divisible by m={m}")
-    from pyspark.sql import Window
+    sample, or cached) and skips init + iterations: ONE encode pass.
+    Injecting a full fit's own codebook reproduces its codes bit-exactly
+    (pinned by pytest).
 
+    A vector that is NULL, holds a NULL, or is not ``dim`` long gets no
+    codes: the split yields no subvector for it, so it is dropped and
+    moves no code word.
+    """
+    if dim % m:
+        raise ValueError(f"dim={dim} not divisible by m={m}")
     from pipetree_spark.ops.relational import fan_out
 
     # r15 (guide §2.5): same scan-parallelism floor as
     # kmeans_portable_fit — the subspace-split + per-row code argmin
     # HOFs otherwise serialize into a small corpus's single scan task.
-    df = fan_out(df)
-
-    qv = (
-        F.col(quantized_col)
-        if quantized_col is not None
-        else _pq_quantize(vec_col, scale)
+    qv = F.col(quantized_col) if quantized_col is not None else _quantize(vec_col)
+    q = fan_out(df).select(key_col, qv.alias("__qv"))
+    a, cb = _lloyd(q, key_col, n_codes, iters, codebook, m, dim)
+    codes = a.groupBy(key_col).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("sub", "cluster"))), lambda t: t["cluster"]
+        ).alias("codes")
     )
-    sv = df.select(
-        key_col, F.posexplode(_pq_subvectors(qv, m, dim)).alias("sub", "__qsv")
-    )
-    # one parsed expr per assign (r16, the W3 pattern — see
-    # kmeans_portable_fit): in the filter lambda the bare ``sub``
-    # resolves to the OUTER row's subspace column, exactly the
-    # F.col("sub") the Column formulation bound
-    sqd = _SQDIST_SQL.format(vec=sql_ident("__qsv"))
-
-    def assign(cb_row: DataFrame) -> DataFrame:
-        enc = F.expr(
-            f"array_min(transform(filter(__cb, e -> e.sub = sub),"
-            f" c -> {sqd} * CAST({n_codes} AS BIGINT) + c.cid)) % {n_codes}"
-        )
-        return sv.crossJoin(F.broadcast(cb_row)).select(
-            key_col, "sub", "__qsv", enc.alias("code")
-        )
-
-    def to_codes(a_df: DataFrame) -> DataFrame:
-        return a_df.groupBy(key_col).agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("sub", "code"))),
-                lambda t: t["code"],
-            ).alias("codes")
-        )
-
-    if codebook is not None:
-        # multiplier-free argmin (struct sort) — assign()'s encode is
-        # only sound while every cid < n_codes, and an injected
-        # codebook's size belongs to the CALLER (see kmeans_portable_fit)
-        best = F.expr(
-            f"element_at(array_sort(transform(filter(__cb, e -> e.sub = sub),"
-            f" c -> named_struct('d', {sqd}, 'cid', c.cid))), 1).cid"
-        )
-        a_inj = sv.crossJoin(F.broadcast(codebook)).select(
-            key_col, "sub", "__qsv", best.alias("code")
-        )
-        return to_codes(a_inj), codebook
-
-    ranked = (
-        df.orderBy(key_col)
-        .limit(n_codes)
-        .withColumn("cid", (F.row_number().over(Window.orderBy(key_col)) - 1).cast("long"))
-        .select(key_col, "cid")
-    )
-    # Same model-state transport as kmeans_portable_fit (see the
-    # comment there): each m·n_codes-row codebook state is collected
-    # and re-enters as a LOCAL 1-row frame — same values, no checkpoint
-    # job, no block-store round trip, and ADC consumers that
-    # broadcast-join it in branches separate from the codes frame
-    # build those broadcasts from local rows.
-    spark = df.sparkSession
-    cb = _model_frame(
-        spark,
-        sv.join(F.broadcast(ranked), key_col)
-        .select("sub", "cid", F.col("__qsv").alias("cv"))
-        .collect(),
-        "__cb", sub="int", cid="bigint",
-    )
-    a = assign(cb)
-    for _ in range(iters - 1):
-        # r15 (guide §2.3): the codebook recompute is d_sub map-side-
-        # combinable long sums + one count per (sub, code) — no
-        # d_sub×-row posexplode inflation and one fewer exchange per
-        # iteration (hash(sub, code, dim) never satisfied the follow-up
-        # hash(sub, code) agg). Component math is the identical
-        # floor(double(sum)/count) over the same exact long sums, so
-        # the codebook is bit-identical (subvectors are exactly d_sub
-        # long by construction — the slice in _pq_subvectors).
-        # ONE array-of-sums aggregate + ONE transform, same rationale
-        # and same expression tree as the kmeans recompute above
-        # (guide §1.2 step 2; was d_sub+1 expr RPCs per iteration)
-        sums = F.expr(
-            "array("
-            + ",".join(f"sum(element_at(__qsv, {i + 1}))" for i in range(d_sub))
-            + ") AS __sums"
-        )
-        cv = F.expr(
-            "transform(__sums,"
-            " s -> cast(floor(cast(s as double) / __n) as bigint)) AS cv"
-        )
-        cb = _model_frame(
-            spark,
-            a.groupBy("sub", "code")
-            .agg(F.count(F.lit(1)).alias("__n"), sums)
-            .select(F.col("sub"), F.col("code").alias("cid"), cv)
-            .collect(),
-            "__cb", sub="int", cid="bigint",
-        )
-        a = assign(cb)
-    return to_codes(a), cb
+    return codes, cb
 
 
 def pq_adc_topk_portable(
@@ -1334,7 +1207,6 @@ def pq_adc_topk_portable(
     query_key: str = "query_id",
     corpus_key: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = 1 << 20,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: each query keeps
     its full quantized subvectors; every candidate is represented ONLY
@@ -1352,7 +1224,7 @@ def pq_adc_topk_portable(
     """
     qprep = queries.select(
         F.col(query_key),
-        _pq_subvectors(_pq_quantize(vec_col, scale), m, dim).alias("__qsubs"),
+        _pq_subvectors(_quantize(vec_col), m, dim).alias("__qsubs"),
     )
     j = (
         codes.crossJoin(F.broadcast(qprep))
@@ -1398,7 +1270,6 @@ def pq_ivf_ann_portable(
     query_key: str = "query_id",
     corpus_key: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = 1 << 20,
     centroids: DataFrame | None = None,
     codebook: DataFrame | None = None,
 ) -> DataFrame:
@@ -1432,8 +1303,8 @@ def pq_ivf_ann_portable(
     if centroids is None and codebook is None:
         # r15 (guide §2.6): the coarse-quantizer fit and the PQ fit are
         # INDEPENDENT job chains over the same corpus; since the fits
-        # run their model-state collects eagerly (see
-        # kmeans_portable_fit), running the two fit FUNCTIONS from a
+        # run their model-state collects eagerly (:func:`_lloyd`),
+        # running the two fit FUNCTIONS from a
         # 2-thread pool overlaps the two Lloyd passes — each fit's
         # straggler tail back-fills the other's idle cores. Results
         # are unchanged (two independent deterministic computations).
@@ -1442,32 +1313,24 @@ def pq_ivf_ann_portable(
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fk = pool.submit(
-                kmeans_portable_fit, corpus, vec_col, corpus_key,
-                k=n_clusters, iters=iters, scale=scale, dim=dim,
-            )
-            fp = pool.submit(
-                pq_fit_portable, corpus, vec_col, corpus_key,
-                m=m, n_codes=n_codes, dim=dim, scale=scale,
-            )
+            fk = pool.submit(kmeans_portable_fit, corpus, vec_col, corpus_key, k=n_clusters, iters=iters)
+            fp = pool.submit(pq_fit_portable, corpus, vec_col, corpus_key, m=m, n_codes=n_codes, dim=dim)
             assign_df, cents = fk.result()
             codes, cb = fp.result()
     else:
         assign_df, cents = kmeans_portable_fit(
-            corpus, vec_col, corpus_key, k=n_clusters, iters=iters, scale=scale,
-            centroids=centroids, dim=dim,
+            corpus, vec_col, corpus_key, k=n_clusters, iters=iters, centroids=centroids
         )
         codes, cb = pq_fit_portable(
-            corpus, vec_col, corpus_key, m=m, n_codes=n_codes, dim=dim, scale=scale,
-            codebook=codebook,
+            corpus, vec_col, corpus_key, m=m, n_codes=n_codes, dim=dim, codebook=codebook
         )
     cand_codes = codes.join(assign_df.select(corpus_key, "cluster"), corpus_key)
 
     # quantize once, slice the SAME __qv into subvectors: HOFs evaluate
-    # interpreted (no CSE), so an inline second _pq_quantize would
+    # interpreted (no CSE), so an inline second _quantize would
     # re-run the floor transform per query row
     qq = _normed(
-        queries, query_key, vec_col, "__mv", "__qn", _pq_quantize(vec_col, scale).alias("__qv")
+        queries, query_key, vec_col, "__mv", "__qn", _quantize(vec_col).alias("__qv")
     ).withColumn("__qsubs", _pq_subvectors(F.col("__qv"), m, dim))
     probes = _probe_cells(qq, cents, n_probe, query_key, ("__mv", "__qn", "__qsubs"))
     cand = (
@@ -1495,7 +1358,6 @@ def ivfpq_residual_ann_portable(
     query_key: str = "query_id",
     corpus_key: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = 1 << 20,
     centroids: DataFrame | None = None,
     codebook: DataFrame | None = None,
 ) -> DataFrame:
@@ -1530,8 +1392,7 @@ def ivfpq_residual_ann_portable(
     against the same centroids).
     """
     assign_df, cents = kmeans_portable_fit(
-        corpus, vec_col, corpus_key, k=n_clusters, iters=iters, scale=scale,
-        centroids=centroids, dim=dim,
+        corpus, vec_col, corpus_key, k=n_clusters, iters=iters, centroids=centroids
     )
     cell_cv = lambda: F.element_at(  # noqa: E731 — centroid of row's cluster
         F.filter("__cs", lambda c: c["cid"] == F.col("cluster")), 1
@@ -1545,13 +1406,13 @@ def ivfpq_residual_ann_portable(
         )
     )
     codes, cb = pq_fit_portable(
-        rv, key_col=corpus_key, m=m, n_codes=n_codes, dim=dim, scale=scale,
+        rv, key_col=corpus_key, m=m, n_codes=n_codes, dim=dim,
         quantized_col="__rv", codebook=codebook,
     )
     cand_codes = codes.join(rv.select(corpus_key, "cluster"), corpus_key)
 
     qq = _normed(
-        queries, query_key, vec_col, "__mv", "__qn", _pq_quantize(vec_col, scale).alias("__qv")
+        queries, query_key, vec_col, "__mv", "__qn", _quantize(vec_col).alias("__qv")
     )
     probed = _probe_cells(
         qq, cents, n_probe, query_key, ("__mv", "__qn", "__qv", "__cs")

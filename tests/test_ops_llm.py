@@ -456,6 +456,103 @@ def test_injected_model_size_need_not_match_k_params(spark, sf_small):
     }
 
 
+@pytest.mark.parametrize("mode", ["fit", "injected"])
+@pytest.mark.parametrize("op", ["kmeans", "pq", "multiprobe"])
+def test_null_and_wrong_length_vectors_get_no_cell(spark, sf_small, op, mode):
+    """A NULL embedding and a 32-dim vector appended to the 64-dim corpus
+    have no distance to a 64-dim model: they must get no cluster, code
+    or probe cell, and a fit over the dirty corpus must return the clean
+    corpus's model (the bad rows move no centroid)."""
+    e = load_table(spark, sf_small, "embeddings").select("vec_id", "embedding")
+    top = e.agg(F.max("vec_id")).first()[0]
+    bad = spark.createDataFrame([(top + 1, None), (top + 2, [0.1] * 32)], e.schema)
+    dirty = e.unionByName(bad)
+
+    def run(df, model):
+        """(rows, model): a fit on ``df`` when ``model`` is None, else one
+        pass with ``model`` injected."""
+        if op == "kmeans":
+            a, model = VX.kmeans_portable_fit(df, k=8, iters=2, centroids=model)
+            rows = {(r.vec_id, r.cluster) for r in a.collect()}
+        elif op == "pq":
+            codes, model = VX.pq_fit_portable(df, m=4, n_codes=16, dim=64, codebook=model)
+            rows = {(r.vec_id, tuple(r.codes)) for r in codes.collect()}
+        else:
+            if model is None:
+                model = VX.ivf_train(df, n_clusters=8, iters=2)
+            probes = VX.ivf_multiprobe_assign(df, n_probe=2, centroids=model)
+            rows = {(r.vec_id, r.cluster) for r in probes.collect()}
+        return rows, model
+
+    clean_rows, clean_model = run(e, None)
+    got_rows, got_model = run(dirty, None if mode == "fit" else clean_model)
+    assert not {r[0] for r in got_rows} & {top + 1, top + 2}
+    assert got_rows == clean_rows
+    assert got_model.collect() == clean_model.collect()
+
+
+def _np_lloyd(Q: np.ndarray, k: int, iters: int):
+    """Reference integer Lloyd over quantized rows ``Q`` in key order:
+    init from the k smallest keys (cid = rank), squared distance with
+    the smaller-cid tie-break, floor(sum/count) recompute, ``iters``
+    assignments. Returns (cid per row, {cid: centroid})."""
+    C = {i: Q[i] for i in range(min(k, len(Q)))}
+    for it in range(iters):
+        cids = np.array(sorted(C))
+        D = ((Q[:, None, :] - np.stack([C[c] for c in cids])[None]) ** 2).sum(-1)
+        assign = cids[np.argmin(D, axis=1)]  # first minimum = smaller cid
+        if it < iters - 1:
+            C = {
+                int(c): np.floor(Q[assign == c].sum(0).astype(np.float64) / (assign == c).sum())
+                .astype(np.int64)
+                for c in np.unique(assign)
+            }
+    return assign, C
+
+
+def test_lloyd_views_match_numpy_reference(spark):
+    """kmeans_portable_fit's centroids and pq_fit_portable's codebook
+    (m=1 and m=4) match a pure-numpy integer Lloyd on ~200 random
+    vectors. The two smallest keys carry the same vector, so the
+    smaller-cid tie-break and an emptied cluster are exercised."""
+    rng = np.random.RandomState(11)
+    n, dim = 200, 16
+    keys = rng.permutation(1000)[:n]
+    V = rng.uniform(-1, 1, (n, dim)).astype(np.float32)
+    order = np.argsort(keys)
+    V[order[1]] = V[order[0]]
+    df = spark.createDataFrame(
+        [(int(kk), [float(x) for x in v]) for kk, v in zip(keys, V)],
+        "vec_id long, embedding array<float>",
+    )
+    Q = np.floor(V[order].astype(np.float64) * (1 << 20)).astype(np.int64)
+    skeys = keys[order]
+
+    a, cs = VX.kmeans_portable_fit(df, k=8, iters=3)
+    want_a, want_c = _np_lloyd(Q, 8, 3)
+    assert {(int(kk), int(c)) for kk, c in zip(skeys, want_a)} == {
+        (r.vec_id, r.cluster) for r in a.collect()
+    }
+    (row,) = cs.collect()
+    assert {e.cid: list(e.cv) for e in row["__cs"]} == {c: v.tolist() for c, v in want_c.items()}
+    assert 1 not in want_c  # the duplicate init centroid lost every tie
+
+    for m in (1, 4):
+        codes, cb = VX.pq_fit_portable(df, m=m, n_codes=8, dim=dim, iters=3)
+        d_sub = dim // m
+        want_codes = np.zeros((n, m), dtype=np.int64)
+        want_cb = {}
+        for s in range(m):
+            assign, C = _np_lloyd(Q[:, s * d_sub:(s + 1) * d_sub], 8, 3)
+            want_codes[:, s] = assign
+            want_cb |= {(s, c): v.tolist() for c, v in C.items()}
+        (row,) = cb.collect()
+        assert {(e.sub, e.cid): list(e.cv) for e in row["__cb"]} == want_cb
+        assert {(r.vec_id, tuple(r.codes)) for r in codes.collect()} == {
+            (int(kk), tuple(int(c) for c in cc)) for kk, cc in zip(skeys, want_codes)
+        }
+
+
 def test_multiprobe_truncates_when_probes_exceed_centroids(spark, sf_small):
     """r8 review finding: n_probe can exceed the number of centroids
     (auto n_probe derives from the caller's k, not the injected

@@ -244,8 +244,8 @@ def test_pipe_bucketed_join_has_no_exchange(spark, sf_small, registry):
 def test_kmeans_portable_broadcasts_centroids_no_smj(spark, sf_small, registry):
     """The portable Lloyd plan must keep centroids broadcast (no
     sort-merge join anywhere): assignment is a BroadcastNestedLoopJoin
-    against the 1-row centroid frame, and the only exchanges are the
-    map-side-combined (cluster, dim) recompute shuffles."""
+    against the 1-row centroid frame, and the recompute is one
+    map-side-combined shuffle on cluster per iteration."""
     p = plan(q(registry, "q_vec_kmeans_port", spark, sf_small))
     assert n_nodes(p, "SortMergeJoin") == 0
     assert "BroadcastNestedLoopJoin" in p

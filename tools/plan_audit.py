@@ -39,9 +39,10 @@ UNPARTITIONED_WINDOW_OK = {
     "q_sort_multi": "window input is the 100-row TakeOrdered result",
     "q_stream_watermark": "definitional arrival-order replay; production path is Structured Streaming (ops/streaming.py)",
     # r10: the six q_vec_* init-frame waivers (row_number over the 8/16-row
-    # init frames) are gone — kmeans_portable_fit / pq_fit_portable now
-    # eagerly localCheckpoint model state, so the init window runs once at
-    # fit time and never appears in a downstream plan.
+    # init frames) are gone — kmeans_portable_fit / pq_fit_portable collect
+    # their model state at fit time into local frames (ops.vector._lloyd),
+    # whose init ranks the k collected rows on the driver, so no init
+    # window appears in any plan.
     "q_agg_quantile_hist": "cumulative sum over the ≤256-bucket histogram (bounded by construction)",
     "q_search_rrf": "rank windows run over ≤100-row TakeOrdered list cuts and the ≤200-row fused frame (ops/retrieval.py topn_ranked/rrf_fuse — bounded by construction)",
     "q_search_rrf3": "rank windows run over ≤100-row TakeOrdered list cuts and the ≤300-row fused frame (ops/retrieval.py topn_ranked/rrf_fuse — bounded by construction)",

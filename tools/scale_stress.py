@@ -350,17 +350,23 @@ def uvec_dedup(df, cents, n: int, copies: int) -> tuple[float, float]:
 
 def uvec(spark, sizes=UVEC_SIZES, src: str = SRC) -> dict:
     """The auto-sized quantizer stressed on UNIQUE vectors (exact-collapse
-    cannot shrink them): per size, sample-trained centroids (5%),
-    k = ⌈√n⌉, n_probe = ⌈log₂k⌉ — the production call — with planted
-    pair-recall and cell occupancy, so 'cells stay ~p·√n, never
-    n/k_fixed' is measured."""
+    cannot shrink them): per size, centroids trained on the 5% of rows
+    with xxhash64(vec_id) ≡ 0 (mod 20), k = ⌈√n⌉, n_probe = ⌈log₂k⌉ —
+    the production call — with planted pair-recall and cell occupancy,
+    so 'cells stay ~p·√n, never n/k_fixed' is measured."""
     out: dict[str, dict] = {}
     for n_bases, copies in sizes:
         with checkpoint_scope(spark):
             df = jittered_corpus(spark, n_bases, copies, src)
             n = df.count()
             t0 = time.perf_counter()
-            cents = checkpoint(VX.ivf_train(df.sample(0.05, seed=3), "embedding", "vec_id",
+            # the 5% training sample is a pure function of vec_id: df.sample
+            # draws by row position within a partition, and the row order of
+            # the corpus's shuffled partitions differs between runs (two
+            # processes drew 1,008 and 1,016 rows at 20k), so its quantizer
+            # and cell_max did too
+            sample = df.filter(F.pmod(F.xxhash64("vec_id"), F.lit(20)) == 0)
+            cents = checkpoint(VX.ivf_train(sample, "embedding", "vec_id",
                                             n_clusters=max(8, int(n ** 0.5) + 1), iters=2))
             t_train = time.perf_counter() - t0
             t_dedup, recall = uvec_dedup(df, cents, n, copies)

@@ -19,6 +19,9 @@ Scale notes (100 TB discipline):
   pinned only what its returned plan reads.
 - Each round shuffles |edges| + |nodes| rows on node id; no
   driver-side collection of labels ever happens.
+- CC, BFS and SSSP read one undirected edge frame (:func:`_undirected`),
+  built in one exchange and checkpointed once. BFS is SSSP with unit
+  weights, so one bounded relaxation loop serves both.
 
 Reference note: /root/reference is empty (SURVEY §0); the reference
 orchestrator has no graph surface — north-star extension.
@@ -31,40 +34,64 @@ from pyspark.sql import functions as F
 
 from pipetree_spark.ops.relational import checkpoint, release
 
+#: First round of :func:`connected_components` that also pointer-jumps;
+#: star and clique components converge before it and never pay a jump.
+_JUMP_AFTER = 4
+
+#: :func:`pagerank_exact` ranks are BIGINT multiples of 1/PAGERANK_SCALE;
+#: the oracles of q_graph_pagerank and q_pipe_linkgraph floor on it too.
+PAGERANK_SCALE = 10**12
+
+
+def _undirected(
+    edges: DataFrame, src: str, dst: str, weight: str | None = None, self_loops: bool = True
+) -> DataFrame:
+    """Both directions of every edge as ``(u, v[, w])``, checkpointed:
+    parallel edges collapse by ``dropDuplicates`` (``min(w)`` with a
+    ``weight``), self-loops stay only if ``self_loops``. One exchange:
+    dedup runs AFTER the hash(u) repartition, which already satisfies
+    the (u, v) grouping; the checkpoint keeps that partitioning, so a
+    per-round join on ``u`` shuffles only the (|nodes|-sized) state
+    side, never the (2|edges|-sized) edge side.
+    """
+    w = [F.col(weight).alias("w")] if weight else []
+    fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"), *w)
+    both = fwd.unionByName(fwd.selectExpr("v AS u", "u AS v", *fwd.columns[2:]))
+    if not self_loops:
+        both = both.where("u != v")
+    both = both.repartition("u")
+    if weight:
+        return checkpoint(both.groupBy("u", "v").agg(F.expr("min(w) AS w")))
+    return checkpoint(both.dropDuplicates(["u", "v"]))
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    check_every: int = 3,
-    jump_after: int = 4,
 ) -> DataFrame:
     """Min-label connected components over an undirected edge list.
 
     Returns ``(node, component)`` where ``component`` is the smallest
     node id reachable from ``node`` — a deterministic canonical label.
 
-    Every node that appears in ``edges`` is labeled (isolated nodes
-    aren't known to an edge list; callers union them in if needed).
+    Every node that appears in ``edges`` is labeled, a node seen only in
+    a self-loop included (isolated nodes aren't known to an edge list;
+    callers union them in if needed).
 
     Raises ``RuntimeError`` if ``max_iter`` rounds pass while labels are
     still changing (component diameter > max_iter): silently returning
     half-propagated labels would split one real component into several.
 
-    Convergence checking is FREE (r15, guide §1.2/§7.3): the
-    changed-labels count rides the round's checkpoint materialization
-    as a ``DataFrame.observe`` metric (one CollectMetrics node in the
-    already-running job), so it costs zero extra jobs and zero extra
-    passes — the r12 amortization (``check_every``) existed to dodge a
-    separate count job per round; with the count folded into the round
-    itself, checking EVERY round is strictly cheaper than running even
-    one unneeded extra round (each round is a full |edges|+|nodes|
-    shuffle; the metric is a per-task counter). ``check_every`` is
-    kept for API compatibility and ignored. The round-r comparison
-    ``component < __own`` measures exactly whether one more round
-    would change anything, so the final check doubles as the FIXPOINT
-    ASSERTION, as before.
+    Convergence is checked every round for free (r15, guide §1.2/§7.3):
+    the changed-labels count rides the round's checkpoint
+    materialization as a ``DataFrame.observe`` metric (one
+    CollectMetrics node in the already-running job), so it costs zero
+    extra jobs and zero extra passes. The round-r comparison
+    ``component < __own`` measures exactly whether one more round would
+    change anything, so the final check doubles as the FIXPOINT
+    ASSERTION.
 
     Per-round cost (r6 rewrite — was the slowest op in the suite at
     11.6 s sf0.1): ONE shuffle job per round. The old label rides the
@@ -72,47 +99,31 @@ def connected_components(
     ``min(__own)`` come out of one groupBy and "did anything change?"
     is a filter on the already-materialized checkpoint — the previous
     version burned a second full join + shuffle per round just to
-    detect convergence. ``sym`` is pre-partitioned on the join key
-    once (before its checkpoint), so each round's neighbor join
-    exchanges only the (|nodes|-sized) label side, never the
-    (2|edges|-sized) edge side.
+    detect convergence. Each round pushes every label along ``u → v``
+    of the shared edge frame (:func:`_undirected`).
 
-    Adaptive pointer-jumping (``jump_after``): plain min-label
-    propagation converges in O(component diameter) rounds — fine for
-    the star/clique components near-dup graphs actually produce (2-4
-    rounds), fatal for chain-shaped components (A≈B≈C≈… boilerplate
-    drift), which would exhaust ``max_iter`` at diameter > 25. From
-    round ``jump_after`` on, each round additionally contracts
-    ``label ← label[label]`` — since r15 fused into the SAME round
-    plan and checkpoint (the aggregate subtree appears on both sides
-    of the self-join; AQE's ReusedExchange materializes it once), so
-    jump rounds cost one materialization, not two. Doubling the
-    distance a label travels per round gives O(log diameter) rounds
-    overall. Cheap graphs never pay (they converge before the
-    escalation kicks in); a converged labeling is a fixed point of the
-    jump, so the convergence contract is unchanged. ``jump_after=None``
-    disables escalation.
+    Adaptive pointer-jumping: plain min-label propagation converges in
+    O(component diameter) rounds — fine for the star/clique components
+    near-dup graphs actually produce (2-4 rounds), fatal for
+    chain-shaped components (A≈B≈C≈… boilerplate drift), which would
+    exhaust ``max_iter`` at diameter > 25. From round ``_JUMP_AFTER``
+    on, each round additionally contracts ``label ← label[label]`` —
+    since r15 fused into the SAME round plan and checkpoint (the
+    aggregate subtree appears on both sides of the self-join; AQE's
+    ReusedExchange materializes it once), so jump rounds cost one
+    materialization, not two. Doubling the distance a label travels
+    per round gives O(log diameter) rounds overall. Cheap graphs never
+    pay (they converge before the escalation kicks in); a converged
+    labeling is a fixed point of the jump, so the convergence contract
+    is unchanged.
 
     r15 round-0 fusion (guide §2.4): with identity initial labels the
     first round's neighbor join is the edge list itself (label(v) = v),
-    so round 0 is ONE groupBy over the pre-partitioned edge frame —
+    so round 0 is ONE groupBy over the ``u``-partitioned edge frame —
     ``component = least(u, min(v))`` — instead of distinct + join +
-    union + groupBy (two exchanges and the init frame gone). The sym
-    build itself also drops an exchange: dedup runs as
-    ``dropDuplicates`` ON TOP of the hash(v) repartition (equal (u,v)
-    rows share a v, so hashpartitioning(v) already satisfies the
-    aggregation's clustered distribution — no second exchange).
+    union + groupBy (two exchanges and the init frame gone).
     """
-    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionByName(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-    )
-    # partition by v ONCE: localCheckpoint preserves partitioning, so
-    # every round's join on v reuses it (labels side alone shuffles).
-    # dropDuplicates AFTER the repartition: hashpartitioning(v)
-    # satisfies ClusteredDistribution(u, v), so the dedup aggregation
-    # adds no exchange of its own (plan: 1 exchange, was 2).
-    sym = checkpoint(sym.repartition("v").dropDuplicates(["u", "v"]))
-
+    sym = _undirected(edges, src, dst)
     own_sql = sym.schema["u"].dataType.simpleString()
 
     labels = ck = None
@@ -127,18 +138,18 @@ def connected_components(
         # construction); the parsed trees are identical (parity + the
         # CC property tests pin the labels).
         if it == 0:
-            # fused round 0: labels are the identity, so neighbor label
-            # min is just min(v) per u — one groupBy over sym, no join,
-            # no init frame
+            # fused round 0 (see docstring): labels are the identity
             new_labels = (
                 sym.groupBy("u")
                 .agg(F.expr("min(v) AS __nbr"))
                 .selectExpr("u", "least(u, __nbr) AS component", "u AS __own")
             )
         else:
-            nbr_labels = sym.join(
-                labels.withColumnRenamed("u", "v"), on="v"
-            ).selectExpr("u", "component", f"CAST(NULL AS {own_sql}) AS __own")
+            # push u's label to its neighbor v: sym is symmetric, so
+            # this is v pulling its neighbors' labels
+            nbr_labels = sym.join(labels, "u").selectExpr(
+                "v AS u", "component", f"CAST(NULL AS {own_sql}) AS __own"
+            )
             new_labels = (
                 labels.selectExpr("u", "component", "component AS __own")
                 .unionByName(nbr_labels)
@@ -148,7 +159,7 @@ def connected_components(
                     F.expr("min(__own) AS __own"),
                 )
             )
-        if jump_after is not None and it >= jump_after:
+        if it >= _JUMP_AFTER:
             # pointer jump: label ← label[label], fused into this
             # round's plan — the round's subtree feeds both join sides.
             # Every component value is itself a labeled node, so the
@@ -164,10 +175,8 @@ def connected_components(
             new_labels = new_labels.join(lk, F.expr("component = __cu")).selectExpr(
                 "u", "__cc AS component", "__own"
             )
-        # the changed-labels count rides the checkpoint job as an
-        # observe metric — zero extra jobs; a label changed iff the new
-        # min beat the old one. On the final round this IS the fixpoint
-        # assertion. (sum over an empty frame observes NULL → 0.)
+        # a label changed iff the new min beat the old one (sum over an
+        # empty frame observes NULL → 0)
         obs = Observation()
         ck = checkpoint(
             new_labels.observe(obs, F.expr("sum(cast((component < __own) as int)) AS changed")),
@@ -191,13 +200,12 @@ def pagerank_exact(
     src: str = "src",
     dst: str = "dst",
     iters: int = 3,
-    scale: int = 10**12,
 ) -> DataFrame:
     """Fixed-iteration PageRank in INTEGER arithmetic — bit-exact across
     engines (no float sums anywhere, so no summation-order drift).
 
-    Ranks live in ``scale``-units (BIGINT): r0 = scale div N, teleport =
-    (15·scale) div (100·N), and each round
+    Ranks live in ``PAGERANK_SCALE``-units (BIGINT): r0 = PAGERANK_SCALE
+    div N, teleport = (15·PAGERANK_SCALE) div (100·N), and each round
     ``r' = teleport + (85 · (inflow + dangling_mass div N)) div 100``
     where ``inflow = Σ_{edges u→n} r_u div out_deg(u)`` and dangling
     mass is the rank held by sink nodes. Every op is BIGINT
@@ -245,7 +253,7 @@ def pagerank_exact(
     # rank join exchanges only the (|nodes|-sized) rank side
     ed = checkpoint(e.join(deg, "src").repartition("src"))
 
-    teleport = (15 * scale) // (100 * n_total)
+    teleport = (15 * PAGERANK_SCALE) // (100 * n_total)
     # rank frame carries (node, rank, __dang): a node is dangling iff it
     # has no out-degree — the flag is immutable, so it is computed ONCE
     # and rides the per-round checkpoint instead of being re-derived by
@@ -268,7 +276,7 @@ def pagerank_exact(
         nodes.join(deg.select(F.col("src").alias("node"), "deg"), "node", "left")
         .select(
             "node",
-            F.lit(scale // n_total).cast("long").alias("rank"),
+            F.lit(PAGERANK_SCALE // n_total).cast("long").alias("rank"),
             F.col("deg").isNull().alias("__dang"),
         )
         .observe(obs, _dang_sum)
@@ -375,52 +383,14 @@ def bfs_khop(
     src: str = "src",
     dst: str = "dst",
 ) -> DataFrame:
-    """Multi-source bounded BFS over an undirected edge list: for every
-    node within ``k`` hops of ANY source, the exact hop distance
-    ``(node, dist)``. Nodes farther than k (or unreachable) are absent
-    — the k-hop cap is the SEMANTICS, not a convergence shortcut, so
-    the result is well-defined on any graph (no diameter assumption)
-    and the relational twin unrolls to exactly k levels.
-
-    ``sources`` is a one-column node frame; sources not present in the
-    edge list still appear at dist 0 (they're in the queried set even
-    if isolated). The classic use: blast-radius / influence-cohort
-    queries ("everything within 3 hops of the flagged accounts").
-
-    Scale: per round ONE shuffle of the frontier joined against the
-    symmetrized edge list (pre-partitioned on the join key once, the
-    CC/PageRank trick), state is (node, dist) — never materializes
-    paths. k rounds total, each checkpointed to cut lineage.
+    """Multi-source bounded BFS over an undirected edge list: the exact
+    hop distance ``(node, dist)``, as INT, of every node within ``k``
+    hops of ANY source — :func:`sssp_khop` with every weight 1. The
+    classic use: blast-radius / influence-cohort queries ("everything
+    within 3 hops of the flagged accounts").
     """
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    sym = checkpoint(
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .repartition("u")
-    )
-    dist = checkpoint(
-        sources.select(F.col(sources.columns[0]).alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0))
-    )
-    for _ in range(k):
-        reached = (
-            dist.withColumnRenamed("node", "u")
-            .join(sym, "u")
-            .select(F.col("v").alias("node"), (F.col("dist") + 1).alias("dist"))
-        )
-        dist = checkpoint(
-            dist.unionByName(reached)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist")),
-            replaces=dist,
-        )
-    release(sym)
-    return dist
+    unit = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), F.lit(1).alias("w"))
+    return sssp_khop(unit, sources, k).selectExpr("node", "CAST(dist AS INT) AS dist")
 
 
 def sssp_khop(
@@ -431,44 +401,33 @@ def sssp_khop(
     dst: str = "dst",
     weight: str = "w",
 ) -> DataFrame:
-    """Bounded Bellman-Ford: cheapest path cost from ANY source using
-    at most ``k`` edges, over an undirected weighted edge list with
-    non-negative INTEGER weights — :func:`bfs_khop` generalized (BFS
-    is the all-weights-1 case). Like BFS, the k-edge cap is the
-    SEMANTICS: the relational twin unrolls exactly k relaxation
-    rounds, so the result is well-defined on any graph with no
-    convergence loop and a wall-clock bound known up front.
+    """Bounded Bellman-Ford: the cheapest path cost ``(node, dist)`` of
+    every node reachable from ANY source using at most ``k`` edges, over
+    an undirected edge list with non-negative INTEGER weights. Nodes
+    farther than k edges (or unreachable) are absent — the k-edge cap is
+    the SEMANTICS, not a convergence shortcut, so the result is
+    well-defined on any graph (no diameter assumption), the relational
+    twin unrolls exactly k relaxation rounds, and the wall-clock bound
+    is known up front.
 
-    Integer costs keep every relaxation exact (min over BIGINT sums —
-    no float accumulation order anywhere). Parallel edges are reduced
-    to their min weight up front; isolated sources still appear at
-    cost 0. Per round: ONE shuffle of the frontier against the
-    pre-partitioned symmetrized edge list; state is (node, dist).
+    ``sources`` is a one-column node frame; sources not present in the
+    edge list still appear at cost 0. Integer costs keep every
+    relaxation exact (min over BIGINT sums — no float accumulation
+    order). Self-loops are dropped and parallel edges reduced to their
+    min weight in the shared edge frame (:func:`_undirected`). Per
+    round: ONE shuffle of the frontier against that ``u``-partitioned
+    frame; state is (node, dist) — never paths — checkpointed per round
+    to cut lineage.
     """
-    e = (
-        edges.select(
-            F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")
-        )
-        .where(F.col("u") != F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.min("w").alias("w"))
-    )
-    sym = checkpoint(
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
-        .groupBy("u", "v")
-        .agg(F.min("w").alias("w"))
-        .repartition("u")
-    )
+    sym = _undirected(edges, src, dst, weight, self_loops=False)
     dist = checkpoint(
         sources.select(F.col(sources.columns[0]).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
     )
     for _ in range(k):
-        relaxed = (
-            dist.withColumnRenamed("node", "u")
-            .join(sym, "u")
-            .select(F.col("v").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
+        relaxed = dist.withColumnRenamed("node", "u").join(sym, "u").selectExpr(
+            "v AS node", "dist + w AS dist"
         )
         dist = checkpoint(
             dist.unionByName(relaxed)

@@ -1309,12 +1309,19 @@ def pq_ivf_ann_portable(
         # straggler tail back-fills the other's idle cores. Results
         # are unchanged (two independent deterministic computations).
         # Sequential when model state is injected: an injected-state
-        # "fit" is one lazy narrow map, nothing to overlap.
+        # "fit" is one lazy narrow map, nothing to overlap. The pool
+        # threads run through inheritable_thread_target so their jobs
+        # carry the caller's local properties (job group, scheduler
+        # pool) and session tags like the caller's own jobs.
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
+        inherit = inheritable_thread_target(corpus.sparkSession)
+        kmeans_fit, pq_fit = inherit(kmeans_portable_fit), inherit(pq_fit_portable)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fk = pool.submit(kmeans_portable_fit, corpus, vec_col, corpus_key, k=n_clusters, iters=iters)
-            fp = pool.submit(pq_fit_portable, corpus, vec_col, corpus_key, m=m, n_codes=n_codes, dim=dim)
+            fk = pool.submit(kmeans_fit, corpus, vec_col, corpus_key, k=n_clusters, iters=iters)
+            fp = pool.submit(pq_fit, corpus, vec_col, corpus_key, m=m, n_codes=n_codes, dim=dim)
             assign_df, cents = fk.result()
             codes, cb = fp.result()
     else:

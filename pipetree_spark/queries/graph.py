@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from pipetree_spark.catalog import load_table
 from pipetree_spark.ops.graph import (
+    PAGERANK_SCALE,
     bfs_khop,
     pagerank_exact,
     sssp_khop,
@@ -27,16 +28,15 @@ from pipetree_spark.ops.graph import (
 from pipetree_spark.ops.relational import checkpoint
 from pipetree_spark.queries import declare
 
-_SCALE = 10**12
 
-
-def _pagerank_sql(iters: int = 3, scale: int = _SCALE, edges_cte: str | None = None) -> str:
-    """Unrolled DuckDB twin of ops.graph.pagerank_exact. All-BIGINT
-    arithmetic; ``//`` on positive BIGINTs truncates exactly like
-    Spark's ``div``. ``edges_cte`` overrides the edge derivation (one
-    or more leading CTEs ending in ``e(src, dst)``) so compositions —
-    e.g. the crawl link graph — reuse the same unrolled iterations;
-    default is the customer→supplier trade graph."""
+def _pagerank_sql(iters: int = 3, edges_cte: str | None = None) -> str:
+    """Unrolled DuckDB twin of ops.graph.pagerank_exact, in the same
+    ``PAGERANK_SCALE`` units. All-BIGINT arithmetic; ``//`` on positive
+    BIGINTs truncates exactly like Spark's ``div``. ``edges_cte``
+    overrides the edge derivation (one or more leading CTEs ending in
+    ``e(src, dst)``) so compositions — e.g. the crawl link graph — reuse
+    the same unrolled iterations; default is the customer→supplier trade
+    graph."""
     ctes = [
         edges_cte
         or "e AS (SELECT DISTINCT o.o_custkey * 2 AS src, l.l_suppkey * 2 + 1 AS dst"
@@ -45,7 +45,7 @@ def _pagerank_sql(iters: int = 3, scale: int = _SCALE, edges_cte: str | None = N
         "nn AS (SELECT COUNT(*) AS n FROM nodes)",
         "deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src)",
         "dang AS (SELECT node FROM nodes WHERE node NOT IN (SELECT src FROM deg))",
-        f"r0 AS (SELECT node, {scale} // (SELECT n FROM nn) AS rank FROM nodes)",
+        f"r0 AS (SELECT node, {PAGERANK_SCALE} // (SELECT n FROM nn) AS rank FROM nodes)",
     ]
     prev = "r0"
     for k in range(1, iters + 1):
@@ -60,7 +60,7 @@ def _pagerank_sql(iters: int = 3, scale: int = _SCALE, edges_cte: str | None = N
         )
         ctes.append(
             f"r{k} AS (SELECT nd.node,"
-            f" ({15 * scale} // (100 * (SELECT n FROM nn)))"
+            f" ({15 * PAGERANK_SCALE} // (100 * (SELECT n FROM nn)))"
             f" + (85 * (COALESCE(i.inflow, 0)"
             f" + ((SELECT dang_mass FROM dg{k}) // (SELECT n FROM nn)))) // 100 AS rank"
             f" FROM nodes nd LEFT JOIN inf{k} i ON nd.node = i.node)"
@@ -96,7 +96,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).alias("dst"),
         )
     )
-    return pagerank_exact(edges, iters=3, scale=_SCALE)
+    return pagerank_exact(edges, iters=3)
 
 
 _TRIANGLE_SQL = """

@@ -4094,7 +4094,6 @@ def q_pipe_linkgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: extraction is a narrow map; PageRank is one |edges|
     shuffle per iteration with the rank side alone moving."""
     from pipetree_spark.ops.graph import pagerank_exact
-    from pipetree_spark.queries.graph import _SCALE
 
     d = (
         load_table(spark, sf_dir, "documents")
@@ -4123,7 +4122,7 @@ def q_pipe_linkgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", F.col("tgt").cast("long").alias("dst"))
         .distinct()
     )
-    return pagerank_exact(edges, iters=3, scale=_SCALE)
+    return pagerank_exact(edges, iters=3)
 
 
 @declare(

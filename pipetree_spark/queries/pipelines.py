@@ -20,9 +20,8 @@ from pipetree_spark.queries import declare
 
 def _shipped_spec(name: str) -> dict:
     """Load ``pipetree_spark/specs/<name>``. The specs ship as package
-    data (works from a wheel / site-packages install, where the repo's
-    examples/ dir doesn't exist); the examples/ copies are the
-    user-facing twins, pinned identical by tests/test_pipeline.py."""
+    data, so they load from a wheel / site-packages install too; this
+    is their only copy."""
     import json
     from importlib import resources
 
@@ -463,7 +462,7 @@ def q_pipe_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curation_report_sql() -> str:
-    """DuckDB twin of examples/curation_pipeline.json's report stage:
+    """DuckDB twin of pipetree_spark/specs/curation_pipeline.json's report stage:
     quality filter → exact dedup (rn = 1 per normalized hash) →
     LSH-banded candidate pairs at 0.5 (same _MH/_MH_BANDS8 literals and
     QUALIFY cap as the q_dedup_near_lsh oracle) → anti-join survivors →
@@ -521,7 +520,7 @@ SELECT (SELECT COUNT(*) FROM documents) AS n_in,
 def q_pipe_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SHIPPED curation pipeline spec, end-to-end THROUGH the
     orchestration layer: Pipeline.from_spec on
-    examples/curation_pipeline.json (quality filter → exact dedup op →
+    pipetree_spark/specs/curation_pipeline.json (quality filter → exact dedup op →
     LSH near-dup pairs op → anti-join keep → chunking op → report),
     returning the report stage. This is the Layer-A ⊕ Layer-B
     composition certified as one unit — the driver's hash compare runs
@@ -628,7 +627,7 @@ FROM fph GROUP BY o_orderstatus
 def q_pipe_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SHIPPED backfill-verification pipeline spec end-to-end
     THROUGH the orchestration layer: Pipeline.from_spec on
-    specs/validation_pipeline.json (canonicalize orders → simulate the
+    pipetree_spark/specs/validation_pipeline.json (canonicalize orders → simulate the
     next-day snapshot → ``snapshot_diff`` op on (key, row-hash) →
     ``table_fingerprint`` op per order status → one report frame of
     diff-status counts + per-group fingerprints).
@@ -658,7 +657,7 @@ _CJK_PIPE_INSERTS: tuple[str, ...] = (
 
 
 def _cjk_curation_report_sql() -> str:
-    """DuckDB twin of examples/cjk_curation_pipeline.json's report:
+    """DuckDB twin of pipetree_spark/specs/cjk_curation_pipeline.json's report:
     plant → script_profile route → cjk_chars segmentation →
     CJK-aware chunking (chunk_documents segmenter= kwarg, r15) →
     per-script doc/unit/chunk counts. Route and segmentation twins
@@ -737,7 +736,7 @@ _FULL_BLTAIL = " casino jackpot night"
 
 
 def _curation_full_report_sql() -> str:
-    """DuckDB twin of examples/curation_full_pipeline.json — the FULL
+    """DuckDB twin of pipetree_spark/specs/curation_full_pipeline.json — the FULL
     modern curation recipe (the C4/CCNet/Gopher composite, r14 verdict
     item 3) replayed stage by stage: plant (multi-line bodies +
     residue-class boilerplate headers + a blocklist tail) → messy-URL

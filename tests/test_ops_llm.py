@@ -1866,14 +1866,14 @@ def test_connected_components_long_chain_pointer_jumping(spark):
     budget and label every node with the chain head. Also pins the
     fixed-point property: a second pass over the already-converged
     labeling is a no-op."""
-    from pipetree_spark.ops.graph import connected_components
+    from pipetree_spark.ops.graph import _JUMP_AFTER, connected_components
 
     chain = spark.createDataFrame([(i, i + 1) for i in range(60)], ["src", "dst"])
     got = {r.node: r.component for r in connected_components(chain).collect()}
     assert got == {i: 0 for i in range(61)}
-    # without jumping the same graph must exhaust max_iter and raise
+    # the plain rounds before jumping starts cannot converge it
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=10, jump_after=None).collect()
+        connected_components(chain, max_iter=_JUMP_AFTER).collect()
 
 
 @pytest.fixture(scope="module")
@@ -2199,14 +2199,14 @@ def test_pagerank_exact_matches_float_reference_and_handles_dangling(spark):
     within the deterministic floor loss, rank-order must match, and a
     sink (dangling) node must redistribute its mass instead of leaking
     it. Plus: empty edges → empty result, not a ZeroDivisionError."""
+    from pipetree_spark.ops.graph import PAGERANK_SCALE as scale
     from pipetree_spark.ops.graph import pagerank_exact
 
     # 1→2, 1→3, 2→3, 3 is a sink (dangling); 4→1 feeds the cycle
     edges = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (4, 1)], "src long, dst long"
     )
-    scale = 10**12
-    got = {r.node: r.rank for r in pagerank_exact(edges, iters=3, scale=scale).collect()}
+    got = {r.node: r.rank for r in pagerank_exact(edges, iters=3).collect()}
     assert set(got) == {1, 2, 3, 4}
 
     # float reference with identical structure (teleport .15/N, damping .85,
@@ -2231,7 +2231,7 @@ def test_pagerank_exact_matches_float_reference_and_handles_dangling(spark):
     order = sorted(nodes, key=lambda n: got[n], reverse=True)
     assert order[0] == 3 and order[-1] == 4
     # determinism: re-run is bit-identical
-    again = {r2.node: r2.rank for r2 in pagerank_exact(edges, iters=3, scale=scale).collect()}
+    again = {r2.node: r2.rank for r2 in pagerank_exact(edges, iters=3).collect()}
     assert again == got
 
     empty = pagerank_exact(
@@ -3637,31 +3637,25 @@ def test_mm_stages_honor_key_col_in_output(spark):
 
 
 def test_cc_amortized_check_converges_off_cycle(spark):
-    """r12: convergence checks run every check_every rounds (plus the
-    final round as the fixpoint assertion) — a graph converging
-    between checkpoints must still converge, with identical labels to
-    the per-round (check_every=1) behavior."""
+    """Convergence is checked on every round's checkpoint: a graph that
+    converges mid-budget stops with the right labels, a node seen only
+    in a self-loop is labeled, and on the last round the check is the
+    fixpoint assertion that raises."""
     from pipetree_spark.ops.graph import connected_components
 
-    # diameter-4 chain + a separate triangle
+    # diameter-4 chain + a separate triangle + a lone self-loop
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (12, 10)],
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (12, 10), (20, 20)],
         "src long, dst long",
     )
-    for ck in (1, 3, 4, 7):
-        got = {
-            r.node: r.component
-            for r in connected_components(edges, max_iter=25, check_every=ck).collect()
-        }
-        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10}, ck
-    # max_iter not a multiple of check_every: final-round assertion fires
-    import pytest as _pt
-
+    got = {r.node: r.component for r in connected_components(edges, max_iter=25).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10, 20: 20}
+    # 4 plain rounds (jumping starts at round 4) cannot label a 40-chain
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "src long, dst long"
     )
-    with _pt.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=4, check_every=3, jump_after=None).collect()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(chain, max_iter=4).collect()
 
 
 def test_bm25_monotonicity_and_hand_value(spark):

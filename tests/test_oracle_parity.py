@@ -13,13 +13,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
-from check_parity import (  # noqa: E402
-    canon_result,
-    check_query,
-    compare,
-    oracle_dtype_problems,
-    run_oracle,
-)
+from check_parity import check_query  # noqa: E402
 
 from pipetree_spark.catalog import TABLES, table_path  # noqa: E402
 from pipetree_spark.ops.relational import checkpoint_scope  # noqa: E402
@@ -40,25 +34,12 @@ def oracle_con(sf_small):
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_matches_oracle(name, spark, sf_small, oracle_con):
-    q = REGISTRY[name]
-    with checkpoint_scope(spark):
-        sdf = q.fn(spark, sf_small)
-        srows = [tuple(r) for r in sdf.collect()]
-    if q.oracle is None:
-        assert len(srows) >= 0  # rows-only contract: runs and returns
-        return
-    ocols, orows = run_oracle(oracle_con, q.oracle)
-    sc, sr = canon_result(sdf.columns, srows)
-    oc, orr = canon_result(ocols, orows)
-    problems = compare(sc, sr, oc, orr, tol=0.0)
+    """tools/check_parity's grading of one query: the toPandas round
+    trip, the order-insensitive oracle compare, the -0.0 check and the
+    driver-hash dtype view. A rows-only query (no oracle) passes when
+    it runs and survives the round trip."""
+    problems, _ = check_query(spark, oracle_con, REGISTRY[name], sf_small)
     assert not problems, f"{name}: {problems[:3]}"
-    # driver-hash dtype view: fetchall() returns width-less Python ints,
-    # hiding e.g. DuckDB HUGEINT→float64 coercion (q_fn_condagg failed
-    # the driver twice on bit-identical values). Re-fetch via .df() —
-    # the driver's pandas canonicalization path — and flag drift.
-    ora_df = oracle_con.execute(q.oracle).df()
-    dtype_problems = oracle_dtype_problems(sdf.schema.fields, srows, ora_df)
-    assert not dtype_problems, f"{name}: {dtype_problems}"
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))

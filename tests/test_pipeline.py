@@ -526,31 +526,6 @@ def test_quality_gate_raises_on_planted_violations(spark):
     Q.gate(dim, [Q.not_null("name"), Q.unique("name")])
 
 
-@pytest.mark.parametrize(
-    "spec_name",
-    [
-        "curation_pipeline.json",
-        "validation_pipeline.json",
-        "cjk_curation_pipeline.json",
-    ],
-)
-def test_shipped_spec_copies_are_identical(spec_name):
-    """q_pipe_curation / q_pipe_validate load their specs from PACKAGE
-    data (survives a wheel install); the examples/ copies are the
-    user-facing twins. They must never drift."""
-    import json
-    from importlib import resources
-    from pathlib import Path
-
-    pkg = json.loads(
-        resources.files("pipetree_spark").joinpath(f"specs/{spec_name}").read_text()
-    )
-    repo = json.loads(
-        (Path(__file__).resolve().parent.parent / "examples" / spec_name).read_text()
-    )
-    assert pkg == repo
-
-
 def test_quality_rule_names_with_quotes_and_empty_suite(spark):
     """Rule names are literal columns, not SQL text: a single quote in
     a name (in_range's auto-name with string bounds produces one
@@ -575,7 +550,7 @@ def test_quality_rule_names_with_quotes_and_empty_suite(spark):
 
 def test_op_stage_curation_pipeline_end_to_end(spark, sf_small, tmp_path):
     """The ``op`` stage type runs the shipped curation example spec
-    (examples/curation_pipeline.json): JSON-declared library operators
+    (pipetree_spark/specs/curation_pipeline.json): JSON-declared library operators
     (LSH dedup pairs, chunking) compose with sql stages, re-running
     hits the cache wholesale, and changing an op's JSON args recomputes
     that stage (the content key covers the args)."""
@@ -584,7 +559,7 @@ def test_op_stage_curation_pipeline_end_to_end(spark, sf_small, tmp_path):
     from pathlib import Path
 
     spec = json.loads(
-        (Path(__file__).resolve().parent.parent / "examples/curation_pipeline.json")
+        (Path(__file__).resolve().parent.parent / "pipetree_spark/specs/curation_pipeline.json")
         .read_text()
     )
     spec["stages"]["documents"]["sf_dir"] = sf_small
@@ -1074,7 +1049,7 @@ def test_hybrid_search_example_spec_runs_and_caches(spark, sf_small, tmp_path):
 
 
 def test_cjk_curation_pipeline_example(spark, sf_small, tmp_path):
-    """examples/cjk_curation_pipeline.json: the r14 CJK surface
+    """pipetree_spark/specs/cjk_curation_pipeline.json: the r14 CJK surface
     composed through the spec walker — plant a mixed-script corpus in
     SQL, route it with the script_profile op, segment it with the
     segment_text stage, and report per-script doc/unit counts. Each
@@ -1085,7 +1060,7 @@ def test_cjk_curation_pipeline_example(spark, sf_small, tmp_path):
 
     spec = json.loads(
         (Path(__file__).resolve().parent.parent
-         / "examples/cjk_curation_pipeline.json").read_text()
+         / "pipetree_spark/specs/cjk_curation_pipeline.json").read_text()
     )
     spec["stages"]["documents"]["sf_dir"] = sf_small
     cache = ArtifactCache(str(tmp_path))
@@ -1128,11 +1103,9 @@ def test_cjk_spec_plant_matches_oracle_constant():
 def test_curation_full_spec_matches_constants():
     """Drift guard for q_pipe_curation_full: the static spec JSON must
     carry the SAME planted headers, body regex, blocklist tail/terms
-    and robots rules the oracle renders from the Python constants —
-    and the examples/ copy must equal the packaged copy."""
+    and robots rules the oracle renders from the Python constants."""
     import json
     from importlib import resources
-    from pathlib import Path
 
     from pipetree_spark.queries.llm_ops import _NL_HEADERS, _robots_rules
     from pipetree_spark.queries.pipelines import (
@@ -1141,17 +1114,11 @@ def test_curation_full_spec_matches_constants():
         _FULL_BODY_RE,
     )
 
-    packaged = (
+    spec = json.loads(
         resources.files("pipetree_spark")
         .joinpath("specs/curation_full_pipeline.json")
         .read_text()
     )
-    example = (
-        Path(__file__).resolve().parent.parent
-        / "examples/curation_full_pipeline.json"
-    ).read_text()
-    assert packaged == example
-    spec = json.loads(packaged)
     plant = spec["stages"]["planted"]["query"]
     for h in _NL_HEADERS:
         assert h in plant or h == ""
@@ -1164,7 +1131,7 @@ def test_curation_full_spec_matches_constants():
 
 
 def test_curation_full_pipeline_example(spark, sf_small, tmp_path):
-    """examples/curation_full_pipeline.json: the C4/CCNet/Gopher
+    """pipetree_spark/specs/curation_full_pipeline.json: the C4/CCNet/Gopher
     composite through the spec walker — funnel counts are monotone
     through the gate chain, boilerplate lines are found and cut,
     blocklisted docs are dropped, and a SECOND run serves every
@@ -1174,7 +1141,7 @@ def test_curation_full_pipeline_example(spark, sf_small, tmp_path):
 
     spec = json.loads(
         (Path(__file__).resolve().parent.parent
-         / "examples/curation_full_pipeline.json").read_text()
+         / "pipetree_spark/specs/curation_full_pipeline.json").read_text()
     )
     spec["stages"]["documents"]["sf_dir"] = sf_small
     cache = ArtifactCache(str(tmp_path))

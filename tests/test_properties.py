@@ -643,7 +643,7 @@ def test_connected_components_random_graphs_match_duckdb(spark, edges):
     jumping, ops/graph.py) must agree with an independent DuckDB
     recursive-reachability derivation on RANDOM graphs — including
     self-loops, duplicate and reversed edges, and chains long enough to
-    cross the jump_after=4 pointer-jumping boundary."""
+    cross the _JUMP_AFTER=4 pointer-jumping boundary."""
     from pipetree_spark.ops.graph import connected_components
 
     df = spark.createDataFrame(edges, "src long, dst long")
@@ -869,42 +869,41 @@ def test_triangle_counts_random_graphs_match_bruteforce(spark, edges):
 @settings(**SETTINGS)
 @given(
     st.lists(
-        st.tuples(st.integers(0, 12), st.integers(0, 12)),
+        st.tuples(st.integers(0, 12), st.integers(0, 12), st.integers(0, 9)),
         min_size=0,
         max_size=40,
     ),
     st.lists(st.integers(0, 12), min_size=1, max_size=4),
     st.integers(1, 4),
 )
+@example(edges=[(1, 2, 5), (2, 1, 3), (2, 3, 0), (3, 3, 0), (3, 4, 9)], sources=[1, 9], k=2)
 def test_bfs_khop_random_graphs_match_reference(spark, edges, sources, k):
-    """ops/graph.bfs_khop vs a plain-python BFS on random graphs:
-    distances capped at k, min over sources, isolated sources at 0."""
-    from collections import deque
+    """ops/graph.sssp_khop vs a plain-python bounded Bellman-Ford
+    (exactly k synchronous rounds) on random undirected graphs with
+    non-negative integer weights, parallel edges, self-loops and
+    isolated sources: costs capped at k edges, min over sources,
+    isolated sources at 0. bfs_khop is the all-ones case of the same
+    reference and returns INT distances."""
+    from pipetree_spark.ops.graph import bfs_khop, sssp_khop
 
-    from pipetree_spark.ops.graph import bfs_khop
+    def bellman_ford(wedges):
+        dist = {x: 0 for x in sources}
+        for _ in range(k):
+            nxt = dict(dist)
+            for u, v, w in wedges:
+                for a, b in ((u, v), (v, u)):
+                    if a in dist and dist[a] + w < nxt.get(b, math.inf):
+                        nxt[b] = dist[a] + w
+            dist = nxt
+        return dist
 
-    adj: dict[int, set[int]] = {}
-    for u, v in edges:
-        if u != v:
-            adj.setdefault(u, set()).add(v)
-            adj.setdefault(v, set()).add(u)
-    expect: dict[int, int] = {}
-    dq = deque((s, 0) for s in set(sources))
-    for s in set(sources):
-        expect[s] = 0
-    while dq:
-        n, d = dq.popleft()
-        if d >= k:
-            continue
-        for m in adj.get(n, ()):
-            if m not in expect or expect[m] > d + 1:
-                expect[m] = d + 1
-                dq.append((m, d + 1))
-
-    e = spark.createDataFrame(edges or [(0, 0)], "src long, dst long")
+    e = spark.createDataFrame(edges or [(0, 0, 0)], "src long, dst long, w long")
     s = spark.createDataFrame([(x,) for x in sources], "n long")
-    got = {r.node: r.dist for r in bfs_khop(e, s, k=k).collect()}
-    assert got == expect
+    got = {r.node: r.dist for r in sssp_khop(e, s, k=k).collect()}
+    assert got == bellman_ford(edges)
+    bfs = bfs_khop(e, s, k=k)
+    assert bfs.schema["dist"].dataType.simpleString() == "int"
+    assert {r.node: r.dist for r in bfs.collect()} == bellman_ford([(u, v, 1) for u, v, _ in edges])
 
 
 @settings(**SETTINGS)

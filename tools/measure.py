@@ -166,7 +166,7 @@ def load_ref(ref: str) -> list[tuple[object, str, object, object]]:
 
     changed = subprocess.run(["git", "diff", "--name-only", ref, "--", "pipetree_spark"],
                              capture_output=True, check=True, text=True, cwd=REPO).stdout.split()
-    swaps = []
+    swaps, olds = [], []
     real_declare = Q.declare
     Q.declare = lambda *a, **kw: (lambda fn: fn)  # REF's query modules must not re-register
     try:
@@ -183,6 +183,7 @@ def load_ref(ref: str) -> list[tuple[object, str, object, object]]:
                 exec(compile(shown.stdout, f"{path}@{ref}", "exec"), old.__dict__)
             finally:
                 del sys.modules[old.__name__]  # unimportable, so cloudpickle ships REF's UDFs by value
+            olds.append(old)
             for name, v in vars(old).items():
                 lv = getattr(live, name, None)
                 if getattr(v, "__module__", None) != old.__name__ or getattr(lv, "__module__", None) != modname:
@@ -194,6 +195,11 @@ def load_ref(ref: str) -> list[tuple[object, str, object, object]]:
                               and isinstance(m, (types.FunctionType, classmethod, staticmethod))]
     finally:
         Q.declare = real_declare
+    # a REF module's top-level `from M import f` bound M's live f; rebind
+    # it to REF's f, so a signature changed since REF is called as REF did
+    ref_of = {id(lv): v for _, _, v, lv in swaps if inspect.isfunction(lv)}
+    for old in olds:
+        old.__dict__.update({n: ref_of[id(v)] for n, v in vars(old).items() if id(v) in ref_of})
     return swaps
 
 

@@ -5,14 +5,24 @@ definition-hash + dependency-hash, skipped when already materialized
 (pipetree's incremental recomputation; /root/reference is empty so the
 concept citation is SURVEY §1.1 [PK]) — on Spark:
 
-- artifact  = parquet snapshot at ``<root>/<stage>/<key>/``
+- artifact  = parquet snapshot at ``<root>/<stage>/<key>/`` plus the
+              sidecar ``_pipetree.json``, a JSON object whose ``schema``
+              field is the written frame's ``df.schema.jsonValue()``
 - key       = sha256 over (canonical stage spec JSON, upstream keys,
               format version) — definition hash + dependency hash
-- hit       = ``_SUCCESS`` marker exists → ``spark.read.parquet`` (cuts
-              the Spark lineage exactly like the reference's skip)
-- miss      = compute the stage DataFrame, write parquet, read back
+- hit       = the sidecar exists. It is written after the parquet commit
+              (temp name, then rename), so it is the commit marker: a
+              crash before it leaves a miss, never a hit without a schema
+- load      = ``spark.read.schema(<sidecar schema>).parquet(path)``:
+              cuts the Spark lineage exactly like the reference's skip,
+              and runs no Spark job (no parquet footer schema inference)
+- miss      = compute the stage DataFrame, write parquet, write the
+              sidecar, load
 
-Paths go through the Hadoop FileSystem API, so ``file://`` and
+Format version 2 is the first with sidecars; version-1 artifacts have
+different keys, so no key resolves to a directory without one. Spark's
+file listing skips ``_``-prefixed names, so readers never see the
+sidecar. Paths go through the Hadoop FileSystem API, so ``file://`` and
 ``s3a://`` roots use the same code (the reference's local vs S3
 artifact backends are a config switch here)."""
 
@@ -22,8 +32,12 @@ import hashlib
 import json
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-_FORMAT_VERSION = "1"
+_FORMAT_VERSION = "2"
+
+#: the artifact's commit marker and schema record — see the module docstring
+SIDECAR = "_pipetree.json"
 
 #: per-(process, namespace) private artifact roots — see process_cache_root
 _process_cache_roots: dict[str, str] = {}
@@ -81,20 +95,40 @@ class ArtifactCache:
         return f"{self.root}/{stage}/{key}"
 
     # -- Hadoop FS plumbing (works for file:// and s3a:// alike) ---------
-    @staticmethod
-    def _fs(spark: SparkSession, path: str):
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        return jpath.getFileSystem(hconf), jpath
+    def _sidecar(self, spark: SparkSession, stage: str, key: str):
+        """The sidecar's (FileSystem, Path)."""
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{self.path(stage, key)}/{SIDECAR}")
+        return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
     def has(self, spark: SparkSession, stage: str, key: str) -> bool:
-        fs, _ = self._fs(spark, self.path(stage, key))
-        marker = spark._jvm.org.apache.hadoop.fs.Path(self.path(stage, key) + "/_SUCCESS")
+        fs, marker = self._sidecar(spark, stage, key)
         return bool(fs.exists(marker))
 
     def load(self, spark: SparkSession, stage: str, key: str) -> DataFrame:
-        return spark.read.parquet(self.path(stage, key))
+        """Read the artifact with the schema its sidecar records: Spark
+        lists the files but runs no schema-inference job."""
+        fs, marker = self._sidecar(spark, stage, key)
+        stream = fs.open(marker)
+        try:
+            text = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        finally:
+            stream.close()
+        schema = StructType.fromJson(json.loads(text)["schema"])
+        return spark.read.schema(schema).parquet(self.path(stage, key))
+
+    def _commit(self, spark: SparkSession, df: DataFrame, stage: str, key: str) -> None:
+        """Write the sidecar under a hidden temp name, then rename it into
+        place: the artifact is a hit only once its schema is complete."""
+        fs, marker = self._sidecar(spark, stage, key)
+        tmp = marker.suffix(".tmp")
+        payload = json.dumps({"schema": df.schema.jsonValue()}, separators=(",", ":"))
+        out = fs.create(tmp, True)
+        try:
+            out.write(bytearray(payload.encode()))
+        finally:
+            out.close()
+        if not fs.rename(tmp, marker):
+            raise OSError(f"could not commit {marker.toString()}")
 
     def materialize(
         self,
@@ -113,7 +147,10 @@ class ArtifactCache:
         on the bucket columns is SHUFFLE-FREE (Spark reads the bucket
         spec from the catalog and plans a zero-exchange sort-merge join).
         This is the 100 TB recipe for repeated fact⋈fact joins — pay the
-        shuffle once at materialization, never again."""
+        shuffle once at materialization, never again.
+
+        Both layouts write the sidecar after the data, so :meth:`has`
+        means the same for either."""
         if bucket_by is not None:
             n, cols = bucket_by
             writer = df.write.mode("overwrite").bucketBy(n, *cols)
@@ -122,8 +159,10 @@ class ArtifactCache:
             table = self.table_name(stage, key)
             spark.sql(f"DROP TABLE IF EXISTS {table}")
             writer.option("path", self.path(stage, key)).format("parquet").saveAsTable(table)
+            self._commit(spark, df, stage, key)
             return spark.table(table)
         df.write.mode("overwrite").parquet(self.path(stage, key))
+        self._commit(spark, df, stage, key)
         return self.load(spark, stage, key)
 
     @staticmethod

@@ -76,6 +76,101 @@ def test_upstream_change_propagates(spark, sf_small, tmp_path):
     assert p.last_run_report["agg"] == "materialized"
 
 
+def test_cache_hit_and_read_back_fire_no_spark_job(spark, tmp_path):
+    """Artifacts load with the schema their sidecar records, so neither a
+    hit (``has`` + ``load``) nor materialize's read-back runs Spark's
+    parquet schema-inference job: materialize fires exactly the jobs of
+    the write itself."""
+    from tools.plan_audit import jobs_fired
+
+    def jobs(body) -> int:
+        return jobs_fired(spark, body)[1]
+
+    cache = ArtifactCache(str(tmp_path / "cache"))
+    df = spark.range(40).selectExpr("id", "CAST(id * 2 AS STRING) AS s")
+    plain = jobs(lambda: df.write.parquet(str(tmp_path / "plain")))
+    assert plain >= 1
+    assert jobs(lambda: cache.materialize(spark, df, "st", "k")) == plain
+    assert jobs(lambda: cache.has(spark, "st", "k") and cache.load(spark, "st", "k")) == 0
+    # the counter sees the inference job a schema-less read pays
+    assert jobs(lambda: spark.read.parquet(cache.path("st", "k"))) >= 1
+    assert sorted(cache.load(spark, "st", "k").collect()) == sorted(df.collect())
+
+
+def test_sidecar_schema_equals_inferred_schema_for_rich_types(spark, tmp_path):
+    """The sidecar schema reads back exactly what Spark would infer from
+    the parquet footers, across non-nullable columns, both timestamp
+    types, wide decimals, binary, nested arrays/maps, column metadata and
+    hyphenated / reserved names; the rows are equal too."""
+    import datetime
+    import decimal
+
+    from pyspark.sql.types import (
+        ArrayType, BinaryType, DecimalType, FloatType, IntegerType, LongType,
+        MapType, StringType, StructField, StructType, TimestampNTZType, TimestampType,
+    )
+
+    schema = StructType([
+        StructField("id", LongType(), False),
+        StructField("ts", TimestampType(), True),
+        StructField("ts_ntz", TimestampNTZType(), False),
+        StructField("amount", DecimalType(38, 18), True),
+        StructField("blob", BinaryType(), True),
+        StructField("items", ArrayType(StructType([
+            StructField("a", IntegerType(), False), StructField("b", StringType(), True),
+        ]), True), True),
+        StructField("vecs", MapType(StringType(), ArrayType(FloatType(), True), True), True),
+        StructField("tagged", StringType(), True, {"comment": "kept", "weight": 3}),
+        StructField("my-col", StringType(), True),
+        StructField("select", IntegerType(), True),
+    ])
+    rows = [
+        (i, datetime.datetime(2024, 1, 1, 12, i), datetime.datetime(2020, 2, 29, 0, 0, i),
+         decimal.Decimal(f"{i}.123456789012345678"), bytes([i, 255 - i]),
+         [(i, f"b{i}"), (i + 1, None)], {"k": [0.5, float(i)], "z": []},
+         f"t{i}", f"h{i}", i * 7)
+        for i in range(6)
+    ] + [(99, None, datetime.datetime(1970, 1, 1), None, None, None, None, None, None, None)]
+    df = spark.createDataFrame(rows, schema)
+    cache = ArtifactCache(str(tmp_path))
+    cache.materialize(spark, df, "rich", "k")
+    loaded = cache.load(spark, "rich", "k")
+    inferred = spark.read.parquet(cache.path("rich", "k"))
+    assert loaded.schema == inferred.schema
+    assert loaded.schema["tagged"].metadata == {"comment": "kept", "weight": 3}
+    assert not any(f.nullable is False for f in loaded.schema.fields)
+    got = loaded.orderBy("id").collect()
+    assert got == inferred.orderBy("id").collect() == df.orderBy("id").collect()
+
+
+def test_artifact_without_sidecar_is_a_miss(spark, sf_small, tmp_path):
+    """The sidecar is the commit marker: a directory holding the parquet
+    files and ``_SUCCESS`` but no sidecar (a crash between the two
+    writes) is a miss, and the next run re-materializes it."""
+    import os
+
+    from pipetree_spark.cache import SIDECAR
+
+    cache = ArtifactCache(str(tmp_path))
+    Pipeline.from_spec(_spec(sf_small)).run(spark, cache=cache)
+    key = next(iter(os.listdir(tmp_path / "filtered")))
+    art = tmp_path / "filtered" / key
+    for name in (SIDECAR, f".{SIDECAR}.crc"):
+        if (art / name).exists():
+            (art / name).unlink()
+    assert (art / "_SUCCESS").exists() and any(f.endswith(".parquet") for f in os.listdir(art))
+    assert not cache.has(spark, "filtered", key)
+
+    p = Pipeline.from_spec(_spec(sf_small))
+    p.run(spark, cache=cache)
+    assert p.last_run_report == {
+        "lineitem": "computed",
+        "filtered": "materialized",
+        "agg": "hit",
+    }
+    assert cache.has(spark, "filtered", key)
+
+
 def test_targets_prune_unneeded_stages(spark, sf_small):
     spec = _spec(sf_small)
     spec["stages"]["unrelated"] = {
@@ -1135,7 +1230,8 @@ def test_curation_full_pipeline_example(spark, sf_small, tmp_path):
     composite through the spec walker — funnel counts are monotone
     through the gate chain, boilerplate lines are found and cut,
     blocklisted docs are dropped, and a SECOND run serves every
-    materialized stage from the content-keyed cache."""
+    materialized stage from the content-keyed cache, each loaded with
+    the schema Spark infers from its parquet footers."""
     import json
     from pathlib import Path
 
@@ -1161,3 +1257,10 @@ def test_curation_full_pipeline_example(spark, sf_small, tmp_path):
     assert tuple(row2) == tuple(row)
     hits = [k for k, v in p2.last_run_report.items() if v == "hit"]
     assert "near_keep" in hits and "budget" in hits and "planted" in hits
+    # every materialized stage loads with the schema Spark would infer
+    materialized = {n for n, st in spec["stages"].items() if st.get("materialize")}
+    assert {d.name for d in tmp_path.iterdir()} == materialized
+    for stage in sorted(materialized):
+        (key,) = [d.name for d in (tmp_path / stage).iterdir()]
+        inferred = spark.read.parquet(cache.path(stage, key)).schema
+        assert cache.load(spark, stage, key).schema == inferred, stage

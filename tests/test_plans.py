@@ -159,6 +159,8 @@ def test_bucketed_materialization_kills_join_shuffle(spark, sf_small, tmp_path):
         o = load_table(spark, sf_small, "orders").select("o_orderkey", "o_orderpriority")
         lb = cache.materialize(spark, l, "lineitem_b", "k", bucket_by=(8, ["l_orderkey"]), sort_by=["l_orderkey"])
         ob = cache.materialize(spark, o, "orders_b", "k", bucket_by=(8, ["o_orderkey"]), sort_by=["o_orderkey"])
+        # the sidecar commit marker is written for bucketed artifacts too
+        assert cache.has(spark, "lineitem_b", "k") and cache.has(spark, "orders_b", "k")
 
         bucketed = plan(lb.join(ob, lb.l_orderkey == ob.o_orderkey))
         assert n_nodes(bucketed, "Exchange") == 0 and "SortMergeJoin" in bucketed
